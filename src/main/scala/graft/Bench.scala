@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
 
   /** Compact per-query record sized for the driver's ~2000-char tail
@@ -38,83 +38,22 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // AQE coalesce floor, env-overridable for experiments. Default is
-      // Spark's own 1m: a 64k floor was measured (r17) to help single-
-      // aggregate kernel queries but to inflate multi-exchange pipelines
-      // (q104 9.7 -> 15.5 s) — the library instead pins parallelism where
-      // it matters via the size-guarded spreads (TextOps.spreadByKey).
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE", "1m"))
-      // InferFiltersFromGenerate re-inlines generator expressions into a
-      // pushed-down filter, re-evaluating interpreted HOF lambdas per row
-      // (O(n^2) for shingles) - semantics-neutral to exclude.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
+    val queries = SparkEntry.queries.toSeq
     // Warmup at a small SF: compiles the same generated-code classes and
     // warms the JIT/parquet paths, so timed numbers measure the queries,
     // not first-query JVM startup. Disable with SPARK_GRAFT_WARMUP=0.
     val warmupDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR", "/root/testdata/sf0.001")
-    // Materialize through the built-in noop sink: every expression in every
-    // column is evaluated (a bare count() lets Catalyst prune unreferenced
-    // projections and orderBys, under-measuring projection-only queries).
-    def run(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame,
-            dir: String): Unit =
-      fn(spark, dir).write.mode("overwrite").format("noop").save()
-    if (sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") == "1" && warmupDir != sfDir) {
-      SparkEntry.queries.foreach { case (_, fn) =>
-        try run(fn, warmupDir) catch { case _: Throwable => () }
-      }
-    }
-    // Min of N timed passes per query: the host VM has intermittent
-    // page-fault storms that inflate arbitrary queries by 10-100×; the
-    // minimum is the standard robust estimator for actual query cost.
-    // Passes are ROUND-MAJOR (whole query set per round, repeated): a
-    // storm lasts tens of seconds, so back-to-back passes of one query
-    // are correlated — round separation decorrelates the samples the min
-    // is taken over. A failing query records an error, never a timing.
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
-    val rounds: Seq[Map[String, Either[String, Double]]] = (1 to reps).map { _ =>
-      SparkEntry.queries.map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        name -> (try { run(fn, sfDir); Right((System.nanoTime() - t0) / 1e9) }
-        catch { case t: Throwable =>
-          Left(s"${t.getClass.getSimpleName}: ${Option(t.getMessage).getOrElse("").take(120)}") })
-      }
-    }
-    val results: Map[String, Either[String, Double]] =
-      SparkEntry.queries.keys.map { name =>
-        val passes = rounds.map(_(name))
-        val oks = passes.collect { case Right(s) => s }
-        name -> (if (oks.nonEmpty) Right(oks.min) else Left(passes.collectFirst { case Left(e) => e }.get))
-      }.toMap
+    if (sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") == "1" && warmupDir != sfDir)
+      warmUp(spark, queries.map(_._2), warmupDir)
+    val results = timeQueries(spark, queries, sfDir,
+      sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt)
     val qs = results.map {
       case (k, Right(v)) => s"\"" + k + "\":" + v
       case (k, Left(_)) => s"\"" + k + "\":null"
     }.mkString("{", ",", "}")
-    // escape control chars too: Spark exception messages are multi-line,
-    // and one raw newline would break the single-JSON-line contract
-    def esc(s: String): String = s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
     val errs = results.collect { case (k, Left(e)) =>
-      s"\"" + k + "\":\"" + esc(e) + "\"" }
+      s"\"" + k + "\":" + quote(e) }
       .mkString("{", ",", "}")
     val total = results.values.collect { case Right(v) => v }.sum
     val nFailed = results.values.count(_.isLeft)
@@ -130,7 +69,7 @@ object Bench {
       case (k, Right(v)) =>
         println(s"""{"metric":"query","name":"$k","value":$v,"unit":"sec"}""")
       case (k, Left(e)) =>
-        println(s"""{"metric":"query","name":"$k","error":"${esc(e)}"}""")
+        println(s"""{"metric":"query","name":"$k","error":${quote(e)}}""")
     }
     val errNames = results.collect { case (k, Left(_)) => "\"" + k + "\"" }
       .toSeq.sorted.mkString("[", ",", "]")
@@ -153,5 +92,54 @@ object Bench {
     println(s"""{"metric":"total","value":$total,"unit":"sec","failed":$nFailed,"n":${results.size},"sf":"$sfDir"}""")
     spark.stop()
     if (nFailed > 0) sys.exit(1)
+  }
+
+  type Query = (SparkSession, String) => DataFrame
+
+  /** JSON string literal: quotes, backslashes and ALL control chars
+    * (<0x20) escaped — Spark exception messages are multi-line, and one
+    * raw newline (or a tab in an oracle SQL string) would break
+    * the one-JSON-object-per-line output or a JSON parser reading it. */
+  private[graft] def quote(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** Materialize through the built-in noop sink: every expression in every
+    * column is evaluated (a bare count() lets Catalyst prune unreferenced
+    * projections and orderBys, under-measuring projection-only queries). */
+  private[graft] def noop(df: DataFrame): Unit =
+    df.write.mode("overwrite").format("noop").save()
+
+  /** One untimed pass of every query over `dir`, failures ignored. */
+  private[graft] def warmUp(spark: SparkSession, queries: Seq[Query],
+                            dir: String): Unit =
+    queries.foreach(fn => try noop(fn(spark, dir)) catch { case _: Throwable => () })
+
+  /** Min of `reps` timed passes per query: a shared VM host has intermittent
+    * page-fault storms that inflate arbitrary queries by 10-100×; the
+    * minimum is the standard robust estimator for actual query cost.
+    * Passes are ROUND-MAJOR (whole query set per round, repeated): a
+    * storm lasts tens of seconds, so back-to-back passes of one query
+    * are correlated — round separation decorrelates the samples the min
+    * is taken over. A failing query records an error, never a timing. */
+  private[graft] def timeQueries(spark: SparkSession, queries: Seq[(String, Query)],
+                                 sfDir: String, reps: Int)
+      : Map[String, Either[String, Double]] = {
+    val passes = (1 to reps).flatMap(_ => queries.map { case (name, fn) =>
+      val t0 = System.nanoTime()
+      name -> (try { noop(fn(spark, sfDir)); Right((System.nanoTime() - t0) / 1e9) }
+      catch { case t: Throwable =>
+        Left(s"${t.getClass.getSimpleName}: ${Option(t.getMessage).getOrElse("").take(120)}") })
+    })
+    passes.groupMap(_._1)(_._2).map { case (name, ps) =>
+      name -> ps.collect { case Right(s) => s }.minOption
+        .toRight(ps.collectFirst { case Left(e) => e }.get)
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Plan hygiene audit — and GATE. For each query: scan pushdown
@@ -140,19 +140,11 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      // audit the STATIC plan: under AQE the formatted explain prints the
-      // un-executed adaptive placeholder, which carries no codegen ids and
-      // hides the join strategy picked at runtime
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // audit the STATIC plan: under AQE the formatted explain prints the
+    // un-executed adaptive placeholder, which carries no codegen ids and
+    // hides the join strategy picked at runtime
+    val spark = GraftSession.local(
+      overrides = Seq("spark.sql.adaptive.enabled" -> "false"))
     spark.sparkContext.setLogLevel("ERROR")
     val allViolations = scala.collection.mutable.ArrayBuffer.empty[String]
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

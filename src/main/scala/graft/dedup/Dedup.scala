@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.ops.Graphs
 import graft.text.TextOps
 
 /** Deduplication operators for training-data pipelines: exact, n-gram
@@ -1535,19 +1536,6 @@ object Dedup {
     // that materializes them, so each round costs ONE job instead of two
     def ckpt(df: DataFrame): DataFrame =
       if (reliable) df.checkpoint(eager = false) else df.localCheckpoint(eager = false)
-    // a checkpointed Dataset's plan is a LogicalRDD over the persisted RDD;
-    // Dataset.unpersist only covers CacheManager entries, so the block
-    // release must go through that RDD directly
-    def unpersistCkpt(df: DataFrame): Unit = df.queryExecution.logical match {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(blocking = false)
-      case other =>
-        // the fallthrough must be OBSERVABLE: if a Spark upgrade stops
-        // wrapping checkpoint output in LogicalRDD, every round's blocks
-        // would silently leak and pin executor storage for the job's life
-        org.slf4j.LoggerFactory.getLogger(Dedup.getClass).warn(
-          s"connectedComponents: checkpointed plan is ${other.getClass.getSimpleName}, " +
-            "not LogicalRDD — prior round's blocks cannot be released (storage leak)")
-    }
     // directed large→small; self-loops dropped
     var edges = ckpt(pairs
       .select(greatest(col(aCol), col(bCol)).as("u"),
@@ -1582,7 +1570,7 @@ object Dedup {
         .unionAll(withM.select(col("u"), col("m").as("v")))
         .distinct())
       val next = sig(ss) // action: materializes ss's checkpoint (lineage truncated)
-      unpersistCkpt(edges) // prior round's blocks are now unreachable — release them
+      Graphs.unpersistCkpt(edges) // prior round's blocks are now unreachable — release them
       done = next == cur
       cur = next
       edges = ss

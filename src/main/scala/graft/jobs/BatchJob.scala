@@ -65,15 +65,7 @@ trait BatchJob {
     }
 
   def main(argv: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .appName(jobName)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // day/date rendering (TimeNorm F4/F5/F7) documents UTC — pin it, or
-      // a cluster in another zone shifts every midnight-window event a day
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = graft.GraftSession.cluster(jobName)
     try run(spark, parseArgs(argv)) finally spark.stop()
   }
 }

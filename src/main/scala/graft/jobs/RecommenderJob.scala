@@ -59,12 +59,7 @@ object RecommenderJob {
     val kv = argv.sliding(2, 1).collect {
       case Array(a, v) if a.startsWith("--") => a.stripPrefix("--") -> v
     }.toMap
-    val spark = SparkSession.builder()
-      .appName("recommender_job")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = graft.GraftSession.cluster("recommender_job")
     try {
       val installs = spark.read.parquet(kv("installs"))
       val cache = kv.get("cache").map(Paths.get(_): Path)

@@ -55,11 +55,13 @@ object Graphs {
   }
 
   /** Release a checkpointed frame's executor blocks once every consumer
-    * has materialized — the [[graft.dedup.Dedup.connectedComponents]]
-    * unpersist discipline (Dataset.unpersist only covers CacheManager
-    * entries; checkpoint blocks hang off the LogicalRDD's RDD). The
-    * fallthrough stays observable for the same reason documented there. */
-  private def unpersistCkpt(df: DataFrame): Unit =
+    * has materialized. A checkpointed Dataset's plan is a LogicalRDD over
+    * the persisted RDD; Dataset.unpersist only covers CacheManager
+    * entries, so the release must go through that RDD directly. The
+    * fallthrough must be OBSERVABLE: if a Spark upgrade stops wrapping
+    * checkpoint output in LogicalRDD, every caller's blocks would
+    * silently leak and pin executor storage for the job's life. */
+  private[graft] def unpersistCkpt(df: DataFrame): Unit =
     df.queryExecution.logical match {
       case l: org.apache.spark.sql.execution.LogicalRDD =>
         l.rdd.unpersist(blocking = false)
@@ -773,6 +775,7 @@ object Graphs {
     var (nodes, cN) = ckptCounts(raw.select(col("src").as("node"))
       .union(raw.select(col("dst").as("node"))).distinct(),
       "n" -> lit(true))
+    unpersistCkpt(raw)
     val spark = edges.sparkSession
     var result = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -788,15 +791,28 @@ object Graphs {
     // driver analysis of the final plan blows up: COLLAPSE the
     // accumulator with one eager checkpoint every 16 unions (r18) — plan
     // width stays bounded while graphs that settle in a few unions (the
-    // common case) never pay a collapse job
+    // common case) never pay a collapse job. Once a collapse has
+    // materialized, the previous collapse and every checkpoint the
+    // unions since then read (`referenced`) are dead: release them.
     var unionsSinceCollapse = 0
+    var collapsed: Option[DataFrame] = None
+    var referenced = List.empty[DataFrame]
     def accumulate(settled: DataFrame): Unit = {
       result = result.union(settled)
       unionsSinceCollapse += 1
       if (unionsSinceCollapse >= 16) {
         result = result.localCheckpoint(eager = true)
+        (collapsed.toList ++ referenced).foreach(unpersistCkpt)
+        collapsed = Some(result)
+        referenced = Nil
         unionsSinceCollapse = 0
       }
+    }
+    // every other superseded step is released as soon as its successor
+    // has materialized (all steps are eager checkpoints)
+    def replace(old: DataFrame, next: DataFrame): DataFrame = {
+      unpersistCkpt(old)
+      next
     }
     var peel = 0
     while (remaining > 0L && peel < maxPeels) {
@@ -816,8 +832,10 @@ object Graphs {
             "left_semi"),
           "n" -> lit(true))
         val keepN = cK("n")
-        if (keepN == remaining) trimmed = false
-        else {
+        if (keepN == remaining) {
+          trimmed = false
+          unpersistCkpt(keep)
+        } else {
           val dropped = nodes.join(keep, Seq("node"), "left_anti")
           // result is consumed ONCE at the end — accumulate as a lazy
           // union of (checkpointed) member frames instead of paying an
@@ -825,11 +843,12 @@ object Graphs {
           // neighborhoodExact accumulator discipline), width-bounded by
           // the periodic collapse above
           accumulate(dropped.select(col("node"), col("node").as("scc_id")))
+          referenced ::= nodes
           nodes = keep
-          rem = rem
+          rem = replace(rem, rem
             .join(keep.select(col("node").as("src")), Seq("src"), "left_semi")
             .join(keep.select(col("node").as("dst")), Seq("dst"), "left_semi")
-            .localCheckpoint(eager = true)
+            .localCheckpoint(eager = true))
           remaining = keepN
         }
         trimRound += 1
@@ -855,7 +874,8 @@ object Graphs {
               max(when(col("__o") === 1, col("color"))).as("__old")),
           "changed" -> (col("color") =!= col("__old")))
         changedN = cRound("changed")
-        colors = next.select(col("node"), col("color"))
+        // next keeps its __old column: every reader below selects by name
+        colors = replace(colors, next)
       }
       // (2) backward membership sweep from the roots, same-color only
       val eCol = rem
@@ -869,6 +889,7 @@ object Graphs {
       var (member, cM) = ckptCounts(colors.where(col("color") === col("node"))
         .select(col("node"), col("color")),
         "n" -> lit(true))
+      unpersistCkpt(colors)
       var memberN = cM("n")
       var grew = true
       while (grew) {
@@ -880,19 +901,21 @@ object Graphs {
           "n" -> lit(true))
         val nextN = cNext("n")
         grew = nextN > memberN
-        member = next
+        member = replace(member, next)
         memberN = nextN
       }
+      unpersistCkpt(eCol)
       // (3) settle and peel (result stays a lazy union — see trim)
       accumulate(member.select(col("node"), col("color").as("scc_id")))
       val (nodesNext, cRem) = ckptCounts(
         nodes.join(member.select(col("node")), Seq("node"), "left_anti"),
         "n" -> lit(true))
+      referenced = member :: nodes :: referenced
       nodes = nodesNext
-      rem = rem
+      rem = replace(rem, rem
         .join(member.select(col("node").as("src")), Seq("src"), "left_anti")
         .join(member.select(col("node").as("dst")), Seq("dst"), "left_anti")
-        .localCheckpoint(eager = true)
+        .localCheckpoint(eager = true))
       remaining = cRem("n")
       }
       peel += 1
@@ -901,6 +924,7 @@ object Graphs {
       s"scc did not settle every node in $maxPeels peels ($remaining " +
         "left) — raise maxPeels (long chains of single-node components " +
         "peel one chain link per pass)")
+    unpersistCkpt(rem)
     result
   }
 

@@ -36,6 +36,34 @@ object EvalOps {
     filter(TextOps.tokens(c), t => length(t) > 0),
     array().cast("array<string>"))
 
+  /** The family's prologue: fail on input columns that clash with
+    * `reserved` (the operator's outputs and staging columns); returns
+    * the input columns every stage passes through. */
+  private def passthroughOf(op: String, pairs: org.apache.spark.sql.DataFrame,
+                            reserved: Seq[String]): Seq[Column] = {
+    val clashes = pairs.columns.filter(reserved.contains)
+    require(clashes.isEmpty,
+      s"$op reserves column names ${reserved.mkString(", ")}; " +
+        s"input already has ${clashes.mkString(", ")}")
+    pairs.columns.toSeq.map(col)
+  }
+
+  /** Multi-reference staging: candidate tokens `__ct` and per-reference
+    * tokens `__rts`. A row with no references fails loudly (the metric
+    * against an empty reference set is undefined); the guard sits on
+    * the candidate tokens too, so no projection can prune it away. */
+  private def stageRefs(op: String, metric: String,
+                        pairs: org.apache.spark.sql.DataFrame,
+                        passthrough: Seq[Column], candCol: String,
+                        refsCol: String): org.apache.spark.sql.DataFrame = {
+    val noRefs = col(refsCol).isNull || size(col(refsCol)) === 0
+    def loudRefs(c: Column): Column = when(noRefs, raise_error(lit(
+        s"$op: no references — $metric against an empty reference set is undefined")))
+      .otherwise(c)
+    pairs.select(passthrough :+ loudRefs(toksOrEmpty(col(candCol))).as("__ct") :+
+      transform(loudRefs(col(refsCol)), r => toksOrEmpty(r)).as("__rts"): _*)
+  }
+
   /** Word n-grams of order `n` as an array column (multiplicity kept —
     * ROUGE clips per distinct gram, so duplicates matter). Docs with
     * fewer than `n` tokens have NO n-grams (the standard ROUGE
@@ -100,11 +128,7 @@ object EvalOps {
     val reserved = Seq("n_cand_grams", "n_ref_grams", "n_overlap",
       "rouge_p_micro", "rouge_r_micro", "rouge_f_micro",
       "__ct", "__rt", "__cg", "__rg")
-    val clashes = pairs.columns.filter(reserved.contains)
-    require(clashes.isEmpty,
-      s"rougeN reserves column names ${reserved.mkString(", ")}; " +
-        s"input already has ${clashes.mkString(", ")}")
-    val passthrough = pairs.columns.toSeq.map(col)
+    val passthrough = passthroughOf("rougeN", pairs, reserved)
     def toksNoNull(c: Column): Column =
       filter(TextOps.tokens(c), t => length(t) > 0)
     pairs
@@ -157,11 +181,7 @@ object EvalOps {
              refCol: String): org.apache.spark.sql.DataFrame = {
     val reserved = Seq("n_cand_tokens", "n_ref_tokens", "lcs_len",
       "rougel_p_micro", "rougel_r_micro", "rougel_f_micro", "__ct", "__rt")
-    val clashes = pairs.columns.filter(reserved.contains)
-    require(clashes.isEmpty,
-      s"rougeL reserves column names ${reserved.mkString(", ")}; " +
-        s"input already has ${clashes.mkString(", ")}")
-    val passthrough = pairs.columns.toSeq.map(col)
+    val passthrough = passthroughOf("rougeL", pairs, reserved)
     // NULL text tokenizes to a NULL array — coalesce to empty so the
     // null-contract row keeps ZERO counts (ratios go NULL via the
     // when-guards) and the null-intolerant DP expression never sees null
@@ -207,11 +227,7 @@ object EvalOps {
     val orders = 1 to maxN
     val reserved = Seq("cand_len", "ref_len", "__ct", "__rt") ++
       orders.flatMap(n => Seq(s"p${n}_num", s"p${n}_den", s"__cg$n", s"__rg$n"))
-    val clashes = pairs.columns.filter(reserved.contains)
-    require(clashes.isEmpty,
-      s"bleuComponents reserves column names ${reserved.mkString(", ")}; " +
-        s"input already has ${clashes.mkString(", ")}")
-    val passthrough = pairs.columns.toSeq.map(col)
+    val passthrough = passthroughOf("bleuComponents", pairs, reserved)
     // NULL text → empty token array (zero counts), the rougeL contract
     pairs
       .select(passthrough :+ toksOrEmpty(col(candCol)).as("__ct") :+
@@ -251,21 +267,11 @@ object EvalOps {
       : org.apache.spark.sql.DataFrame = {
     val reserved = Seq("n_cand_grams", "n_refs", "rougen_best_micro",
       "rougen_jk_micro", "__ct", "__rts", "__cg", "__rgs", "__fs")
-    val clashes = pairs.columns.filter(reserved.contains)
-    require(clashes.isEmpty,
-      s"rougeNMulti reserves column names ${reserved.mkString(", ")}; " +
-        s"input already has ${clashes.mkString(", ")}")
-    val passthrough = pairs.columns.toSeq.map(col)
-    val noRefs = col(refsCol).isNull || size(col(refsCol)) === 0
-    def loudRefs(c: Column): Column = when(noRefs,
-        raise_error(lit("rougeNMulti: no references — ROUGE against an " +
-          "empty reference set is undefined")))
-      .otherwise(c)
+    val passthrough = passthroughOf("rougeNMulti", pairs, reserved)
     // the per-reference F array is staged so best-match AND jackknife
     // read the same materialized scores
-    val staged = pairs
-      .select(passthrough :+ loudRefs(toksOrEmpty(col(candCol))).as("__ct") :+
-        transform(loudRefs(col(refsCol)), r => toksOrEmpty(r)).as("__rts"): _*)
+    val staged = stageRefs("rougeNMulti", "ROUGE", pairs, passthrough,
+        candCol, refsCol)
       .select(passthrough :+ ngramsOfTokens(col("__ct"), n).as("__cg") :+
         transform(col("__rts"), r =>
           graft.functions.TextExpressions.tokenNgrams(r, n)).as("__rgs"): _*)
@@ -303,19 +309,8 @@ object EvalOps {
                   refsCol: String): org.apache.spark.sql.DataFrame = {
     val reserved = Seq("n_cand_tokens", "n_refs", "rougel_best_micro",
       "__ct", "__rts")
-    val clashes = pairs.columns.filter(reserved.contains)
-    require(clashes.isEmpty,
-      s"rougeLMulti reserves column names ${reserved.mkString(", ")}; " +
-        s"input already has ${clashes.mkString(", ")}")
-    val passthrough = pairs.columns.toSeq.map(col)
-    val noRefs = col(refsCol).isNull || size(col(refsCol)) === 0
-    def loudRefs(c: Column): Column = when(noRefs,
-        raise_error(lit("rougeLMulti: no references — ROUGE against an " +
-          "empty reference set is undefined")))
-      .otherwise(c)
-    pairs
-      .select(passthrough :+ loudRefs(toksOrEmpty(col(candCol))).as("__ct") :+
-        transform(loudRefs(col(refsCol)), r => toksOrEmpty(r)).as("__rts"): _*)
+    val passthrough = passthroughOf("rougeLMulti", pairs, reserved)
+    stageRefs("rougeLMulti", "ROUGE", pairs, passthrough, candCol, refsCol)
       .select(passthrough :+
         size(col("__ct")).cast("long").as("n_cand_tokens") :+
         size(col("__rts")).cast("long").as("n_refs") :+
@@ -348,11 +343,7 @@ object EvalOps {
           refCol: String): org.apache.spark.sql.DataFrame = {
     val reserved = Seq("n_cand_tokens", "n_ref_tokens", "edit_dist",
       "wer_micro", "__ct", "__rt")
-    val clashes = pairs.columns.filter(reserved.contains)
-    require(clashes.isEmpty,
-      s"wer reserves column names ${reserved.mkString(", ")}; " +
-        s"input already has ${clashes.mkString(", ")}")
-    val passthrough = pairs.columns.toSeq.map(col)
+    val passthrough = passthroughOf("wer", pairs, reserved)
     pairs
       .select(passthrough :+ toksOrEmpty(col(candCol)).as("__ct") :+
         toksOrEmpty(col(refCol)).as("__rt"): _*)
@@ -385,19 +376,8 @@ object EvalOps {
                refsCol: String): org.apache.spark.sql.DataFrame = {
     val reserved = Seq("n_cand_tokens", "n_refs", "edit_dist_best",
       "ref_len_best", "wer_best_micro", "__ct", "__rts", "__best")
-    val clashes = pairs.columns.filter(reserved.contains)
-    require(clashes.isEmpty,
-      s"werMulti reserves column names ${reserved.mkString(", ")}; " +
-        s"input already has ${clashes.mkString(", ")}")
-    val passthrough = pairs.columns.toSeq.map(col)
-    val noRefs = col(refsCol).isNull || size(col(refsCol)) === 0
-    def loudRefs(c: Column): Column = when(noRefs,
-        raise_error(lit("werMulti: no references — WER against an " +
-          "empty reference set is undefined")))
-      .otherwise(c)
-    pairs
-      .select(passthrough :+ loudRefs(toksOrEmpty(col(candCol))).as("__ct") :+
-        transform(loudRefs(col(refsCol)), r => toksOrEmpty(r)).as("__rts"): _*)
+    val passthrough = passthroughOf("werMulti", pairs, reserved)
+    stageRefs("werMulti", "WER", pairs, passthrough, candCol, refsCol)
       .select(passthrough :+ size(col("__ct")).cast("long")
           .as("n_cand_tokens") :+
         size(col("__rts")).cast("long").as("n_refs") :+
@@ -444,22 +424,8 @@ object EvalOps {
     val orders = 1 to maxN
     val reserved = Seq("cand_len", "ref_len", "__ct", "__rts") ++
       orders.flatMap(n => Seq(s"p${n}_num", s"p${n}_den", s"__cg$n", s"__rgs$n"))
-    val clashes = pairs.columns.filter(reserved.contains)
-    require(clashes.isEmpty,
-      s"bleuComponentsMulti reserves column names ${reserved.mkString(", ")}; " +
-        s"input already has ${clashes.mkString(", ")}")
-    val passthrough = pairs.columns.toSeq.map(col)
-    // the no-references guard lives on the refs array every staged
-    // column derives from — and on the candidate tokens too, so even a
-    // refs-free projection (p_den alone) cannot prune it away
-    val noRefs = col(refsCol).isNull || size(col(refsCol)) === 0
-    def loudRefs(c: Column): Column = when(noRefs,
-        raise_error(lit("bleuComponentsMulti: no references — BLEU " +
-          "against an empty reference set is undefined")))
-      .otherwise(c)
-    pairs
-      .select(passthrough :+ loudRefs(toksOrEmpty(col(candCol))).as("__ct") :+
-        transform(loudRefs(col(refsCol)), r => toksOrEmpty(r)).as("__rts"): _*)
+    val passthrough = passthroughOf("bleuComponentsMulti", pairs, reserved)
+    stageRefs("bleuComponentsMulti", "BLEU", pairs, passthrough, candCol, refsCol)
       .select(passthrough ++ Seq(
         size(col("__ct")).cast("long").as("cand_len"), col("__rts")) ++
         orders.flatMap(n => Seq(
@@ -651,11 +617,7 @@ object EvalOps {
     val reserved = Seq("chrf_micro", "__cc", "__rc") ++
       orders.flatMap(n => Seq(s"chrf${n}_o", s"chrf${n}_c", s"chrf${n}_r",
         s"chrf${n}_f_micro", s"__cg$n", s"__rg$n"))
-    val clashes = pairs.columns.filter(reserved.contains)
-    require(clashes.isEmpty,
-      s"chrF reserves column names ${reserved.mkString(", ")}; " +
-        s"input already has ${clashes.mkString(", ")}")
-    val passthrough = pairs.columns.toSeq.map(col)
+    val passthrough = passthroughOf("chrF", pairs, reserved)
     // whitespace out (the chrF convention), then COMPILED gram builders:
     // CharNgrams + ClippedOverlapCount keep all 6 orders inside codegen
     // (the HOF forms interpreted per gram and cost 20× — BENCH_NOTES
@@ -720,11 +682,7 @@ object EvalOps {
         s"chrf${n}_f_micro", s"__cg$n", s"__rg$n")) ++
       wOrders.flatMap(n => Seq(s"chrfw${n}_o", s"chrfw${n}_c", s"chrfw${n}_r",
         s"chrfw${n}_f_micro", s"__cwg$n", s"__rwg$n"))
-    val clashes = pairs.columns.filter(reserved.contains)
-    require(clashes.isEmpty,
-      s"chrFpp reserves column names ${reserved.mkString(", ")}; " +
-        s"input already has ${clashes.mkString(", ")}")
-    val passthrough = pairs.columns.toSeq.map(col)
+    val passthrough = passthroughOf("chrFpp", pairs, reserved)
     def despaced(c: Column): Column =
       regexp_replace(coalesce(c, lit("")), "\\s+", "")
     // (prefix, order) pairs drive the shared per-order column plumbing

@@ -325,8 +325,15 @@ object Retrieval {
 
   /** [[bm25OddsTopKPruned]] plus the per-query pruning verdict
     * `(query_id, n_top, theta, ub_rest, exact_ok)` — the spec hook that
-    * proves which queries were answered from the pruned path. */
-  /** `prebuiltMaxW`: pass the persisted [[bm25MaxWeights]] table for a
+    * proves which queries were answered from the pruned path.
+    *
+    * EAGER: building the frame runs a Spark action — the verdict is
+    * materialized and counted (`limit(1).count`) to decide whether the
+    * unpruned fallback is planned at all. A caller that composes the
+    * result but never executes it still pays the verdict pipeline, so
+    * plan-only and streaming callers must not assume a lazy build.
+    *
+    * `prebuiltMaxW`: pass the persisted [[bm25MaxWeights]] table for a
     * recurring query suite so each run skips the vocab-sized rebuild.
     * NOTE the bounds depend on the WHOLE index's (N, S): recompute the
     * artifact after index merges, never union per-day maxima (a

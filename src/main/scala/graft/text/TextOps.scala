@@ -52,7 +52,15 @@ object TextOps {
     * contract as before (those plans previously estimated huge). A
     * filter's selectivity no longer shrinks the estimate: frames whose
     * RAW inputs exceed the threshold already scan as enough splits that
-    * the spread was pointless there anyway. */
+    * the spread was pointless there anyway.
+    *
+    * Spread decisions therefore depend on the SCALE FACTOR: the same
+    * query spreads on small inputs and not once its raw leaf scans pass
+    * the threshold, even when a selective filter leaves a small frame.
+    * Decision-equivalence with the old optimizer-stats probe was checked
+    * at the bench SF only (24-query sample); at other scale factors a
+    * small post-filter frame over a large source may lose a spread
+    * (perf-only, and the conservative direction). */
   private[graft] def leafScanBytes(df: org.apache.spark.sql.DataFrame): BigInt = {
     val sizes = df.queryExecution.analyzed.collectLeaves().map {
       case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
@@ -793,7 +801,7 @@ object TextOps {
     // up from the (vocab-sized) aggregate instead of paying a third full
     // pass + exchange over the token stream (guide §2.3: aggregate the
     // already-aggregated)
-    val total = uni.agg(sum(col("n")).as("__N"))
+    val total = uni.agg(coalesce(sum(col("n")), lit(0L)).as("__N"))
     pairs
       .join(uni.select(col("__w").as("w1"), col("n").as("n_w1")), Seq("w1"))
       .join(uni.select(col("__w").as("w2"), col("n").as("n_w2")), Seq("w2"))

@@ -64,4 +64,9 @@ class BenchQmsSpec extends AnyFunSuite {
     assert(Bench.qmsLines(Map("q07_a" -> Right(1.0), "q07_b" -> Right(2.0)))
       .head.contains("qms_skipped"))
   }
+
+  test("quote escapes quotes, backslashes and control chars into one JSON line") {
+    assert(Bench.quote("a\"b\\c\nd\te\u0001f") === "\"a\\\"b\\\\c\\nd\\te\\u0001f\"")
+    assert(Bench.quote("") === "\"\"")
+  }
 }

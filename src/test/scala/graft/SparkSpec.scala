@@ -6,23 +6,12 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for all suites (one per JVM — suites run
   * sequentially in sbt's forked test JVM). */
 object TestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // InferFiltersFromGenerate re-inlines generator expressions into a
-      // pushed-down filter, re-evaluating interpreted HOF lambdas per row
-      // (O(n^2) for shingles) - semantics-neutral to exclude.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-    .config("spark.ui.enabled", "false")
+  lazy val spark: SparkSession = GraftSession.local(4, Seq(
+    "spark.app.name" -> "graft-test",
     // bucketed-table tests write via saveAsTable: keep the warehouse out
     // of the repo tree
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-    .getOrCreate()
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft-warehouse").toString))
 }
 
 trait SparkSpec extends AnyFunSuite {

@@ -189,6 +189,16 @@ class UrlQualitySpec extends SparkSpec {
     assert(!out.contains(("b", "x")), "cross-doc boundary must not pair")
   }
 
+  test("collocations: an empty corpus (no docs, or no tokens) yields no pairs") {
+    // the token total is a sum over zero unigrams there: it must read 0,
+    // not null, rather than rely on the pair side being empty too
+    val none = Seq.empty[(Long, String)].toDF("id", "text")
+    val blank = Seq((1L, ""), (2L, "   ")).toDF("id", "text")
+    Seq(none, blank).foreach { docs =>
+      assert(TextOps.collocations(docs, "text", "id", minCount = 1L).collect().isEmpty)
+    }
+  }
+
   test("chiSquareTokens: exact contingency halves on a hand-checked fixture") {
     // 2 positive docs, 2 negative. "hot" in both positives only;
     // "cold" in both negatives only; "both" everywhere (degenerate —
