@@ -2,7 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.ops.Graphs
+import graft.ops.Ckpt
 import graft.text.TextOps
 
 /** Deduplication operators for training-data pipelines: exact, n-gram
@@ -1570,7 +1570,7 @@ object Dedup {
         .unionAll(withM.select(col("u"), col("m").as("v")))
         .distinct())
       val next = sig(ss) // action: materializes ss's checkpoint (lineage truncated)
-      Graphs.unpersistCkpt(edges) // prior round's blocks are now unreachable — release them
+      Ckpt.release(edges) // prior round's blocks are now unreachable — release them
       done = next == cur
       cur = next
       edges = ss

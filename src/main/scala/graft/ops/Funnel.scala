@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Ordered-sequence funnel analytics — the `windowFunnel` capability of
@@ -93,20 +93,8 @@ object Funnel {
     * active key in their window are absent (no dense grid is emitted —
     * the SQL replay does the same). */
   def rollingActive(events: DataFrame, keyCol: String, tsCol: String,
-                    bucketNanos: Long, windowBuckets: Int): DataFrame = {
-    require(windowBuckets >= 1, "window must span at least one bucket")
-    val kb = events.select(col(keyCol),
-        expr(s"`$tsCol` div ${bucketNanos}L").as("__b"))
-      .distinct()
-    val newest = kb.agg(max(col("__b")).as("__mb"))
-    kb.crossJoin(broadcast(newest))
-      .select(col(keyCol), explode(sequence(col("__b"),
-        least(col("__b") + lit(windowBuckets - 1L), col("__mb"))))
-        .as("bucket"))
-      .distinct()
-      .groupBy(col("bucket"))
-      .agg(count(lit(1)).cast("long").as("n_active"))
-  }
+                    bucketNanos: Long, windowBuckets: Int): DataFrame =
+    rollingDistinct(events, keyCol, Nil, tsCol, bucketNanos, windowBuckets)
 
   /** Per-segment [[rollingActive]] — rolling distinct actives for every
     * (segment, bucket): the same distinct → fan-out → distinct + count
@@ -116,19 +104,40 @@ object Funnel {
     * report the same bucket range, absent where they had no active key. */
   def rollingActiveBy(events: DataFrame, keyCol: String, segCol: String,
                       tsCol: String, bucketNanos: Long,
-                      windowBuckets: Int): DataFrame = {
+                      windowBuckets: Int): DataFrame =
+    rollingDistinct(events, keyCol, Seq(segCol), tsCol, bucketNanos,
+      windowBuckets)
+
+  /** The [[rollingActiveBy]] body; [[rollingActive]] is its no-segment
+    * case. */
+  private def rollingDistinct(events: DataFrame, keyCol: String,
+                              segCols: Seq[String], tsCol: String,
+                              bucketNanos: Long,
+                              windowBuckets: Int): DataFrame = {
     require(windowBuckets >= 1, "window must span at least one bucket")
-    val kb = events.select(col(keyCol), col(segCol),
-        expr(s"`$tsCol` div ${bucketNanos}L").as("__b"))
+    val keys = (keyCol +: segCols).map(col)
+    val kb = events.select(keys :+
+        expr(s"`$tsCol` div ${bucketNanos}L").as("__b"): _*)
       .distinct()
-    val newest = kb.agg(max(col("__b")).as("__mb"))
-    kb.crossJoin(broadcast(newest))
-      .select(col(keyCol), col(segCol), explode(sequence(col("__b"),
-        least(col("__b") + lit(windowBuckets - 1L), col("__mb"))))
-        .as("bucket"))
+    windowFanOut(kb, windowBuckets, keys: _*)
       .distinct()
-      .groupBy(col(segCol), col("bucket"))
+      .groupBy(segCols.map(col) :+ col("bucket"): _*)
       .agg(count(lit(1)).cast("long").as("n_active"))
+  }
+
+  /** The clamped rolling-window fan-out every windowed operator here
+    * and in [[Timeseries]] shares: each row of `perBucket` (bucket in
+    * `__b`) is emitted once per window end it contributes to,
+    * `[__b, min(__b + w − 1, newest bucket)]`, as `bucket` beside the
+    * `carry` columns. The newest-bucket clamp rides a broadcast 1-row
+    * aggregate. */
+  private[ops] def windowFanOut(perBucket: DataFrame, windowBuckets: Int,
+                                carry: Column*): DataFrame = {
+    val newest = perBucket.agg(max(col("__b")).as("__mb"))
+    perBucket.crossJoin(broadcast(newest))
+      .select(carry :+ explode(sequence(col("__b"),
+        least(col("__b") + lit(windowBuckets - 1L), col("__mb"))))
+        .as("bucket"): _*)
   }
 
   /** [[rollingActive]]'s sketch path — the 10⁹-actives form: per-bucket
@@ -150,11 +159,7 @@ object Funnel {
       .select(col(keyCol), expr(s"`$tsCol` div ${bucketNanos}L").as("__b"))
       .groupBy(col("__b"))
       .agg(hll_sketch_agg(col(keyCol), lit(lgConfigK)).as("__sk"))
-    val newest = perBucket.agg(max(col("__b")).as("__mb"))
-    perBucket.crossJoin(broadcast(newest))
-      .select(col("__sk"), explode(sequence(col("__b"),
-        least(col("__b") + lit(windowBuckets - 1L), col("__mb"))))
-        .as("bucket"))
+    windowFanOut(perBucket, windowBuckets, col("__sk"))
       .groupBy(col("bucket"))
       .agg(hll_sketch_estimate(hll_union_agg(col("__sk"), lit(false)))
         .as("n_active_approx"))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Link-graph centrality — the graph-based quality-weighting signal of
@@ -27,49 +27,14 @@ import org.apache.spark.sql.functions._
   * 100 TB the edges and rank table pre-bucket on the id
   * (`BatchView.writeBucketed`) and iterations plan exchange-free on
   * the edge side. Each iteration is `localCheckpoint`ed: k iterations
-  * stay k linear jobs instead of one exponentially nested plan. */
+  * stay k linear jobs instead of one exponentially nested plan.
+  *
+  * Every edge-taking operator enters through `edgeIntake` (and source
+  * ids through `sourceIntake`): one long cast, one checkpoint that
+  * observes the null count, one error that names [[withNodeIds]]. The
+  * shared derivations (simple graph, node set, degrees, symmetric
+  * adjacency) sit beside them. */
 object Graphs {
-
-  /** Eager local checkpoint that ALSO evaluates named row-count metrics
-    * inside the materialization job (`Dataset.observe`): the null-id /
-    * emptiness / size scalars every graph operator needs stop costing a
-    * second full pass over the just-checkpointed data — at corpus scale
-    * that second pass re-reads the entire edge list. Each flag column
-    * counts the rows where it is true. Returns the checkpointed frame
-    * plus the counts by name. */
-  private def ckptCounts(df: DataFrame,
-                         flags: (String, org.apache.spark.sql.Column)*)
-      : (DataFrame, Map[String, Long]) = {
-    val obs = org.apache.spark.sql.Observation()
-    val metrics = flags.map { case (n, c) =>
-      sum(when(c, 1L).otherwise(0L)).as(n) }
-    val out = df.observe(obs, metrics.head, metrics.tail: _*)
-      .localCheckpoint(eager = true)
-    val got = obs.get
-    (out, flags.map { case (n, _) =>
-      n -> (got.get(n) match {
-        case Some(x: java.lang.Number) => x.longValue()
-        case _ => 0L // sum over zero rows observes as null
-      })
-    }.toMap)
-  }
-
-  /** Release a checkpointed frame's executor blocks once every consumer
-    * has materialized. A checkpointed Dataset's plan is a LogicalRDD over
-    * the persisted RDD; Dataset.unpersist only covers CacheManager
-    * entries, so the release must go through that RDD directly. The
-    * fallthrough must be OBSERVABLE: if a Spark upgrade stops wrapping
-    * checkpoint output in LogicalRDD, every caller's blocks would
-    * silently leak and pin executor storage for the job's life. */
-  private[graft] def unpersistCkpt(df: DataFrame): Unit =
-    df.queryExecution.logical match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case other =>
-        org.slf4j.LoggerFactory.getLogger(Graphs.getClass).warn(
-          s"unpersistCkpt: checkpointed plan is ${other.getClass.getSimpleName}, " +
-            "not LogicalRDD — blocks cannot be released (storage leak)")
-    }
 
   /** Map STRING node keys (hosts, canonical URLs — the web-corpus graph
     * keys the centrality operators exist for) to stable long ids via a
@@ -87,7 +52,7 @@ object Graphs {
     * fires). Null node keys fail loudly too — an inner-join mapping
     * would silently drop those edges. */
   def withNodeIds(edges: DataFrame, srcCol: String, dstCol: String): (DataFrame, DataFrame) = {
-    val (e, cE) = ckptCounts(edges // scanned for dict + mapping
+    val (e, cE) = Ckpt.counts(edges // scanned for dict + mapping
       .withColumn(srcCol, col(srcCol).cast("string"))
       .withColumn(dstCol, col(dstCol).cast("string")),
       "bad" -> (col(srcCol).isNull || col(dstCol).isNull))
@@ -125,16 +90,82 @@ object Graphs {
     * }}} */
   def pageRankFixed(edges: DataFrame, srcCol: String, dstCol: String,
                     iterations: Int, dampMilli: Long = 850L): DataFrame =
-    pageRankFixedImpl(
-      edges.select(tryLong(srcCol).as("src"),
-        tryLong(dstCol).as("dst"), lit(1L).as("w")),
-      iterations, dampMilli, weighted = false)
+    pageRankFixedImpl(edges, srcCol, dstCol, None, iterations, dampMilli)
 
   /** `try_cast` (not `cast`): under ANSI a garbage id would throw a
     * generic CAST error mid-job; the null it yields here instead is
-    * caught by the impl's guard with the actionable message (use
+    * caught by the intake's guard with the actionable message (use
     * [[withNodeIds]]), and non-ANSI sessions behave identically. */
   private def tryLong(c: String) = expr(s"try_cast(`$c` as bigint)")
+
+  private val idHint = "Graphs.withNodeIds first"
+
+  /** The edge intake of every edge-taking operator: `srcCol`/`dstCol`
+    * long-cast to the operator's own `ids` names (plus `w` when a
+    * `weight` is given), eagerly checkpointed with the null count — and
+    * any extra `flags` — observed in that same job, and a loud error on
+    * a null id or weight. Without the guard every non-numeric id
+    * (string hosts/URLs, the documented use) would collapse into one
+    * null node and the result would be silently garbage. Returns the
+    * checkpoint and the counts. */
+  private def edgeIntake(edges: DataFrame, srcCol: String, dstCol: String,
+                         ids: (String, String), weight: Option[Column] = None,
+                         flags: Seq[(String, Column)] = Nil)
+      : (DataFrame, Map[String, Long]) = {
+    val (s, d) = ids
+    val nullIds = col(s).isNull || col(d).isNull
+    val (bad, what) =
+      if (weight.isDefined) (nullIds || col("w").isNull, "ids/weights")
+      else (nullIds, "ids")
+    val (e, c) = Ckpt.counts(
+      edges.select(Seq(tryLong(srcCol).as(s), tryLong(dstCol).as(d)) ++
+        weight.map(_.as("w")): _*),
+      ("bad" -> bad) +: flags: _*)
+    val badIds = c("bad")
+    require(badIds == 0L,
+      s"$badIds edge rows have null node $what after the long cast " +
+        s"— string node keys? map them through $idHint")
+    (e, c)
+  }
+
+  /** The source-id intake of the multi-source operators: distinct
+    * long-cast ids as `as`, followed by the `more` columns, eagerly
+    * checkpointed, and a loud error on a null id. */
+  private def sourceIntake(sources: DataFrame, sourceCol: String, as: String,
+                           more: Column*): DataFrame = {
+    val (out, c) = Ckpt.counts(
+      sources.select(tryLong(sourceCol).as(as)).distinct()
+        .select(col(as) +: more: _*),
+      "badSrc" -> col(as).isNull)
+    require(c("badSrc") == 0L,
+      s"source ids must cast to non-null longs — map string keys through $idHint")
+    out
+  }
+
+  /** Both endpoints of every edge as one `node` column, a row per side. */
+  private def endpoints(e: DataFrame, s: String, d: String): DataFrame =
+    e.select(col(s).as("node")).union(e.select(col(d).as("node")))
+
+  /** The node set of a `(src, dst)` edge frame. */
+  private def nodeSet(e: DataFrame): DataFrame =
+    endpoints(e, "src", "dst").distinct()
+
+  /** The canonical simple graph of an `(a, b)` edge frame: undirected
+    * (`a < b`), deduped, no self-loops. */
+  private def simpleGraph(raw: DataFrame): DataFrame =
+    raw.where(col("a") =!= col("b"))
+      .select(least(col("a"), col("b")).as("a"),
+        greatest(col("a"), col("b")).as("b"))
+      .distinct()
+
+  /** `(node, degree)` of a canonical `(a, b)` graph. */
+  private def degrees(und: DataFrame): DataFrame =
+    endpoints(und, "a", "b").groupBy(col("node")).agg(count(lit(1)).as("degree"))
+
+  /** Both directions of a canonical `(a, b)` graph as `(u, v)`. */
+  private def symmetric(und: DataFrame): DataFrame =
+    und.select(col("a").as("u"), col("b").as("v"))
+      .union(und.select(col("b").as("u"), col("a").as("v")))
 
   /** Edge-WEIGHTED fixed-point PageRank: a node splits its rank over
     * out-edges proportionally to weight — `contrib(u→v) = (r(u) · w)
@@ -146,11 +177,8 @@ object Graphs {
   def pageRankWeighted(edges: DataFrame, srcCol: String, dstCol: String,
                        weightCol: String, iterations: Int,
                        dampMilli: Long = 850L): DataFrame =
-    pageRankFixedImpl(
-      edges.select(tryLong(srcCol).as("src"),
-        tryLong(dstCol).as("dst"),
-        tryLong(weightCol).as("w")),
-      iterations, dampMilli, weighted = true)
+    pageRankFixedImpl(edges, srcCol, dstCol, Some(weightCol), iterations,
+      dampMilli)
 
   /** PERSONALIZED PageRank: the teleport mass returns only to the SEED
     * set (uniformly), so ranks measure centrality RELATIVE to the seeds
@@ -175,19 +203,11 @@ object Graphs {
     require(iterations >= 1, s"iterations must be positive: $iterations")
     require(dampMilli >= 0L && dampMilli <= 1000L,
       s"dampMilli must be in [0, 1000]: $dampMilli")
-    val (e, cE) = ckptCounts(
-      edges.select(tryLong(srcCol).as("src"), tryLong(dstCol).as("dst")),
-      "bad" -> (col("src").isNull || col("dst").isNull))
-    val badIds = cE("bad")
-    require(badIds == 0L,
-      s"$badIds edge rows have null node ids after the long cast " +
-        "— string node keys? map them through Graphs.withNodeIds first")
+    val (e, _) = edgeIntake(edges, srcCol, dstCol, ("src", "dst"))
     val seedIds = seeds.select(tryLong(seedCol).as("node")).distinct()
-    val nodesAll = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
     // membership flag rides the node table; seeds outside the graph
     // drop here (inner semi join), matching the documented semantics
-    val (nodes, cN) = ckptCounts(nodesAll
+    val (nodes, cN) = Ckpt.counts(nodeSet(e)
       .join(seedIds.select(col("node"), lit(1L).as("seed")), Seq("node"), "left")
       .select(col("node"), coalesce(col("seed"), lit(0L)).as("seed")),
       "seeds" -> (col("seed") === 1L))
@@ -247,18 +267,10 @@ object Graphs {
            iterations: Int): DataFrame = {
     require(iterations >= 1, s"iterations must be positive: $iterations")
     val SCALE = 1000000000L
-    val (raw, cR) = ckptCounts(
-      edges.select(tryLong(srcCol).as("src"), tryLong(dstCol).as("dst")),
-      "bad" -> (col("src").isNull || col("dst").isNull))
-    val badIds = cR("bad")
-    require(badIds == 0L,
-      s"$badIds edge rows have null node ids after the long cast " +
-        "— string node keys? map them through Graphs.withNodeIds first")
-    val (e, cEdge) = ckptCounts(raw.distinct(), "n" -> lit(true))
+    val (raw, _) = edgeIntake(edges, srcCol, dstCol, ("src", "dst"))
+    val (e, cEdge) = Ckpt.counts(raw.distinct(), "n" -> lit(true))
     require(cEdge("n") > 0L, "edge list is empty — nothing to rank")
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .localCheckpoint(eager = true)
+    val nodes = nodeSet(e).localCheckpoint(eager = true)
     val ncount = nodes.agg(count(lit(1)).as("n"))
     var hubs = nodes.crossJoin(broadcast(ncount))
       .select(col("node"), expr(s"${SCALE}L div n").as("h"))
@@ -281,7 +293,7 @@ object Graphs {
       // materialized — release its blocks instead of pinning 2×iterations
       // node-sized RDDs for the job's lifetime (r18, the
       // connectedComponents unpersist discipline)
-      unpersistCkpt(araw)
+      Ckpt.release(araw)
       val hraw = auths.join(e, auths("node") === e("dst"))
         .groupBy(col("src")).agg(sum(col("a")).as("v"))
         .localCheckpoint(eager = false)
@@ -291,7 +303,7 @@ object Graphs {
         .select(col("node"),
           coalesce(expr(s"(v * ${SCALE}L) div s"), lit(0L)).as("h"))
         .localCheckpoint(eager = true)
-      unpersistCkpt(hraw)
+      Ckpt.release(hraw)
     }
     nodes
       .join(hubs, Seq("node")).join(auths, Seq("node"))
@@ -318,22 +330,9 @@ object Graphs {
     * node-keyed hash joins + one aggregate; pre-bucketing the edge list
     * on the node id makes them exchange-free at 100 TB. */
   def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val (raw, cRaw) = ckptCounts(
-      edges.select(tryLong(srcCol).as("a"), tryLong(dstCol).as("b")),
-      "bad" -> (col("a").isNull || col("b").isNull))
-    val badIds = cRaw("bad")
-    require(badIds == 0L,
-      s"$badIds edge rows have null node ids after the long cast " +
-        "— string node keys? map them through Graphs.withNodeIds first")
-    // canonical simple graph: undirected, deduped, no self-loops
-    val und = raw.where(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b"))
-      .distinct()
-    val deg = und.select(col("a").as("node"))
-      .union(und.select(col("b").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("degree"))
-      .localCheckpoint(eager = true)
+    val (raw, _) = edgeIntake(edges, srcCol, dstCol, ("a", "b"))
+    val und = simpleGraph(raw)
+    val deg = degrees(und).localCheckpoint(eager = true)
     // orient by (degree, id): struct comparison gives the total order
     val withDeg = und
       .join(deg.select(col("node").as("a"), col("degree").as("da")), Seq("a"))
@@ -384,13 +383,7 @@ object Graphs {
   def cooccurrenceProject(edges: DataFrame, srcCol: String, dstCol: String,
                           maxPerSrc: Int): DataFrame = {
     require(maxPerSrc >= 2, s"maxPerSrc must be >= 2: $maxPerSrc")
-    val (raw, cRaw) = ckptCounts(
-      edges.select(tryLong(srcCol).as("s"), tryLong(dstCol).as("i")),
-      "bad" -> (col("s").isNull || col("i").isNull))
-    val badIds = cRaw("bad")
-    require(badIds == 0L,
-      s"$badIds edge rows have null node ids after the long cast " +
-        "— string node keys? map them through Graphs.withNodeIds first")
+    val (raw, _) = edgeIntake(edges, srcCol, dstCol, ("s", "i"))
     val capped = raw.distinct()
       .groupBy(col("s"))
       .agg(graft.udafs.TopK.smallestK(col("i"), maxPerSrc).as("items"))
@@ -421,20 +414,8 @@ object Graphs {
   def randomWalks(edges: DataFrame, srcCol: String, dstCol: String,
                   steps: Int): DataFrame = {
     require(steps >= 1, s"steps must be positive: $steps")
-    val (raw, cRaw) = ckptCounts(
-      edges.select(tryLong(srcCol).as("a"), tryLong(dstCol).as("b")),
-      "bad" -> (col("a").isNull || col("b").isNull))
-    val badIds = cRaw("bad")
-    require(badIds == 0L,
-      s"$badIds edge rows have null node ids after the long cast " +
-        "— string node keys? map them through Graphs.withNodeIds first")
-    val und = raw.where(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b"))
-      .distinct()
-    val adj = und.select(col("a").as("u"), col("b").as("v"))
-      .union(und.select(col("b").as("u"), col("a").as("v")))
-      .localCheckpoint(eager = true)
+    val (raw, _) = edgeIntake(edges, srcCol, dstCol, ("a", "b"))
+    val adj = symmetric(simpleGraph(raw)).localCheckpoint(eager = true)
     var frontier = adj.select(col("u").as("start")).distinct()
       .select(col("start"), col("start").as("node"))
       .localCheckpoint(eager = true)
@@ -477,20 +458,8 @@ object Graphs {
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be positive: $rounds")
-    val (raw, cRaw) = ckptCounts(
-      edges.select(tryLong(srcCol).as("a"), tryLong(dstCol).as("b")),
-      "bad" -> (col("a").isNull || col("b").isNull))
-    val badIds = cRaw("bad")
-    require(badIds == 0L,
-      s"$badIds edge rows have null node ids after the long cast " +
-        "— string node keys? map them through Graphs.withNodeIds first")
-    val und = raw.where(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b"))
-      .distinct()
-    val adj = und.select(col("a").as("u"), col("b").as("v"))
-      .union(und.select(col("b").as("u"), col("a").as("v")))
-      .localCheckpoint(eager = true)
+    val (raw, _) = edgeIntake(edges, srcCol, dstCol, ("a", "b"))
+    val adj = symmetric(simpleGraph(raw)).localCheckpoint(eager = true)
     var labels = adj.select(col("u").as("node")).distinct()
       .select(col("node"), col("node").as("lbl"))
     for (_ <- 1 to rounds) {
@@ -526,25 +495,12 @@ object Graphs {
             maxRounds: Int = Int.MaxValue): DataFrame = {
     require(k >= 1, s"k must be positive: $k")
     require(maxRounds >= 1, s"maxRounds must be positive: $maxRounds")
-    val (raw, cRaw) = ckptCounts(
-      edges.select(tryLong(srcCol).as("a"), tryLong(dstCol).as("b")),
-      "bad" -> (col("a").isNull || col("b").isNull))
-    val badIds = cRaw("bad")
-    require(badIds == 0L,
-      s"$badIds edge rows have null node ids after the long cast " +
-        "— string node keys? map them through Graphs.withNodeIds first")
-    var cur = raw.where(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b"))
-      .distinct()
-      .localCheckpoint(eager = true)
-    def degrees(e: DataFrame): DataFrame =
-      e.select(col("a").as("node")).union(e.select(col("b").as("node")))
-        .groupBy(col("node")).agg(count(lit(1)).as("degree"))
+    val (raw, _) = edgeIntake(edges, srcCol, dstCol, ("a", "b"))
+    var cur = simpleGraph(raw).localCheckpoint(eager = true)
     var round = 0
     var converged = false
     while (!converged && round < maxRounds) {
-      val (deg, cD) = ckptCounts(degrees(cur), "low" -> (col("degree") < lit(k.toLong)))
+      val (deg, cD) = Ckpt.counts(degrees(cur), "low" -> (col("degree") < lit(k.toLong)))
       if (cD("low") == 0L) converged = true
       else {
         val good = deg.where(col("degree") >= k).select(col("node"))
@@ -581,26 +537,14 @@ object Graphs {
                     sources: DataFrame, sourceCol: String, maxIter: Int,
                     weightCol: Option[String] = None): DataFrame = {
     require(maxIter >= 1, s"maxIter must be positive: $maxIter")
-    val (e, cE) = ckptCounts(
-      edges.select(tryLong(srcCol).as("src"), tryLong(dstCol).as("dst"),
-        weightCol.map(tryLong).getOrElse(lit(1L)).as("w")),
-      "bad" -> (col("src").isNull || col("dst").isNull || col("w").isNull),
-      "badW" -> (col("w") <= 0L))
-    val badIds = cE("bad")
-    require(badIds == 0L,
-      s"$badIds edge rows have null node ids/weights after the long cast " +
-        "— string node keys? map them through Graphs.withNodeIds first")
+    val (e, cE) = edgeIntake(edges, srcCol, dstCol, ("src", "dst"),
+      Some(weightCol.map(tryLong).getOrElse(lit(1L))),
+      Seq("badW" -> (col("w") <= 0L)))
     val badW = cE("badW")
     require(badW == 0L,
       s"$badW edge rows have non-positive weights — shortest paths over " +
         "zero/negative edges are not the truncated-relaxation semantics")
-    var (dist, cD) = ckptCounts(
-      sources.select(tryLong(sourceCol).as("node")).distinct()
-        .select(col("node"), lit(0L).as("dist")),
-      "badSrc" -> col("node").isNull)
-    require(cD("badSrc") == 0L,
-      "source ids must cast to non-null longs — map string keys through " +
-        "Graphs.withNodeIds first")
+    var dist = sourceIntake(sources, sourceCol, "node", lit(0L).as("dist"))
     for (_ <- 1 to maxIter) {
       val relaxed = dist.join(e, dist("node") === e("src"))
         .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
@@ -634,24 +578,11 @@ object Graphs {
     require(maxWedgeDegree >= 2,
       s"maxWedgeDegree must be at least 2 (a wedge needs 2 neighbors): " +
         s"$maxWedgeDegree")
-    val (raw, cRaw) = ckptCounts(
-      edges.select(tryLong(srcCol).as("a"), tryLong(dstCol).as("b")),
-      "bad" -> (col("a").isNull || col("b").isNull))
-    val badIds = cRaw("bad")
-    require(badIds == 0L,
-      s"$badIds edge rows have null node ids after the long cast " +
-        "— string node keys? map them through Graphs.withNodeIds first")
-    val und = raw.where(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b"))
-      .distinct()
+    val (raw, _) = edgeIntake(edges, srcCol, dstCol, ("a", "b"))
+    val und = simpleGraph(raw)
       .localCheckpoint(eager = true) // adjacency, degrees, and the anti-join
-    val deg = und.select(col("a").as("node"))
-      .union(und.select(col("b").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("degree"))
-      .localCheckpoint(eager = true)
-    val adj = und.select(col("a").as("u"), col("b").as("v"))
-      .union(und.select(col("b").as("u"), col("a").as("v")))
+    val deg = degrees(und).localCheckpoint(eager = true)
+    val adj = symmetric(und)
     val centers = deg.where(col("degree") <= maxWedgeDegree)
       .select(col("node").as("u"))
     val capped = adj.join(centers, Seq("u"), "left_semi")
@@ -688,26 +619,16 @@ object Graphs {
   def modularity(edges: DataFrame, srcCol: String, dstCol: String,
                  labels: DataFrame, nodeCol: String,
                  labelCol: String): DataFrame = {
-    val (raw, cRaw) = ckptCounts(
-      edges.select(tryLong(srcCol).as("a"), tryLong(dstCol).as("b")),
-      "bad" -> (col("a").isNull || col("b").isNull))
-    val badIds = cRaw("bad")
-    require(badIds == 0L,
-      s"$badIds edge rows have null node ids after the long cast " +
-        "— string node keys? map them through Graphs.withNodeIds first")
-    val (und, cU) = ckptCounts(raw.where(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b"))
-      .distinct(),
-      "m" -> lit(true))
-    val (lbl, cL) = ckptCounts(labels.select(tryLong(nodeCol).as("node"),
+    val (raw, _) = edgeIntake(edges, srcCol, dstCol, ("a", "b"))
+    val (und, cU) = Ckpt.counts(simpleGraph(raw), "m" -> lit(true))
+    val (lbl, cL) = Ckpt.counts(labels.select(tryLong(nodeCol).as("node"),
         col(labelCol).as("lbl")),
       "badLbl" -> (col("node").isNull || col("lbl").isNull))
     require(cL("badLbl") == 0L,
       "labels frame has null node ids or labels")
     val m = cU("m")
     require(m > 0L, "edge list is empty — modularity is undefined")
-    val (withLbls, cW) = ckptCounts(und
+    val (withLbls, cW) = Ckpt.counts(und
       .join(lbl.select(col("node").as("a"), col("lbl").as("la")), Seq("a"),
         "left")
       .join(lbl.select(col("node").as("b"), col("lbl").as("lb")), Seq("b"),
@@ -720,8 +641,7 @@ object Graphs {
     val intra = withLbls.where(col("la") === col("lb"))
       .groupBy(col("la").as("label"))
       .agg(count(lit(1)).as("intra_edges"))
-    val degSum = und.select(col("a").as("node"))
-      .union(und.select(col("b").as("node")))
+    val degSum = endpoints(und, "a", "b")
       .join(lbl, Seq("node"))
       .groupBy(col("lbl").as("label"))
       .agg(count(lit(1)).as("degree_sum"),
@@ -761,21 +681,13 @@ object Graphs {
   def scc(edges: DataFrame, srcCol: String, dstCol: String,
           maxPeels: Int = 64): DataFrame = {
     require(maxPeels >= 1, s"maxPeels must be positive: $maxPeels")
-    val (raw, cRaw) = ckptCounts(
-      edges.select(tryLong(srcCol).as("src"), tryLong(dstCol).as("dst")),
-      "bad" -> (col("src").isNull || col("dst").isNull))
-    val badIds = cRaw("bad")
-    require(badIds == 0L,
-      s"$badIds edge rows have null node ids after the long cast " +
-        "— string node keys? map them through Graphs.withNodeIds first")
+    val (raw, _) = edgeIntake(edges, srcCol, dstCol, ("src", "dst"))
     // self-loops don't change SCC membership; self-loop-only nodes stay
     // in the node set and settle as singletons
     var rem = raw.where(col("src") =!= col("dst")).distinct()
       .localCheckpoint(eager = true)
-    var (nodes, cN) = ckptCounts(raw.select(col("src").as("node"))
-      .union(raw.select(col("dst").as("node"))).distinct(),
-      "n" -> lit(true))
-    unpersistCkpt(raw)
+    var (nodes, cN) = Ckpt.counts(nodeSet(raw), "n" -> lit(true))
+    Ckpt.release(raw)
     val spark = edges.sparkSession
     var result = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -802,7 +714,7 @@ object Graphs {
       unionsSinceCollapse += 1
       if (unionsSinceCollapse >= 16) {
         result = result.localCheckpoint(eager = true)
-        (collapsed.toList ++ referenced).foreach(unpersistCkpt)
+        (collapsed.toList ++ referenced).foreach(Ckpt.release)
         collapsed = Some(result)
         referenced = Nil
         unionsSinceCollapse = 0
@@ -811,7 +723,7 @@ object Graphs {
     // every other superseded step is released as soon as its successor
     // has materialized (all steps are eager checkpoints)
     def replace(old: DataFrame, next: DataFrame): DataFrame = {
-      unpersistCkpt(old)
+      Ckpt.release(old)
       next
     }
     var peel = 0
@@ -825,7 +737,7 @@ object Graphs {
       var trimmed = true
       var trimRound = 0
       while (trimmed && trimRound < 256 && remaining > 0L) {
-        val (keep, cK) = ckptCounts(nodes
+        val (keep, cK) = Ckpt.counts(nodes
           .join(rem.select(col("dst").as("node")).distinct(), Seq("node"),
             "left_semi")
           .join(rem.select(col("src").as("node")).distinct(), Seq("node"),
@@ -834,7 +746,7 @@ object Graphs {
         val keepN = cK("n")
         if (keepN == remaining) {
           trimmed = false
-          unpersistCkpt(keep)
+          Ckpt.release(keep)
         } else {
           val dropped = nodes.join(keep, Seq("node"), "left_anti")
           // result is consumed ONCE at the end — accumulate as a lazy
@@ -866,7 +778,7 @@ object Graphs {
         // taking max(color) WHERE __o=1 recovers the previous color in
         // the same groupBy — the old next⋈colors diff-join and its
         // separate count job are gone (2 jobs → 1 per round)
-        val (next, cRound) = ckptCounts(
+        val (next, cRound) = Ckpt.counts(
           colors.select(col("node"), col("color"), lit(1).as("__o"))
             .union(pushed)
             .groupBy(col("node"))
@@ -886,10 +798,10 @@ object Graphs {
         .where(col("csrc") === col("cdst"))
         .select(col("src"), col("dst"), col("csrc").as("color"))
         .localCheckpoint(eager = true)
-      var (member, cM) = ckptCounts(colors.where(col("color") === col("node"))
+      var (member, cM) = Ckpt.counts(colors.where(col("color") === col("node"))
         .select(col("node"), col("color")),
         "n" -> lit(true))
-      unpersistCkpt(colors)
+      Ckpt.release(colors)
       var memberN = cM("n")
       var grew = true
       while (grew) {
@@ -897,17 +809,17 @@ object Graphs {
           .join(member.as("m"), col("e.dst") === col("m.node") &&
             col("e.color") === col("m.color"))
           .select(col("e.src").as("node"), col("e.color").as("color"))
-        val (next, cNext) = ckptCounts(member.union(grown).distinct(),
+        val (next, cNext) = Ckpt.counts(member.union(grown).distinct(),
           "n" -> lit(true))
         val nextN = cNext("n")
         grew = nextN > memberN
         member = replace(member, next)
         memberN = nextN
       }
-      unpersistCkpt(eCol)
+      Ckpt.release(eCol)
       // (3) settle and peel (result stays a lazy union — see trim)
       accumulate(member.select(col("node"), col("color").as("scc_id")))
-      val (nodesNext, cRem) = ckptCounts(
+      val (nodesNext, cRem) = Ckpt.counts(
         nodes.join(member.select(col("node")), Seq("node"), "left_anti"),
         "n" -> lit(true))
       referenced = member :: nodes :: referenced
@@ -924,7 +836,7 @@ object Graphs {
       s"scc did not settle every node in $maxPeels peels ($remaining " +
         "left) — raise maxPeels (long chains of single-node components " +
         "peel one chain link per pass)")
-    unpersistCkpt(rem)
+    Ckpt.release(rem)
     result
   }
 
@@ -939,18 +851,10 @@ object Graphs {
   def neighborhoodExact(edges: DataFrame, srcCol: String, dstCol: String,
                         maxRadius: Int): DataFrame = {
     require(maxRadius >= 1, s"maxRadius must be positive: $maxRadius")
-    val (raw, cRaw) = ckptCounts(
-      edges.select(tryLong(srcCol).as("src"), tryLong(dstCol).as("dst")),
-      "bad" -> (col("src").isNull || col("dst").isNull))
-    val badIds = cRaw("bad")
-    require(badIds == 0L,
-      s"$badIds edge rows have null node ids after the long cast " +
-        "— string node keys? map them through Graphs.withNodeIds first")
+    val (raw, _) = edgeIntake(edges, srcCol, dstCol, ("src", "dst"))
     val e = raw.where(col("src") =!= col("dst")).distinct()
       .localCheckpoint(eager = true)
-    val nodes = raw.select(col("src").as("node"))
-      .union(raw.select(col("dst").as("node"))).distinct()
-      .localCheckpoint(eager = true)
+    val nodes = nodeSet(raw).localCheckpoint(eager = true)
     var pairs = nodes.select(col("node"), col("node").as("reached"))
       .localCheckpoint(eager = true)
     var acc = nodes.select(col("node"), lit(0).as("radius"),
@@ -999,23 +903,11 @@ object Graphs {
                        sources: DataFrame, sourceCol: String,
                        maxDepth: Int): DataFrame = {
     require(maxDepth >= 1, s"maxDepth must be positive: $maxDepth")
-    val (raw, cRaw) = ckptCounts(
-      edges.select(tryLong(srcCol).as("src"), tryLong(dstCol).as("dst")),
-      "bad" -> (col("src").isNull || col("dst").isNull))
-    val badIds = cRaw("bad")
-    require(badIds == 0L,
-      s"$badIds edge rows have null node ids after the long cast " +
-        "— string node keys? map them through Graphs.withNodeIds first")
+    val (raw, _) = edgeIntake(edges, srcCol, dstCol, ("src", "dst"))
     val e = raw.where(col("src") =!= col("dst")).distinct()
       .localCheckpoint(eager = true)
-    var (settled, cS) = ckptCounts(
-      sources.select(tryLong(sourceCol).as("s")).distinct()
-        .select(col("s"), col("s").as("v"), lit(0).as("dist"),
-          lit(1L).as("sigma")),
-      "badSrc" -> col("s").isNull)
-    require(cS("badSrc") == 0L,
-      "source ids must cast to non-null longs — map string keys through " +
-        "Graphs.withNodeIds first")
+    var settled = sourceIntake(sources, sourceCol, "s", col("s").as("v"),
+      lit(0).as("dist"), lit(1L).as("sigma"))
     for (l <- 0 until maxDepth) {
       val frontier = settled.where(col("dist") === l)
       val expanded = frontier.join(e, frontier("v") === e("src"))
@@ -1072,18 +964,10 @@ object Graphs {
   def hyperBall(edges: DataFrame, srcCol: String, dstCol: String,
                 maxRadius: Int, lgK: Int = 12): DataFrame = {
     require(maxRadius >= 1, s"maxRadius must be positive: $maxRadius")
-    val (raw, cRaw) = ckptCounts(
-      edges.select(tryLong(srcCol).as("src"), tryLong(dstCol).as("dst")),
-      "bad" -> (col("src").isNull || col("dst").isNull))
-    val badIds = cRaw("bad")
-    require(badIds == 0L,
-      s"$badIds edge rows have null node ids after the long cast " +
-        "— string node keys? map them through Graphs.withNodeIds first")
+    val (raw, _) = edgeIntake(edges, srcCol, dstCol, ("src", "dst"))
     val e = raw.where(col("src") =!= col("dst")).distinct()
       .localCheckpoint(eager = true)
-    val nodes = raw.select(col("src").as("node"))
-      .union(raw.select(col("dst").as("node"))).distinct()
-    var balls = nodes.groupBy(col("node"))
+    var balls = nodeSet(raw).groupBy(col("node"))
       .agg(hll_sketch_agg(col("node"), lit(lgK)).as("ball"))
       .localCheckpoint(eager = true)
     def emit(k: Int) = balls.select(col("node"), lit(k).as("radius"),
@@ -1146,29 +1030,17 @@ object Graphs {
         .as("harmonic_milli"))
   }
 
-  private def pageRankFixedImpl(edgesW: DataFrame, iterations: Int,
-                                dampMilli: Long,
-                                weighted: Boolean): DataFrame = {
+  private def pageRankFixedImpl(edges: DataFrame, srcCol: String,
+                                dstCol: String, weightCol: Option[String],
+                                iterations: Int, dampMilli: Long): DataFrame = {
     require(iterations >= 1, s"iterations must be positive: $iterations")
     require(dampMilli >= 0L && dampMilli <= 1000L,
       s"dampMilli must be in [0, 1000]: $dampMilli")
-    // a non-numeric node id (string hosts/URLs — the operator's primary
-    // documented use) long-casts to NULL; without this guard every
-    // unparseable id would collapse into one null node and the rank
-    // table would be silently garbage. Same loud-error discipline as
-    // Audience's cardinality guard; the count rides the checkpoint
-    // materialization (ckptCounts) instead of a second edge-list pass.
-    val (eAll, cEdges) = ckptCounts(edgesW, // walked every iteration
-      "bad" -> (col("src").isNull || col("dst").isNull ||
-        (if (weighted) col("w").isNull else lit(false))))
-    val badIds = cEdges("bad")
-    require(badIds == 0L,
-      s"$badIds edge rows have null node ids/weights after the long cast " +
-        "— string node keys? map them through Graphs.withNodeIds first")
+    val weighted = weightCol.isDefined
+    val (eAll, _) = edgeIntake(edges, srcCol, dstCol, ("src", "dst"), // walked every iteration
+      Some(weightCol.map(tryLong).getOrElse(lit(1L))))
     val e = if (weighted) eAll.where(col("w") > 0L) else eAll
-    val (nodes, cN) = ckptCounts(e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct(),
-      "n" -> lit(true))
+    val (nodes, cN) = Ckpt.counts(nodeSet(e), "n" -> lit(true))
     val outw = e.groupBy(col("src")).agg(sum(col("w")).as("outw"))
       .localCheckpoint(eager = true)
     // n is a driver scalar by necessity (it seeds every rank literal);

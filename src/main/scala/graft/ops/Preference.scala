@@ -256,14 +256,14 @@ object Preference {
       .unionAll(pairs.select(col("hi").as("i"), col("lo").as("j"),
         col("n_games").as("n")))
       .localCheckpoint(eager = true)
-    val stats = pairs
+    val (stats, cS) = Ckpt.counts(pairs
       .select(col("lo").as("p"), col("n_games").as("g"), col("wins_lo").as("v"))
       .unionAll(pairs.select(col("hi").as("p"), col("n_games").as("g"),
         (col("n_games") - col("wins_lo")).as("v")))
       .groupBy(col("p"))
-      .agg(sum(col("g")).as("n_games"), sum(col("v")).as("n_wins"))
-      .localCheckpoint(eager = true)
-    val nPlayers = stats.count()
+      .agg(sum(col("g")).as("n_games"), sum(col("v")).as("n_wins")),
+      "n" -> lit(true))
+    val nPlayers = cS("n")
     require(nPlayers >= 2L, "need at least two players to rank")
     var s = stats.select(col("p"), lit(Scale).as("s"))
     for (_ <- 1 to iterations) {

@@ -203,6 +203,13 @@ object Timeseries {
       .groupBy(col("bucket"))
       .agg(kll_sketch_agg_double(col("__v"), lit(kllK)).as("sketch"))
 
+  /** A per-bucket artifact table (`bucketCol`, `sketchCol`) fanned out
+    * to its rolling windows as `(__sk, bucket)` — [[Funnel.windowFanOut]]. */
+  private def sketchWindows(table: DataFrame, bucketCol: String,
+                            sketchCol: String, windowBuckets: Int): DataFrame =
+    Funnel.windowFanOut(table.select(col(bucketCol).cast("long").as("__b"),
+      col(sketchCol).as("__sk")), windowBuckets, col("__sk"))
+
   /** Window a per-bucket sketch table (batch-built or
     * streaming-sealed): the `sequence` fan-out ships one sketch row per
     * (bucket, window end) and each window's estimate comes from
@@ -214,13 +221,7 @@ object Timeseries {
                                   q: Double, kllK: Int = 200): DataFrame = {
     require(windowBuckets >= 1, "window must span at least one bucket")
     require(q > 0.0 && q < 1.0, s"quantile must be in (0, 1): $q")
-    val perBucket = sketches.select(col(bucketCol).cast("long").as("__b"),
-      col(sketchCol).as("__sk"))
-    val newest = perBucket.agg(max(col("__b")).as("__mb"))
-    perBucket.crossJoin(broadcast(newest))
-      .select(col("__sk"), explode(sequence(col("__b"),
-        least(col("__b") + lit(windowBuckets - 1L), col("__mb"))))
-        .as("bucket"))
+    sketchWindows(sketches, bucketCol, sketchCol, windowBuckets)
       .groupBy(col("bucket"))
       .agg(kll_sketch_get_quantile_double(
         kll_merge_agg_double(col("__sk"), lit(kllK)), lit(q))
@@ -289,13 +290,7 @@ object Timeseries {
                                    confidence: Double, seed: Int): DataFrame = {
     require(windowBuckets >= 1, "window must span at least one bucket")
     require(tokens.nonEmpty, "the watchlist must name at least one token")
-    val perBucket = sketches.select(col(bucketCol).cast("long").as("__b"),
-      col(sketchCol).as("__sk"))
-    val newest = perBucket.agg(max(col("__b")).as("__mb"))
-    perBucket.crossJoin(broadcast(newest))
-      .select(col("__sk"), explode(sequence(col("__b"),
-        least(col("__b") + lit(windowBuckets - 1L), col("__mb"))))
-        .as("bucket"))
+    sketchWindows(sketches, bucketCol, sketchCol, windowBuckets)
       .groupBy(col("bucket"))
       .agg(graft.udafs.Sketches
         .cmsMergeAgg(col("__sk"), eps, confidence, seed).as("__m"))
@@ -338,13 +333,7 @@ object Timeseries {
                                        k: Int,
                                        windowBuckets: Int): DataFrame = {
     require(windowBuckets >= 1, "window must span at least one bucket")
-    val perBucket = summaries.select(col(bucketCol).cast("long").as("__b"),
-      col(summaryCol).as("__sk"))
-    val newest = perBucket.agg(max(col("__b")).as("__mb"))
-    perBucket.crossJoin(broadcast(newest))
-      .select(col("__sk"), explode(sequence(col("__b"),
-        least(col("__b") + lit(windowBuckets - 1L), col("__mb"))))
-        .as("bucket"))
+    sketchWindows(summaries, bucketCol, summaryCol, windowBuckets)
       .groupBy(col("bucket"))
       .agg(graft.udafs.FreqItems.mgMergeAgg(col("__sk"), k).as("__m"))
       .select(col("bucket"),

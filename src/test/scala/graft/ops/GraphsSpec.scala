@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import scala.util.Random
 
@@ -145,28 +146,67 @@ class GraphsSpec extends SparkSpec {
     assert(e.getMessage.contains("seed"))
   }
 
+  /** Every public edge-taking operator over `(src, dst)` edges, with
+    * what it does on an EMPTY edge list: `Left(fragment)` — fails with
+    * its named `require` — or `Right(rows)`. shortestPaths' sources are
+    * components of their own, so its one source still reads dist 0. */
+  private def edgeOps: Seq[(String, DataFrame => DataFrame, Either[String, Long])] = {
+    def seeds = Seq(1L).toDF("seed")
+    def labels = Seq((1L, 1L)).toDF("node", "label")
+    Seq(
+      ("pageRankFixed", Graphs.pageRankFixed(_, "src", "dst", 1), Left("edge list is empty")),
+      ("pageRankWeighted", e => Graphs.pageRankWeighted(e.withColumn("w", lit(1L)),
+        "src", "dst", "w", 1), Left("edge list is empty")),
+      ("pageRankPersonalized", Graphs.pageRankPersonalized(_, "src", "dst", seeds,
+        "seed", 1), Left("no seed id appears")),
+      ("hits", Graphs.hits(_, "src", "dst", 1), Left("edge list is empty")),
+      ("triangleCounts", Graphs.triangleCounts(_, "src", "dst"), Right(0L)),
+      ("cooccurrenceProject", Graphs.cooccurrenceProject(_, "src", "dst", 2), Right(0L)),
+      ("randomWalks", Graphs.randomWalks(_, "src", "dst", 1), Right(0L)),
+      ("labelPropagation", Graphs.labelPropagation(_, "src", "dst", 1), Right(0L)),
+      ("kCore", Graphs.kCore(_, "src", "dst", 1), Right(0L)),
+      ("shortestPaths", Graphs.shortestPaths(_, "src", "dst", seeds, "seed", 1), Right(1L)),
+      ("linkPredict", Graphs.linkPredict(_, "src", "dst", 2), Right(0L)),
+      ("modularity", Graphs.modularity(_, "src", "dst", labels, "node", "label"),
+        Left("edge list is empty")),
+      ("scc", Graphs.scc(_, "src", "dst"), Right(0L)),
+      ("neighborhoodExact", Graphs.neighborhoodExact(_, "src", "dst", 1), Right(0L)),
+      ("stressCentrality", Graphs.stressCentrality(_, "src", "dst", seeds, "seed", 1),
+        Right(0L)),
+      ("hyperBall", Graphs.hyperBall(_, "src", "dst", 1), Right(0L)))
+  }
+
   test("string node ids error loudly instead of null-casting to garbage") {
     // without the guard every unparseable id long-casts to null and
-    // collapses into ONE node — the rank table would be silently wrong
+    // collapses into ONE node — the result would be silently wrong
     val edges = Seq(("example.com", "other.org"), ("other.org", "example.com"))
       .toDF("src", "dst")
-    val e = intercept[IllegalArgumentException] {
-      Graphs.pageRankFixed(edges, "src", "dst", iterations = 1).collect()
+    for ((name, op, _) <- edgeOps) {
+      val e = intercept[IllegalArgumentException](op(edges).collect())
+      assert(e.getMessage.contains("map them through Graphs.withNodeIds first"), name)
     }
-    assert(e.getMessage.contains("withNodeIds"))
-    val ew = intercept[IllegalArgumentException] {
-      Graphs.pageRankWeighted(edges.withColumn("w", lit(1L)),
-        "src", "dst", "w", iterations = 1).collect()
+    // the multi-source operators guard their source ids the same way
+    val longEdges = Seq((1L, 2L)).toDF("src", "dst")
+    val strSeeds = Seq("example.com").toDF("seed")
+    for (op <- Seq[DataFrame => DataFrame](
+        Graphs.shortestPaths(longEdges, "src", "dst", _, "seed", 1),
+        Graphs.stressCentrality(longEdges, "src", "dst", _, "seed", 1))) {
+      val e = intercept[IllegalArgumentException](op(strSeeds).collect())
+      assert(e.getMessage.contains("map string keys through Graphs.withNodeIds first"))
     }
-    assert(ew.getMessage.contains("withNodeIds"))
   }
 
   test("an empty edge list errors loudly instead of dividing by zero") {
+    // every operator returns its documented rows or fails with its named
+    // require — never an unnamed Spark error
     val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
-    val e = intercept[IllegalArgumentException] {
-      Graphs.pageRankFixed(empty, "src", "dst", iterations = 1).collect()
+    for ((name, op, expected) <- edgeOps) expected match {
+      case Left(fragment) =>
+        val e = intercept[IllegalArgumentException](op(empty).collect())
+        assert(e.getMessage.contains(fragment), name)
+      case Right(rows) =>
+        assert(op(empty).collect().length.toLong === rows, name)
     }
-    assert(e.getMessage.contains("empty"))
     // weighted: all-nonpositive weights leave no rankable edge either
     val nonpos = Seq((1L, 2L, 0L), (2L, 3L, -5L)).toDF("src", "dst", "w")
     val ew = intercept[IllegalArgumentException] {
