@@ -225,9 +225,7 @@ object Dedup {
   private def templateFps(paras: DataFrame, docs: DataFrame, idCol: String,
                           groupCol: String, maxDocPerMille: Int,
                           minDocs: Long): DataFrame = {
-    require(maxDocPerMille >= 0 && maxDocPerMille <= 1000,
-      s"maxDocPerMille out of range: $maxDocPerMille")
-    require(minDocs >= 1L, s"minDocs must be positive: $minDocs")
+    val isTemplate = templateGate(maxDocPerMille, minDocs)
     val g = col(groupCol)
     // presence per (bucket, paragraph, doc): a paragraph repeated inside
     // ONE doc counts that doc once
@@ -237,10 +235,32 @@ object Dedup {
       .agg(count(lit(1)).as("n_docs_with"), min(col("__par")).as("paragraph"))
     val sizes = docs.groupBy(g).agg(count(lit(1)).as("n_docs_group"))
     withCounts.join(sizes, Seq(groupCol))
-      .where(col("n_docs_group") >= minDocs &&
-        col("n_docs_with") * 1000L > lit(maxDocPerMille.toLong) * col("n_docs_group"))
+      .where(isTemplate)
       .select(g, col("__fp"), col("paragraph"), col("n_docs_with"),
         col("n_docs_group"))
+  }
+
+  /** The template predicate over (n_docs_with, n_docs_group) rows: a
+    * bucket of at least `minDocs` docs, and presence in more than
+    * `maxDocPerMille`/1000 of them (exact integer comparison). Checks
+    * both arguments when called. */
+  private def templateGate(maxDocPerMille: Int, minDocs: Long): Column = {
+    require(maxDocPerMille >= 0 && maxDocPerMille <= 1000,
+      s"maxDocPerMille out of range: $maxDocPerMille")
+    require(minDocs >= 1L, s"minDocs must be positive: $minDocs")
+    col("n_docs_group") >= minDocs &&
+      col("n_docs_with") * 1000L > lit(maxDocPerMille.toLong) * col("n_docs_group")
+  }
+
+  /** Drop every paragraph of `paras` whose (groupCol, __fp) is in
+    * `templates` and re-assemble the docs (see [[reassemble]]). */
+  private def stripFlagged(docs: DataFrame, paras: DataFrame, templates: DataFrame,
+                           idCol: String, groupCol: String): DataFrame = {
+    val flagged = paras
+      .join(templates.select(col(groupCol), col("__fp"), lit(true).as("__tpl")),
+        Seq(groupCol, "__fp"), "left")
+      .withColumn("__keep", col("__tpl").isNull)
+    reassemble(docs, flagged, idCol)
   }
 
   /** Per-group template/boilerplate paragraph REMOVAL (the RefinedWeb /
@@ -262,13 +282,9 @@ object Dedup {
                      groupCol: String, maxDocPerMille: Int = 500,
                      minDocs: Long = 4L): DataFrame = {
     val paras = paragraphRows(docs, textCol, idCol, Seq(groupCol))
-    val templates = templateFps(paras, docs, idCol, groupCol,
-        maxDocPerMille, minDocs)
-      .select(col(groupCol), col("__fp"), lit(true).as("__tpl"))
-    val flagged = paras
-      .join(templates, Seq(groupCol, "__fp"), "left")
-      .withColumn("__keep", col("__tpl").isNull)
-    reassemble(docs, flagged, idCol)
+    stripFlagged(docs, paras,
+      templateFps(paras, docs, idCol, groupCol, maxDocPerMille, minDocs),
+      idCol, groupCol)
   }
 
   /** The persisted per-bucket paragraph state for INCREMENTAL template
@@ -316,9 +332,7 @@ object Dedup {
                                 maxDocPerMille: Int = 500,
                                 minDocs: Long = 4L,
                                 assertDisjointWith: Option[DataFrame] = None): DataFrame = {
-    require(maxDocPerMille >= 0 && maxDocPerMille <= 1000,
-      s"maxDocPerMille out of range: $maxDocPerMille")
-    require(minDocs >= 1L, s"minDocs must be positive: $minDocs")
+    val isTemplate = templateGate(maxDocPerMille, minDocs)
     assertDisjointWith.foreach { historyIds =>
       val overlap = batch.select(col(idCol))
         .join(historyIds.select(col(idCol)), Seq(idCol), "left_semi")
@@ -340,15 +354,8 @@ object Dedup {
       .groupBy(g, col("__fp")).agg(sum(col("n_docs_with")).as("n_docs_with"))
     val sizes = batchSizes.unionByName(historySizes)
       .groupBy(g).agg(sum(col("n_docs_group")).as("n_docs_group"))
-    val templates = presence.join(sizes, Seq(groupCol))
-      .where(col("n_docs_group") >= minDocs &&
-        col("n_docs_with") * 1000L >
-          lit(maxDocPerMille.toLong) * col("n_docs_group"))
-      .select(g, col("__fp"), lit(true).as("__tpl"))
-    val flagged = paras
-      .join(templates, Seq(groupCol, "__fp"), "left")
-      .withColumn("__keep", col("__tpl").isNull)
-    reassemble(batch, flagged, idCol)
+    stripFlagged(batch, paras,
+      presence.join(sizes, Seq(groupCol)).where(isTemplate), idCol, groupCol)
   }
 
   /** Corpus-wide PARAGRAPH-level exact dedup (the paragraph-granularity
@@ -363,7 +370,8 @@ object Dedup {
     * Scale shape: occurrence selection is `groupBy(fingerprint).agg(min)`
     * — ONE shuffle on the 16-byte md5 (map-side partials absorb hot
     * boilerplate paragraphs) — and the flag-back join on the fingerprint
-    * is AQE-skew-splittable, the same discipline as [[shingleDf]]. The
+    * is AQE-skew-splittable, the same discipline as the shingle df
+    * aggregate (`withShingleDf`). The
     * re-assembly aggregates per DOC (bounded arrays). Never a window over
     * the fingerprint. */
   def paragraphDedupe(docs: DataFrame, textCol: String, idCol: String): DataFrame =
@@ -499,18 +507,18 @@ object Dedup {
       keyBloom(history, col(keyCol), est), confirm)
   }
 
-  /** Word n-gram shingles (distinct), the unit set for Jaccard/MinHash.
+  /** Word n-gram shingles (distinct), the unit set for Jaccard/MinHash:
+    * the grams of a token array joined by " ", or the whole space-joined
+    * text for docs shorter than `n` tokens.
     *
-    * PERF CONTRACT: `tokensCol` MUST be a materialized column (attribute),
-    * not an inline `split(...)` expression — higher-order-function lambdas
-    * are interpreted (CodegenFallback) and re-evaluate captured
-    * subexpressions PER ELEMENT, turning an inline split into O(tokens²)
-    * regex work per row. Use `shingleDocs` for the safe two-step projection.
-    */
+    * PERF CONTRACT: the grams come from the compiled
+    * [[graft.functions.TokenNgrams]] kernel (one codegen pass per row, no
+    * higher-order-function lambda), so an inline `split(...)` is not
+    * re-run per gram. The expression still reads `tokensCol` three times
+    * (size guard, short-doc text, kernel); where a token column is
+    * projected anyway, pass that attribute so the split runs once. */
   def shingles(tokensCol: Column, n: Int): Column = {
     val t = tokensCol
-    // compiled TokenNgrams kernel (exact concat_ws parity) instead of the
-    // interpreted transform(sequence)/slice HOF — one codegen pass per row
     array_distinct(
       when(size(t) < n, array(concat_ws(" ", t)))
         .otherwise(graft.functions.TextExpressions.tokenNgrams(t, n)))
@@ -523,34 +531,21 @@ object Dedup {
     * similarity-adjacent packing) rather than as a dedup verdict: one
     * hash function is too coarse to decide similarity but plenty to
     * cluster related docs adjacently. md5, not xxhash64, so an external
-    * engine replays the key exactly. `toks` must be a PROJECTED
-    * token-array column (the [[shingleDocs]] discipline — an inlined
-    * split re-evaluates per shingle). Scan-side, O(tokens·n). */
+    * engine replays the key exactly. `toks` should be a projected
+    * token-array column (see the [[shingles]] perf contract).
+    * Scan-side, O(tokens·n). */
   def minShingleKey(toks: Column, n: Int): Column =
     array_min(transform(shingles(toks, n), s => md5(s)))
 
-  /** (block..., id, sh) with tokens materialized in their own projection —
-    * the lambda in `shingles` then reads an attribute, not a re-evaluated
-    * split. The two selects stay separate (CollapseProject keeps non-cheap
-    * multi-referenced expressions un-inlined). */
-  def shingleDocs(docs: DataFrame, textCol: String, idCol: String,
-                  blockCols: Seq[String], n: Int): DataFrame =
-    docs.select(blockCols.map(col) :+ col(idCol) :+
-        TextOps.tokens(col(textCol)).as("toks"): _*)
-      .select(blockCols.map(col) :+ col(idCol) :+ shingles(col("toks"), n).as("sh"): _*)
-
   /** Jaccard similarity of two distinct-element arrays — exact |∩|/|∪|
     * integer-ratio division (deterministic across engines). */
-  def jaccard(a: Column, b: Column): Column = {
-    val inter = size(array_intersect(a, b))
-    inter.cast("double") / (size(a) + size(b) - inter)
-  }
+  def jaccard(a: Column, b: Column): Column =
+    jaccardRatio(size(array_intersect(a, b)), size(a), size(b))
 
-  /** N-gram Jaccard near-dup pairs within blocking keys.
-    * Self-join on `blockCols` (never a cross join); emits (id_a, id_b,
-    * jaccard) for pairs ≥ threshold. Block keys must be chosen so block
-    * sizes stay bounded (e.g. lang × source); skewed blocks are split by
-    * AQE skew-join handling. */
+  /** |A∩B| / |A∪B| from the intersection and both set sizes. */
+  private def jaccardRatio(inter: Column, nA: Column, nB: Column): Column =
+    inter.cast("double") / (nA + nB - inter)
+
   /** Distinct (block..., id, shingle-hash) rows built ENTIRELY scan-side:
     * tokenize, run the compiled [[graft.functions.TokenNgrams]] kernel
     * (one whole-stage-codegen pass per row, exact `concat_ws(" ", window)`
@@ -587,10 +582,7 @@ object Dedup {
         TextOps.tokens(col(textCol)).as("__toks"): _*)
     src
       .select(blockCols.map(col) :+ col(idCol) :+
-        explode(array_distinct(
-          when(size(col("__toks")) < n, array(concat_ws(" ", col("__toks"))))
-            .otherwise(graft.functions.TextExpressions
-              .tokenNgrams(col("__toks"), n)))).as("g0"): _*)
+        explode(shingles(col("__toks"), n)).as("g0"): _*)
       .select(blockCols.map(col) :+ col(idCol) :+ xxhash64(col("g0")).as("g"): _*)
   }
 
@@ -621,7 +613,92 @@ object Dedup {
       .drop("__df")
   }
 
-  /** Inverted-index (Vernica-join) form: distinct shingle rows, equi-join
+  // ───── PPJoin core: prefix, candidates, verify ─────
+  // The two sides of a pair are named by a suffix: side `s` carries the
+  // doc id `id_<s>` and its shingle count `n_<s>`.
+
+  /** PPJoin prefix filter (Chaudhuri et al.; Xiao et al.): rank each
+    * doc's shingles of the df-annotated frame `withDf` by document
+    * frequency ascending (rarest first; ties by hash — any total order
+    * shared by all docs works) and keep each doc's first
+    * |d| − ⌈t·|d|⌉ + 1 shingles. Two docs with J ≥ t (or a probe
+    * contained ≥ t in any doc) MUST share a shingle inside that prefix,
+    * so only prefixes join. Hot shingles (stopword n-grams) rank LAST and
+    * never enter the candidate join — this is what deflates the
+    * quadratic blow-up on skewed corpora, exactly, with no recall loss.
+    * Returns `withDf` + `n_sh` (the doc's shingle count) + `pos`, prefix
+    * rows only. */
+  private def prefixRows(withDf: DataFrame, docKey: Seq[Column],
+                         threshold: Double): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    // n_sh and pos share ONE window spec (same partition, same order;
+    // count uses the unbounded frame) → a single exchange+sort computes
+    // both, instead of separate doc-key windows for size and rank
+    val docWin = Window.partitionBy(docKey: _*).orderBy(col("df"), col("g"))
+    withDf
+      .withColumn("n_sh", count(lit(1)).over(
+        docWin.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+      .withColumn("pos", row_number().over(docWin))
+      // ε guard: t·n can round ABOVE the exact rational (0.07·100 →
+      // 7.000000000000001, ceil → 8), shortening the prefix below the
+      // PPJoin bound and silently dropping true pairs. Undershooting the
+      // ceil only lengthens the prefix (more candidates, still exact).
+      .where(col("pos") <= col("n_sh") - ceil(lit(threshold) * col("n_sh") - lit(1e-9)) + 1)
+  }
+
+  /** Batch-side prefix under a PREBUILT df table: the batch adopts the
+    * table's order, and shingles absent from it rank rarest at df 0.
+    * Returns (id_l, n_l, g). */
+  private def batchPrefix(rows: DataFrame, histDf: DataFrame, idCol: String,
+                          threshold: Double): DataFrame =
+    prefixRows(rows.join(histDf, Seq("g"), "left")
+        .withColumn("df", coalesce(col("df"), lit(0L))), Seq(col(idCol)), threshold)
+      .select(col(idCol).as("id_l"), col("n_sh").as("n_l"), col("g"))
+
+  /** Jaccard candidates: prefix sides `a` (id_<l>, n_<l>, keys…) and `b`
+    * (id_<r>, n_<r>, keys…) equi-joined on `keys`, kept when the size ratio
+    * can reach the threshold (J ≤ min(|A|,|B|) / max(|A|,|B|)); a pair
+    * sharing several prefix shingles appears once. `ordered` keeps
+    * id_<l> < id_<r> (the self-join form). Output (id_<l>, id_<r>, n_<l>,
+    * n_<r>). */
+  private def ratioCandidates(a: DataFrame, b: DataFrame, keys: Seq[String],
+                              l: String, r: String, threshold: Double,
+                              ordered: Boolean): DataFrame = {
+    val (idL, idR, nL, nR) = (s"id_$l", s"id_$r", col(s"n_$l"), col(s"n_$r"))
+    val ratio = least(nL, nR).cast("double") / greatest(nL, nR) >= threshold
+    a.join(b, keys)
+      .where(if (ordered) col(idL) < col(idR) && ratio else ratio)
+      .select(col(idL), col(idR), nL, nR)
+      .dropDuplicates(idL, idR)
+  }
+
+  /** Overlap verifier: the full |A∩B| (`inter`) for candidates only —
+    * `cand` joins both (idCol, g) shingle indexes (side l's, then side
+    * r's on (id_r, g)) and one group-count over the candidate columns
+    * counts the shared shingles. */
+  private def overlapCounts(cand: DataFrame, lRows: DataFrame, rRows: DataFrame,
+                            idCol: String, l: String, r: String): DataFrame =
+    cand
+      .join(lRows.select(col(idCol).as(s"id_$l"), col("g")), s"id_$l")
+      .join(rRows.select(col(idCol).as(s"id_$r"), col("g")), Seq(s"id_$r", "g"))
+      .groupBy(cand.columns.map(col): _*)
+      .agg(count(lit(1)).as("inter"))
+
+  /** (id_<l>, id_<r>, jaccard) rows of verified counts with J ≥ threshold. */
+  private def jaccardAtLeast(counted: DataFrame, l: String, r: String,
+                             threshold: Double): DataFrame =
+    counted
+      .select(col(s"id_$l"), col(s"id_$r"),
+        jaccardRatio(col("inter"), col(s"n_$l"), col(s"n_$r")).as("jaccard"))
+      .where(col("jaccard") >= threshold)
+
+  /** N-gram Jaccard near-dup pairs within blocking keys: emits (id_a,
+    * id_b, jaccard) for pairs ≥ threshold. The self-join is on
+    * `blockCols` (never a cross join); block keys must be chosen so block
+    * sizes stay bounded (e.g. lang × source), and AQE skew-join handling
+    * splits skewed blocks.
+    *
+    * Inverted-index (Vernica-join) form: distinct shingle rows, equi-join
     * on (block, shingle-hash) with a size-ratio prune
     * (J ≤ min|A|,|B| / max|A|,|B|) in the join condition, then ONE
     * group-count gives |A∩B| per pair.
@@ -638,7 +715,7 @@ object Dedup {
     * the same 64-bit hash, ~1e-15 per corpus).
     *
     * Candidate generation additionally applies the EXACT prefix filter
-    * (PPJoin family — see body comment): only each doc's rarest
+    * (PPJoin family — see `prefixRows`): only each doc's rarest
     * |d|−⌈t·|d|⌉+1 shingles enter the self-join, so frequent shingles
     * can't quadratically explode the candidate set; the full intersection
     * is then counted for candidates only. */
@@ -661,55 +738,16 @@ object Dedup {
     * and the incremental cross-join — instead of re-shingling per call. */
   def ngramJaccardPairsFromRows(rows: DataFrame, idCol: String,
                                 blockCols: Seq[String], threshold: Double): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val docKey = (blockCols :+ idCol).map(col)
-
-    // ── prefix filter (PPJoin / Chaudhuri et al.): rank each doc's
-    // shingles by GLOBAL document frequency ascending (rarest first; ties
-    // by hash — any total order shared by all docs works). Two docs with
-    // J ≥ t MUST share a shingle inside each one's first
-    // |d| − ⌈t·|d|⌉ + 1 shingles of that order, so only prefixes join.
-    // Hot shingles (stopword n-grams) rank LAST and never enter the
-    // candidate join — this is what deflates the quadratic blow-up on
-    // skewed corpora, exactly, with no recall loss.
-    val withDf = withShingleDf(rows, blockCols :+ "g")
-    // n_sh and pos share ONE window spec (same partition, same order;
-    // count uses the unbounded frame) → a single exchange+sort computes
-    // both, instead of separate doc-key windows for size and rank
-    val docWin = Window.partitionBy(docKey: _*).orderBy(col("df"), col("g"))
-    val prefix = withDf
-      .withColumn("n_sh", count(lit(1)).over(
-        docWin.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-      .withColumn("pos", row_number().over(docWin))
-      // ε guard: t·n can round ABOVE the exact rational (0.07·100 →
-      // 7.000000000000001, ceil → 8), shortening the prefix below the
-      // PPJoin bound and silently dropping true pairs. Undershooting the
-      // ceil only lengthens the prefix (more candidates, still exact).
-      .where(col("pos") <= col("n_sh") - ceil(lit(threshold) * col("n_sh") - lit(1e-9)) + 1)
+    // document frequencies over the whole index: the order is GLOBAL
+    val prefix = prefixRows(withShingleDf(rows, blockCols :+ "g"),
+        (blockCols :+ idCol).map(col), threshold)
       .select(blockCols.map(col) :+ col(idCol) :+ col("n_sh") :+ col("g"): _*)
-
-    val a = prefix.select(blockCols.map(col) :+ col(idCol).as("id_a") :+
-      col("n_sh").as("n_a") :+ col("g"): _*)
-    val b = prefix.select(blockCols.map(col) :+ col(idCol).as("id_b") :+
-      col("n_sh").as("n_b") :+ col("g"): _*)
-    val cand = a.join(b, blockCols :+ "g")
-      .where(col("id_a") < col("id_b") &&
-        least(col("n_a"), col("n_b")).cast("double") /
-          greatest(col("n_a"), col("n_b")) >= threshold)
-      .select(col("id_a"), col("id_b"), col("n_a"), col("n_b"))
-      .dropDuplicates("id_a", "id_b")
-
-    // ── verify: full |A∩B| for the surviving candidates only (the same
-    // candidates-join-index shape as minhashLshPairs' confirm stage)
+    def side(s: String): DataFrame = prefix.select(blockCols.map(col) :+
+      col(idCol).as(s"id_$s") :+ col("n_sh").as(s"n_$s") :+ col("g"): _*)
+    val cand = ratioCandidates(side("a"), side("b"), blockCols :+ "g", "a", "b",
+      threshold, ordered = true)
     val idx = rows.select(col(idCol), col("g"))
-    cand
-      .join(idx.select(col(idCol).as("id_a"), col("g")), "id_a")
-      .join(idx.select(col(idCol).as("id_b"), col("g")), Seq("id_b", "g"))
-      .groupBy(col("id_a"), col("id_b"), col("n_a"), col("n_b"))
-      .agg(count(lit(1)).as("inter"))
-      .select(col("id_a"), col("id_b"),
-        (col("inter").cast("double") / (col("n_a") + col("n_b") - col("inter"))).as("jaccard"))
-      .where(col("jaccard") >= threshold)
+    jaccardAtLeast(overlapCounts(cand, idx, idx, idCol, "a", "b"), "a", "b", threshold)
   }
 
   /** Cross-corpus n-gram Jaccard near-dup join: pairs (id_l, id_r,
@@ -753,39 +791,16 @@ object Dedup {
     * shuffle-free. */
   def ngramJaccardJoinFromRows(leftRows: DataFrame, rightRows: DataFrame,
                                idCol: String, threshold: Double): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val lRows = leftRows.select(col(idCol), col("g"), lit(0).as("__side"))
     val rRows = rightRows.select(col(idCol), col("g"), lit(1).as("__side"))
-    val rows = lRows.unionAll(rRows)
-    val withDf = withShingleDf(rows, Seq("g"))
-    val docWin = Window.partitionBy(col("__side"), col(idCol))
-      .orderBy(col("df"), col("g"))
-    val prefix = withDf
-      .withColumn("n_sh", count(lit(1)).over(
-        docWin.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-      .withColumn("pos", row_number().over(docWin))
-      // same ε guard as the self-join (see ngramJaccardPairs)
-      .where(col("pos") <= col("n_sh") - ceil(lit(threshold) * col("n_sh") - lit(1e-9)) + 1)
+    val prefix = prefixRows(withShingleDf(lRows.unionAll(rRows), Seq("g")),
+        Seq(col("__side"), col(idCol)), threshold)
       .select(col("__side"), col(idCol), col("n_sh"), col("g"))
-    val a = prefix.where(col("__side") === 0)
-      .select(col(idCol).as("id_l"), col("n_sh").as("n_l"), col("g"))
-    val b = prefix.where(col("__side") === 1)
-      .select(col(idCol).as("id_r"), col("n_sh").as("n_r"), col("g"))
-    val cand = a.join(b, Seq("g"))
-      .where(least(col("n_l"), col("n_r")).cast("double") /
-        greatest(col("n_l"), col("n_r")) >= threshold)
-      .select(col("id_l"), col("id_r"), col("n_l"), col("n_r"))
-      .dropDuplicates("id_l", "id_r")
-    val lIdx = lRows.select(col(idCol).as("id_l"), col("g"))
-    val rIdx = rRows.select(col(idCol).as("id_r"), col("g"))
-    cand
-      .join(lIdx, "id_l")
-      .join(rIdx, Seq("id_r", "g"))
-      .groupBy(col("id_l"), col("id_r"), col("n_l"), col("n_r"))
-      .agg(count(lit(1)).as("inter"))
-      .select(col("id_l"), col("id_r"),
-        (col("inter").cast("double") / (col("n_l") + col("n_r") - col("inter"))).as("jaccard"))
-      .where(col("jaccard") >= threshold)
+    def side(k: Int, s: String): DataFrame = prefix.where(col("__side") === k)
+      .select(col(idCol).as(s"id_$s"), col("n_sh").as(s"n_$s"), col("g"))
+    val cand = ratioCandidates(side(0, "l"), side(1, "r"), Seq("g"), "l", "r",
+      threshold, ordered = false)
+    jaccardAtLeast(overlapCounts(cand, lRows, rRows, idCol, "l", "r"), "l", "r", threshold)
   }
 
   /** Build the persistent history-side artifacts for
@@ -814,15 +829,8 @@ object Dedup {
     * carry the build threshold in a `__t` column for that guard. */
   def historyJaccardIndex(histRows: DataFrame, idCol: String,
                           threshold: Double): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
     val df = histRows.groupBy(col("g")).agg(count(lit(1)).as("df"))
-    val docWin = Window.partitionBy(col(idCol)).orderBy(col("df"), col("g"))
-    val prefix = histRows.join(df, Seq("g"))
-      .withColumn("n_sh", count(lit(1)).over(
-        docWin.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-      .withColumn("pos", row_number().over(docWin))
-      // same ε guard as the self-join (see ngramJaccardPairsFromRows)
-      .where(col("pos") <= col("n_sh") - ceil(lit(threshold) * col("n_sh") - lit(1e-9)) + 1)
+    val prefix = prefixRows(histRows.join(df, Seq("g")), Seq(col(idCol)), threshold)
       .select(col(idCol), col("n_sh"), col("g"), lit(threshold).as("__t"))
     (df, prefix)
   }
@@ -843,17 +851,6 @@ object Dedup {
   def ngramJaccardJoinPrebuilt(batchRows: DataFrame, histIdx: DataFrame,
                                histDf: DataFrame, histPrefix: DataFrame,
                                idCol: String, threshold: Double): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val bDf = batchRows.join(histDf, Seq("g"), "left")
-      .withColumn("df", coalesce(col("df"), lit(0L)))
-    val docWin = Window.partitionBy(col(idCol)).orderBy(col("df"), col("g"))
-    val bPrefix = bDf
-      .withColumn("n_sh", count(lit(1)).over(
-        docWin.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-      .withColumn("pos", row_number().over(docWin))
-      // same ε guard as the self-join (see ngramJaccardPairsFromRows)
-      .where(col("pos") <= col("n_sh") - ceil(lit(threshold) * col("n_sh") - lit(1e-9)) + 1)
-      .select(col(idCol).as("id_l"), col("n_sh").as("n_l"), col("g"))
     // threshold contract (see historyJaccardIndex): an index built at a
     // HIGHER threshold has too-short prefixes for this join and would
     // silently miss pairs — fail loudly instead (one-row probe, cheap)
@@ -866,21 +863,9 @@ object Dedup {
             "rebuild the index at (or below) the join threshold")
     }
     val hPrefix = histPrefix.select(col(idCol).as("id_r"), col("n_sh").as("n_r"), col("g"))
-    val cand = bPrefix.join(hPrefix, Seq("g"))
-      .where(least(col("n_l"), col("n_r")).cast("double") /
-        greatest(col("n_l"), col("n_r")) >= threshold)
-      .select(col("id_l"), col("id_r"), col("n_l"), col("n_r"))
-      .dropDuplicates("id_l", "id_r")
-    val lIdx = batchRows.select(col(idCol).as("id_l"), col("g"))
-    val rIdx = histIdx.select(col(idCol).as("id_r"), col("g"))
-    cand
-      .join(lIdx, "id_l")
-      .join(rIdx, Seq("id_r", "g"))
-      .groupBy(col("id_l"), col("id_r"), col("n_l"), col("n_r"))
-      .agg(count(lit(1)).as("inter"))
-      .select(col("id_l"), col("id_r"),
-        (col("inter").cast("double") / (col("n_l") + col("n_r") - col("inter"))).as("jaccard"))
-      .where(col("jaccard") >= threshold)
+    val cand = ratioCandidates(batchPrefix(batchRows, histDf, idCol, threshold),
+      hPrefix, Seq("g"), "l", "r", threshold, ordered = false)
+    jaccardAtLeast(overlapCounts(cand, batchRows, histIdx, idCol, "l", "r"), "l", "r", threshold)
   }
 
   /** Containment (decontamination) join: pairs where corpus doc B covers
@@ -939,17 +924,26 @@ object Dedup {
     * Pure composition: [[containmentJoin]] pairs → per-probe aggregate →
     * flag-back join on the (tiny, probe-sized) report. */
   def contaminationReport(probe: DataFrame, corpus: DataFrame, textCol: String,
-                          idCol: String, n: Int, threshold: Double): DataFrame = {
-    val agg = containmentJoin(probe, corpus, textCol, idCol, n, threshold)
+                          idCol: String, n: Int, threshold: Double): DataFrame =
+    probeReport(containmentJoin(probe, corpus, textCol, idCol, n, threshold),
+      probe, idCol)
+
+  /** The per-probe report over containment pairs (id_l, id_r,
+    * containment): a per-probe count/max aggregate, flagged back onto the
+    * (label…, idCol) universe of `probe` so clean docs keep a row —
+    * (label…, idCol, n_contaminating, max_containment, contaminated). */
+  private def probeReport(pairs: DataFrame, probe: DataFrame, idCol: String,
+                          label: Seq[String] = Nil): DataFrame = {
+    val agg = pairs
       .groupBy(col("id_l"))
       .agg(count(lit(1)).as("n_contaminating"),
         max(col("containment")).as("max_containment"))
-    probe.select(col(idCol).as("id_l")).distinct()
+    probe.select(label.map(col) :+ col(idCol).as("id_l"): _*).distinct()
       .join(agg, Seq("id_l"), "left")
-      .select(col("id_l").as(idCol),
+      .select(label.map(col) ++ Seq(col("id_l").as(idCol),
         coalesce(col("n_contaminating"), lit(0L)).as("n_contaminating"),
         col("max_containment"),
-        col("n_contaminating").isNotNull.as("contaminated"))
+        col("n_contaminating").isNotNull.as("contaminated")): _*)
   }
 
   /** Corpus-side artifacts for [[containmentJoinPrebuilt]], built once
@@ -979,18 +973,7 @@ object Dedup {
   def containmentJoinPrebuilt(probeRows: DataFrame, corpusIdx: DataFrame,
                               corpusDf: DataFrame, corpusSizes: DataFrame,
                               idCol: String, threshold: Double): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val pDf = probeRows.join(corpusDf, Seq("g"), "left")
-      .withColumn("df", coalesce(col("df"), lit(0L)))
-    val docWin = Window.partitionBy(col(idCol)).orderBy(col("df"), col("g"))
-    val pPrefix = pDf
-      .withColumn("n_sh", count(lit(1)).over(
-        docWin.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-      .withColumn("pos", row_number().over(docWin))
-      // same ε guard as the self-join (see ngramJaccardPairsFromRows)
-      .where(col("pos") <= col("n_sh") - ceil(lit(threshold) * col("n_sh") - lit(1e-9)) + 1)
-      .select(col(idCol).as("id_l"), col("n_sh").as("n_l"), col("g"))
-    val cand = pPrefix
+    val cand = batchPrefix(probeRows, corpusDf, idCol, threshold)
       .join(corpusIdx.select(col(idCol).as("id_r"), col("g")), Seq("g"))
       .select(col("id_l"), col("id_r"), col("n_l"))
       .dropDuplicates("id_l", "id_r")
@@ -999,13 +982,7 @@ object Dedup {
       .join(corpusSizes.select(col(idCol).as("id_r"), col("n_sh").as("n_r")), "id_r")
       .where(col("n_r") >= ceil(lit(threshold) * col("n_l") - lit(1e-9)))
       .select(col("id_l"), col("id_r"), col("n_l"))
-    val lIdx = probeRows.select(col(idCol).as("id_l"), col("g"))
-    val rIdx = corpusIdx.select(col(idCol).as("id_r"), col("g"))
-    cand
-      .join(lIdx, "id_l")
-      .join(rIdx, Seq("id_r", "g"))
-      .groupBy(col("id_l"), col("id_r"), col("n_l"))
-      .agg(count(lit(1)).as("inter"))
+    overlapCounts(cand, probeRows, corpusIdx, idCol, "l", "r")
       .select(col("id_l"), col("id_r"),
         (col("inter").cast("double") / col("n_l")).as("containment"))
       .where(col("containment") >= threshold)
@@ -1028,17 +1005,8 @@ object Dedup {
       // four consumers downstream (prefix build, candidate join, verify
       // idx, universe) — mirror the q75 persisted-index contract
       .localCheckpoint(eager = false)
-    val agg = containmentJoinPrebuilt(probeRows, corpusIdx, corpusDf,
-        corpusSizes, idCol, threshold)
-      .groupBy(col("id_l"))
-      .agg(count(lit(1)).as("n_contaminating"),
-        max(col("containment")).as("max_containment"))
-    probe.select(col(idCol).as("id_l")).distinct()
-      .join(agg, Seq("id_l"), "left")
-      .select(col("id_l").as(idCol),
-        coalesce(col("n_contaminating"), lit(0L)).as("n_contaminating"),
-        col("max_containment"),
-        col("n_contaminating").isNotNull.as("contaminated"))
+    probeReport(containmentJoinPrebuilt(probeRows, corpusIdx, corpusDf,
+      corpusSizes, idCol, threshold), probe, idCol)
   }
 
   /** ONE-PASS multi-benchmark decontamination audit: the report of
@@ -1064,18 +1032,10 @@ object Dedup {
     // same id ⇒ same text by contract (an eval item is one document);
     // dedup by id so a doc in many benchmarks is shingled and joined once
     val uniq = probe.select(col(idCol), col(textCol)).dropDuplicates(idCol)
-    val agg = containmentJoin(uniq, corpus, textCol, idCol, n, threshold)
-      .groupBy(col("id_l"))
-      .agg(count(lit(1)).as("n_contaminating"),
-        max(col("containment")).as("max_containment"))
     // membership fan-back: (benchmark, doc) universe × per-doc verdict —
     // probe-sized frames only, the corpus never appears here
-    probe.select(col(benchCol), col(idCol).as("id_l")).distinct()
-      .join(agg, Seq("id_l"), "left")
-      .select(col(benchCol), col("id_l").as(idCol),
-        coalesce(col("n_contaminating"), lit(0L)).as("n_contaminating"),
-        col("max_containment"),
-        col("n_contaminating").isNotNull.as("contaminated"))
+    probeReport(containmentJoin(uniq, corpus, textCol, idCol, n, threshold),
+      probe, idCol, Seq(benchCol))
   }
 
   /** Per-benchmark rollup of [[contaminationReportMulti]] — the table a
@@ -1089,24 +1049,6 @@ object Dedup {
         max(col("max_containment")).as("worst_containment"))
       .withColumn("contamination_rate",
         col("n_contaminated").cast("double") / col("n_docs"))
-
-  /** Word n-grams of a PROJECTED token-array column as a
-    * position-aligned array — the shared construction for
-    * [[scrubContaminatedSpans]]. Two deliberate shapes:
-    *  - `toks` must be a bound column REFERENCE, not the `split(...)`
-    *    expression itself — an expression inlined into the lambda body
-    *    re-evaluates per element (O(tokens²) splits per doc; measured
-    *    2.5× the whole query's runtime at sf0.1);
-    *  - elements join via O(1) `element_at` probes, not `slice` (which
-    *    copies an O(n) sub-array per position).
-    * The `when` guard matters: Spark's `sequence` infers step −1 for a
-    * descending range, so an unguarded `sequence(0, size−n)` on a short
-    * doc would emit bogus negative positions instead of nothing. */
-  private def wordGrams(toks: Column, n: Int): Column =
-    when(size(toks) >= n,
-      transform(sequence(lit(0), size(toks) - n),
-        i => concat_ws(" ", (0 until n).map(j => element_at(toks, i + j + 1)): _*)))
-      .otherwise(array().cast("array<string>"))
 
   /** SPAN-LEVEL (surgical) decontamination: instead of dropping a whole
     * training doc that shares content with an eval benchmark (the
@@ -1143,14 +1085,17 @@ object Dedup {
     require(n >= 1, s"n-gram order must be positive: $n")
     require(removedPerMilleMax >= 0 && removedPerMilleMax <= 1000,
       s"per-mille cap out of range: $removedPerMilleMax")
-    // tokenize ONCE per row into a projected column; every downstream
-    // HOF sees a bound reference (see wordGrams' shape note)
+    // tokenize ONCE per row into a projected column: the gram kernel and
+    // the taint-check lambda below read a bound reference, never a split
+    // re-run per element. Grams are position-aligned (gram i starts at
+    // token i); fewer than n tokens → no grams.
     val toks = split(col(textCol), " ", -1)
+    def grams(t: Column): Column = graft.functions.TextExpressions.tokenNgrams(t, n)
     val benchGrams = bench.select(toks.as("__toks"))
-      .select(explode(wordGrams(col("__toks"), n)).as("__gram")).distinct()
+      .select(explode(grams(col("__toks"))).as("__gram")).distinct()
     val hits = corpus.select(col(idCol), toks.as("__toks"))
       .select(col(idCol),
-        posexplode(wordGrams(col("__toks"), n)).as(Seq("__pos", "__gram")))
+        posexplode(grams(col("__toks"))).as(Seq("__pos", "__gram")))
       .join(benchGrams, "__gram")
       .groupBy(col(idCol))
       .agg(collect_set(col("__pos")).as("__hits"))
@@ -1176,18 +1121,14 @@ object Dedup {
 
   /** Per-row distinct shingle HASH array, computed statelessly (array
     * functions only — no window, no distinct aggregate), so it is legal
-    * on a STREAMING DataFrame. Same shingle semantics as [[shingleRows]]:
-    * token n-grams joined by " ", whole normalized text for docs shorter
-    * than `n` tokens, xxhash64, distinct. Parity with the batch path is
+    * on a STREAMING DataFrame. Same shingle semantics as [[shingleRows]]
+    * (the same [[shingles]] construction, hashed): token n-grams joined by
+    * " ", whole normalized text for docs shorter than `n` tokens,
+    * xxhash64, distinct. Parity with the batch path is
     * asserted in StreamingSpec (the two constructions must agree or the
     * streaming filter diverges from backfill). */
-  private[graft] def shingleHashArray(textCol: Column, n: Int): Column = {
-    val tk = graft.text.TextOps.tokens(textCol)
-    val grams = when(size(tk) < n, array(concat_ws(" ", tk)))
-      .otherwise(transform(sequence(lit(0), size(tk) - n),
-        i => concat_ws(" ", slice(tk, i + 1, lit(n)))))
-    array_distinct(transform(grams, g => xxhash64(g)))
-  }
+  private[graft] def shingleHashArray(textCol: Column, n: Int): Column =
+    array_distinct(transform(shingles(TextOps.tokens(textCol), n), g => xxhash64(g)))
 
   /** STREAMING decontamination: arriving docs probed against a PREBUILT
     * static corpus shingle index ([[shingleRows]] output, persisted —
@@ -1223,42 +1164,18 @@ object Dedup {
       .where(col("containment") >= threshold)
   }
 
-  /** MinHash signature: for each of `numHashes` hash functions
-    * h_i(s) = (a_i * x + b_i) mod p over base hash x = xxhash64(shingle),
-    * take the min across the document's shingles. Pure expressions
-    * (no UDF); deterministic given the seeded parameter family. */
-  /** Base hash array for minhash: xxhash64(shingle) mod p. Materialize this
-    * as its own column BEFORE `minhashSignature` so the per-shingle hash is
-    * computed once, not once per hash function (no cross-expression CSE for
-    * lambda bodies). */
-  def minhashBase(shinglesCol: Column): Column =
-    transform(shinglesCol, s => pmod(xxhash64(s), lit(MinhashP)))
-
   /** 2^31 - 1 (Mersenne prime): a*x < 2^62 keeps the modular multiply
     * inside Long under ANSI arithmetic (no overflow). */
   val MinhashP = 2147483647L
 
-  def minhashSignature(baseCol: Column, numHashes: Int, seed: Long = 42L): Column = {
-    val p = MinhashP
-    val rnd = new scala.util.Random(seed)
-    val params = Seq.fill(numHashes)((rnd.nextInt((p - 1).toInt).toLong + 1L,
-      rnd.nextInt(p.toInt).toLong))
-    array(params.map { case (a, b) =>
-      array_min(transform(baseCol, x => pmod(x * lit(a) + lit(b), lit(p))))
-    }: _*)
-  }
-
   /** MinHash+LSH near-dup candidate pairs: signature → `bands` bands of
-    * `rowsPerBand` → explode to (band, bandHash) bucket keys → self-join on
-    * buckets → distinct pairs, with optional exact-Jaccard confirmation.
+    * `rowsPerBand` → (band, bucket) keys → self-join on buckets →
+    * distinct pairs, with optional exact-Jaccard confirmation. The
+    * shuffle key (band, bucket) is high-cardinality and well
+    * distributed, pairs form only within buckets (the standard
+    * sub-quadratic path), and the confirm touches candidate pairs only.
     *
-    * The plan at scale: one narrow projection per doc (signature is
-    * `bands × rowsPerBand` longs), explode ×bands, shuffle on
-    * (band, bucket) — high cardinality, well distributed — then pair-join
-    * only within buckets. This is the standard sub-quadratic path; the
-    * pairwise confirm only touches candidate pairs.
-    */
-  /** HOF-free MinHash+LSH: distinct shingle-hash rows (codegen window
+    * HOF-free: distinct shingle-hash rows (scan-side kernel
     * pipeline), ONE hash-aggregate computing all `bands × rowsPerBand`
     * minima as separate min() columns PLUS the per-doc shingle count
     * (map-side partial agg), band buckets assembled by concat+hash of
@@ -1341,20 +1258,21 @@ object Dedup {
       .dropDuplicates("id_l", "id_r")
     confirm match {
       case Some((batchRows, histRows, t)) =>
-        val inter = cand
-          .join(batchRows.select(col(idCol).as("id_l"), col("g")), "id_l")
-          .join(histRows.select(col(idCol).as("id_r"), col("g")), Seq("id_r", "g"))
-          .groupBy(col("id_l"), col("id_r"))
-          .agg(count(lit(1)).as("inter"))
-        inter
-          .join(batchSigs.select(col(idCol).as("id_l"), col("n_sh").as("n_l")), "id_l")
-          .join(histSigs.select(col(idCol).as("id_r"), col("n_sh").as("n_r")), "id_r")
-          .select(col("id_l"), col("id_r"),
-            (col("inter").cast("double") / (col("n_l") + col("n_r") - col("inter"))).as("jaccard"))
-          .where(col("jaccard") >= t)
+        minhashConfirm(cand, batchRows, histRows, batchSigs, histSigs, idCol, "l", "r", t)
       case None => cand
     }
   }
+
+  /** Exact-Jaccard confirmation of MinHash candidates (id_<l>, id_<r>):
+    * the overlap verifier over both shingle indexes, then each side's
+    * shingle count `n_sh` from its signature table. */
+  private def minhashConfirm(cand: DataFrame, lRows: DataFrame, rRows: DataFrame,
+                             lSigs: DataFrame, rSigs: DataFrame, idCol: String,
+                             l: String, r: String, threshold: Double): DataFrame =
+    jaccardAtLeast(overlapCounts(cand, lRows, rRows, idCol, l, r)
+      .join(lSigs.select(col(idCol).as(s"id_$l"), col("n_sh").as(s"n_$l")), s"id_$l")
+      .join(rSigs.select(col(idCol).as(s"id_$r"), col("n_sh").as(s"n_$r")), s"id_$r"),
+      l, r, threshold)
 
   /** [[minhashLshPairs]] over a precomputed shingle index (`shingleRows`
     * output, (idCol, g)) — the corpus-scale form where one materialized
@@ -1375,39 +1293,16 @@ object Dedup {
     confirmThreshold match {
       case Some(t) =>
         val sizes = sig.select(col(idCol), col("n_sh"))
-        val inter = cand
-          .join(rows.select(col(idCol).as("id_a"), col("g")), "id_a")
-          .join(rows.select(col(idCol).as("id_b"), col("g")), Seq("id_b", "g"))
-          .groupBy(col("id_a"), col("id_b"))
-          .agg(count(lit(1)).as("inter"))
-        inter
-          .join(sizes.select(col(idCol).as("id_a"), col("n_sh").as("n_a")), "id_a")
-          .join(sizes.select(col(idCol).as("id_b"), col("n_sh").as("n_b")), "id_b")
-          .select(col("id_a"), col("id_b"),
-            (col("inter").cast("double") / (col("n_a") + col("n_b") - col("inter"))).as("jaccard"))
-          .where(col("jaccard") >= t)
+        minhashConfirm(cand, rows, rows, sizes, sizes, idCol, "a", "b", t)
       case None => cand
     }
   }
 
-  /** 64-bit SimHash over token hashes: sign-sum of each bit position,
-    * expression-only (unrolled over 64 bits via bit ops on xxhash64).
-    * O(64·n) HOF passes per row — fine for short texts/tests; use
-    * `simhashDF` for corpus-scale runs. */
-  def simhash(text: Column): Column = {
-    val hashes = transform(TextOps.tokens(text), w => xxhash64(w))
-    (0 until 64).map { bit =>
-      val votes = aggregate(hashes, lit(0L), (acc, h) =>
-        acc + when(shiftright(h, bit).bitwiseAND(lit(1L)) === 1L, lit(1L)).otherwise(lit(-1L)))
-      when(votes > 0, lit(1L << bit)).otherwise(lit(0L))
-    }.reduce((a, b) => a.bitwiseOR(b))
-  }
-
-  /** Corpus-scale SimHash: explode tokens → one hash-aggregate with 64
-    * conditional sign-sums (single pass over tokens, map-side partial
-    * aggregation shuffles just 64 longs per doc per partition — the
-    * per-row HOF form recompiles a 64-lambda expression tree instead).
-    * Returns (idCol, simhash). */
+  /** 64-bit SimHash over token hashes: each bit is the sign of the sum
+    * of ±1 votes over the doc's token occurrences. Explode tokens → one
+    * hash-aggregate with 64 conditional sign-sums (single pass over
+    * tokens; map-side partial aggregation shuffles just 64 longs per doc
+    * per partition). Returns (idCol, simhash). */
   def simhashDF(docs: DataFrame, textCol: String, idCol: String): DataFrame = {
     val tokens = docs.select(col(idCol),
       explode(TextOps.tokens(col(textCol))).as("w"))

@@ -98,12 +98,14 @@ class TextDedupSimSpec extends SparkSpec {
   }
 
   test("simhash: identical texts distance 0; near-dup small; unrelated large") {
-    val df = Seq(("a b c d e f g h", "a b c d e f g h", "a b c d e f g X",
-      "q r s t u v w z")).toDF("t1", "t2", "t3", "t4")
-    val r = df.select(
-      Dedup.hamming(Dedup.simhash(col("t1")), Dedup.simhash(col("t2"))).as("same"),
-      Dedup.hamming(Dedup.simhash(col("t1")), Dedup.simhash(col("t3"))).as("near"),
-      Dedup.hamming(Dedup.simhash(col("t1")), Dedup.simhash(col("t4"))).as("far")).head()
+    val docs = Seq((1L, "a b c d e f g h"), (2L, "a b c d e f g h"),
+      (3L, "a b c d e f g X"), (4L, "q r s t u v w z")).toDF("doc_id", "text")
+    val sig = Dedup.simhashDF(docs, "text", "doc_id").as[(Long, Long)].collect().toMap
+    def sh(id: Long) = lit(sig(id))
+    val r = Seq(1).toDF("x").select(
+      Dedup.hamming(sh(1L), sh(2L)).as("same"),
+      Dedup.hamming(sh(1L), sh(3L)).as("near"),
+      Dedup.hamming(sh(1L), sh(4L)).as("far")).head()
     assert(r.getInt(0) === 0)
     assert(r.getInt(1) < r.getInt(2))
   }
@@ -457,14 +459,90 @@ class TextDedupSimSpec extends SparkSpec {
     assert(graft.ops.Sampling.tokenBudgetSample(df, "doc_id", "n", Long.MaxValue) eq df)
   }
 
+  test("shingle-join family: degenerate inputs give the brute-force answer") {
+    // Every operator runs on (left = batch/probe, right = history/corpus);
+    // the self-join forms run on left ∪ right. Each case's true pairs are
+    // identical shingle sets and every other pair sits far below t, so
+    // MinHash banding (identical sets ⇒ identical signatures) must find
+    // exactly the brute-force pairs too.
+    type Docs = Seq[(Long, Option[String])]
+    val (n, t) = (3, 0.5)
+    val hotL: Docs = Seq((1L, Some("h1 h2 h3 a1 a2")), (2L, Some("h1 h2 h3 b1 b2")))
+    val hotR: Docs = Seq((101L, Some("h1 h2 h3 a1 a2")), (102L, Some("h1 h2 h3 c1 c2")))
+    val cases: Seq[(String, Docs, Docs)] = Seq(
+      ("both sides empty", Nil, Nil),
+      ("empty left", Nil, hotR),
+      ("empty right", hotL, Nil),
+      ("one doc per side", Seq((1L, Some("a b c d e"))), Seq((101L, Some("a b c d e")))),
+      ("docs shorter than n", Seq((1L, Some("a b")), (2L, Some("z"))),
+        Seq((101L, Some("a b")), (102L, Some("a b c")))),
+      ("NULL text", Seq((1L, None), (2L, Some("p q r s"))),
+        Seq((101L, None), (102L, Some("p q r s")))),
+      ("one shingle in every doc", hotL, hotR))
+
+    // the shingle contract: token n-grams, the whole text below n tokens,
+    // nothing for NULL text
+    def sh(text: Option[String]): Set[String] = text.fold(Set.empty[String]) { s =>
+      val toks = s.trim.split("\\s+", -1).toSeq
+      if (toks.size < n) Set(toks.mkString(" ")) else toks.sliding(n).map(_.mkString(" ")).toSet
+    }
+    def r9(x: Double): Double = math.rint(x * 1e9) / 1e9
+    def jac(a: Set[String], b: Set[String]) = (a & b).size.toDouble / (a | b).size
+    def con(a: Set[String], b: Set[String]) = (a & b).size.toDouble / a.size
+    def pairs(l: Docs, r: Docs, score: (Set[String], Set[String]) => Double,
+              self: Boolean): Set[Seq[Any]] =
+      (for ((i, x) <- l; (j, y) <- r; if !self || i < j
+            if sh(x).nonEmpty && sh(y).nonEmpty && score(sh(x), sh(y)) >= t)
+        yield Seq[Any](i, j, r9(score(sh(x), sh(y))))).toSet
+    def report(l: Docs, r: Docs): Set[Seq[Any]] = l.map { case (i, x) =>
+      val hits = r.collect { case (_, y) if sh(x).nonEmpty && con(sh(x), sh(y)) >= t =>
+        r9(con(sh(x), sh(y))) }
+      Seq[Any](i, hits.size.toLong, if (hits.isEmpty) null else hits.max, hits.nonEmpty)
+    }.toSet
+
+    type Frame = org.apache.spark.sql.DataFrame
+    def rows(d: Frame) = Dedup.shingleRows(d, "text", "doc_id", Nil, n)
+    val ops: Seq[(String, (Frame, Frame) => Frame, (Docs, Docs) => Set[Seq[Any]])] = Seq(
+      ("ngramJaccardPairs",
+        (l, r) => Dedup.ngramJaccardPairs(l.unionByName(r), "text", "doc_id", Nil, n, t),
+        (l, r) => pairs(l ++ r, l ++ r, jac, self = true)),
+      ("ngramJaccardJoin",
+        (l, r) => Dedup.ngramJaccardJoin(l, r, "text", "doc_id", n, t),
+        (l, r) => pairs(l, r, jac, self = false)),
+      ("ngramJaccardJoinPrebuilt", (l, r) => {
+        val (df, prefix) = Dedup.historyJaccardIndex(rows(r), "doc_id", t)
+        Dedup.ngramJaccardJoinPrebuilt(rows(l), rows(r), df, prefix, "doc_id", t)
+      }, (l, r) => pairs(l, r, jac, self = false)),
+      ("containmentJoin",
+        (l, r) => Dedup.containmentJoin(l, r, "text", "doc_id", n, t),
+        (l, r) => pairs(l, r, con, self = false)),
+      ("containmentJoinPrebuilt", (l, r) => {
+        val (df, sizes) = Dedup.corpusContainmentIndex(rows(r), "doc_id")
+        Dedup.containmentJoinPrebuilt(rows(l), rows(r), df, sizes, "doc_id", t)
+      }, (l, r) => pairs(l, r, con, self = false)),
+      ("minhashLshPairs",
+        (l, r) => Dedup.minhashLshPairs(l.unionByName(r), "text", "doc_id",
+          n, bands = 16, rowsPerBand = 4, confirmThreshold = Some(t)),
+        (l, r) => pairs(l ++ r, l ++ r, jac, self = true)),
+      ("contaminationReport",
+        (l, r) => Dedup.contaminationReport(l, r, "text", "doc_id", n, t),
+        report))
+
+    for ((name, l, r) <- cases; (op, run, expect) <- ops) {
+      val got = run(l.toDF("doc_id", "text"), r.toDF("doc_id", "text"))
+        .collect().map(_.toSeq.map {
+          case d: Double => r9(d)
+          case v => v
+        }).toSet
+      assert(got === expect(l, r), s"$op on $name")
+    }
+  }
+
   test("incremental operators handle empty sides") {
     val docs = Seq((1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"))
       .toDF("doc_id", "text")
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
-    // empty history → join finds nothing
-    assert(Dedup.ngramJaccardJoin(docs, empty, "text", "doc_id", 3, 0.5).count() === 0L)
-    // empty batch → no pairs, and the pipeline emits zero rows
-    assert(Dedup.ngramJaccardJoin(empty, docs, "text", "doc_id", 3, 0.5).count() === 0L)
+    // (ngramJaccardJoin's empty sides: see the degenerate-input matrix)
     // cleanIncremental with empty history degrades to within-batch stages
     val out = graft.text.Corpus.cleanIncremental(docs, empty, "text", "doc_id",
         Seq("the"), 3, 0.5)
