@@ -15,6 +15,16 @@ import graft.multimodal.BinaryOps
 object PipelineQueries {
   type Q = (SparkSession, String) => DataFrame
 
+  /** One directory per JVM for q134's Z-ordered copies, deleted with
+    * everything in it when the JVM exits: the copy must outlive the
+    * build (the returned frame reads it lazily), not the process. */
+  private lazy val zreadRoot: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft_zread")
+    sys.addShutdownHook(
+      org.apache.commons.io.FileUtils.deleteQuietly(root.toFile))
+    root
+  }
+
   val queries: Map[String, Q] = Map[String, Q](
     // ───── F15: JSON path extraction + coercion on events.props —
     // try_cast, not cast: LENIENT coercion means a junk value nulls
@@ -115,7 +125,7 @@ object PipelineQueries {
     // pruning value is footer-verified in ZOrderSpec ─────
     "q134_zorder_readback" -> ((s, d) => {
       val out = java.nio.file.Files
-        .createTempDirectory("graft_zread").toString
+        .createTempDirectory(zreadRoot, "q134").toString
       graft.ops.ZOrder.cluster(
           Tables.lineitem(s, d).select(col("l_orderkey"), col("l_partkey"),
             col("l_quantity")),

@@ -1,6 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -17,6 +19,37 @@ import org.apache.spark.sql.types.StructType
   *    with a watermark bounding state (the reference instead re-reads all
   *    prior output every day — unbounded at 100 TB; watermarked state is
   *    the scale-correct form).
+  *
+  * '''Seal contract.''' Every stateful operator here runs
+  * `flatMapGroupsWithState` in append mode with EVENT-TIME timeouts over
+  * an `eventTime` column built from epoch millis and tagged with
+  * `watermarkDelay`, so closure is deterministic and replayable (a
+  * backfill seals what the live run sealed; a test advances the
+  * watermark with data instead of sleeping). `sessionize` and
+  * `streamingFunnel` state their own seal rules; the bucketed operators
+  * share this one:
+  *  - a row whose `tsMillis` is below the current watermark is late and
+  *    drops inside the group function. The engine's own late filter
+  *    runs on the previous batch's watermark, and append mode cannot
+  *    retract, so without this guard a straggler could resurrect a
+  *    sealed bucket's state and emit it twice. The watermark starts at 0
+  *    and never falls, so a pre-epoch row is always late;
+  *  - per-bucket operators seal a bucket once the watermark reaches its
+  *    seal time (the end of its last admissible contributor): it emits
+  *    once and its state is removed. A bucket with nothing admitted is
+  *    removed without output; any other bucket keeps its state with a
+  *    timeout at `max(sealAt, wm + 1)` (a timeout must stay ahead of the
+  *    watermark). Time buckets are `floorDiv(tsMillis, bucketMillis)`,
+  *    as in the batch twins (the rolling actives' fan-out keeps
+  *    `Funnel.rollingActive`'s SQL `div`; with pre-epoch rows always
+  *    late, the two agree on every admitted row);
+  *  - sequential folds (EWMA, CUSUM, SCD2) seal their buckets strictly in
+  *    order, so the fold sees them as the batch operator does.
+  * The output therefore equals the batch twin over the admitted events
+  * for every split of the stream into micro-batches, and state is
+  * bounded by the out-of-order horizon, not by history. `watermarkDelay`
+  * is that horizon: with the 0 ms default any cross-batch late event is
+  * dropped; size it to the pipeline's real delivery skew.
   */
 object StreamingViews {
 
@@ -52,8 +85,7 @@ object StreamingViews {
                                     tsCol: String, keys: Seq[String],
                                     watermark: String = "1 hour"): DataFrame =
     events.withWatermark(tsCol, watermark)
-      .join(history.select(keys.map(org.apache.spark.sql.functions.col): _*).distinct(),
-        keys, "left_anti")
+      .join(history.select(keys.map(col): _*).distinct(), keys, "left_anti")
       .dropDuplicates(keys :+ tsCol)
 
   /** [[streamingDedupeAgainstHistory]] with the history compressed into a
@@ -67,13 +99,82 @@ object StreamingViews {
     * to rescan every few seconds. */
   def streamingDedupeBloom(events: DataFrame, historyBloom: Array[Byte],
                            tsCol: String, keys: Seq[String],
-                           watermark: String = "1 hour"): DataFrame = {
-    import org.apache.spark.sql.functions.{col, struct}
+                           watermark: String = "1 hour"): DataFrame =
     events.withWatermark(tsCol, watermark)
       .where(!graft.dedup.Dedup.bloomMightContain(
         historyBloom, struct(keys.map(col): _*)))
       .dropDuplicates(keys :+ tsCol)
-  }
+
+  /** The prologue of every stateful operator: an `eventTime` timestamp
+    * from the epoch-millis `millis`, tagged with the watermark. */
+  private def eventTimed(rows: Dataset[_], millis: Column,
+                         watermarkDelay: String): DataFrame =
+    rows.withColumn("eventTime", timestamp_millis(millis))
+      .withWatermark("eventTime", watermarkDelay)
+
+  /** The seal contract for operators that accumulate per bucket. Rows of
+    * `rows` group by `key`; admitted rows fold into the bucket's
+    * accumulator (`load` it from state, `add` each row); once the
+    * watermark reaches `sealAt(key)` a non-empty accumulator `emit`s and
+    * the state goes, an empty one just goes, and otherwise it is `save`d
+    * with a timeout at its seal time. */
+  private def sealedBuckets[E: Encoder, K: Encoder, S: Encoder, A, O: Encoder](
+      rows: Dataset[E], tsMillis: E => Long, key: E => K, sealAt: K => Long)(
+      load: Option[S] => A, add: (A, E) => A, isEmpty: A => Boolean,
+      save: A => S, emit: (K, A) => Iterator[O]): Dataset[O] =
+    rows.groupByKey(key)
+      .flatMapGroupsWithState[S, O](
+        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+        (k: K, in: Iterator[E], state: GroupState[S]) =>
+          val wm = state.getCurrentWatermarkMs()
+          val end = sealAt(k)
+          val acc = in.filter(tsMillis(_) >= wm)
+            .foldLeft(load(state.getOption))(add)
+          if (isEmpty(acc)) { state.remove(); Iterator.empty }
+          else if (wm >= end) { state.remove(); emit(k, acc) }
+          else {
+            state.update(save(acc))
+            state.setTimeoutTimestamp(math.max(end, wm + 1))
+            Iterator.empty
+          }
+      }
+
+  /** The seal contract for sequential per-key folds: admitted rows `admit`
+    * into the state's `pending` values per bucket
+    * (`floorDiv(tsMillis, bucketMillis)`); the buckets the watermark has
+    * passed are ripe and go to `seal` IN BUCKET ORDER — emitting a later
+    * bucket before an earlier one is complete would change every later
+    * step of the fold — which returns the next state (holding the still
+    * open buckets) and the rows to emit. The timeout is the end of the
+    * earliest open bucket; with none open the key's state waits for its
+    * next event. */
+  private def orderedBuckets[E: Encoder, V, S: Encoder, O: Encoder](
+      rows: Dataset[E], tsMillis: E => Long, key: E => Long,
+      bucketMillis: Long, init: S, pending: S => Map[Long, V],
+      admit: (Map[Long, V], Long, E) => Map[Long, V])(
+      seal: (Long, S, Seq[(Long, V)], Map[Long, V]) => (S, Seq[O])): Dataset[O] =
+    rows.groupByKey(key)(Encoders.scalaLong)
+      .flatMapGroupsWithState[S, O](
+        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+        (k: Long, in: Iterator[E], state: GroupState[S]) =>
+          val wm = state.getCurrentWatermarkMs()
+          val st = state.getOption.getOrElse(init)
+          val (ripe, open) = in.filter(tsMillis(_) >= wm)
+            .foldLeft(pending(st)) { (m, r) =>
+              admit(m, Math.floorDiv(tsMillis(r), bucketMillis), r)
+            }
+            .partition { case (b, _) => (b + 1L) * bucketMillis <= wm }
+          val (next, out) = seal(k, st, ripe.toSeq.sortBy(_._1), open)
+          state.update(next)
+          if (open.nonEmpty)
+            state.setTimeoutTimestamp(math.max(
+              (open.keys.min + 1L) * bucketMillis, wm + 1))
+          out.iterator
+      }
+
+  /** [[orderedBuckets]]' admission for per-bucket event counts. */
+  private def countIn(m: Map[Long, Long], bucket: Long, row: Any): Map[Long, Long] =
+    m.updated(bucket, m.getOrElse(bucket, 0L) + 1L)
 
   case class SessionEvent(userId: Long, tsMillis: Long, value: Double)
   case class SessionSummary(userId: Long, nEvents: Long, sumValue: Double,
@@ -95,21 +196,12 @@ object StreamingViews {
     * discipline makes the streaming output equal a batch replay
     * ([[graft.ops.Relational.sessionize]]) of the same admitted events
     * for EVERY partition of the stream into micro-batches — asserted as a
-    * randomized property in StreamingSpec.
-    *
-    * Event-time (not processing-time) timeouts are deliberate: they are
-    * deterministic and replayable — a backfill over historical data
-    * closes the same sessions as the live run, and a test can drive
-    * closure by advancing the watermark with data instead of sleeping
-    * wall-clock. `watermarkDelay` is the out-of-order budget: with the
-    * 0 ms default any cross-batch late event is dropped before this
-    * function runs; size it to the pipeline's real delivery skew. */
+    * randomized property in StreamingSpec. Timeouts and late rows follow
+    * the [[StreamingViews]] seal contract. */
   def sessionize(events: Dataset[SessionEvent], gapMillis: Long,
                  watermarkDelay: String = "0 milliseconds"): Dataset[SessionSummary] = {
     import events.sparkSession.implicits._
-    events
-      .withColumn("eventTime", timestamp_millis(col("tsMillis")))
-      .withWatermark("eventTime", watermarkDelay)
+    eventTimed(events, col("tsMillis"), watermarkDelay)
       .as[SessionEvent]
       .groupByKey(_.userId)
       .flatMapGroupsWithState[SessionState, SessionSummary](
@@ -197,9 +289,7 @@ object StreamingViews {
                       windowMillis: Long,
                       watermarkDelay: String = "0 milliseconds"): Dataset[FunnelResult] = {
     import events.sparkSession.implicits._
-    events
-      .withColumn("eventTime", timestamp_millis(col("tsMillis")))
-      .withWatermark("eventTime", watermarkDelay)
+    eventTimed(events, col("tsMillis"), watermarkDelay)
       .as[FunnelEvent]
       .groupByKey(_.userId)
       .flatMapGroupsWithState[FunnelBuffer, FunnelResult](
@@ -242,6 +332,24 @@ object StreamingViews {
     * typed deserializer's codegen). */
   case class FanRow(userId: Long, bucket: Long, tsMillis: Long)
 
+  /** The rolling-active fan-out: each event goes STATELESSLY to the
+    * `windowBuckets` window ends its activity bucket contributes to. */
+  private def activityFan(events: Dataset[ActivityEvent], bucketMillis: Long,
+                          windowBuckets: Int,
+                          watermarkDelay: String): Dataset[FanRow] = {
+    import events.sparkSession.implicits._
+    require(windowBuckets >= 1, "window must span at least one bucket")
+    val first = expr(s"tsMillis div ${bucketMillis}L")
+    eventTimed(events, col("tsMillis"), watermarkDelay)
+      // eventTime stays in the projection: the analyzer requires the
+      // watermark-tagged attribute in the fMGWS input (the typed
+      // deserializer reads only FanRow's fields)
+      .select(col("userId"),
+        explode(sequence(first, first + lit(windowBuckets - 1L))).as("bucket"),
+        col("tsMillis"), col("eventTime"))
+      .as[FanRow]
+  }
+
   /** Streaming [[graft.ops.Funnel.rollingActive]]: each event fans out
     * STATELESSLY to the `windowBuckets` window ends its activity bucket
     * contributes to; per target bucket a distinct-contributor set
@@ -250,13 +358,8 @@ object StreamingViews {
     * emits ONCE — equal to the batch operator over the admitted events
     * (asserted in StreamingSpec). Buckets whose seal time lies past the
     * watermark stay pending, which is the stream-edge analogue of the
-    * batch operator's newest-bucket clamp.
-    *
-    * Late rows (event time below the current watermark) are dropped in
-    * the group function — the fan-out projects the watermark-tagged
-    * column away, so the engine's own late filter cannot apply, and
-    * without the guard a straggler could resurrect a sealed bucket's
-    * state and emit the bucket twice (append mode cannot retract).
+    * batch operator's newest-bucket clamp. Seals per the
+    * [[StreamingViews]] seal contract.
     *
     * State per in-flight bucket is its EXACT distinct key set — the
     * irreducible cost of an exact streaming distinct (≤ window + delay
@@ -268,45 +371,17 @@ object StreamingViews {
                              watermarkDelay: String = "0 milliseconds")
       : Dataset[ActiveCount] = {
     import events.sparkSession.implicits._
-    require(windowBuckets >= 1, "window must span at least one bucket")
-    events
-      .withColumn("eventTime", timestamp_millis(col("tsMillis")))
-      .withWatermark("eventTime", watermarkDelay)
-      // eventTime stays in the projection: the analyzer requires the
-      // watermark-tagged attribute in the fMGWS input (the typed
-      // deserializer reads only FanRow's fields)
-      .select(col("userId"),
-        explode(sequence(expr(s"tsMillis div ${bucketMillis}L"),
-          expr(s"tsMillis div ${bucketMillis}L") + lit(windowBuckets - 1L)))
-          .as("bucket"),
-        col("tsMillis"), col("eventTime"))
-      .as[FanRow]
-      .groupByKey(_.bucket)
-      .flatMapGroupsWithState[BucketContributors, ActiveCount](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (bucket: Long, rows: Iterator[FanRow], state: GroupState[BucketContributors]) =>
-          val wm = state.getCurrentWatermarkMs()
-          val sealAt = bucket * bucketMillis + bucketMillis
-          val fresh = rows.filter(_.tsMillis >= wm).map(_.userId)
-          // carried state is ALREADY distinct: only dedup the new keys
-          // against it (a re-distinct of the whole set per micro-batch
-          // would pay O(|state|) extra on every hot bucket)
-          val prev = state.getOption.map(_.users).getOrElse(Seq.empty)
-          val prevSet = prev.toSet
-          val users = prev ++ fresh.filterNot(prevSet).toSeq.distinct
-          if (wm >= sealAt) {
-            state.remove()
-            if (users.nonEmpty) Iterator.single(ActiveCount(bucket, users.size.toLong))
-            else Iterator.empty
-          } else if (users.isEmpty) {
-            state.remove()
-            Iterator.empty
-          } else {
-            state.update(BucketContributors(users))
-            state.setTimeoutTimestamp(math.max(sealAt, wm + 1))
-            Iterator.empty
-          }
-      }
+    sealedBuckets[FanRow, Long, BucketContributors, mutable.LinkedHashSet[Long], ActiveCount](
+      activityFan(events, bucketMillis, windowBuckets, watermarkDelay),
+      _.tsMillis, _.bucket, b => (b + 1L) * bucketMillis)(
+      // carried state is ALREADY distinct: new keys dedup against it in
+      // O(1) each, never a re-distinct of the whole set per micro-batch
+      load = st => mutable.LinkedHashSet.empty[Long] ++=
+        st.fold(Seq.empty[Long])(_.users),
+      add = (users, r) => users += r.userId,
+      isEmpty = _.isEmpty,
+      save = users => BucketContributors(users.toSeq),
+      emit = (b, users) => Iterator.single(ActiveCount(b, users.size.toLong)))
   }
 
   /** The watermark-sealed HLL sketch for one in-flight bucket —
@@ -325,7 +400,8 @@ object StreamingViews {
     * key set. State per in-flight bucket drops from O(actives) to
     * O(2^lgK) bytes — the 10⁹-actives regime the batch sketch path
     * exists for; the exact operator remains the verification path.
-    * Seal/late-row discipline is identical to the exact variant. */
+    * Seals per the [[StreamingViews]] seal contract, like the exact
+    * variant. */
   def streamingRollingActiveApprox(events: Dataset[ActivityEvent],
                                    bucketMillis: Long, windowBuckets: Int,
                                    lgConfigK: Int = 12,
@@ -333,40 +409,16 @@ object StreamingViews {
       : Dataset[ActiveEstimate] = {
     import events.sparkSession.implicits._
     import org.apache.datasketches.hll.{HllSketch, TgtHllType}
-    require(windowBuckets >= 1, "window must span at least one bucket")
-    events
-      .withColumn("eventTime", timestamp_millis(col("tsMillis")))
-      .withWatermark("eventTime", watermarkDelay)
-      .select(col("userId"),
-        explode(sequence(expr(s"tsMillis div ${bucketMillis}L"),
-          expr(s"tsMillis div ${bucketMillis}L") + lit(windowBuckets - 1L)))
-          .as("bucket"),
-        col("tsMillis"), col("eventTime"))
-      .as[FanRow]
-      .groupByKey(_.bucket)
-      .flatMapGroupsWithState[BucketSketch, ActiveEstimate](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (bucket: Long, rows: Iterator[FanRow], state: GroupState[BucketSketch]) =>
-          val wm = state.getCurrentWatermarkMs()
-          val sealAt = bucket * bucketMillis + bucketMillis
-          val sketch = state.getOption
-            .map(s => HllSketch.heapify(s.sketch))
-            .getOrElse(new HllSketch(lgConfigK, TgtHllType.HLL_8))
-          rows.filter(_.tsMillis >= wm).foreach(r => sketch.update(r.userId))
-          if (wm >= sealAt) {
-            state.remove()
-            if (sketch.isEmpty) Iterator.empty
-            else Iterator.single(
-              ActiveEstimate(bucket, Math.round(sketch.getEstimate)))
-          } else if (sketch.isEmpty) {
-            state.remove()
-            Iterator.empty
-          } else {
-            state.update(BucketSketch(sketch.toUpdatableByteArray))
-            state.setTimeoutTimestamp(math.max(sealAt, wm + 1))
-            Iterator.empty
-          }
-      }
+    sealedBuckets[FanRow, Long, BucketSketch, HllSketch, ActiveEstimate](
+      activityFan(events, bucketMillis, windowBuckets, watermarkDelay),
+      _.tsMillis, _.bucket, b => (b + 1L) * bucketMillis)(
+      load = _.fold(new HllSketch(lgConfigK, TgtHllType.HLL_8))(s =>
+        HllSketch.heapify(s.sketch)),
+      add = (sketch, r) => { sketch.update(r.userId); sketch },
+      isEmpty = _.isEmpty,
+      save = sketch => BucketSketch(sketch.toUpdatableByteArray),
+      emit = (b, sketch) =>
+        Iterator.single(ActiveEstimate(b, Math.round(sketch.getEstimate))))
   }
 
   /** Per-key EWMA state: the running smoothed level (one long for the
@@ -378,12 +430,10 @@ object StreamingViews {
 
   /** Streaming [[graft.ops.Timeseries.ewmaAnomalies]]: per-key bucket
     * counts accumulate until the event-time watermark seals a bucket,
-    * then buckets fold into the integer half-life EWMA IN ORDER and
-    * emit with the prior level + spike verdict — equal to the batch
-    * fold over the admitted events (asserted in StreamingSpec).
-    * Sealing strictly bucket-ordered is what preserves batch parity:
-    * the fold is sequential, so emitting a later bucket before an
-    * earlier one finishes would change every subsequent level.
+    * then buckets fold into the integer half-life EWMA IN ORDER (the
+    * [[StreamingViews]] seal contract for sequential folds) and emit
+    * with the prior level + spike verdict — equal to the batch fold
+    * over the admitted events (asserted in StreamingSpec).
     *
     * State per key is the pending in-horizon bucket counts (bounded by
     * delivery skew) plus ONE long of smoothed history — the streaming
@@ -394,40 +444,18 @@ object StreamingViews {
       : Dataset[EwmaPoint] = {
     import events.sparkSession.implicits._
     require(spikeFactor >= 1L, s"spikeFactor must be >= 1: $spikeFactor")
-    events
-      .withColumn("eventTime", timestamp_millis(col("tsMillis")))
-      .withWatermark("eventTime", watermarkDelay)
-      .as[ActivityEvent]
-      .groupByKey(_.userId)
-      .flatMapGroupsWithState[EwmaState, EwmaPoint](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: Long, rows: Iterator[ActivityEvent], state: GroupState[EwmaState]) =>
-          val wm = state.getCurrentWatermarkMs()
-          val st = state.getOption.getOrElse(EwmaState(None, Map.empty))
-          // late rows (below the watermark) are dropped: their bucket is
-          // sealed and append mode cannot retract its point
-          val pending = rows.filter(_.tsMillis >= wm).foldLeft(st.pending) {
-            (m, r) =>
-              val b = r.tsMillis / bucketMillis
-              m.updated(b, m.getOrElse(b, 0L) + 1L)
-          }
-          val (ripe, open) =
-            pending.partition { case (b, _) => (b + 1L) * bucketMillis <= wm }
-          var e = st.e
-          val out = ripe.keys.toSeq.sorted.map { b =>
-            val n = ripe(b)
-            val prev = e
-            e = Some(prev.fold(n)(p => (p + n) / 2))
-            EwmaPoint(key, b, n, prev, prev.map(p => n > spikeFactor * p))
-          }
-          state.update(EwmaState(e, open))
-          if (open.nonEmpty)
-            state.setTimeoutTimestamp(math.max(
-              (open.keys.min + 1L) * bucketMillis, wm + 1))
-          // no pending buckets → no timeout: the long-lived level waits
-          // for the key's next event (state is one long + an empty map)
-          out.iterator
+    orderedBuckets[ActivityEvent, Long, EwmaState, EwmaPoint](
+      eventTimed(events, col("tsMillis"), watermarkDelay).as[ActivityEvent],
+      _.tsMillis, _.userId, bucketMillis, EwmaState(None, Map.empty),
+      _.pending, countIn) { (key, st, ripe, open) =>
+      var e = st.e
+      val out = ripe.map { case (b, n) =>
+        val prev = e
+        e = Some(prev.fold(n)(p => (p + n) / 2))
+        EwmaPoint(key, b, n, prev, prev.map(p => n > spikeFactor * p))
       }
+      (EwmaState(e, open), out)
+    }
   }
 
   /** Per-key CUSUM state: the warmup accumulator until μ exists, then
@@ -455,45 +483,27 @@ object StreamingViews {
     require(warmup >= 1, s"warmup must be positive: $warmup")
     require(slack >= 0L, s"slack must be non-negative: $slack")
     require(threshold >= 1L, s"threshold must be positive: $threshold")
-    events
-      .withColumn("eventTime", timestamp_millis(col("tsMillis")))
-      .withWatermark("eventTime", watermarkDelay)
-      .as[ActivityEvent]
-      .groupByKey(_.userId)
-      .flatMapGroupsWithState[CusumState, CusumPoint](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: Long, rows: Iterator[ActivityEvent], state: GroupState[CusumState]) =>
-          val wm = state.getCurrentWatermarkMs()
-          val st = state.getOption
-            .getOrElse(CusumState(0, 0L, None, 0L, 0L, Map.empty))
-          val pending = rows.filter(_.tsMillis >= wm).foldLeft(st.pending) {
-            (m, r) =>
-              val b = r.tsMillis / bucketMillis
-              m.updated(b, m.getOrElse(b, 0L) + 1L)
+    orderedBuckets[ActivityEvent, Long, CusumState, CusumPoint](
+      eventTimed(events, col("tsMillis"), watermarkDelay).as[ActivityEvent],
+      _.tsMillis, _.userId, bucketMillis,
+      CusumState(0, 0L, None, 0L, 0L, Map.empty), _.pending, countIn) {
+      (key, st, ripe, open) =>
+        var (wc, ws, mu, sp, sn) =
+          (st.warmCount, st.warmSum, st.mu, st.sPos, st.sNeg)
+        val out = ripe.map { case (b, n) =>
+          if (mu.isEmpty) {
+            wc += 1; ws += n
+            if (wc == warmup) mu = Some(ws / warmup)
+            CusumPoint(key, b, n, None, None, None, None, None)
+          } else {
+            sp = math.max(0L, sp + n - mu.get - slack)
+            sn = math.max(0L, sn + mu.get - n - slack)
+            CusumPoint(key, b, n, mu, Some(sp), Some(sn),
+              Some(sp > threshold), Some(sn > threshold))
           }
-          val (ripe, open) =
-            pending.partition { case (b, _) => (b + 1L) * bucketMillis <= wm }
-          var (wc, ws, mu, sp, sn) =
-            (st.warmCount, st.warmSum, st.mu, st.sPos, st.sNeg)
-          val out = ripe.keys.toSeq.sorted.map { b =>
-            val n = ripe(b)
-            if (mu.isEmpty) {
-              wc += 1; ws += n
-              if (wc == warmup) mu = Some(ws / warmup)
-              CusumPoint(key, b, n, None, None, None, None, None)
-            } else {
-              sp = math.max(0L, sp + n - mu.get - slack)
-              sn = math.max(0L, sn + mu.get - n - slack)
-              CusumPoint(key, b, n, mu, Some(sp), Some(sn),
-                Some(sp > threshold), Some(sn > threshold))
-            }
-          }
-          state.update(CusumState(wc, ws, mu, sp, sn, open))
-          if (open.nonEmpty)
-            state.setTimeoutTimestamp(math.max(
-              (open.keys.min + 1L) * bucketMillis, wm + 1))
-          out.iterator
-      }
+        }
+        (CusumState(wc, ws, mu, sp, sn, open), out)
+    }
   }
 
   case class SegmentEvent(seg: String, userId: Long, tsMillis: Long)
@@ -512,11 +522,10 @@ object StreamingViews {
     * compact bytes are exactly what the batch set-algebra layer
     * consumes (`mergeSegmentSketches` unions them across days, then
     * `segmentOverlap` answers ∩/∪/∖ — spec-pinned equal to a batch
-    * build over the same events). Late rows below the watermark drop
-    * (the sealed sketch cannot be retracted in append mode). State per
-    * in-flight (segment, bucket) is one updatable theta sketch —
-    * bounded by the out-of-order horizon × segment count, never by
-    * user cardinality. */
+    * build over the same events). Seals per the [[StreamingViews]] seal
+    * contract. State per in-flight (segment, bucket) is one updatable
+    * theta sketch — bounded by the out-of-order horizon × segment
+    * count, never by user cardinality. */
   def streamingSegmentSketches(events: Dataset[SegmentEvent],
                                bucketMillis: Long, lgK: Int = 12,
                                watermarkDelay: String = "0 milliseconds")
@@ -524,40 +533,20 @@ object StreamingViews {
     import events.sparkSession.implicits._
     import org.apache.datasketches.memory.Memory
     import org.apache.datasketches.theta.UpdateSketch
-    events
-      .withColumn("eventTime", timestamp_millis(col("tsMillis")))
-      .withWatermark("eventTime", watermarkDelay)
-      .as[SegmentEvent]
-      .groupByKey(e => (e.seg, e.tsMillis / bucketMillis))
-      .flatMapGroupsWithState[SegSketch, SealedSegmentSketch](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: (String, Long), rows: Iterator[SegmentEvent],
-         state: GroupState[SegSketch]) =>
-          val (seg, bucket) = key
-          val wm = state.getCurrentWatermarkMs()
-          val sealAt = (bucket + 1L) * bucketMillis
-          val sketch = state.getOption
-            .map(s => UpdateSketch.heapify(Memory.wrap(s.sketch)))
-            .getOrElse(UpdateSketch.builder()
-              .setNominalEntries(1 << lgK).build())
-          rows.filter(_.tsMillis >= wm).foreach(r => sketch.update(r.userId))
-          if (wm >= sealAt) {
-            state.remove()
-            if (sketch.getRetainedEntries(true) == 0) Iterator.empty
-            else {
-              val compact = sketch.compact()
-              Iterator.single(SealedSegmentSketch(seg, bucket,
-                compact.toByteArray, Math.round(compact.getEstimate)))
-            }
-          } else if (sketch.getRetainedEntries(true) == 0) {
-            state.remove()
-            Iterator.empty
-          } else {
-            state.update(SegSketch(sketch.toByteArray))
-            state.setTimeoutTimestamp(math.max(sealAt, wm + 1))
-            Iterator.empty
-          }
-      }
+    sealedBuckets[SegmentEvent, (String, Long), SegSketch, UpdateSketch, SealedSegmentSketch](
+      eventTimed(events, col("tsMillis"), watermarkDelay).as[SegmentEvent],
+      _.tsMillis, e => (e.seg, Math.floorDiv(e.tsMillis, bucketMillis)),
+      k => (k._2 + 1L) * bucketMillis)(
+      load = _.fold(UpdateSketch.builder().setNominalEntries(1 << lgK).build())(
+        s => UpdateSketch.heapify(Memory.wrap(s.sketch))),
+      add = (sketch, r) => { sketch.update(r.userId); sketch },
+      isEmpty = _.getRetainedEntries(true) == 0,
+      save = sketch => SegSketch(sketch.toByteArray),
+      emit = { case ((seg, bucket), sketch) =>
+        val compact = sketch.compact()
+        Iterator.single(SealedSegmentSketch(seg, bucket,
+          compact.toByteArray, Math.round(compact.getEstimate)))
+      })
   }
 
   case class MeasureEvent(value: Double, tsMillis: Long)
@@ -579,10 +568,9 @@ object StreamingViews {
     * (`rollingQuantileFromSketches` — spec-pinned equal to a batch
     * build over the same admitted events in the below-k exact regime,
     * where KLL retains everything and no randomized compaction runs).
-    * Late rows below the watermark drop (append mode cannot retract a
-    * sealed sketch). State per in-flight bucket is O(k) bytes
-    * regardless of event volume — the irreducible cost of streaming
-    * quantiles, vs O(events) for an exact buffer. */
+    * Seals per the [[StreamingViews]] seal contract. State per in-flight
+    * bucket is O(k) bytes regardless of event volume — the irreducible
+    * cost of streaming quantiles, vs O(events) for an exact buffer. */
   def streamingBucketQuantileSketches(events: Dataset[MeasureEvent],
                                       bucketMillis: Long, kllK: Int = 200,
                                       watermarkDelay: String = "0 milliseconds")
@@ -590,34 +578,17 @@ object StreamingViews {
     import events.sparkSession.implicits._
     import org.apache.datasketches.kll.KllDoublesSketch
     import org.apache.datasketches.memory.Memory
-    events
-      .withColumn("eventTime", timestamp_millis(col("tsMillis")))
-      .withWatermark("eventTime", watermarkDelay)
-      .as[MeasureEvent]
-      .groupByKey(e => Math.floorDiv(e.tsMillis, bucketMillis))
-      .flatMapGroupsWithState[BucketKll, SealedBucketQuantile](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (bucket: Long, rows: Iterator[MeasureEvent], state: GroupState[BucketKll]) =>
-          val wm = state.getCurrentWatermarkMs()
-          val sealAt = (bucket + 1L) * bucketMillis
-          val sketch = state.getOption
-            .map(s => KllDoublesSketch.heapify(Memory.wrap(s.sketch)))
-            .getOrElse(KllDoublesSketch.newHeapInstance(kllK))
-          rows.filter(_.tsMillis >= wm).foreach(r => sketch.update(r.value))
-          if (wm >= sealAt) {
-            state.remove()
-            if (sketch.isEmpty) Iterator.empty
-            else Iterator.single(SealedBucketQuantile(bucket,
-              sketch.toByteArray, sketch.getN))
-          } else if (sketch.isEmpty) {
-            state.remove()
-            Iterator.empty
-          } else {
-            state.update(BucketKll(sketch.toByteArray))
-            state.setTimeoutTimestamp(math.max(sealAt, wm + 1))
-            Iterator.empty
-          }
-      }
+    sealedBuckets[MeasureEvent, Long, BucketKll, KllDoublesSketch, SealedBucketQuantile](
+      eventTimed(events, col("tsMillis"), watermarkDelay).as[MeasureEvent],
+      _.tsMillis, e => Math.floorDiv(e.tsMillis, bucketMillis),
+      b => (b + 1L) * bucketMillis)(
+      load = _.fold(KllDoublesSketch.newHeapInstance(kllK))(s =>
+        KllDoublesSketch.heapify(Memory.wrap(s.sketch))),
+      add = (sketch, r) => { sketch.update(r.value); sketch },
+      isEmpty = _.isEmpty,
+      save = sketch => BucketKll(sketch.toByteArray),
+      emit = (b, sketch) => Iterator.single(
+        SealedBucketQuantile(b, sketch.toByteArray, sketch.getN)))
   }
 
   /** Internal fan row of [[streamingTokenCms]] (public for the typed
@@ -634,6 +605,25 @@ object StreamingViews {
     * seed). */
   case class SealedBucketCms(bucket: Long, sketch: Array[Byte], nTokens: Long)
 
+  /** The token fan-out of the frequency and join-size sketches: one
+    * [[TokenFreqEvent]] per `token` value (a generator or a plain
+    * column) at the row's epoch-millis `tsCol`. */
+  private def tokenEvents(rows: DataFrame, token: Column, tsCol: String,
+                          watermarkDelay: String): Dataset[TokenFreqEvent] = {
+    import rows.sparkSession.implicits._
+    eventTimed(rows, col(tsCol).cast("long"), watermarkDelay)
+      .select(token.as("token"),
+        col(tsCol).cast("long").as("tsMillis"), col("eventTime"))
+      .as[TokenFreqEvent]
+  }
+
+  private def cmsBytes(sketch: org.apache.spark.util.sketch.CountMinSketch)
+      : Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    sketch.writeTo(bos)
+    bos.toByteArray
+  }
+
   /** Streaming producer of the token-frequency CMS — the FREQUENCY
     * family's streaming twin (HLL actives, theta segments, EWMA and
     * KLL quantiles all have one): docs tokenize STATELESSLY with the
@@ -644,55 +634,29 @@ object StreamingViews {
     * order-independent — so sealed per-bucket sketches `mergeInPlace`
     * to BYTE-IDENTICAL artifacts vs a batch [[graft.udafs.Sketches
     * .tokenCms]] build over the same admitted docs (spec-pinned),
-    * exactness no other sketch family's twin can claim. Late rows
-    * below the watermark drop (append mode cannot retract). State per
-    * in-flight bucket is the fixed counter grid — O(depth·width)
-    * bytes at any token volume. */
+    * exactness no other sketch family's twin can claim. Seals per the
+    * [[StreamingViews]] seal contract. State per in-flight bucket is
+    * the fixed counter grid — O(depth·width) bytes at any token
+    * volume. */
   def streamingTokenCms(docs: DataFrame, textCol: String, tsCol: String,
                         bucketMillis: Long, eps: Double, confidence: Double,
                         seed: Int,
                         watermarkDelay: String = "0 milliseconds")
       : Dataset[SealedBucketCms] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
+    import docs.sparkSession.implicits._
     import org.apache.spark.util.sketch.CountMinSketch
-    docs
-      .withColumn("eventTime", timestamp_millis(col(tsCol).cast("long")))
-      .withWatermark("eventTime", watermarkDelay)
-      .select(explode(graft.text.TextOps.tokens(col(textCol))).as("token"),
-        col(tsCol).cast("long").as("tsMillis"), col("eventTime"))
-      .as[TokenFreqEvent]
-      .groupByKey(e => Math.floorDiv(e.tsMillis, bucketMillis))
-      .flatMapGroupsWithState[BucketCmsState, SealedBucketCms](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (bucket: Long, rows: Iterator[TokenFreqEvent],
-         state: GroupState[BucketCmsState]) =>
-          val wm = state.getCurrentWatermarkMs()
-          val sealAt = (bucket + 1L) * bucketMillis
-          val sketch = state.getOption
-            .map(s => CountMinSketch.readFrom(
-              new java.io.ByteArrayInputStream(s.sketch)))
-            .getOrElse(CountMinSketch.create(eps, confidence, seed))
-          rows.filter(_.tsMillis >= wm).foreach(r => sketch.addString(r.token))
-          def bytes(): Array[Byte] = {
-            val bos = new java.io.ByteArrayOutputStream()
-            sketch.writeTo(bos)
-            bos.toByteArray
-          }
-          if (wm >= sealAt) {
-            state.remove()
-            if (sketch.totalCount() == 0L) Iterator.empty
-            else Iterator.single(
-              SealedBucketCms(bucket, bytes(), sketch.totalCount()))
-          } else if (sketch.totalCount() == 0L) {
-            state.remove()
-            Iterator.empty
-          } else {
-            state.update(BucketCmsState(bytes()))
-            state.setTimeoutTimestamp(math.max(sealAt, wm + 1))
-            Iterator.empty
-          }
-      }
+    sealedBuckets[TokenFreqEvent, Long, BucketCmsState, CountMinSketch, SealedBucketCms](
+      tokenEvents(docs, explode(graft.text.TextOps.tokens(col(textCol))),
+        tsCol, watermarkDelay),
+      _.tsMillis, e => Math.floorDiv(e.tsMillis, bucketMillis),
+      b => (b + 1L) * bucketMillis)(
+      load = _.fold(CountMinSketch.create(eps, confidence, seed))(s =>
+        CountMinSketch.readFrom(new java.io.ByteArrayInputStream(s.sketch))),
+      add = (sketch, r) => { sketch.addString(r.token); sketch },
+      isEmpty = _.totalCount() == 0L,
+      save = sketch => BucketCmsState(cmsBytes(sketch)),
+      emit = (b, sketch) => Iterator.single(
+        SealedBucketCms(b, cmsBytes(sketch), sketch.totalCount())))
   }
 
   /** One in-flight per-bucket Misra–Gries summary (≤ k counters). */
@@ -715,47 +679,25 @@ object StreamingViews {
     * vocabulary stays ≤ k no trim fires and the sealed summary is
     * bit-exact equal to a batch [[graft.udafs.FreqItems.mgAgg]] build
     * over the same admitted docs (spec-pinned — the KLL below-capacity
-    * convention). Late rows below the watermark drop (append mode
-    * cannot retract). State per in-flight bucket is AT MOST k counters
-    * at any token volume. */
+    * convention). Seals per the [[StreamingViews]] seal contract. State
+    * per in-flight bucket is AT MOST k counters at any token volume. */
   def streamingTokenHeavyHitters(docs: DataFrame, textCol: String,
                                  tsCol: String, bucketMillis: Long, k: Int,
                                  watermarkDelay: String = "0 milliseconds")
       : Dataset[SealedBucketMg] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
+    import docs.sparkSession.implicits._
     require(k >= 1, s"summary size must be positive: $k")
-    docs
-      .withColumn("eventTime", timestamp_millis(col(tsCol).cast("long")))
-      .withWatermark("eventTime", watermarkDelay)
-      .select(explode(graft.text.TextOps.tokens(col(textCol))).as("token"),
-        col(tsCol).cast("long").as("tsMillis"), col("eventTime"))
-      .as[TokenFreqEvent]
-      .groupByKey(e => Math.floorDiv(e.tsMillis, bucketMillis))
-      .flatMapGroupsWithState[BucketMgState, SealedBucketMg](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (bucket: Long, rows: Iterator[TokenFreqEvent],
-         state: GroupState[BucketMgState]) =>
-          val wm = state.getCurrentWatermarkMs()
-          val sealAt = (bucket + 1L) * bucketMillis
-          val summary = rows.filter(_.tsMillis >= wm)
-            .foldLeft(state.getOption.map(_.summary).getOrElse(Map.empty)) {
-              (m, r) => graft.udafs.FreqItems.trim(
-                m.updated(r.token, m.getOrElse(r.token, 0L) + 1L), k)
-            }
-          if (wm >= sealAt) {
-            state.remove()
-            if (summary.isEmpty) Iterator.empty
-            else Iterator.single(SealedBucketMg(bucket, summary))
-          } else if (summary.isEmpty) {
-            state.remove()
-            Iterator.empty
-          } else {
-            state.update(BucketMgState(summary))
-            state.setTimeoutTimestamp(math.max(sealAt, wm + 1))
-            Iterator.empty
-          }
-      }
+    sealedBuckets[TokenFreqEvent, Long, BucketMgState, Map[String, Long], SealedBucketMg](
+      tokenEvents(docs, explode(graft.text.TextOps.tokens(col(textCol))),
+        tsCol, watermarkDelay),
+      _.tsMillis, e => Math.floorDiv(e.tsMillis, bucketMillis),
+      b => (b + 1L) * bucketMillis)(
+      load = _.fold(Map.empty[String, Long])(_.summary),
+      add = (m, r) => graft.udafs.FreqItems.trim(
+        m.updated(r.token, m.getOrElse(r.token, 0L) + 1L), k),
+      isEmpty = _.isEmpty,
+      save = BucketMgState(_),
+      emit = (b, m) => Iterator.single(SealedBucketMg(b, m)))
   }
 
   /** One in-flight per-bucket AGMS counter grid + admitted-row count. */
@@ -778,54 +720,33 @@ object StreamingViews {
     * (spec-pinned, the CMS twin's exactness claim): the day's
     * join-cardinality planning questions ("should this broadcast, is it
     * skew-exploded") answer from kilobytes of streamed artifacts with
-    * no batch re-scan. Late rows below the watermark drop (append mode
-    * cannot retract). State per in-flight bucket is the fixed
-    * depth×width grid at any row volume. */
+    * no batch re-scan. Seals per the [[StreamingViews]] seal contract;
+    * NULL keys are not admitted. State per in-flight bucket is the
+    * fixed depth×width grid at any row volume. */
   def streamingKeyAgms(rows: DataFrame, keyCol: String, tsCol: String,
                        bucketMillis: Long, depth: Int, width: Int, seed: Int,
                        watermarkDelay: String = "0 milliseconds")
       : Dataset[SealedBucketAgms] = {
-    val spark = rows.sparkSession
-    import spark.implicits._
+    import rows.sparkSession.implicits._
     import graft.udafs.JoinSize
-    rows
-      .withColumn("eventTime", timestamp_millis(col(tsCol).cast("long")))
-      .withWatermark("eventTime", watermarkDelay)
-      .select(col(keyCol).cast("string").as("token"),
-        col(tsCol).cast("long").as("tsMillis"), col("eventTime"))
-      .as[TokenFreqEvent]
-      .groupByKey(e => Math.floorDiv(e.tsMillis, bucketMillis))
-      .flatMapGroupsWithState[BucketAgmsState, SealedBucketAgms](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (bucket: Long, rs: Iterator[TokenFreqEvent],
-         state: GroupState[BucketAgmsState]) =>
-          val wm = state.getCurrentWatermarkMs()
-          val sealAt = (bucket + 1L) * bucketMillis
-          val (counters, n0) = state.getOption
-            .map(s => (JoinSize.deserialize(s.sketch)._4, s.n))
-            .getOrElse((new Array[Long](depth * width), 0L))
-          var n = n0
-          rs.filter(_.tsMillis >= wm).foreach { r =>
-            if (r.token != null) {
-              JoinSize.addInto(counters, r.token, 1L, depth, width, seed)
-              n += 1L
-            }
-          }
-          def bytes(): Array[Byte] =
-            JoinSize.serialize(depth, width, seed, counters)
-          if (wm >= sealAt) {
-            state.remove()
-            if (n == 0L) Iterator.empty
-            else Iterator.single(SealedBucketAgms(bucket, bytes(), n))
-          } else if (n == 0L) {
-            state.remove()
-            Iterator.empty
-          } else {
-            state.update(BucketAgmsState(bytes(), n))
-            state.setTimeoutTimestamp(math.max(sealAt, wm + 1))
-            Iterator.empty
-          }
-      }
+    sealedBuckets[TokenFreqEvent, Long, BucketAgmsState, (Array[Long], Long), SealedBucketAgms](
+      tokenEvents(rows, col(keyCol).cast("string"), tsCol, watermarkDelay),
+      _.tsMillis, e => Math.floorDiv(e.tsMillis, bucketMillis),
+      b => (b + 1L) * bucketMillis)(
+      load = _.fold((new Array[Long](depth * width), 0L))(s =>
+        (JoinSize.deserialize(s.sketch)._4, s.n)),
+      add = { case (acc @ (counters, n), r) =>
+        if (r.token == null) acc
+        else {
+          JoinSize.addInto(counters, r.token, 1L, depth, width, seed)
+          (counters, n + 1L)
+        }
+      },
+      isEmpty = _._2 == 0L,
+      save = { case (counters, n) =>
+        BucketAgmsState(JoinSize.serialize(depth, width, seed, counters), n) },
+      emit = { case (b, (counters, n)) => Iterator.single(SealedBucketAgms(
+        b, JoinSize.serialize(depth, width, seed, counters), n)) })
   }
 
   /** Internal fan row of [[streamingCentroidSums]]. */
@@ -851,60 +772,43 @@ object StreamingViews {
     * outlier screen consume them unchanged, so the drift alarm runs
     * live off the stream with state = one long per dimension per
     * in-flight bucket. Ragged lengths extend the accumulator
-    * (the batch zero-pad convention); late rows below the watermark
-    * drop. */
+    * (the batch zero-pad convention). Seals per the [[StreamingViews]]
+    * seal contract. */
   def streamingCentroidSums(vecs: DataFrame, vecCol: String, tsCol: String,
                             bucketMillis: Long,
                             watermarkDelay: String = "0 milliseconds")
       : Dataset[SealedBucketVec] = {
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    vecs
-      .where(col(vecCol).isNotNull)
-      .withColumn("eventTime", timestamp_millis(col(tsCol).cast("long")))
-      .withWatermark("eventTime", watermarkDelay)
-      .select(col(vecCol).as("embedding"),
-        col(tsCol).cast("long").as("tsMillis"), col("eventTime"))
-      .as[VecEvent]
-      .groupByKey(e => Math.floorDiv(e.tsMillis, bucketMillis))
-      .flatMapGroupsWithState[BucketVecState, SealedBucketVec](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (bucket: Long, rows: Iterator[VecEvent],
-         state: GroupState[BucketVecState]) =>
-          val wm = state.getCurrentWatermarkMs()
-          val sealAt = (bucket + 1L) * bucketMillis
-          var st = state.getOption.getOrElse(BucketVecState(Vector.empty, 0L))
-          rows.filter(_.tsMillis >= wm).foreach { r =>
-            if (r.embedding != null) {
-              // BigDecimal HALF_UP matches Spark's `round` exactly —
-              // math.round floors half-values toward +∞ on negatives
-              val micro = r.embedding.map(v =>
-                BigDecimal(v.toDouble * 1e6)
-                  .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong)
-              val base =
-                if (st.sums.length >= micro.length) st.sums
-                else st.sums ++ Vector.fill(micro.length - st.sums.length)(0L)
-              val sums = base.zipWithIndex.map { case (s, i) =>
-                if (i < micro.length) s + micro(i) else s
-              }
-              st = BucketVecState(sums, st.n + 1L)
-            }
+    import vecs.sparkSession.implicits._
+    sealedBuckets[VecEvent, Long, BucketVecState, BucketVecState, SealedBucketVec](
+      eventTimed(vecs.where(col(vecCol).isNotNull), col(tsCol).cast("long"),
+        watermarkDelay)
+        .select(col(vecCol).as("embedding"),
+          col(tsCol).cast("long").as("tsMillis"), col("eventTime"))
+        .as[VecEvent],
+      _.tsMillis, e => Math.floorDiv(e.tsMillis, bucketMillis),
+      b => (b + 1L) * bucketMillis)(
+      load = _.getOrElse(BucketVecState(Vector.empty, 0L)),
+      add = (st, r) =>
+        if (r.embedding == null) st
+        else {
+          // BigDecimal HALF_UP matches Spark's `round` exactly —
+          // math.round floors half-values toward +∞ on negatives
+          val micro = r.embedding.map(v =>
+            BigDecimal(v.toDouble * 1e6)
+              .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong)
+          val base =
+            if (st.sums.length >= micro.length) st.sums
+            else st.sums ++ Vector.fill(micro.length - st.sums.length)(0L)
+          val sums = base.zipWithIndex.map { case (s, i) =>
+            if (i < micro.length) s + micro(i) else s
           }
-          if (wm >= sealAt) {
-            state.remove()
-            if (st.n == 0L) Iterator.empty
-            else st.sums.iterator.zipWithIndex.map { case (s, i) =>
-              SealedBucketVec(bucket, i, s, st.n)
-            }
-          } else if (st.n == 0L) {
-            state.remove()
-            Iterator.empty
-          } else {
-            state.update(st)
-            state.setTimeoutTimestamp(math.max(sealAt, wm + 1))
-            Iterator.empty
-          }
-      }
+          BucketVecState(sums, st.n + 1L)
+        },
+      isEmpty = _.n == 0L,
+      save = identity,
+      emit = (b, st) => st.sums.iterator.zipWithIndex.map { case (s, i) =>
+        SealedBucketVec(b, i, s, st.n)
+      })
   }
 
   /** Input row of [[streamingScd2]]. */
@@ -921,58 +825,43 @@ object StreamingViews {
   /** Streaming twin of [[graft.ops.Relational.scd2]]: closed validity
     * intervals sealed live from a change stream. Like
     * [[streamingEwma]], sealing is STRICTLY ORDERED — interval bounds
-    * depend on each key's change order, so a change at `ts` processes
-    * only once the watermark passes it (any still-missing earlier
-    * change would be late-and-dropped by then). Consecutive unchanged
-    * attrs collapse exactly like the batch operator; each key's current
-    * open interval lives in state (O(1) + the in-horizon pending
-    * changes) and is never emitted — the batch operator over the
-    * compacted log owns the point-in-time read including open rows.
-    * Duplicate (key, ts) changes fail the query loudly (the batch
-    * guard's discipline — silent last-write-wins would corrupt
-    * bounds). */
+    * depend on each key's change order, so each change is its own
+    * 1 ms bucket and processes only once the watermark passes it (any
+    * still-missing earlier change would be late-and-dropped by then).
+    * Consecutive unchanged attrs collapse exactly like the batch
+    * operator; each key's current open interval lives in state (O(1) +
+    * the in-horizon pending changes) and is never emitted — the batch
+    * operator over the compacted log owns the point-in-time read
+    * including open rows. Duplicate (key, ts) changes fail the query
+    * loudly (the batch guard's discipline — silent last-write-wins
+    * would corrupt bounds). */
   def streamingScd2(changes: Dataset[ChangeEvent],
                     watermarkDelay: String = "0 milliseconds")
       : Dataset[Scd2Interval] = {
     import changes.sparkSession.implicits._
-    changes
-      .withColumn("eventTime", timestamp_millis(col("tsMillis")))
-      .withWatermark("eventTime", watermarkDelay)
-      .as[ChangeEvent]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[Scd2State, Scd2Interval](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: Long, rows: Iterator[ChangeEvent], state: GroupState[Scd2State]) =>
-          val wm = state.getCurrentWatermarkMs()
-          val st = state.getOption.getOrElse(Scd2State(None, None, Map.empty))
-          val pending = rows.filter(_.tsMillis >= wm).foldLeft(st.pending) {
-            (m, r) =>
-              if (m.contains(r.tsMillis))
-                throw new IllegalStateException(
-                  s"duplicate change at (key=$key, ts=${r.tsMillis}) — " +
-                    "interval bounds would be ambiguous; dedupe upstream")
-              m.updated(r.tsMillis, r.attr)
-          }
-          // strictly-below-watermark changes are final: no earlier row
-          // can still arrive between them (it would be late and dropped)
-          val (ripe, open) = pending.partition { case (ts, _) => ts < wm }
-          var from = st.openFrom
-          var attr = st.openAttr
-          val out = Vector.newBuilder[Scd2Interval]
-          ripe.keys.toSeq.sorted.foreach { ts =>
-            val a = pending(ts)
-            (from, attr) match {
-              case (Some(_), Some(pa)) if pa == a => () // unchanged: collapse
-              case (Some(f), Some(pa)) =>
-                out += Scd2Interval(key, pa, f, ts); from = Some(ts); attr = Some(a)
-              case _ => from = Some(ts); attr = Some(a)
-            }
-          }
-          state.update(Scd2State(from, attr, open))
-          if (open.nonEmpty)
-            state.setTimeoutTimestamp(math.max(open.keys.min + 1, wm + 1))
-          out.result().iterator
+    orderedBuckets[ChangeEvent, String, Scd2State, Scd2Interval](
+      eventTimed(changes, col("tsMillis"), watermarkDelay).as[ChangeEvent],
+      _.tsMillis, _.key, bucketMillis = 1L, Scd2State(None, None, Map.empty),
+      _.pending, admit = (m, ts, r) => {
+        if (m.contains(ts))
+          throw new IllegalStateException(
+            s"duplicate change at (key=${r.key}, ts=$ts) — " +
+              "interval bounds would be ambiguous; dedupe upstream")
+        m.updated(ts, r.attr)
+      }) { (key, st, ripe, open) =>
+      var from = st.openFrom
+      var attr = st.openAttr
+      val out = Vector.newBuilder[Scd2Interval]
+      ripe.foreach { case (ts, a) =>
+        (from, attr) match {
+          case (Some(_), Some(pa)) if pa == a => () // unchanged: collapse
+          case (Some(f), Some(pa)) =>
+            out += Scd2Interval(key, pa, f, ts); from = Some(ts); attr = Some(a)
+          case _ => from = Some(ts); attr = Some(a)
+        }
       }
+      (Scd2State(from, attr, open), out.result())
+    }
   }
 
   case class CdcChangeEvent(key: Long, tsMillis: Long, op: String, value: Long)
@@ -996,11 +885,11 @@ object StreamingViews {
     * total order as `cdcApply`'s `max_by struct(seq, op, payload)`
     * (ASCII op codes compare identically in both) — so unlike the
     * EWMA/SCD2 twins no ordered sealing is needed; any arrival order
-    * inside the horizon yields the same sealed row. Late rows below
-    * the watermark drop (append mode cannot retract a sealed change —
-    * the batch operator over the raw log is the corrector). State per
-    * in-flight `(key, day)` is ONE change — O(keys churning today),
-    * not O(changes). */
+    * inside the horizon yields the same sealed row. Seals per the
+    * [[StreamingViews]] seal contract (the batch operator over the raw
+    * log is the corrector for dropped late rows). State per in-flight
+    * `(key, day)` is ONE change — O(keys churning today), not
+    * O(changes). */
   def streamingDailyChangelog(changes: Dataset[CdcChangeEvent],
                               bucketMillis: Long,
                               watermarkDelay: String = "0 milliseconds")
@@ -1010,33 +899,24 @@ object StreamingViews {
     def beats(a: DayChangeState, b: DayChangeState): Boolean =
       Ordering.Tuple3[Long, String, Long].gt(
         (a.tsMillis, a.op, a.value), (b.tsMillis, b.op, b.value))
-    changes
-      .withColumn("eventTime", timestamp_millis(col("tsMillis")))
-      .withWatermark("eventTime", watermarkDelay)
-      .as[CdcChangeEvent]
-      .groupByKey(e => (e.key, Math.floorDiv(e.tsMillis, bucketMillis)))
-      .flatMapGroupsWithState[DayChangeState, SealedDayChange](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        case ((key, day), rows, state) =>
-          val wm = state.getCurrentWatermarkMs()
-          val sealAt = (day + 1L) * bucketMillis
-          var best = state.getOption.orNull
-          rows.filter(_.tsMillis >= wm).foreach { r =>
-            val cand = DayChangeState(r.tsMillis, r.op, r.value)
-            if (best == null || beats(cand, best)) best = cand
-          }
-          if (best == null) { state.remove(); Iterator.empty }
-          else if (wm >= sealAt) {
-            state.remove()
-            Iterator.single(
-              SealedDayChange(key, day, best.tsMillis, best.op, best.value))
-          } else {
-            state.update(best)
-            state.setTimeoutTimestamp(math.max(sealAt, wm + 1))
-            Iterator.empty
-          }
-      }
+    sealedBuckets[CdcChangeEvent, (Long, Long), DayChangeState,
+        Option[DayChangeState], SealedDayChange](
+      eventTimed(changes, col("tsMillis"), watermarkDelay).as[CdcChangeEvent],
+      _.tsMillis, e => (e.key, Math.floorDiv(e.tsMillis, bucketMillis)),
+      k => (k._2 + 1L) * bucketMillis)(
+      load = identity,
+      add = (best, r) => {
+        val cand = DayChangeState(r.tsMillis, r.op, r.value)
+        if (best.forall(beats(cand, _))) Some(cand) else best
+      },
+      isEmpty = _.isEmpty,
+      save = _.get,
+      emit = { case ((key, day), best) =>
+        best.map(b => SealedDayChange(key, day, b.tsMillis, b.op, b.value))
+          .iterator
+      })
   }
+
 
   /** Streaming twin of [[graft.ops.Relational.intervalJoin]]: match
     * each point event to the live intervals containing it — session

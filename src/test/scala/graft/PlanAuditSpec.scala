@@ -69,6 +69,21 @@ class PlanAuditSpec extends SparkSpec {
         Seq((1L, 0L, 5000L)).toDF("k", "start_ms", "end_ms"))
       val points = stream("points",
         Seq((1L, 100L, "v1")).toDF("k", "ts_ms", "payload"))
+      import StreamingViews._
+      val activity = stream("activity",
+        Seq(ActivityEvent(1L, 1000L)).toDF()).as[ActivityEvent]
+      val sessions = stream("sessions",
+        Seq(SessionEvent(1L, 1000L, 1.0)).toDF()).as[SessionEvent]
+      val steps = stream("steps",
+        Seq(FunnelEvent(1L, 0, 1000L)).toDF()).as[FunnelEvent]
+      val segments = stream("segments",
+        Seq(SegmentEvent("s", 1L, 1000L)).toDF()).as[SegmentEvent]
+      val measures = stream("measures",
+        Seq(MeasureEvent(1.0, 1000L)).toDF()).as[MeasureEvent]
+      val changes = stream("changes",
+        Seq(ChangeEvent(1L, 1000L, "a")).toDF()).as[ChangeEvent]
+      val cdc = stream("cdc",
+        Seq(CdcChangeEvent(1L, 1000L, "u", 1L)).toDF()).as[CdcChangeEvent]
       val history = Seq(Tuple1(1L)).toDF("k")
       val bloom = graft.dedup.Dedup.keyBloom(
         Seq("x").toDF("fp"), col("fp"), expectedItems = 1, numBits = 1 << 12)
@@ -111,6 +126,22 @@ class PlanAuditSpec extends SparkSpec {
         "streamingCentroidSums" ->
           StreamingViews.streamingCentroidSums(vecs, "vec", "ts",
             60000L).toDF(),
+        "sessionize" -> sessionize(sessions, 60000L).toDF(),
+        "streamingFunnel" -> streamingFunnel(steps, 3, 60000L).toDF(),
+        "streamingRollingActive" ->
+          streamingRollingActive(activity, 60000L, 7).toDF(),
+        "streamingRollingActiveApprox" ->
+          streamingRollingActiveApprox(activity, 60000L, 7).toDF(),
+        "streamingEwma" -> streamingEwma(activity, 60000L).toDF(),
+        "streamingCusum" -> streamingCusum(activity, 60000L, warmup = 2,
+          slack = 0L, threshold = 2L).toDF(),
+        "streamingSegmentSketches" ->
+          streamingSegmentSketches(segments, 60000L).toDF(),
+        "streamingBucketQuantileSketches" ->
+          streamingBucketQuantileSketches(measures, 60000L).toDF(),
+        "streamingScd2" -> streamingScd2(changes).toDF(),
+        "streamingDailyChangelog" ->
+          streamingDailyChangelog(cdc, 86400000L).toDF(),
         "streamingContaminationHits" ->
           graft.dedup.Dedup.streamingContaminationHits(docsT, corpusIdx,
             "text", "doc_id", "ts", 3, 0.7),

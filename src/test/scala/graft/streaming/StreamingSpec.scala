@@ -1219,6 +1219,80 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
     } finally q.stop()
   }
 
+  test("sealed-bucket operators: each bucket emits once, stragglers drop, state drains") {
+    // one table over every per-bucket sealing operator, each its own
+    // query off an in-memory source, all driven by the same data batches
+    // (a batch runs at the watermark the previous batch produced)
+    import org.apache.spark.sql.{DataFrame, Dataset}
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import StreamingViews._
+    val bm = 100L
+    def docs(ev: Dataset[ActivityEvent]) =
+      ev.select(concat(lit("t"), col("userId")).as("text"), col("tsMillis"))
+    val ops: Seq[(String, Dataset[ActivityEvent] => DataFrame)] = Seq(
+      "rollingActive" -> (streamingRollingActive(_, bm, 2).toDF()),
+      "rollingActiveApprox" -> (streamingRollingActiveApprox(_, bm, 2).toDF()),
+      "segmentSketches" -> (ev => streamingSegmentSketches(
+        ev.map(e => SegmentEvent("s", e.userId, e.tsMillis)), bm).toDF()),
+      "bucketQuantileSketches" -> (ev => streamingBucketQuantileSketches(
+        ev.map(e => MeasureEvent(e.userId.toDouble, e.tsMillis)), bm).toDF()),
+      "tokenCms" -> (ev => streamingTokenCms(docs(ev), "text", "tsMillis",
+        bm, 0.01, 0.99, 42).toDF()),
+      "tokenHeavyHitters" -> (ev => streamingTokenHeavyHitters(docs(ev),
+        "text", "tsMillis", bm, 4).toDF()),
+      "keyAgms" -> (ev => streamingKeyAgms(ev.toDF(), "userId", "tsMillis",
+        bm, 3, 16, 42).toDF()),
+      "centroidSums" -> (ev => streamingCentroidSums(
+        ev.select(array(col("userId").cast("float")).as("vec"),
+          col("tsMillis")), "vec", "tsMillis", bm).toDF()),
+      "dailyChangelog" -> (ev => streamingDailyChangelog(
+        ev.map(e => CdcChangeEvent(1L, e.tsMillis, "u", e.userId)), bm)
+        .toDF().withColumnRenamed("day", "bucket")))
+    // kept fast: one state partition per operator (the seal rule is per
+    // key, so the partition count cannot change what emits) and no
+    // no-data batches (every step below is a data batch)
+    val fast = Seq("spark.sql.shuffle.partitions" -> "1",
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+    val prev = fast.map { case (k, _) => k -> spark.conf.get(k) }
+    val runs = scala.collection.mutable.ArrayBuffer.empty[
+      (String, MemoryStream[ActivityEvent],
+        org.apache.spark.sql.streaming.StreamingQuery)]
+    fast.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      ops.foreach { case (name, op) =>
+        val in = MemoryStream[ActivityEvent](spark)
+        runs += ((name, in, op(in.toDS()).select(col("bucket"))
+          .writeStream.outputMode("append").format("memory")
+          .queryName(s"seal_$name").start()))
+      }
+      // every query takes the batch, then all are awaited: they run
+      // side by side
+      def step(rows: (Long, Long)*): Unit = {
+        val batch = rows.map { case (u, ts) => ActivityEvent(u, ts) }
+        runs.foreach(_._2.addData(batch))
+        runs.foreach(_._3.processAllAvailable())
+      }
+      step(1L -> 10L, 2L -> 50L, 3L -> 250L) // buckets 0, 2; watermark → 250
+      step(3L -> 260L, 5L -> 1000L)  // runs at 250: bucket 0 seals; → 1000
+      // stragglers for the sealed bucket 0 and before the epoch (the
+      // watermark never falls below 0, so a pre-epoch row is always late)
+      step(4L -> 60L, 7L -> -50L, 6L -> 1001L) // runs at 1000: bucket 2 seals
+      // the rolling actives fan each event to its bucket and the next
+      val fan = Set("rollingActive", "rollingActiveApprox")
+      runs.foreach { case (name, _, q) =>
+        val got = spark.table(s"seal_$name").as[Long].collect().sorted.toSeq
+        assert(got === (if (fan(name)) Seq(0L, 1L, 2L, 3L) else Seq(0L, 2L)),
+          name)
+        // state holds only the in-flight bucket 10 (and 11 for the fans)
+        assert(q.lastProgress.stateOperators.map(_.numRowsTotal).toSeq ===
+          Seq(if (fan(name)) 2L else 1L), name)
+      }
+    } finally {
+      prev.foreach { case (k, v) => spark.conf.set(k, v) }
+      runs.foreach(_._3.stop())
+    }
+  }
+
   test("chatStats is a stateless projection: stream == batch verdicts") {
     val dir = Files.createTempDirectory("graft_streamchat").toString
     val data = Seq(
