@@ -6,6 +6,7 @@ import graft.Tables
 import graft.json.ChatOps
 import graft.ops.Agreement
 import graft.text.EvalOps
+import OracleSql.{nullInjected, shingleSet, toks}
 
 /** Query surface for the evaluation/annotation-QA suite: generation
   * scoring (ROUGE-N), the verbatim-memorization audit, inter-annotator
@@ -699,8 +700,10 @@ object EvalQueries {
           .otherwise(greatest(col("sa"), col("sb"))).as("l"))
   }
 
-  private val duelsSql =
-    """SELECT CASE WHEN length(a.text) > length(b.text) THEN a.source
+  /** Each adjacent cross-source doc pair as a duel: the longer text's
+    * source wins `w`, ties to the smaller source name; loser `l`. */
+  private val duelCols =
+    """CASE WHEN length(a.text) > length(b.text) THEN a.source
               WHEN length(a.text) < length(b.text) THEN b.source
               ELSE least(a.source, b.source) END AS w,
          CASE WHEN length(a.text) > length(b.text) THEN b.source
@@ -709,11 +712,7 @@ object EvalQueries {
        FROM documents a JOIN documents b
          ON b.doc_id = a.doc_id + 1 AND a.source <> b.source"""
 
-  private val candSql =
-    """CASE WHEN a.doc_id % 13 = 0 THEN NULL
-         WHEN a.doc_id % 13 = 1 THEN ''
-         WHEN a.doc_id % 13 = 2 THEN '   '
-         ELSE a.text END"""
+  private val duelsSql = s"SELECT $duelCols"
 
   private val chatJsonSql =
     """CASE WHEN doc_id % 11 = 0 THEN 'oops not json'
@@ -739,6 +738,49 @@ object EvalQueries {
     s"CASE WHEN len($c) >= $n THEN list_transform(range(1, len($c) - ${n - 2}), " +
       s"i -> array_to_string($c[i:i+${n - 1}], ' ')) ELSE []::VARCHAR[] END"
 
+  /** The multi-reference fixture (q263/q269/q271): candidate `cand` (the
+    * 60-token doc with the %13 null/empty/blank injection) against three
+    * references — the next doc, a doc-dependent prefix of it, the doc
+    * after — as token lists `ctk.ct` and `rtk(doc_id, ridx, rt)`. */
+  private lazy val multiRefStageCtes =
+    s"""d2 AS (
+          SELECT doc_id, array_to_string(
+            (list_filter($toks,
+               x -> len(x) > 0))[1:60], ' ') AS text
+          FROM documents),
+        p AS (
+          SELECT a.doc_id,
+            ${nullInjected("a.")} AS cand,
+            b.text AS r1,
+            array_to_string((str_split(b.text, ' '))[1:(5 + a.doc_id % 9)], ' ') AS r2,
+            c.text AS r3
+          FROM d2 a JOIN d2 b ON b.doc_id = a.doc_id + 1
+                    JOIN d2 c ON c.doc_id = a.doc_id + 2),
+        ctk AS (
+          SELECT doc_id,
+            list_filter(regexp_split_to_array(trim(coalesce(cand, '')), '\\s+'), x -> len(x) > 0) AS ct
+          FROM p),
+        rl AS (
+          SELECT doc_id, 1 AS ridx, r1 AS ref FROM p
+          UNION ALL SELECT doc_id, 2, r2 FROM p
+          UNION ALL SELECT doc_id, 3, r3 FROM p),
+        rtk AS (
+          SELECT doc_id, ridx,
+            list_filter(regexp_split_to_array(trim(coalesce(ref, '')), '\\s+'), x -> len(x) > 0) AS rt
+          FROM rl)"""
+
+  /** The chrF fixture (q262/q266): candidate (%13-injected) and next-doc
+    * reference as alphanumeric 120-char strings `p(cand, ref)`. */
+  private lazy val charPairCtes =
+    s"""d2 AS (
+          SELECT doc_id, substr(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'), 1, 120) AS text
+          FROM documents),
+        p AS (
+          SELECT a.doc_id,
+            ${nullInjected("a.")} AS cand,
+            b.text AS ref
+          FROM d2 a JOIN d2 b ON b.doc_id = a.doc_id + 1)"""
+
   /** q261 oracle, generated per order: the q240 unnest+GROUP BY+least
     * overlap mechanism (deliberately different from the Spark fold). */
   private lazy val bleuComponentsSql: String = {
@@ -761,15 +803,12 @@ object EvalQueries {
       .mkString(" ")
     s"""WITH d2 AS (
             SELECT doc_id, array_to_string(
-              (list_filter(regexp_split_to_array(trim(text), '\\s+'),
+              (list_filter($toks,
                  x -> len(x) > 0))[1:60], ' ') AS text
             FROM documents),
           p AS (
             SELECT a.doc_id,
-              CASE WHEN a.doc_id % 13 = 0 THEN NULL
-                   WHEN a.doc_id % 13 = 1 THEN ''
-                   WHEN a.doc_id % 13 = 2 THEN '   '
-                   ELSE a.text END AS cand,
+              ${nullInjected("a.")} AS cand,
               b.text AS ref
             FROM d2 a JOIN d2 b ON b.doc_id = a.doc_id + 1),
           tk AS (
@@ -822,17 +861,7 @@ object EvalQueries {
       Seq(s"chrf${n}_o", s"chrf${n}_c", s"chrf${n}_r")).mkString(", ")
     val passF = orders.map(n => s"chrf${n}_f_micro").mkString(", ")
     val fSum = orders.map(n => s"chrf${n}_f_micro").mkString(" + ")
-    s"""WITH d2 AS (
-            SELECT doc_id, substr(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'), 1, 120) AS text
-            FROM documents),
-          p AS (
-            SELECT a.doc_id,
-              CASE WHEN a.doc_id % 13 = 0 THEN NULL
-                   WHEN a.doc_id % 13 = 1 THEN ''
-                   WHEN a.doc_id % 13 = 2 THEN '   '
-                   ELSE a.text END AS cand,
-              b.text AS ref
-            FROM d2 a JOIN d2 b ON b.doc_id = a.doc_id + 1),
+    s"""WITH $charPairCtes,
           ch AS (
             SELECT doc_id,
               regexp_replace(coalesce(cand, ''), '\\s+', '', 'g') AS cc,
@@ -882,34 +911,7 @@ object EvalQueries {
       s"CAST(len(cg$n) AS BIGINT) AS p${n}_den")).mkString(",\n            ")
     val joins = orders.map(n => s"LEFT JOIN o$n ON cg.doc_id = o$n.doc_id")
       .mkString(" ")
-    s"""WITH d2 AS (
-            SELECT doc_id, array_to_string(
-              (list_filter(regexp_split_to_array(trim(text), '\\s+'),
-                 x -> len(x) > 0))[1:60], ' ') AS text
-            FROM documents),
-          p AS (
-            SELECT a.doc_id,
-              CASE WHEN a.doc_id % 13 = 0 THEN NULL
-                   WHEN a.doc_id % 13 = 1 THEN ''
-                   WHEN a.doc_id % 13 = 2 THEN '   '
-                   ELSE a.text END AS cand,
-              b.text AS r1,
-              array_to_string((str_split(b.text, ' '))[1:(5 + a.doc_id % 9)], ' ') AS r2,
-              c.text AS r3
-            FROM d2 a JOIN d2 b ON b.doc_id = a.doc_id + 1
-                      JOIN d2 c ON c.doc_id = a.doc_id + 2),
-          ctk AS (
-            SELECT doc_id,
-              list_filter(regexp_split_to_array(trim(coalesce(cand, '')), '\\s+'), x -> len(x) > 0) AS ct
-            FROM p),
-          rl AS (
-            SELECT doc_id, 1 AS ridx, r1 AS ref FROM p
-            UNION ALL SELECT doc_id, 2, r2 FROM p
-            UNION ALL SELECT doc_id, 3, r3 FROM p),
-          rtk AS (
-            SELECT doc_id, ridx,
-              list_filter(regexp_split_to_array(trim(coalesce(ref, '')), '\\s+'), x -> len(x) > 0) AS rt
-            FROM rl),
+    s"""WITH $multiRefStageCtes,
           closest AS (
             SELECT doc_id, rlen AS ref_len FROM (
               SELECT r.doc_id, CAST(len(r.rt) AS BIGINT) AS rlen,
@@ -961,17 +963,7 @@ object EvalQueries {
       s"${p}${n}_o, ${p}${n}_c, ${p}${n}_r" }.mkString(", ")
     val passF = korders.map { case (p, n) => s"${p}${n}_f_micro" }.mkString(", ")
     val fSum = korders.map { case (p, n) => s"${p}${n}_f_micro" }.mkString(" + ")
-    s"""WITH d2 AS (
-            SELECT doc_id, substr(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g'), 1, 120) AS text
-            FROM documents),
-          p AS (
-            SELECT a.doc_id,
-              CASE WHEN a.doc_id % 13 = 0 THEN NULL
-                   WHEN a.doc_id % 13 = 1 THEN ''
-                   WHEN a.doc_id % 13 = 2 THEN '   '
-                   ELSE a.text END AS cand,
-              b.text AS ref
-            FROM d2 a JOIN d2 b ON b.doc_id = a.doc_id + 1),
+    s"""WITH $charPairCtes,
           ch AS (
             SELECT doc_id,
               regexp_replace(coalesce(cand, ''), '\\s+', '', 'g') AS cc,
@@ -1001,34 +993,7 @@ object EvalQueries {
     * the multi-reference ROUGE oracles — q269 and q271 compose their
     * final SELECTs from ONE definition instead of splicing text. */
   private lazy val rougeNMultiCtes: String =
-    s"""WITH d2 AS (
-            SELECT doc_id, array_to_string(
-              (list_filter(regexp_split_to_array(trim(text), '\\s+'),
-                 x -> len(x) > 0))[1:60], ' ') AS text
-            FROM documents),
-          p AS (
-            SELECT a.doc_id,
-              CASE WHEN a.doc_id % 13 = 0 THEN NULL
-                   WHEN a.doc_id % 13 = 1 THEN ''
-                   WHEN a.doc_id % 13 = 2 THEN '   '
-                   ELSE a.text END AS cand,
-              b.text AS r1,
-              array_to_string((str_split(b.text, ' '))[1:(5 + a.doc_id % 9)], ' ') AS r2,
-              c.text AS r3
-            FROM d2 a JOIN d2 b ON b.doc_id = a.doc_id + 1
-                      JOIN d2 c ON c.doc_id = a.doc_id + 2),
-          ctk AS (
-            SELECT doc_id,
-              list_filter(regexp_split_to_array(trim(coalesce(cand, '')), '\\s+'), x -> len(x) > 0) AS ct
-            FROM p),
-          rl AS (
-            SELECT doc_id, 1 AS ridx, r1 AS ref FROM p
-            UNION ALL SELECT doc_id, 2, r2 FROM p
-            UNION ALL SELECT doc_id, 3, r3 FROM p),
-          rtk AS (
-            SELECT doc_id, ridx,
-              list_filter(regexp_split_to_array(trim(coalesce(ref, '')), '\\s+'), x -> len(x) > 0) AS rt
-            FROM rl),
+    s"""WITH $multiRefStageCtes,
           cg AS (SELECT doc_id, ${gramSql("ct", 2)} AS g FROM ctk),
           rg AS (SELECT doc_id, ridx, ${gramSql("rt", 2)} AS g FROM rtk),
           rcnt AS (SELECT doc_id, ridx, g2, CAST(count(*) AS BIGINT) AS c
@@ -1115,6 +1080,94 @@ object EvalQueries {
           FROM withf"""
   }
 
+  /** The synthetic calibration fixture (q251/q265): per doc a confidence
+    * `conf` in micro-units and correctness `ok`, bucketed by tenths
+    * (`b.conf_bucket`). */
+  private val confBucketCtes =
+    """r AS (
+          SELECT (length(text) * 7919 + doc_id * 131) % 1000001 AS conf,
+            ((doc_id * 37 + length(text) * 13) % 1000000)
+              < ((length(text) * 7919 + doc_id * 131) % 1000001) AS ok
+          FROM documents),
+        b AS (SELECT least(conf, 999999) // 100000 AS conf_bucket, ok, conf FROM r)"""
+
+  /** The WER/ROUGE-L synthetic edit classes (q256/q267/q275): each doc's
+    * first 120 tokens as the reference `rt`, length `r`, edit class `cl`
+    * (-1 for the %13 null/empty/blank rows, else doc_id % 4) and edit
+    * size `k`. */
+  private val editClassCtes =
+    s"""tk AS (
+          SELECT doc_id,
+            (list_filter($toks, x -> len(x) > 0))[1:120] AS rt
+          FROM documents),
+        cls AS (
+          SELECT doc_id, CAST(len(rt) AS BIGINT) AS r,
+            CASE WHEN doc_id % 13 IN (0, 1, 2) THEN -1 ELSE doc_id % 4 END AS cl,
+            CAST(least(3 + doc_id % 7, len(rt)) AS BIGINT) AS k
+          FROM tk)"""
+
+  /** The multi-reference length table (q270/q272): candidate length `kc`
+    * (0 for the %13 rows) against the three reference lengths `kj`, one
+    * row per (doc, reference) in CTE `refs`. */
+  private val multiRefCtes =
+    s"""tk AS (
+          SELECT doc_id,
+            CAST(len((list_filter($toks, x -> len(x) > 0))[1:120]) AS BIGINT) AS r
+          FROM documents),
+        cls AS (
+          SELECT doc_id, r,
+            CASE WHEN doc_id % 13 IN (0, 1, 2) THEN 0
+                 ELSE least(5 + doc_id % 11, r) END AS kc,
+            least(3 + doc_id % 7, r) AS k2,
+            least(9 + doc_id % 5, r) AS k3
+          FROM tk),
+        refs AS (
+          SELECT doc_id, kc, r AS kj FROM cls
+          UNION ALL SELECT doc_id, kc, k2 FROM cls
+          UNION ALL SELECT doc_id, kc, k3 FROM cls)"""
+
+  /** One row per (doc, rater r) with 1 + doc_id % 4 raters per doc — the
+    * Krippendorff oracles' annotation fan-out. */
+  private val raterFanout =
+    """(SELECT doc_id, text, unnest(range(0, 1 + doc_id % 4)) AS r
+        FROM documents)"""
+
+  /** Krippendorff's α over the integer ratings v = (len + r·(id % 5)) % 7
+    * (q264/q268): coincidence cells, pairable items, then `weights` — CTE
+    * `w(vc, vk, na, nb, e)` with the metric distance e per value pair —
+    * and the integer-scaled observed/expected disagreement. */
+  private def krippendorffSql(weights: String): String =
+    s"""WITH ann AS (
+          SELECT doc_id AS i, r,
+            CAST((length(text) + r * (doc_id % 5)) % 7 AS BIGINT) AS v
+          FROM $raterFanout),
+        cells AS (SELECT i, v, CAST(count(*) AS BIGINT) AS c FROM ann GROUP BY i, v),
+        items AS (SELECT i, CAST(sum(c) AS BIGINT) AS n_i FROM cells GROUP BY i),
+        kept AS (SELECT * FROM items WHERE n_i >= 2),
+        cellsk AS (SELECT cells.i, cells.v, cells.c, kept.n_i
+                   FROM cells JOIN kept USING (i)),
+        mg AS (SELECT v, CAST(sum(c) AS BIGINT) AS n_g FROM cellsk GROUP BY v),
+        tot AS (SELECT CAST(count(*) AS BIGINT) AS n_items,
+                  CAST(sum(n_i) AS BIGINT) AS n
+                FROM kept),
+        $weights,
+        w2 AS (SELECT vc, vk, na, nb, e * e AS w FROM w),
+        ip AS (SELECT a.i, a.n_i, a.v AS va, b.v AS vb, a.c AS ca, b.c AS cb
+               FROM cellsk a JOIN cellsk b ON a.i = b.i AND a.v < b.v),
+        ai AS (SELECT ip.i, max(ip.n_i) AS n_i,
+                 sum(2 * CAST(ip.ca AS HUGEINT) * ip.cb * w2.w) AS a2
+               FROM ip JOIN w2 ON ip.va = w2.vc AND ip.vb = w2.vk
+               GROUP BY ip.i),
+        dorow AS (SELECT CAST(coalesce(sum(a2 // (n_i - 1)), 0) AS BIGINT) AS do_scaled FROM ai),
+        derow AS (SELECT coalesce(sum(2 * CAST(na AS HUGEINT) * nb * w), 0) AS de_num FROM w2),
+        vt AS (SELECT CAST(count(DISTINCT v) AS BIGINT) AS n_values FROM ann JOIN kept USING (i))
+        SELECT n_items, n AS n_ratings, n_values, do_scaled,
+          CAST(de_num // 1000000 AS BIGINT) AS de_scaled,
+          CASE WHEN de_num > 0
+            THEN CAST(1000000 - (CAST(1000000 AS HUGEINT) * (n - 1) * do_scaled) // de_num AS BIGINT)
+            END AS alpha_micro
+        FROM tot, dorow, derow, vt"""
+
   val oracles: Map[String, String] = Map(
     "q273_corpus_bleu" -> corpusBleuSql,
     "q274_corpus_chrf" -> corpusChrfSql,
@@ -1123,21 +1176,7 @@ object EvalQueries {
     "q271_rouge_jackknife" -> rougeJackknifeSql,
 
     "q270_rouge_l_multi" ->
-      """WITH tk AS (
-            SELECT doc_id,
-              CAST(len((list_filter(regexp_split_to_array(trim(text), '\s+'), x -> len(x) > 0))[1:120]) AS BIGINT) AS r
-            FROM documents),
-          cls AS (
-            SELECT doc_id, r,
-              CASE WHEN doc_id % 13 IN (0, 1, 2) THEN 0
-                   ELSE least(5 + doc_id % 11, r) END AS kc,
-              least(3 + doc_id % 7, r) AS k2,
-              least(9 + doc_id % 5, r) AS k3
-            FROM tk),
-          refs AS (
-            SELECT doc_id, kc, r AS kj FROM cls
-            UNION ALL SELECT doc_id, kc, k2 FROM cls
-            UNION ALL SELECT doc_id, kc, k3 FROM cls),
+      s"""WITH $multiRefCtes,
           f AS (
             SELECT doc_id, kc,
               CASE WHEN kc + kj > 0
@@ -1170,15 +1209,7 @@ object EvalQueries {
           FROM tk ORDER BY doc_id""",
 
     "q275_corpus_wer" ->
-      """WITH tk AS (
-            SELECT doc_id,
-              (list_filter(regexp_split_to_array(trim(text), '\s+'), x -> len(x) > 0))[1:120] AS rt
-            FROM documents),
-          cls AS (
-            SELECT doc_id, CAST(len(rt) AS BIGINT) AS r,
-              CASE WHEN doc_id % 13 IN (0, 1, 2) THEN -1 ELSE doc_id % 4 END AS cl,
-              CAST(least(3 + doc_id % 7, len(rt)) AS BIGINT) AS k
-            FROM tk),
+      s"""WITH $editClassCtes,
           ct AS (
             SELECT doc_id, r,
               CASE cl WHEN -1 THEN r WHEN 0 THEN 0 WHEN 1 THEN r - k WHEN 2 THEN r // 3 ELSE greatest(r, 3) END AS d
@@ -1191,21 +1222,7 @@ object EvalQueries {
           FROM ct""",
 
     "q272_wer_multi" ->
-      """WITH tk AS (
-            SELECT doc_id,
-              CAST(len((list_filter(regexp_split_to_array(trim(text), '\s+'), x -> len(x) > 0))[1:120]) AS BIGINT) AS r
-            FROM documents),
-          cls AS (
-            SELECT doc_id, r,
-              CASE WHEN doc_id % 13 IN (0, 1, 2) THEN 0
-                   ELSE least(5 + doc_id % 11, r) END AS kc,
-              least(3 + doc_id % 7, r) AS k2,
-              least(9 + doc_id % 5, r) AS k3
-            FROM tk),
-          refs AS (
-            SELECT doc_id, kc, r AS kj FROM cls
-            UNION ALL SELECT doc_id, kc, k2 FROM cls
-            UNION ALL SELECT doc_id, kc, k3 FROM cls),
+      s"""WITH $multiRefCtes,
           ranked AS (
             SELECT doc_id, kc, abs(kc - kj) AS d, kj,
               row_number() OVER (PARTITION BY doc_id ORDER BY abs(kc - kj), kj) AS rn
@@ -1218,15 +1235,7 @@ object EvalQueries {
           FROM ranked WHERE rn = 1 ORDER BY doc_id""",
 
     "q267_wer" ->
-      """WITH tk AS (
-            SELECT doc_id,
-              (list_filter(regexp_split_to_array(trim(text), '\s+'), x -> len(x) > 0))[1:120] AS rt
-            FROM documents),
-          cls AS (
-            SELECT doc_id, CAST(len(rt) AS BIGINT) AS r,
-              CASE WHEN doc_id % 13 IN (0, 1, 2) THEN -1 ELSE doc_id % 4 END AS cl,
-              CAST(least(3 + doc_id % 7, len(rt)) AS BIGINT) AS k
-            FROM tk),
+      s"""WITH $editClassCtes,
           ct AS (
             SELECT doc_id, r,
               CASE cl WHEN -1 THEN 0 WHEN 0 THEN r WHEN 1 THEN k WHEN 2 THEN r ELSE 3 END AS c,
@@ -1236,84 +1245,21 @@ object EvalQueries {
             CASE WHEN r > 0 THEN (1000000 * d) // r END AS wer_micro
           FROM ct ORDER BY doc_id""",
 
-    "q264_krippendorff_ordinal" ->
-      """WITH ann AS (
-            SELECT doc_id AS i, r,
-              CAST((length(text) + r * (doc_id % 5)) % 7 AS BIGINT) AS v
-            FROM (SELECT doc_id, text, unnest(range(0, 1 + doc_id % 4)) AS r
-                  FROM documents)),
-          cells AS (SELECT i, v, CAST(count(*) AS BIGINT) AS c FROM ann GROUP BY i, v),
-          items AS (SELECT i, CAST(sum(c) AS BIGINT) AS n_i FROM cells GROUP BY i),
-          kept AS (SELECT * FROM items WHERE n_i >= 2),
-          cellsk AS (SELECT cells.i, cells.v, cells.c, kept.n_i
-                     FROM cells JOIN kept USING (i)),
-          mg AS (SELECT v, CAST(sum(c) AS BIGINT) AS n_g FROM cellsk GROUP BY v),
-          tot AS (SELECT CAST(count(*) AS BIGINT) AS n_items,
-                    CAST(sum(n_i) AS BIGINT) AS n
-                  FROM kept),
-          cum AS (SELECT v, n_g, CAST(sum(n_g) OVER (ORDER BY v) AS BIGINT) AS cs FROM mg),
+    // ordinal metric: squared cumulative-marginal distance
+    "q264_krippendorff_ordinal" -> krippendorffSql(
+      """cum AS (SELECT v, n_g, CAST(sum(n_g) OVER (ORDER BY v) AS BIGINT) AS cs FROM mg),
           w AS (SELECT a.v AS vc, b.v AS vk, a.n_g AS na, b.n_g AS nb,
                   ((1000000 * (2 * (b.cs - a.cs + a.n_g) - a.n_g - b.n_g)) // (2 * tot.n)) AS e
-                FROM cum a JOIN cum b ON a.v < b.v, tot),
-          w2 AS (SELECT vc, vk, na, nb, e * e AS w FROM w),
-          ip AS (SELECT a.i, a.n_i, a.v AS va, b.v AS vb, a.c AS ca, b.c AS cb
-                 FROM cellsk a JOIN cellsk b ON a.i = b.i AND a.v < b.v),
-          ai AS (SELECT ip.i, max(ip.n_i) AS n_i,
-                   sum(2 * CAST(ip.ca AS HUGEINT) * ip.cb * w2.w) AS a2
-                 FROM ip JOIN w2 ON ip.va = w2.vc AND ip.vb = w2.vk
-                 GROUP BY ip.i),
-          dorow AS (SELECT CAST(coalesce(sum(a2 // (n_i - 1)), 0) AS BIGINT) AS do_scaled FROM ai),
-          derow AS (SELECT coalesce(sum(2 * CAST(na AS HUGEINT) * nb * w), 0) AS de_num FROM w2),
-          vt AS (SELECT CAST(count(DISTINCT v) AS BIGINT) AS n_values FROM ann JOIN kept USING (i))
-          SELECT n_items, n AS n_ratings, n_values, do_scaled,
-            CAST(de_num // 1000000 AS BIGINT) AS de_scaled,
-            CASE WHEN de_num > 0
-              THEN CAST(1000000 - (CAST(1000000 AS HUGEINT) * (n - 1) * do_scaled) // de_num AS BIGINT)
-              END AS alpha_micro
-          FROM tot, dorow, derow, vt""",
+                FROM cum a JOIN cum b ON a.v < b.v, tot)"""),
 
-    "q268_krippendorff_ratio" ->
-      """WITH ann AS (
-            SELECT doc_id AS i, r,
-              CAST((length(text) + r * (doc_id % 5)) % 7 AS BIGINT) AS v
-            FROM (SELECT doc_id, text, unnest(range(0, 1 + doc_id % 4)) AS r
-                  FROM documents)),
-          cells AS (SELECT i, v, CAST(count(*) AS BIGINT) AS c FROM ann GROUP BY i, v),
-          items AS (SELECT i, CAST(sum(c) AS BIGINT) AS n_i FROM cells GROUP BY i),
-          kept AS (SELECT * FROM items WHERE n_i >= 2),
-          cellsk AS (SELECT cells.i, cells.v, cells.c, kept.n_i
-                     FROM cells JOIN kept USING (i)),
-          mg AS (SELECT v, CAST(sum(c) AS BIGINT) AS n_g FROM cellsk GROUP BY v),
-          tot AS (SELECT CAST(count(*) AS BIGINT) AS n_items,
-                    CAST(sum(n_i) AS BIGINT) AS n
-                  FROM kept),
-          w AS (SELECT a.v AS vc, b.v AS vk, a.n_g AS na, b.n_g AS nb,
+    // ratio metric: squared (b − a)/(a + b)
+    "q268_krippendorff_ratio" -> krippendorffSql(
+      """w AS (SELECT a.v AS vc, b.v AS vk, a.n_g AS na, b.n_g AS nb,
                   ((1000000 * (b.v - a.v)) // (a.v + b.v)) AS e
-                FROM mg a JOIN mg b ON a.v < b.v),
-          w2 AS (SELECT vc, vk, na, nb, e * e AS w FROM w),
-          ip AS (SELECT a.i, a.n_i, a.v AS va, b.v AS vb, a.c AS ca, b.c AS cb
-                 FROM cellsk a JOIN cellsk b ON a.i = b.i AND a.v < b.v),
-          ai AS (SELECT ip.i, max(ip.n_i) AS n_i,
-                   sum(2 * CAST(ip.ca AS HUGEINT) * ip.cb * w2.w) AS a2
-                 FROM ip JOIN w2 ON ip.va = w2.vc AND ip.vb = w2.vk
-                 GROUP BY ip.i),
-          dorow AS (SELECT CAST(coalesce(sum(a2 // (n_i - 1)), 0) AS BIGINT) AS do_scaled FROM ai),
-          derow AS (SELECT coalesce(sum(2 * CAST(na AS HUGEINT) * nb * w), 0) AS de_num FROM w2),
-          vt AS (SELECT CAST(count(DISTINCT v) AS BIGINT) AS n_values FROM ann JOIN kept USING (i))
-          SELECT n_items, n AS n_ratings, n_values, do_scaled,
-            CAST(de_num // 1000000 AS BIGINT) AS de_scaled,
-            CASE WHEN de_num > 0
-              THEN CAST(1000000 - (CAST(1000000 AS HUGEINT) * (n - 1) * do_scaled) // de_num AS BIGINT)
-              END AS alpha_micro
-          FROM tot, dorow, derow, vt""",
+                FROM mg a JOIN mg b ON a.v < b.v)"""),
 
     "q265_ece" ->
-      """WITH r AS (
-            SELECT (length(text) * 7919 + doc_id * 131) % 1000001 AS conf,
-              ((doc_id * 37 + length(text) * 13) % 1000000)
-                < ((length(text) * 7919 + doc_id * 131) % 1000001) AS ok
-            FROM documents),
-          b AS (SELECT least(conf, 999999) // 100000 AS conf_bucket, ok, conf FROM r),
+      s"""WITH $confBucketCtes,
           agg AS (
             SELECT conf_bucket,
               CAST(count(*) AS BIGINT) AS n_items,
@@ -1331,15 +1277,7 @@ object EvalQueries {
     "q262_chrf" -> chrfSql,
     "q261_bleu_components" -> bleuComponentsSql,
     "q256_rouge_l" ->
-      """WITH tk AS (
-            SELECT doc_id,
-              (list_filter(regexp_split_to_array(trim(text), '\s+'), x -> len(x) > 0))[1:120] AS rt
-            FROM documents),
-          cls AS (
-            SELECT doc_id, CAST(len(rt) AS BIGINT) AS r,
-              CASE WHEN doc_id % 13 IN (0, 1, 2) THEN -1 ELSE doc_id % 4 END AS cl,
-              CAST(least(3 + doc_id % 7, len(rt)) AS BIGINT) AS k
-            FROM tk),
+      s"""WITH $editClassCtes,
           ct AS (
             SELECT doc_id, r,
               CASE cl WHEN -1 THEN 0 WHEN 0 THEN r WHEN 1 THEN k WHEN 2 THEN r ELSE 3 END AS c,
@@ -1352,11 +1290,10 @@ object EvalQueries {
           FROM ct ORDER BY doc_id""",
 
     "q257_krippendorff_alpha" ->
-      """WITH ann AS (
+      s"""WITH ann AS (
             SELECT doc_id AS i, r,
               CAST((length(text) + r * (doc_id % 5)) % 4 AS VARCHAR) AS l
-            FROM (SELECT doc_id, text, unnest(range(0, 1 + doc_id % 4)) AS r
-                  FROM documents)),
+            FROM $raterFanout),
           cells AS (SELECT i, l, CAST(count(*) AS BIGINT) AS c FROM ann GROUP BY i, l),
           items AS (SELECT i, CAST(sum(c) AS BIGINT) AS n_i,
                       CAST(sum(c * c) AS BIGINT) AS sq
@@ -1381,14 +1318,7 @@ object EvalQueries {
     "q258_position_bias" ->
       s"""WITH duels AS (
             SELECT a.doc_id,
-              CASE WHEN length(a.text) > length(b.text) THEN a.source
-                   WHEN length(a.text) < length(b.text) THEN b.source
-                   ELSE least(a.source, b.source) END AS w,
-              CASE WHEN length(a.text) > length(b.text) THEN b.source
-                   WHEN length(a.text) < length(b.text) THEN a.source
-                   ELSE greatest(a.source, b.source) END AS l
-            FROM documents a JOIN documents b
-              ON b.doc_id = a.doc_id + 1 AND a.source <> b.source),
+              $duelCols),
           pd AS (SELECT w, l, CASE WHEN doc_id % 7 < 4 THEN w ELSE l END AS f
                  FROM duels),
           c AS (SELECT least(w, l) AS player_a, greatest(w, l) AS player_b,
@@ -1404,16 +1334,9 @@ object EvalQueries {
           FROM c GROUP BY 1, 2 ORDER BY 1, 2""",
 
     "q259_order_consistency" ->
-      """WITH base AS (
+      s"""WITH base AS (
             SELECT a.doc_id,
-              CASE WHEN length(a.text) > length(b.text) THEN a.source
-                   WHEN length(a.text) < length(b.text) THEN b.source
-                   ELSE least(a.source, b.source) END AS w,
-              CASE WHEN length(a.text) > length(b.text) THEN b.source
-                   WHEN length(a.text) < length(b.text) THEN a.source
-                   ELSE greatest(a.source, b.source) END AS l
-            FROM documents a JOIN documents b
-              ON b.doc_id = a.doc_id + 1 AND a.source <> b.source),
+              $duelCols),
           duels AS (
             SELECT doc_id AS m, w, l,
               CASE WHEN doc_id % 7 < 4 THEN w ELSE l END AS f FROM base
@@ -1442,11 +1365,10 @@ object EvalQueries {
           FROM per_match GROUP BY lo, hi ORDER BY lo, hi""",
 
     "q260_krippendorff_interval" ->
-      """WITH ann AS (
+      s"""WITH ann AS (
             SELECT doc_id AS i,
               CAST((length(text) + r * (doc_id % 5)) % 7 AS BIGINT) AS v
-            FROM (SELECT doc_id, text, unnest(range(0, 1 + doc_id % 4)) AS r
-                  FROM documents)),
+            FROM $raterFanout),
           items AS (SELECT i, CAST(count(*) AS BIGINT) AS n_i,
                       CAST(sum(v) AS BIGINT) AS s1,
                       CAST(sum(v * v) AS BIGINT) AS s2
@@ -1467,7 +1389,7 @@ object EvalQueries {
 
     "q240_rouge_overlap" ->
       s"""WITH p AS (
-            SELECT a.doc_id, $candSql AS cand, b.text AS ref
+            SELECT a.doc_id, ${nullInjected("a.")} AS cand, b.text AS ref
             FROM documents a JOIN documents b ON b.doc_id = a.doc_id + 1),
           tk AS (
             SELECT doc_id,
@@ -1493,8 +1415,8 @@ object EvalQueries {
           FROM g LEFT JOIN o ON g.doc_id = o.doc_id ORDER BY g.doc_id""",
 
     "q241_memorization_rate" ->
-      """WITH tk AS (
-            SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
+      s"""WITH tk AS (
+            SELECT doc_id, $toks AS t
             FROM documents),
           corpus AS (
             SELECT DISTINCT unnest(CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
@@ -1508,7 +1430,7 @@ object EvalQueries {
               END AS gtext
             FROM tk WHERE doc_id % 3 = 0),
           gtk AS (
-            SELECT doc_id, regexp_split_to_array(trim(gtext), '\s+') AS t
+            SELECT doc_id, regexp_split_to_array(trim(gtext), '\\s+') AS t
             FROM gensrc WHERE gtext IS NOT NULL),
           gg AS (
             SELECT doc_id, unnest(list_distinct(
@@ -1705,12 +1627,7 @@ object EvalQueries {
           FROM r WHERE rn = 1 ORDER BY doc_id""",
 
     "q251_calibration" ->
-      """WITH r AS (
-            SELECT (length(text) * 7919 + doc_id * 131) % 1000001 AS conf,
-              ((doc_id * 37 + length(text) * 13) % 1000000)
-                < ((length(text) * 7919 + doc_id * 131) % 1000001) AS ok
-            FROM documents),
-          b AS (SELECT least(conf, 999999) // 100000 AS conf_bucket, ok, conf FROM r),
+      s"""WITH $confBucketCtes,
           agg AS (
             SELECT conf_bucket,
               CAST(count(*) AS BIGINT) AS n_items,
@@ -1724,22 +1641,18 @@ object EvalQueries {
           FROM agg ORDER BY conf_bucket""",
 
     "q250_source_datacard" ->
-      """WITH t AS (
+      s"""WITH t AS (
             SELECT doc_id, source, lang,
               CASE WHEN doc_id % 17 = 0 THEN 'duplicate boilerplate page' ELSE text END AS text
             FROM documents),
           e AS (
             SELECT doc_id, source, lang,
-              CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_toks,
-              md5(lower(array_to_string(regexp_split_to_array(trim(coalesce(text, '')), '\s+'), ' '))) AS fp
+              CAST(len($toks) AS BIGINT) AS n_toks,
+              md5(lower(array_to_string(regexp_split_to_array(trim(coalesce(text, '')), '\\s+'), ' '))) AS fp
             FROM t),
           fc AS (SELECT fp, CAST(count(*) AS BIGINT) AS n_fp FROM e GROUP BY fp),
           sh AS (
-            SELECT doc_id, list_distinct(
-              CASE WHEN len(regexp_split_to_array(trim(text), '\s+')) < 3
-                THEN [array_to_string(regexp_split_to_array(trim(text), '\s+'), ' ')]
-                ELSE list_transform(range(1, len(regexp_split_to_array(trim(text), '\s+')) - 1),
-                       i -> array_to_string((regexp_split_to_array(trim(text), '\s+'))[i:i+2], ' ')) END) AS s
+            SELECT doc_id, ${shingleSet(toks)} AS s
             FROM t),
           contam AS (
             SELECT DISTINCT b.doc_id

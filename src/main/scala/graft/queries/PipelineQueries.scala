@@ -6,6 +6,7 @@ import graft.Tables
 import graft.ops.{BatchView, Comparator}
 import graft.time.TimeNorm
 import graft.multimodal.BinaryOps
+import OracleSql.toks
 
 /** Query surface for the pipeline layers added in batch 4: JSON
   * extraction, date normalization, hash bucketing, the dataset
@@ -636,6 +637,86 @@ object PipelineQueries {
     }
   }
 
+  /** Three label-propagation rounds over the symmetric adjacency
+    * `adj(u, v)` from labels `l0(node, lbl)`: each node takes its
+    * neighbours' most frequent label (count desc, then label — the
+    * operator's deterministic argmax, as row_number); labels `l1`..`l3`. */
+  private val lpaRoundsSql =
+    (1 to 3).map { o =>
+      s"""c$o AS MATERIALIZED (
+            SELECT adj.u, l${o - 1}.lbl, count(*) AS c
+            FROM adj JOIN l${o - 1} ON l${o - 1}.node = adj.v GROUP BY 1, 2),
+          l$o AS MATERIALIZED (
+            SELECT u AS node, lbl FROM (
+              SELECT u, lbl, row_number() OVER (
+                PARTITION BY u ORDER BY c DESC, lbl) AS rn FROM c$o)
+            WHERE rn = 1)"""
+    }.mkString(",\n          ")
+
+  /** Three min-relaxation rounds from distances `d0(node, dist)` over
+    * edges `e(src, dst, …)`, each hop costing `hop`: `d1`..`d3`
+    * (duplicate edges are harmless under min, as in the operator). */
+  private def relaxRoundsSql(hop: String): String =
+    (1 to 3).map { o =>
+      s"""d$o AS MATERIALIZED (
+            SELECT node, min(dist) AS dist FROM (
+              SELECT node, dist FROM d${o - 1}
+              UNION ALL
+              SELECT e.dst, d${o - 1}.dist + $hop FROM d${o - 1}
+              JOIN e ON e.src = d${o - 1}.node) GROUP BY node)"""
+    }.mkString(",\n          ")
+
+  /** Exact balls of radius 0..3 over `ballGraphSql`'s nodes `n` and edges
+    * `e`: `p_k(node, reached)` = p_{k-1} ∪ (p_{k-1} ⋈ e). */
+  private val ballGrowthCtes =
+    ("p0 AS (SELECT node, node AS reached FROM n)" +: (1 to 3).map { o =>
+      s"""p$o AS MATERIALIZED (
+            SELECT node, reached FROM p${o - 1}
+            UNION
+            SELECT p${o - 1}.node, e.dst FROM p${o - 1}
+            JOIN e ON e.src = p${o - 1}.reached)"""
+    }).mkString(",\n          ")
+
+  /** Each node's rank split evenly over its out-edges (`od.outdeg`);
+    * `r` is the previous iteration's rank column. */
+  private val outdegShare = (r: String) => s"$r // od.outdeg"
+
+  /** Three unrolled PageRank iterations `s1/r1 … s3/r3` (damping 0.85,
+    * micro-unit integers; `//` == Spark's `div` on these non-negative
+    * operands) over edge CTE `e(src, dst)`, nodes `nodes(node)`, CTE `od`
+    * and initial ranks `r0`: step i sums `contrib(r<i-1>.r)` into each
+    * destination and adds `teleport`, whose size column comes from the
+    * one-row CTE `size`. */
+  private def pageRankSteps(contrib: String => String, teleport: String,
+      size: String): String =
+    (1 to 3).map { o =>
+      s"""s$o AS (
+            SELECT e.dst, sum(${contrib(s"r${o - 1}.r")}) AS s
+            FROM r${o - 1} JOIN od ON od.src = r${o - 1}.node
+            JOIN e ON e.src = od.src GROUP BY e.dst),
+          r$o AS (
+            SELECT node,
+              CAST($teleport
+                + (850 * COALESCE(s, 0)) // 1000 AS BIGINT) AS r
+            FROM nodes CROSS JOIN $size
+            LEFT JOIN s$o ON s$o.dst = nodes.node)"""
+    }.mkString(",\n          ")
+
+  /** q152's PageRank mirror over edge CTE `e(src, dst)`: node set, node
+    * count `nn`, per-source `outWeight` column in `od`, uniform `r0`,
+    * then [[pageRankSteps]] with the uniform teleport (1 − d)/N. */
+  private def pageRankCtes(outWeight: String = "CAST(count(*) AS BIGINT) AS outdeg",
+      contrib: String => String = outdegShare): String =
+    s"""nodes AS (
+          SELECT DISTINCT src AS node FROM e
+          UNION SELECT DISTINCT dst FROM e),
+        nn AS (SELECT count(*) AS n FROM nodes),
+        od AS (SELECT src, $outWeight
+               FROM e GROUP BY 1),
+        r0 AS (SELECT node, 1000000000000 // n AS r
+               FROM nodes CROSS JOIN nn),
+        ${pageRankSteps(contrib, "((1000 - 850) * 1000000000000) // 1000 // n", "nn")}"""
+
   val oracles: Map[String, String] = Map(
     "q134_zorder_readback" ->
       """SELECT CAST(count(*) AS BIGINT) AS n,
@@ -690,117 +771,41 @@ object PipelineQueries {
          CAST(CEIL((CAST(CAST('0x' || substr(md5(text), 1, 8) AS BIGINT) % 240 AS INT) + 1) / 10.0) AS BIGINT) AS n_sampled
          FROM documents ORDER BY doc_id""",
     // the weighted iterations unrolled: contrib = (r·w) // Σ out-w
-    "q157_pagerank_weighted" -> {
-      def step(prev: String, out: String): String =
-        s"""s$out AS (
-              SELECT e.dst, sum((r$prev.r * e.w) // od.outw) AS s
-              FROM r$prev JOIN od ON od.src = r$prev.node
-              JOIN e ON e.src = od.src GROUP BY e.dst),
-            r$out AS (
-              SELECT node,
-                CAST(((1000 - 850) * 1000000000000) // 1000 // n
-                  + (850 * COALESCE(s, 0)) // 1000 AS BIGINT) AS r
-              FROM nodes CROSS JOIN nn
-              LEFT JOIN s$out ON s$out.dst = nodes.node)"""
+    "q157_pagerank_weighted" ->
       s"""WITH e AS (
             SELECT l_orderkey AS src, l_partkey + 1000000000 AS dst,
               CAST(l_quantity AS BIGINT) AS w
             FROM lineitem WHERE CAST(l_quantity AS BIGINT) > 0),
-          nodes AS (
-            SELECT DISTINCT src AS node FROM e
-            UNION SELECT DISTINCT dst FROM e),
-          nn AS (SELECT count(*) AS n FROM nodes),
-          od AS (SELECT src, CAST(sum(w) AS BIGINT) AS outw
-                 FROM e GROUP BY 1),
-          r0 AS (SELECT node, 1000000000000 // n AS r
-                 FROM nodes CROSS JOIN nn),
-          ${step("0", "1")},
-          ${step("1", "2")},
-          ${step("2", "3")}
+          ${pageRankCtes("CAST(sum(w) AS BIGINT) AS outw",
+            r => s"($r * e.w) // od.outw")}
           SELECT node, r AS rank_micro FROM r3
-          ORDER BY rank_micro DESC, node LIMIT 100"""
-    },
+          ORDER BY rank_micro DESC, node LIMIT 100""",
     // the three iterations unrolled; `//` == Spark `div` on these
     // non-negative operands, long sums are order-free, so bit-exact
-    "q152_pagerank" -> {
-      def step(prev: String, out: String): String =
-        s"""s$out AS (
-              SELECT e.dst, sum(r$prev.r // od.outdeg) AS s
-              FROM r$prev JOIN od ON od.src = r$prev.node
-              JOIN e ON e.src = od.src GROUP BY e.dst),
-            r$out AS (
-              SELECT node,
-                CAST(((1000 - 850) * 1000000000000) // 1000 // n
-                  + (850 * COALESCE(s, 0)) // 1000 AS BIGINT) AS r
-              FROM nodes CROSS JOIN nn
-              LEFT JOIN s$out ON s$out.dst = nodes.node)"""
+    "q152_pagerank" ->
       s"""WITH e AS (
             SELECT l_orderkey AS src, l_partkey + 1000000000 AS dst
             FROM lineitem),
-          nodes AS (
-            SELECT DISTINCT src AS node FROM e
-            UNION SELECT DISTINCT dst FROM e),
-          nn AS (SELECT count(*) AS n FROM nodes),
-          od AS (SELECT src, CAST(count(*) AS BIGINT) AS outdeg
-                 FROM e GROUP BY 1),
-          r0 AS (SELECT node, 1000000000000 // n AS r
-                 FROM nodes CROSS JOIN nn),
-          ${step("0", "1")},
-          ${step("1", "2")},
-          ${step("2", "3")}
+          ${pageRankCtes()}
           SELECT node, r AS rank_micro FROM r3
-          ORDER BY rank_micro DESC, node LIMIT 100"""
-    },
+          ORDER BY rank_micro DESC, node LIMIT 100""",
     "q148_media_real_roundtrip" ->
       """SELECT doc_id, 'png' AS format, 4 AS width, 4 AS height,
          1 AS n_frames FROM documents ORDER BY doc_id""",
     // q152's unrolled iterations on STRING node keys directly — no
     // dictionary in the oracle; agreement proves the Spark-side hash
     // dictionary is semantics-free
-    "q158_pagerank_string_ids" -> {
-      def step(prev: String, out: String): String =
-        s"""s$out AS (
-              SELECT e.dst, sum(r$prev.r // od.outdeg) AS s
-              FROM r$prev JOIN od ON od.src = r$prev.node
-              JOIN e ON e.src = od.src GROUP BY e.dst),
-            r$out AS (
-              SELECT node,
-                CAST(((1000 - 850) * 1000000000000) // 1000 // n
-                  + (850 * COALESCE(s, 0)) // 1000 AS BIGINT) AS r
-              FROM nodes CROSS JOIN nn
-              LEFT JOIN s$out ON s$out.dst = nodes.node)"""
+    "q158_pagerank_string_ids" ->
       s"""WITH e AS (
             SELECT concat('o', l_orderkey) AS src,
               concat('p', l_partkey) AS dst
             FROM lineitem WHERE l_orderkey % 4 = 0),
-          nodes AS (
-            SELECT DISTINCT src AS node FROM e
-            UNION SELECT DISTINCT dst FROM e),
-          nn AS (SELECT count(*) AS n FROM nodes),
-          od AS (SELECT src, CAST(count(*) AS BIGINT) AS outdeg
-                 FROM e GROUP BY 1),
-          r0 AS (SELECT node, 1000000000000 // n AS r
-                 FROM nodes CROSS JOIN nn),
-          ${step("0", "1")},
-          ${step("1", "2")},
-          ${step("2", "3")}
+          ${pageRankCtes()}
           SELECT node AS node_key, r AS rank_micro FROM r3
-          ORDER BY rank_micro DESC, node LIMIT 100"""
-    },
+          ORDER BY rank_micro DESC, node LIMIT 100""",
     // the personalized iterations unrolled: seed ∈ {0,1} scales init and
     // the teleport base; |S| counts only seeds present in the node set
-    "q162_pagerank_personalized" -> {
-      def step(prev: String, out: String): String =
-        s"""s$out AS (
-              SELECT e.dst, sum(r$prev.r // od.outdeg) AS s
-              FROM r$prev JOIN od ON od.src = r$prev.node
-              JOIN e ON e.src = od.src GROUP BY e.dst),
-            r$out AS (
-              SELECT node,
-                CAST(seed * (((1000 - 850) * 1000000000000) // 1000 // k)
-                  + (850 * COALESCE(s, 0)) // 1000 AS BIGINT) AS r
-              FROM nodes CROSS JOIN ns
-              LEFT JOIN s$out ON s$out.dst = nodes.node)"""
+    "q162_pagerank_personalized" ->
       s"""WITH li AS (
             SELECT l_orderkey AS o, l_partkey + 1000000000 AS p
             FROM lineitem WHERE l_orderkey % 4 = 0),
@@ -820,12 +825,10 @@ object PipelineQueries {
                  FROM e GROUP BY 1),
           r0 AS (SELECT node, seed * (1000000000000 // k) AS r
                  FROM nodes CROSS JOIN ns),
-          ${step("0", "1")},
-          ${step("1", "2")},
-          ${step("2", "3")}
+          ${pageRankSteps(outdegShare,
+            "seed * (((1000 - 850) * 1000000000000) // 1000 // k)", "ns")}
           SELECT node, r AS rank_micro FROM r3
-          ORDER BY rank_micro DESC, node LIMIT 100"""
-    },
+          ORDER BY rank_micro DESC, node LIMIT 100""",
     // triangles by the plain id-ordered wedge join (a<b<c appears exactly
     // once) — agreement proves the operator's degree orientation is pure
     // execution strategy
@@ -881,16 +884,7 @@ object PipelineQueries {
     },
     // three LPA rounds unrolled: the deterministic argmax (count desc,
     // label asc) replayed as row_number — bit-exact
-    "q170_label_propagation" -> {
-      def round(p: String, o: String): String =
-        s"""c$o AS MATERIALIZED (
-              SELECT adj.u, l$p.lbl, count(*) AS c
-              FROM adj JOIN l$p ON l$p.node = adj.v GROUP BY 1, 2),
-            l$o AS MATERIALIZED (
-              SELECT u AS node, lbl FROM (
-                SELECT u, lbl, row_number() OVER (
-                  PARTITION BY u ORDER BY c DESC, lbl) AS rn FROM c$o)
-              WHERE rn = 1)"""
+    "q170_label_propagation" ->
       s"""WITH li AS (SELECT l_orderkey AS o, l_partkey AS p
                       FROM lineitem WHERE l_orderkey % 3 = 0),
           e AS MATERIALIZED (SELECT DISTINCT x.p AS a, y.p AS b
@@ -898,11 +892,8 @@ object PipelineQueries {
           adj AS MATERIALIZED (
             SELECT a AS u, b AS v FROM e UNION ALL SELECT b, a FROM e),
           l0 AS (SELECT DISTINCT u AS node, u AS lbl FROM adj),
-          ${round("0", "1")},
-          ${round("1", "2")},
-          ${round("2", "3")}
-          SELECT node, lbl AS label FROM l3 ORDER BY node"""
-    },
+          $lpaRoundsSql
+          SELECT node, lbl AS label FROM l3 ORDER BY node""",
     // the id-ordered cap replayed as row_number (same selection the
     // bounded aggregator makes), then the within-src pair join
     "q175_cooccurrence_project" ->
@@ -919,14 +910,7 @@ object PipelineQueries {
           ORDER BY weight DESC, node_a, node_b LIMIT 500""",
     // the 3 min-relaxation rounds unrolled (duplicate edges are
     // harmless under min, matching the operator)
-    "q181_shortest_paths" -> {
-      def round(p: String, o: String): String =
-        s"""d$o AS MATERIALIZED (
-              SELECT node, min(dist) AS dist FROM (
-                SELECT node, dist FROM d$p
-                UNION ALL
-                SELECT e.dst, d$p.dist + 1 FROM d$p
-                JOIN e ON e.src = d$p.node) GROUP BY node)"""
+    "q181_shortest_paths" ->
       s"""WITH li AS (SELECT l_orderkey AS o, l_partkey AS p
                       FROM lineitem WHERE l_orderkey % 4 = 1),
           e0 AS (SELECT x.p AS src, y.p AS dst
@@ -935,20 +919,10 @@ object PipelineQueries {
             SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),
           d0 AS (SELECT DISTINCT p AS node, CAST(0 AS BIGINT) AS dist
                  FROM li WHERE p % 97 = 0),
-          ${round("0", "1")},
-          ${round("1", "2")},
-          ${round("2", "3")}
-          SELECT node, dist FROM d3 ORDER BY node"""
-    },
+          ${relaxRoundsSql("1")}
+          SELECT node, dist FROM d3 ORDER BY node""",
     // the weighted relaxations unrolled — dist + per-edge toll
-    "q189_weighted_paths" -> {
-      def round(p: String, o: String): String =
-        s"""d$o AS MATERIALIZED (
-              SELECT node, min(dist) AS dist FROM (
-                SELECT node, dist FROM d$p
-                UNION ALL
-                SELECT e.dst, d$p.dist + e.w FROM d$p
-                JOIN e ON e.src = d$p.node) GROUP BY node)"""
+    "q189_weighted_paths" ->
       s"""WITH li AS (SELECT l_orderkey AS o, l_partkey AS p
                       FROM lineitem WHERE l_orderkey % 4 = 1),
           e0 AS (SELECT x.p AS src, y.p AS dst,
@@ -959,11 +933,8 @@ object PipelineQueries {
             UNION ALL SELECT dst, src, w FROM e0),
           d0 AS (SELECT DISTINCT p AS node, CAST(0 AS BIGINT) AS dist
                  FROM li WHERE p % 97 = 0),
-          ${round("0", "1")},
-          ${round("1", "2")},
-          ${round("2", "3")}
-          SELECT node, dist FROM d3 ORDER BY node"""
-    },
+          ${relaxRoundsSql("e.w")}
+          SELECT node, dist FROM d3 ORDER BY node""",
     // wedge generation under the same hub cap, anti-join against the
     // edge set, full degrees in the Jaccard — the operator replayed
     "q182_link_predict" ->
@@ -999,15 +970,6 @@ object PipelineQueries {
     // chain) concatenated over the same deduped edge list, joined and
     // rolled up — the exemplar argmax replayed as row_number
     "q173_community_exemplars" -> {
-      def lpaRound(p: String, o: String): String =
-        s"""c$o AS MATERIALIZED (
-              SELECT adj.u, l$p.lbl, count(*) AS c
-              FROM adj JOIN l$p ON l$p.node = adj.v GROUP BY 1, 2),
-            l$o AS MATERIALIZED (
-              SELECT u AS node, lbl FROM (
-                SELECT u, lbl, row_number() OVER (
-                  PARTITION BY u ORDER BY c DESC, lbl) AS rn FROM c$o)
-              WHERE rn = 1)"""
       def prStep(p: String, o: String): String =
         s"""s$o AS (
               SELECT e0.dst, sum(r$p.r // od.outdeg) AS s
@@ -1027,9 +989,7 @@ object PipelineQueries {
             SELECT src AS u, dst AS v FROM e0
             UNION ALL SELECT dst, src FROM e0),
           l0 AS (SELECT DISTINCT u AS node, u AS lbl FROM adj),
-          ${lpaRound("0", "1")},
-          ${lpaRound("1", "2")},
-          ${lpaRound("2", "3")},
+          $lpaRoundsSql,
           nodes AS (SELECT DISTINCT src AS node FROM e0
                     UNION SELECT DISTINCT dst FROM e0),
           nn AS (SELECT count(*) AS n FROM nodes),
@@ -1133,16 +1093,7 @@ object PipelineQueries {
     // q170's unrolled LPA rounds chained into Newman's Q: per label,
     // intra-edge count and degree sum over the DISTINCT undirected edge
     // set, exact integer numerator parts 4m·L_c − d_c²
-    "q191_modularity" -> {
-      def round(p: String, o: String): String =
-        s"""c$o AS MATERIALIZED (
-              SELECT adj.u, l$p.lbl, count(*) AS c
-              FROM adj JOIN l$p ON l$p.node = adj.v GROUP BY 1, 2),
-            l$o AS MATERIALIZED (
-              SELECT u AS node, lbl FROM (
-                SELECT u, lbl, row_number() OVER (
-                  PARTITION BY u ORDER BY c DESC, lbl) AS rn FROM c$o)
-              WHERE rn = 1)"""
+    "q191_modularity" ->
       s"""WITH li AS (SELECT l_orderkey AS o, l_partkey AS p
                       FROM lineitem WHERE l_orderkey % 3 = 0),
           e AS MATERIALIZED (SELECT DISTINCT x.p AS a, y.p AS b
@@ -1150,9 +1101,7 @@ object PipelineQueries {
           adj AS MATERIALIZED (
             SELECT a AS u, b AS v FROM e UNION ALL SELECT b, a FROM e),
           l0 AS (SELECT DISTINCT u AS node, u AS lbl FROM adj),
-          ${round("0", "1")},
-          ${round("1", "2")},
-          ${round("2", "3")},
+          $lpaRoundsSql,
           m AS (SELECT count(*) AS m FROM e),
           intra AS (SELECT la.lbl AS label, count(*) AS intra_edges
                     FROM e JOIN l3 la ON la.node = e.a
@@ -1167,8 +1116,7 @@ object PipelineQueries {
                  CAST(4 * m.m * coalesce(i.intra_edges, 0)
                       - d.degree_sum * d.degree_sum AS BIGINT) AS q_num_part
           FROM degs d LEFT JOIN intra i ON i.label = d.label CROSS JOIN m
-          ORDER BY d.label"""
-    },
+          ORDER BY d.label""",
     // SCC from the DEFINITION: recursive-CTE reachability, then
     // scc_id(v) = max over {v} ∪ {u : v→*u ∧ u→*v} — the operator's
     // trim/color/sweep pipeline must land on exactly this
@@ -1222,39 +1170,20 @@ object PipelineQueries {
          FROM customer GROUP BY c_nationkey ORDER BY c_nationkey""",
     // the pair-growth rounds unrolled: p_k = p_{k-1} ∪ (p_{k-1} ⋈ e),
     // reach = per-node pair count at each radius
-    "q196_neighborhood_exact" -> {
-      def grow(p: String, o: String): String =
-        s"""p$o AS MATERIALIZED (
-              SELECT node, reached FROM p$p
-              UNION
-              SELECT p$p.node, e.dst FROM p$p
-              JOIN e ON e.src = p$p.reached)"""
+    "q196_neighborhood_exact" ->
       s"""WITH $ballGraphSql,
-          p0 AS (SELECT node, node AS reached FROM n),
-          ${grow("0", "1")},
-          ${grow("1", "2")},
-          ${grow("2", "3")}
+          $ballGrowthCtes
           SELECT node, radius, reach FROM (
             SELECT node, 0 AS radius, CAST(1 AS BIGINT) AS reach FROM n
             UNION ALL SELECT node, 1, count(*) FROM p1 GROUP BY node
             UNION ALL SELECT node, 2, count(*) FROM p2 GROUP BY node
             UNION ALL SELECT node, 3, count(*) FROM p3 GROUP BY node)
-          ORDER BY node, radius"""
-    },
+          ORDER BY node, radius""",
     // harmonic_milli = Σ_k (N_k − N_{k−1})·1000 // k over the same
     // unrolled exact balls
-    "q198_harmonic" -> {
-      def grow(p: String, o: String): String =
-        s"""p$o AS MATERIALIZED (
-              SELECT node, reached FROM p$p
-              UNION
-              SELECT p$p.node, e.dst FROM p$p
-              JOIN e ON e.src = p$p.reached)"""
+    "q198_harmonic" ->
       s"""WITH $ballGraphSql,
-          p0 AS (SELECT node, node AS reached FROM n),
-          ${grow("0", "1")},
-          ${grow("1", "2")},
-          ${grow("2", "3")},
+          $ballGrowthCtes,
           c AS (SELECT node, 0 AS radius, CAST(1 AS BIGINT) AS reach FROM n
                 UNION ALL SELECT node, 1, count(*) FROM p1 GROUP BY node
                 UNION ALL SELECT node, 2, count(*) FROM p2 GROUP BY node
@@ -1266,22 +1195,12 @@ object PipelineQueries {
           SELECT node,
                  CAST(sum(((reach - prev) * 1000) // radius) AS BIGINT)
                    AS harmonic_milli
-          FROM lagd WHERE radius >= 1 GROUP BY node ORDER BY node"""
-    },
+          FROM lagd WHERE radius >= 1 GROUP BY node ORDER BY node""",
     // per-radius covered pairs are just |p_k|; smallest radius with
     // covered·1000 ≥ permille·total(= covered at max radius)
-    "q199_eff_diameter" -> {
-      def grow(p: String, o: String): String =
-        s"""p$o AS MATERIALIZED (
-              SELECT node, reached FROM p$p
-              UNION
-              SELECT p$p.node, e.dst FROM p$p
-              JOIN e ON e.src = p$p.reached)"""
+    "q199_eff_diameter" ->
       s"""WITH $ballGraphSql,
-          p0 AS (SELECT node, node AS reached FROM n),
-          ${grow("0", "1")},
-          ${grow("1", "2")},
-          ${grow("2", "3")},
+          $ballGrowthCtes,
           per AS (SELECT 0 AS radius, count(*) AS covered FROM p0
                   UNION ALL SELECT 1, count(*) FROM p1
                   UNION ALL SELECT 2, count(*) FROM p2
@@ -1292,26 +1211,14 @@ object PipelineQueries {
                  CAST(arg_min(per.covered, per.radius) AS BIGINT)
                    AS covered_pairs,
                  CAST(min(t.total) AS BIGINT) AS total_pairs
-          FROM per, t WHERE per.covered * 1000 >= 600 * t.total"""
-    },
+          FROM per, t WHERE per.covered * 1000 >= 600 * t.total""",
     // the q158 unrolled iterations over the adjacent-token multigraph,
     // directly on token strings — agreement proves both the pair
     // construction and (again) that the hash dictionary is
     // semantics-free
-    "q202_textrank_keywords" -> {
-      def step(prev: String, out: String): String =
-        s"""s$out AS (
-              SELECT e.dst, sum(r$prev.r // od.outdeg) AS s
-              FROM r$prev JOIN od ON od.src = r$prev.node
-              JOIN e ON e.src = od.src GROUP BY e.dst),
-            r$out AS (
-              SELECT node,
-                CAST(((1000 - 850) * 1000000000000) // 1000 // n
-                  + (850 * COALESCE(s, 0)) // 1000 AS BIGINT) AS r
-              FROM nodes CROSS JOIN nn
-              LEFT JOIN s$out ON s$out.dst = nodes.node)"""
+    "q202_textrank_keywords" ->
       s"""WITH tk AS (
-            SELECT regexp_split_to_array(trim(text), '\\s+') AS ts
+            SELECT $toks AS ts
             FROM documents),
           ad AS (
             SELECT unnest(list_transform(range(1, len(ts)),
@@ -1320,20 +1227,9 @@ object PipelineQueries {
           e0 AS (SELECT p['a'] AS src, p['b'] AS dst FROM ad),
           e AS (SELECT src, dst FROM e0
                 UNION ALL SELECT dst, src FROM e0),
-          nodes AS (
-            SELECT DISTINCT src AS node FROM e
-            UNION SELECT DISTINCT dst FROM e),
-          nn AS (SELECT count(*) AS n FROM nodes),
-          od AS (SELECT src, CAST(count(*) AS BIGINT) AS outdeg
-                 FROM e GROUP BY 1),
-          r0 AS (SELECT node, 1000000000000 // n AS r
-                 FROM nodes CROSS JOIN nn),
-          ${step("0", "1")},
-          ${step("1", "2")},
-          ${step("2", "3")}
+          ${pageRankCtes()}
           SELECT node AS token, r AS rank_micro FROM r3
-          ORDER BY rank_micro DESC, node LIMIT 50"""
-    },
+          ORDER BY rank_micro DESC, node LIMIT 50""",
     // the Brandes two-pass unrolled: three forward BFS levels with path
     // counts (anti-joins keep first-reached levels), the shortest-path
     // DAG, then backward DAG-path counts p2→p1→p0; stress = Σ σ·p over

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.ops.Relational
+import OracleSql.{componentCtes, toks}
 
 /** Relational-core query surface: scans, filters, projections, joins,
   * aggregation, window dedupe, anti-join dedupe, set ops.
@@ -1065,6 +1066,77 @@ object RelationalQueries {
     })
   )
 
+  /** Funnel.funnelTimes's greedy chain (q131/q133/q145): first view `t1`
+    * per user (CTE `s1`), the first click within 3 days after it (`s2`,
+    * carrying the anchor as `t1c`), then the first purchase after that
+    * click within the same window (`s3`). */
+  private val funnelCtes =
+    """e AS (
+         SELECT user_id, event_type, epoch_ns(ts) AS tn FROM events),
+       s1 AS (
+         SELECT user_id, min(tn) AS t1 FROM e
+         WHERE event_type = 'view' GROUP BY user_id),
+       s2 AS (
+         SELECT e.user_id, min(s1.t1) AS t1c, min(tn) AS t2
+         FROM e JOIN s1 ON e.user_id = s1.user_id
+         WHERE event_type = 'click' AND tn > s1.t1
+           AND tn <= s1.t1 + 259200000000000
+         GROUP BY e.user_id),
+       s3 AS (
+         SELECT e.user_id, min(tn) AS t3
+         FROM e JOIN s2 ON e.user_id = s2.user_id
+         WHERE event_type = 'purchase' AND tn > s2.t2
+           AND tn <= s2.t1c + 259200000000000
+         GROUP BY e.user_id)"""
+
+  /** Events per (event_type `k`, epoch-day `bucket`): CTE `c(k, bucket,
+    * n)`, the series the EWMA, Holt and CUSUM oracles fold. */
+  private val dailyCountCte =
+    """c AS (
+         SELECT event_type AS k,
+           epoch_ns(ts) // 86400000000000 AS bucket,
+           CAST(count(*) AS BIGINT) AS n
+         FROM events WHERE event_type IS NOT NULL GROUP BY 1, 2)"""
+
+  /** The EWMA fold per key over CTE `src(k, bucket, n)`: `x.ewma_prev`
+    * is the integer EWMA (α = ½, `//` halving) of the key's earlier
+    * buckets, as a prefix list_reduce per position; NULL at the first. */
+  private def ewmaCtes(src: String): String =
+    s"""g AS (
+         SELECT k,
+           list_sort(list(struct_pack(bucket := bucket, n := n))) AS arr
+         FROM $src GROUP BY k),
+       x AS (
+         SELECT k, arr[u.i].bucket AS bucket, arr[u.i].n AS n,
+           CASE WHEN u.i = 1 THEN NULL
+             ELSE list_reduce(
+               list_transform(arr[1:u.i-1], e -> e.n),
+               (a, b) -> (a + b) // 2) END AS ewma_prev
+         FROM g, UNNEST(range(1, len(arr) + 1)) AS u(i))"""
+
+  /** Distinct active (user, window end) for 7-day windows: each active
+    * (user, day) counts toward window ends day..day+6, clamped at the
+    * newest day (`range` excludes its upper bound) — CTE `t`. */
+  private val rollingActiveCtes =
+    """e AS (
+         SELECT DISTINCT user_id,
+           epoch_ns(ts) // 86400000000000 AS b FROM events),
+       m AS (SELECT max(b) AS mb FROM e),
+       t AS (
+         SELECT DISTINCT user_id, u.t AS bucket
+         FROM e CROSS JOIN m,
+           UNNEST(range(b, least(b + 7, mb + 1))) AS u(t))"""
+
+  /** Fuzzy-match candidate pairs, suffix-blocked: same last two chars and
+    * length, levenshtein <= 1, id_a < id_b. */
+  private val suffixBlockPairsSql =
+    """SELECT a.c_custkey AS id_a, b.c_custkey AS id_b
+       FROM customer a JOIN customer b
+         ON right(a.c_name, 2) = right(b.c_name, 2)
+           AND a.c_custkey < b.c_custkey
+       WHERE length(a.c_name) = length(b.c_name)
+         AND levenshtein(a.c_name, b.c_name) <= 1"""
+
   val oracles: Map[String, String] = Map(
     "q01_pricing_summary" ->
       """SELECT l_returnflag, l_linestatus,
@@ -1187,9 +1259,9 @@ object RelationalQueries {
          FROM documents
          ORDER BY doc_id, epoch""",
     "q57_token_budget" ->
-      """WITH t AS (
+      s"""WITH t AS (
            SELECT doc_id, lang,
-             CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_tokens
+             CAST(len($toks) AS BIGINT) AS n_tokens
            FROM documents),
          c AS (
            SELECT *, SUM(n_tokens) OVER (
@@ -1203,9 +1275,9 @@ object RelationalQueries {
     // source-list fold), p = min(1, share·budget/total), md5 threshold
     // hex via floor(x+0.5) — Scala's math.round
     "q92_temperature_mix" ->
-      """WITH d AS (
+      s"""WITH d AS (
            SELECT doc_id, lang,
-             CAST(len(regexp_split_to_array(trim(text), '\s+')) AS INT) AS n
+             CAST(len($toks) AS INT) AS n
            FROM documents WHERE lang IS NOT NULL),
          tot AS (SELECT lang, CAST(sum(n) AS BIGINT) AS nt FROM d GROUP BY lang),
          sq AS (SELECT lang, nt, sqrt(CAST(nt AS DOUBLE)) AS s FROM tot),
@@ -1226,9 +1298,9 @@ object RelationalQueries {
     // order as the driver loop — IEEE ops, no libm — then the identical
     // floor(x+0.5) hex threshold and range() epoch materialization
     "q230_unimax_mix" ->
-      """WITH RECURSIVE
+      s"""WITH RECURSIVE
          d AS (SELECT doc_id, lang,
-                 CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n
+                 CAST(len($toks) AS BIGINT) AS n
                FROM documents WHERE lang IS NOT NULL),
          tot AS (SELECT lang, CAST(sum(n) AS BIGINT) AS c FROM d
                  GROUP BY lang HAVING sum(n) > 0),
@@ -1264,8 +1336,8 @@ object RelationalQueries {
     // row_number = step index — the oracle's single window IS the
     // mechanism difference (Spark ranks via the distributed prefix sum)
     "q235_mixture_schedule" ->
-      """WITH tot AS (SELECT lang AS source,
-              CAST(sum(len(regexp_split_to_array(trim(text), '\s+')))
+      s"""WITH tot AS (SELECT lang AS source,
+              CAST(sum(len($toks))
                 AS BIGINT) AS c
             FROM documents WHERE lang IS NOT NULL GROUP BY 1),
           w AS (SELECT source, CAST(c AS DOUBLE) /
@@ -1352,23 +1424,7 @@ object RelationalQueries {
     // the greedy chain replayed step by step: s2/s3 each re-anchor on the
     // carried t1 window, exactly Funnel.funnelTimes's join semantics
     "q131_funnel" ->
-      """WITH e AS (
-           SELECT user_id, event_type, epoch_ns(ts) AS tn FROM events),
-         s1 AS (
-           SELECT user_id, min(tn) AS t1 FROM e
-           WHERE event_type = 'view' GROUP BY user_id),
-         s2 AS (
-           SELECT e.user_id, min(s1.t1) AS t1c, min(tn) AS t2
-           FROM e JOIN s1 ON e.user_id = s1.user_id
-           WHERE event_type = 'click' AND tn > s1.t1
-             AND tn <= s1.t1 + 259200000000000
-           GROUP BY e.user_id),
-         s3 AS (
-           SELECT e.user_id, min(tn) AS t3
-           FROM e JOIN s2 ON e.user_id = s2.user_id
-           WHERE event_type = 'purchase' AND tn > s2.t2
-             AND tn <= s2.t1c + 259200000000000
-           GROUP BY e.user_id)
+      s"""WITH $funnelCtes
          SELECT s1.user_id, t1, t2, t3,
            CAST(CASE WHEN t3 IS NOT NULL THEN 3
                      WHEN t2 IS NOT NULL THEN 2 ELSE 1 END AS INT) AS max_step
@@ -1379,23 +1435,7 @@ object RelationalQueries {
 
     // q131's chain CTEs rolled up to per-depth user counts
     "q133_funnel_counts" ->
-      """WITH e AS (
-           SELECT user_id, event_type, epoch_ns(ts) AS tn FROM events),
-         s1 AS (
-           SELECT user_id, min(tn) AS t1 FROM e
-           WHERE event_type = 'view' GROUP BY user_id),
-         s2 AS (
-           SELECT e.user_id, min(s1.t1) AS t1c, min(tn) AS t2
-           FROM e JOIN s1 ON e.user_id = s1.user_id
-           WHERE event_type = 'click' AND tn > s1.t1
-             AND tn <= s1.t1 + 259200000000000
-           GROUP BY e.user_id),
-         s3 AS (
-           SELECT e.user_id, min(tn) AS t3
-           FROM e JOIN s2 ON e.user_id = s2.user_id
-           WHERE event_type = 'purchase' AND tn > s2.t2
-             AND tn <= s2.t1c + 259200000000000
-           GROUP BY e.user_id)
+      s"""WITH $funnelCtes
          SELECT * FROM (VALUES
            (1, (SELECT CAST(count(*) AS BIGINT) FROM s1)),
            (2, (SELECT CAST(count(*) AS BIGINT) FROM s2)),
@@ -1420,36 +1460,13 @@ object RelationalQueries {
     // clamped at the newest day in the data; range() excludes its upper
     // bound so the +7/+1 pair replays Spark's inclusive sequence()
     "q138_rolling_active" ->
-      """WITH e AS (
-           SELECT DISTINCT user_id,
-             epoch_ns(ts) // 86400000000000 AS b FROM events),
-         m AS (SELECT max(b) AS mb FROM e),
-         t AS (
-           SELECT DISTINCT user_id, u.t AS bucket
-           FROM e CROSS JOIN m,
-             UNNEST(range(b, least(b + 7, mb + 1))) AS u(t))
+      s"""WITH $rollingActiveCtes
          SELECT bucket, CAST(count(*) AS BIGINT) AS n_active
          FROM t GROUP BY bucket ORDER BY bucket""",
 
     // q131's chain CTEs, converters joined back for their step times
     "q145_conversion_latency" ->
-      """WITH e AS (
-           SELECT user_id, event_type, epoch_ns(ts) AS tn FROM events),
-         s1 AS (
-           SELECT user_id, min(tn) AS t1 FROM e
-           WHERE event_type = 'view' GROUP BY user_id),
-         s2 AS (
-           SELECT e.user_id, min(s1.t1) AS t1c, min(tn) AS t2
-           FROM e JOIN s1 ON e.user_id = s1.user_id
-           WHERE event_type = 'click' AND tn > s1.t1
-             AND tn <= s1.t1 + 259200000000000
-           GROUP BY e.user_id),
-         s3 AS (
-           SELECT e.user_id, min(tn) AS t3
-           FROM e JOIN s2 ON e.user_id = s2.user_id
-           WHERE event_type = 'purchase' AND tn > s2.t2
-             AND tn <= s2.t1c + 259200000000000
-           GROUP BY e.user_id)
+      s"""WITH $funnelCtes
          SELECT (s3.t3 - s2.t2) // 3600000000000 AS latency_hours,
            CAST(count(*) AS BIGINT) AS n_users
          FROM s3 JOIN s2 ON s3.user_id = s2.user_id
@@ -1506,14 +1523,7 @@ object RelationalQueries {
 
     // exact half replayed; the sketch estimate's 5% verdict is pinned
     "q142_rolling_active_approx" ->
-      """WITH e AS (
-           SELECT DISTINCT user_id,
-             epoch_ns(ts) // 86400000000000 AS b FROM events),
-         m AS (SELECT max(b) AS mb FROM e),
-         t AS (
-           SELECT DISTINCT user_id, u.t AS bucket
-           FROM e CROSS JOIN m,
-             UNNEST(range(b, least(b + 7, mb + 1))) AS u(t))
+      s"""WITH $rollingActiveCtes
          SELECT bucket, CAST(count(*) AS BIGINT) AS n_active,
            TRUE AS hll_ok
          FROM t GROUP BY bucket ORDER BY bucket""",
@@ -1578,22 +1588,8 @@ object RelationalQueries {
 
     // q44's recursive-CTE component replay over the levenshtein edge set
     "q155_fuzzy_clusters" ->
-      """WITH RECURSIVE pairs AS (
-           SELECT a.c_custkey AS id_a, b.c_custkey AS id_b
-           FROM customer a JOIN customer b
-             ON right(a.c_name, 2) = right(b.c_name, 2)
-               AND a.c_custkey < b.c_custkey
-           WHERE length(a.c_name) = length(b.c_name)
-             AND levenshtein(a.c_name, b.c_name) <= 1),
-         edges AS (SELECT id_a AS u, id_b AS v FROM pairs
-                   UNION SELECT id_b, id_a FROM pairs),
-         reach AS (
-           SELECT u, v FROM edges
-           UNION
-           SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-           WHERE e.v <> r.u),
-         comp AS (SELECT u AS id, LEAST(u, MIN(v)) AS component
-                  FROM reach GROUP BY u)
+      s"""WITH RECURSIVE pairs AS ($suffixBlockPairsSql),
+         $componentCtes
          SELECT c2.c_custkey, COALESCE(c.component, c2.c_custkey) AS component,
                 COALESCE(c.component, c2.c_custkey) = c2.c_custkey AS keep
          FROM customer c2 LEFT JOIN comp c ON c2.c_custkey = c.id
@@ -1615,22 +1611,8 @@ object RelationalQueries {
     // the same integer fold, replayed as a prefix list_reduce per
     // position (E after j elements = left fold of the first j counts)
     "q153_ewma_spikes" ->
-      """WITH c AS (
-           SELECT event_type AS k,
-             epoch_ns(ts) // 86400000000000 AS bucket,
-             CAST(count(*) AS BIGINT) AS n
-           FROM events WHERE event_type IS NOT NULL GROUP BY 1, 2),
-         g AS (
-           SELECT k,
-             list_sort(list(struct_pack(bucket := bucket, n := n))) AS arr
-           FROM c GROUP BY k),
-         x AS (
-           SELECT k, arr[u.i].bucket AS bucket, arr[u.i].n AS n,
-             CASE WHEN u.i = 1 THEN NULL
-               ELSE list_reduce(
-                 list_transform(arr[1:u.i-1], e -> e.n),
-                 (a, b) -> (a + b) // 2) END AS ewma_prev
-           FROM g, UNNEST(range(1, len(arr) + 1)) AS u(i))
+      s"""WITH $dailyCountCte,
+         ${ewmaCtes("c")}
          SELECT k AS event_type, bucket, n,
            CAST(ewma_prev AS BIGINT) AS ewma_prev,
            n > 3 * ewma_prev AS spike
@@ -1642,11 +1624,7 @@ object RelationalQueries {
     // two-state folds must recurse (O(n) anyway, vs the O(n²) prefix
     // trick); integer `//` truncates exactly like Spark's `div`
     "q183_holt_forecast" ->
-      """WITH RECURSIVE c AS (
-           SELECT event_type AS k,
-             epoch_ns(ts) // 86400000000000 AS bucket,
-             CAST(count(*) AS BIGINT) AS n
-           FROM events WHERE event_type IS NOT NULL GROUP BY 1, 2),
+      s"""WITH RECURSIVE $dailyCountCte,
          s AS (SELECT k, bucket, n, row_number() OVER (
                  PARTITION BY k ORDER BY bucket) AS i FROM c),
          f AS (
@@ -1666,11 +1644,7 @@ object RelationalQueries {
     // one-sided sums as a two-state recursive fold (the q183 pattern);
     // warmup rows keep mu but null sums/verdicts
     "q200_cusum" ->
-      """WITH RECURSIVE c AS (
-           SELECT event_type AS k,
-             epoch_ns(ts) // 86400000000000 AS bucket,
-             CAST(count(*) AS BIGINT) AS n
-           FROM events WHERE event_type IS NOT NULL GROUP BY 1, 2),
+      s"""WITH RECURSIVE $dailyCountCte,
          s AS (SELECT k, bucket, n, row_number() OVER (
                  PARTITION BY k ORDER BY bucket) AS i FROM c),
          mu AS (SELECT k, CAST(sum(n) // 3 AS BIGINT) AS mu FROM s
@@ -1890,11 +1864,7 @@ object RelationalQueries {
     // per key span, absent buckets coalesce to 0), plus the dip verdict
     // n < ewma_prev // 3
     "q159_ewma_outages" ->
-      """WITH c AS (
-           SELECT event_type AS k,
-             epoch_ns(ts) // 86400000000000 AS bucket,
-             CAST(count(*) AS BIGINT) AS n
-           FROM events WHERE event_type IS NOT NULL GROUP BY 1, 2),
+      s"""WITH $dailyCountCte,
          cf AS (SELECT * FROM c WHERE bucket % 7 <> 3),
          sp AS (SELECT k, min(bucket) AS mn, max(bucket) AS mx
                 FROM cf GROUP BY 1),
@@ -1903,17 +1873,7 @@ object RelationalQueries {
            FROM (SELECT sp.k, u.b AS bucket
                  FROM sp, UNNEST(range(sp.mn, sp.mx + 1)) AS u(b)) f
            LEFT JOIN cf ON cf.k = f.k AND cf.bucket = f.bucket),
-         g AS (
-           SELECT k,
-             list_sort(list(struct_pack(bucket := bucket, n := n))) AS arr
-           FROM filled GROUP BY k),
-         x AS (
-           SELECT k, arr[u.i].bucket AS bucket, arr[u.i].n AS n,
-             CASE WHEN u.i = 1 THEN NULL
-               ELSE list_reduce(
-                 list_transform(arr[1:u.i-1], e -> e.n),
-                 (a, b) -> (a + b) // 2) END AS ewma_prev
-           FROM g, UNNEST(range(1, len(arr) + 1)) AS u(i))
+         ${ewmaCtes("filled")}
          SELECT k AS event_type, bucket, n,
            CAST(ewma_prev AS BIGINT) AS ewma_prev,
            n > 3 * ewma_prev AS spike,
@@ -1985,13 +1945,7 @@ object RelationalQueries {
     // blocking passes' edge sets (suffix block + rank-window 2, both
     // dist <= 1)
     "q161_multipass_clusters" ->
-      """WITH RECURSIVE p1 AS (
-           SELECT a.c_custkey AS id_a, b.c_custkey AS id_b
-           FROM customer a JOIN customer b
-             ON right(a.c_name, 2) = right(b.c_name, 2)
-               AND a.c_custkey < b.c_custkey
-           WHERE length(a.c_name) = length(b.c_name)
-             AND levenshtein(a.c_name, b.c_name) <= 1),
+      s"""WITH RECURSIVE p1 AS ($suffixBlockPairsSql),
          r AS (SELECT c_name AS s, c_custkey AS id,
                  row_number() OVER (ORDER BY c_name, c_custkey) AS rn
                FROM customer),
@@ -2001,15 +1955,7 @@ object RelationalQueries {
            WHERE levenshtein(a.s, b.s) <= 1 AND a.id <> b.id),
          pairs AS (SELECT id_a, id_b FROM p1
                    UNION SELECT id_a, id_b FROM p2),
-         edges AS (SELECT id_a AS u, id_b AS v FROM pairs
-                   UNION SELECT id_b, id_a FROM pairs),
-         reach AS (
-           SELECT u, v FROM edges
-           UNION
-           SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-           WHERE e.v <> r.u),
-         comp AS (SELECT u AS id, LEAST(u, MIN(v)) AS component
-                  FROM reach GROUP BY u)
+         $componentCtes
          SELECT c2.c_custkey, COALESCE(c.component, c2.c_custkey) AS component,
                 COALESCE(c.component, c2.c_custkey) = c2.c_custkey AS keep
          FROM customer c2 LEFT JOIN comp c ON c2.c_custkey = c.id

@@ -6,6 +6,7 @@ import graft.Tables
 import graft.text.{Packing, SubstringDedup, TextOps}
 import graft.dedup.Dedup
 import graft.sim.{Ivf, Pq, Similarity}
+import OracleSql.{componentCtes, nullInjected, shingleSet, toks}
 
 /** Query surface for the training-data-pipeline operators: text analysis,
   * dedup (exact / n-gram Jaccard / MinHash-LSH / SimHash), and embedding
@@ -1923,17 +1924,321 @@ object TextQueries {
         .otherwise(""))
 
   // DuckDB fragments shared by oracle SQL below.
-  private val toks = "regexp_split_to_array(trim(text), '\\s+')"
+
+  /** Jaccard similarity of the shingle sets `a.s` and `b.s`. */
+  private val jaccardSql =
+    """CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
+          / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s)))"""
+
+  /** TextOps' quality keep rule over token array `tk` (q22's `keep`). */
+  private def qualityKeep(tk: String): String =
+    s"""len($tk) >= 10
+          AND CAST(len(list_filter($tk, w -> w IN ('the','a','of','and','to'))) AS DOUBLE) / len($tk) <= 0.5
+          AND CAST(len(list_distinct($tk)) AS DOUBLE) / len($tk) >= 0.3"""
+
+  /** Corpus.clean's stages after the quality verdict, over CTE
+    * `q(doc_id, lang, tk, kq)`: exact-dedup verdict `e.ke`, shingle sets
+    * `sh` of the exact survivors, same-lang Jaccard >= 0.5 `pairs`, and
+    * their components `comp` (needs `WITH RECURSIVE`). */
+  private val dedupChainCtes =
+    s"""e AS (
+          SELECT doc_id, lang, tk,
+            doc_id = MIN(doc_id) OVER (PARTITION BY md5(lower(array_to_string(tk, ' ')))) AS ke
+          FROM q WHERE kq),
+        sh AS (
+          SELECT doc_id, lang, ${shingleSet("tk")} AS s
+          FROM e WHERE ke),
+        pairs AS (
+          SELECT a.doc_id AS id_a, b.doc_id AS id_b
+          FROM sh a JOIN sh b ON a.lang = b.lang AND a.doc_id < b.doc_id
+          WHERE $jaccardSql >= 0.5),
+        $componentCtes"""
+
+  /** Corpus.clean's stages over token CTE `t(doc_id, lang, tk)`: the
+    * keep rule as `q.kq`, then [[dedupChainCtes]]. */
+  private val cleanChainCtes =
+    s"""q AS (
+          SELECT doc_id, lang, tk, (${qualityKeep("tk")}) AS kq
+          FROM t),
+        $dedupChainCtes"""
+
+  /** One row per (label, 0-based pos, element value) of every non-null
+    * embedding: CTE `ex`. */
+  private val embedPosCte =
+    """ex AS (
+          SELECT label, p['pos'] AS pos, p['v'] AS v FROM (
+            SELECT label, unnest(list_transform(range(1, len(embedding) + 1),
+              i -> {'pos': i - 1, 'v': embedding[i]})) AS p
+            FROM embeddings WHERE embedding IS NOT NULL))"""
+
+  /** q91's exact-centroid IVF assignment replayed: per-label mean
+    * centroids from micro-unit sums, coefficients float-rounded (CAST
+    * REAL), half-norms over raw doubles, score = dot − |c|²/2, ties to the
+    * lowest cell: `cellmap(label, cf, hn, cell)` and
+    * `assigned(vec_id, cell)`. */
+  private val ivfAssignCtes =
+    s"""$embedPosCte,
+        sums AS (
+          SELECT label, pos,
+            CAST(sum(CAST(round(CAST(v AS DOUBLE) * 1000000, 0) AS BIGINT))
+              AS BIGINT) AS mic
+          FROM ex GROUP BY label, pos),
+        cnt AS (
+          SELECT label, CAST(count(*) AS BIGINT) AS n
+          FROM embeddings WHERE embedding IS NOT NULL GROUP BY label),
+        mm AS (
+          SELECT s.label, s.pos,
+            CAST(s.mic AS DOUBLE) / 1000000 / CAST(c.n AS DOUBLE) AS m
+          FROM sums s JOIN cnt c USING (label)),
+        cent AS (
+          SELECT label,
+            list(CAST(CAST(m AS REAL) AS DOUBLE) ORDER BY pos) AS cf,
+            list_sum(list_transform(list(m ORDER BY pos), x -> x * x)) / 2 AS hn
+          FROM mm GROUP BY label),
+        cellmap AS (
+          SELECT label, cf, hn,
+            CAST(ROW_NUMBER() OVER (ORDER BY label) - 1 AS INT) AS cell
+          FROM cent),
+        scored AS (
+          SELECT e.vec_id, c.cell,
+            list_sum(list_transform(list_zip(c.cf, e.embedding),
+              x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))) - c.hn AS score
+          FROM embeddings e CROSS JOIN cellmap c
+          WHERE e.embedding IS NOT NULL),
+        assigned AS (
+          SELECT vec_id, cell FROM (
+            SELECT vec_id, cell, ROW_NUMBER() OVER (
+              PARTITION BY vec_id ORDER BY score DESC, cell ASC) AS rn
+            FROM scored) WHERE rn = 1)"""
+
+  /** The keep-and-reassemble tail shared by the line/paragraph filters:
+    * from CTE `flagged(doc_id, pos, <unit>, keep)`, kept/dropped counts
+    * and the kept units joined by `sep` in pos order, one row per doc of
+    * `docs` (aliased `d`; docs with no unit get '' and 0s). */
+  private def reassembledSql(unit: String, sep: String, docs: String): String =
+    s"""agged AS (
+          SELECT doc_id,
+            CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
+            CAST(sum(CASE WHEN keep THEN 0 ELSE 1 END) AS BIGINT) AS n_dropped,
+            string_agg(CASE WHEN keep THEN $unit END, $sep ORDER BY pos) AS clean_text
+          FROM flagged GROUP BY doc_id)
+        SELECT d.doc_id, COALESCE(a.clean_text, '') AS clean_text,
+          COALESCE(a.n_kept, 0) AS n_kept,
+          COALESCE(a.n_dropped, 0) AS n_dropped
+        FROM $docs LEFT JOIN agged a USING (doc_id)"""
+
+  /** Per-doc verdicts of [[cleanChainCtes]] over every document (q49). */
+  private val cleanVerdictSql =
+    """SELECT d.doc_id, q.kq AS keep_quality,
+          COALESCE(e.ke, false) AS keep_exact,
+          COALESCE(e.ke AND COALESCE(c.component, d.doc_id) = d.doc_id, false) AS keep
+        FROM documents d
+        LEFT JOIN q ON d.doc_id = q.doc_id
+        LEFT JOIN e ON d.doc_id = e.doc_id
+        LEFT JOIN comp c ON d.doc_id = c.id
+        ORDER BY d.doc_id"""
+
+  /** q73's assembly mirror: mixture filter → the clean chain → survivors
+    * `kept` → `stages` (more CTEs, each followed by a comma) → cumulative
+    * token budget over CTE `budgetFrom` → 32-token chunks every 24. */
+  private def assembleSql(stages: String, budgetFrom: String): String =
+    s"""WITH RECURSIVE t AS (
+          SELECT doc_id, lang, $toks AS tk FROM documents
+          WHERE lang <> 'en'
+             OR substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) < '80000000'),
+        $cleanChainCtes,
+        kept AS (
+          SELECT e.doc_id, e.tk FROM e LEFT JOIN comp c ON e.doc_id = c.id
+          WHERE e.ke AND COALESCE(c.component, e.doc_id) = e.doc_id),
+        $stages
+        bud AS (
+          SELECT doc_id, tk FROM (
+            SELECT doc_id, tk, CAST(len(tk) AS BIGINT) AS n,
+              SUM(CAST(len(tk) AS BIGINT)) OVER (
+                ORDER BY substr(md5(CAST(doc_id AS VARCHAR)), 1, 8), doc_id
+                ROWS UNBOUNDED PRECEDING) AS cum
+            FROM $budgetFrom)
+          WHERE cum - n < 5000)
+        SELECT doc_id, CAST(s // 24 AS INT) AS chunk_id,
+          array_to_string(tk[s + 1 : s + 32], ' ') AS chunk_text,
+          CAST(len(tk[s + 1 : s + 32]) AS INT) AS n_chunk_tokens
+        FROM bud, UNNEST(range(0, greatest(len(tk) - 8, 1), 24)) AS u(s)
+        ORDER BY doc_id, chunk_id"""
+
+  /** SubstringDedup's removal marks over token CTE `src(doc_id, tk)`:
+    * every repeat (not the first, by (doc_id, pos)) of an 8-token gram is
+    * removable, and `fl.rem` flags each token (`fl.s` = 0) any removable
+    * gram covers via the same 7-position RANGE lookback. */
+  private def substringMarkCtes(src: String): String =
+    s"""occ AS (
+          SELECT doc_id, s AS pos, array_to_string(tk[s + 1 : s + 8], ' ') AS gram
+          FROM $src, UNNEST(range(greatest(len(tk) - 7, 0))) AS u(s)),
+        marked AS (
+          SELECT doc_id, pos,
+            count(*) OVER (PARTITION BY gram) AS cnt,
+            row_number() OVER (PARTITION BY gram ORDER BY doc_id, pos) AS rn
+          FROM occ),
+        removable AS (SELECT doc_id, pos FROM marked WHERE cnt >= 2 AND rn > 1),
+        tok AS (SELECT doc_id, s AS pos, tk[s + 1] AS w
+                FROM $src, UNNEST(range(len(tk))) AS u(s)),
+        ev AS (
+          SELECT doc_id, pos, w, 0 AS s FROM tok
+          UNION ALL SELECT doc_id, pos, NULL, 1 FROM removable),
+        fl AS (
+          SELECT doc_id, pos, w, s,
+            max(s) OVER (PARTITION BY doc_id ORDER BY pos
+                         RANGE BETWEEN 7 PRECEDING AND CURRENT ROW) AS rem
+          FROM ev)"""
+
+  /** Packing's doc-order offsets: per non-empty doc its token count `n`
+    * and the exclusive prefix sum `cum0` (CTE `c`). */
+  private val packOffsetsCte =
+    s"""c AS (
+          SELECT doc_id, n,
+            CAST(COALESCE(SUM(n) OVER (ORDER BY doc_id
+              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum0
+          FROM (SELECT doc_id, CAST(len($toks) AS BIGINT) AS n
+                FROM documents WHERE text IS NOT NULL)
+          WHERE n > 0)"""
+
+  /** The template-strip fixture and thresholds (q224/q226): each doc
+    * wrapped in its source's header paragraph, the footer appended where
+    * `footerWhen` holds, blank-line paragraphs `paras`, and `tpl` the
+    * (source, paragraph) pairs in more than half of a source's docs
+    * (sources of 4+ docs only). */
+  private def templateCtes(footerWhen: String): String =
+    s"""aug AS (
+          SELECT doc_id, source,
+            '${TemplateFixture.pre}' || source ||
+            '${TemplateFixture.post}' || chr(10) || chr(10) || text ||
+            CASE WHEN $footerWhen
+                 THEN chr(10) || chr(10) || '${TemplateFixture.footer}'
+                 ELSE '' END AS t
+          FROM documents),
+        paras AS (
+          SELECT doc_id, source, p['pos'] AS pos, p['par'] AS par FROM (
+            SELECT doc_id, source, unnest(list_transform(
+              range(1, len(ps) + 1), i -> {'pos': i, 'par': trim(ps[i])}))
+              AS p
+            FROM (SELECT doc_id, source,
+                    string_split_regex(t, '\\n{2,}') AS ps
+                  FROM aug))
+          WHERE len(p['par']) > 0),
+        present AS (SELECT DISTINCT source, par, doc_id FROM paras),
+        wc AS (SELECT source, par, CAST(count(*) AS BIGINT) AS n_with
+               FROM present GROUP BY source, par),
+        sizes AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs
+                  FROM documents GROUP BY source),
+        tpl AS (SELECT w.source, w.par
+                FROM wc w JOIN sizes s USING (source)
+                WHERE s.n_docs >= 4 AND w.n_with * 1000 > 500 * s.n_docs)"""
+
+  /** The Gopher quality metrics over CTE columns `text`, token array `tk`
+    * and non-blank `lines` (q127's rule inputs), as a SELECT column
+    * list. */
+  private val gopherMetricsSql =
+    s"""len(tk) AS n_words,
+        CAST(list_sum(list_transform(tk, w -> length(w))) AS DOUBLE)
+          / len(tk) AS mean_len,
+        CAST(len(regexp_extract_all(text, '#'))
+          + len(regexp_extract_all(text, '\\.\\.\\.|…')) AS DOUBLE)
+          / len(tk) AS symbol_ratio,
+        CAST(len(list_filter(lines, l -> regexp_matches(trim(l),
+            '^([-*•‣▪]|\\d+[.)])\\s'))) AS DOUBLE)
+          / greatest(len(lines), 1) AS bullet_frac,
+        CAST(len(list_filter(lines, l -> regexp_matches(trim(l),
+            '(\\.\\.\\.|…)$$'))) AS DOUBLE)
+          / greatest(len(lines), 1) AS ellipsis_frac,
+        CAST(len(list_filter(tk, w -> regexp_matches(w, '\\p{L}')))
+          AS DOUBLE) / greatest(len(tk), 1) AS alpha_frac,
+        len(list_filter(tk,
+          w -> w IN ('the','a','of','and','to'))) AS stop_hits"""
+
+  /** Tokens per 50-doc bucket (`pb`) and the sliding 4-bucket window
+    * ends `wins(wend)`, clamped at the newest bucket (q166/q205). */
+  private val tokenWindowCtes =
+    s"""dk AS (
+          SELECT doc_id // 50 AS bucket, unnest($toks) AS token
+          FROM documents),
+        pb AS (SELECT bucket, token, CAST(count(*) AS BIGINT) AS n
+               FROM dk GROUP BY 1, 2),
+        mb AS (SELECT max(bucket) AS m FROM dk),
+        wins AS (
+          SELECT DISTINCT w AS wend FROM (
+            SELECT unnest(generate_series(bucket,
+              least(bucket + 3, (SELECT m FROM mb)))) AS w
+            FROM (SELECT DISTINCT bucket FROM dk)))"""
+
+  /** Winnowing selection (q237/q239): md5 of every 4-token gram, then per
+    * 5-gram window the minimum `sel` = hash || zero-padded reverse
+    * position, so ties pick the rightmost gram. */
+  private val winnowCtes =
+    s"""tt AS (SELECT doc_id, $toks AS tk
+             FROM documents),
+        g AS (SELECT doc_id, i AS pos,
+                md5(array_to_string(tk[i+1:i+4], ' ')) AS h
+              FROM tt, unnest(range(greatest(len(tk) - 3, 0))) AS u(i)),
+        s AS (SELECT doc_id,
+                min(concat(h, lpad(CAST(999999999 - pos AS VARCHAR), 9, '0')))
+                  OVER (PARTITION BY doc_id ORDER BY pos
+                        ROWS BETWEEN 4 PRECEDING AND CURRENT ROW) AS sel
+              FROM g)"""
+
+  /** Dedup.paragraphDedupe's split: trimmed non-empty blank-line
+    * paragraphs `paras(doc_id, pos, par)`, pos 1-based. */
+  private val parasCte =
+    s"""paras AS (
+          SELECT doc_id, p['pos'] AS pos, p['par'] AS par FROM (
+            SELECT doc_id, unnest(list_transform(range(1, len(ps) + 1),
+              i -> {'pos': i, 'par': trim(ps[i])})) AS p
+            FROM (SELECT doc_id,
+                    string_split_regex(text, '\\n{2,}') AS ps
+                  FROM documents))
+          WHERE len(p['par']) > 0)"""
+
+  /** URL parts of the fragment-stripped column `nf` (q124's split):
+    * `scheme` and `hostport` lowercased, raw `path0` and `query0`. */
+  private val urlPartsSql =
+    s"""lower(regexp_extract(nf, '^([a-zA-Z][a-zA-Z0-9+.-]*)://', 1))
+          AS scheme,
+        lower(regexp_extract(nf,
+          '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]*)', 1)) AS hostport,
+        regexp_extract(nf,
+          '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*([^?#]*)', 1) AS path0,
+        regexp_extract(nf, '\\?([^#]*)', 1) AS query0"""
+
+  /** Canonical host from `scheme`/`hostport`: default port and `www.`
+    * stripped. */
+  private val canonHostSql =
+    s"""regexp_replace(
+          CASE WHEN (scheme = 'http' AND hostport LIKE '%:80')
+                 OR (scheme = 'https' AND hostport LIKE '%:443')
+            THEN regexp_replace(hostport, ':(80|443)$$', '')
+            ELSE hostport END,
+          '^www\\.', '')"""
+
+  /** Canonical path: one trailing slash trimmed, a lone "/" kept. */
+  private val canonPathSql =
+    s"""CASE WHEN length(path0) > 1
+          THEN regexp_replace(path0, '/$$', '') ELSE path0 END"""
+
+  /** Canonical query: tracking params dropped, the rest sorted bytewise
+    * and re-joined ('' when none is left). */
+  private val canonQuerySql =
+    """array_to_string(list_sort(list_filter(string_split(query0, '&'),
+          q -> NOT (starts_with(q, 'utm_') OR q = ''
+            OR q = 'gclid' OR starts_with(q, 'gclid=')
+            OR q = 'fbclid' OR starts_with(q, 'fbclid=')
+            OR q = 'msclkid' OR starts_with(q, 'msclkid=')
+            OR q = 'ref' OR starts_with(q, 'ref=')
+            OR q = 'igshid' OR starts_with(q, 'igshid=')))), '&')"""
 
   /** Shingle/pair/verdict CTE chain shared by every decontamination-audit
     * oracle (q114/q115/q120/q121): per-probe contaminating count + worst
     * containment over the odd-vs-even split. */
   private lazy val contaminationCtes =
     s"""sh AS (
-          SELECT doc_id,
-            list_distinct(CASE WHEN len($toks) < 3 THEN [array_to_string($toks, ' ')]
-              ELSE list_transform(range(1, len($toks) - 1),
-                     i -> array_to_string(($toks)[i:i+2], ' ')) END) AS s
+          SELECT doc_id, ${shingleSet(toks)} AS s
           FROM documents),
         pairs AS (
           SELECT a.doc_id AS id_l,
@@ -1944,6 +2249,25 @@ object TextQueries {
           SELECT id_l, CAST(count(*) AS BIGINT) AS n_contaminating,
             max(containment) AS max_containment
           FROM pairs GROUP BY id_l)"""
+
+  /** q72's odd-vs-even containment pairs; the prebuilt path (q75) must
+    * emit the exact same pairs. */
+  private lazy val containmentPairsSql =
+    s"""WITH sh AS (SELECT doc_id, ${shingleSet(toks)} AS s FROM documents)
+        SELECT a.doc_id AS id_l, b.doc_id AS id_r,
+          CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) / len(a.s) AS containment
+        FROM sh a JOIN sh b ON a.doc_id % 2 = 1 AND b.doc_id % 2 = 0
+        WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) / len(a.s) >= 0.7
+        ORDER BY id_l, id_r"""
+
+  /** q67's odd-vs-even Jaccard >= 0.8 pairs; the prebuilt path (q74)
+    * must emit the exact same pairs. */
+  private lazy val neardupPairsSql =
+    s"""WITH sh AS (SELECT doc_id, ${shingleSet(toks)} AS s FROM documents)
+        SELECT a.doc_id AS id_l, b.doc_id AS id_r, $jaccardSql AS jaccard
+        FROM sh a JOIN sh b ON a.doc_id % 2 = 1 AND b.doc_id % 2 = 0
+        WHERE $jaccardSql >= 0.8
+        ORDER BY id_l, id_r"""
 
   /** Shared by q114 (union-df audit) and q115 (prebuilt audit): the two
     * paths must produce the identical report. */
@@ -1985,7 +2309,7 @@ object TextQueries {
     b.append(s"""w0 AS MATERIALIZED (
             SELECT word, CAST(count(*) AS BIGINT) AS cnt,
               regexp_split_to_array(word, '') AS ss
-            FROM (SELECT unnest(regexp_split_to_array(trim(text), '\\s+')) AS word
+            FROM (SELECT unnest($toks) AS word
                   FROM documents WHERE text IS NOT NULL)
             WHERE length(word) > 0 GROUP BY word)""")
     for (i <- 1 to k) {
@@ -2009,6 +2333,70 @@ object TextQueries {
     }
     b.toString
   }
+  /** q111's merge table: the trainer's 8 best pairs by rank; the
+    * driver-local trainer (q116) must replay the same chain. */
+  private lazy val bpeMergesSql =
+    s"""WITH ${bpeCtes(8)}
+        SELECT CAST(rank AS INT) AS rank, l, r, pair_count FROM (
+          ${(1 to 8).map(i =>
+            s"SELECT $i AS rank, a AS l, b AS r, c AS pair_count FROM b$i")
+            .mkString("\n            UNION ALL ")})
+        ORDER BY rank"""
+
+  /** Exact cosine top-10 neighbours of vec_id 0 (q30); the exhaustive
+    * ANN configurations (q60/q65/q77) must return exactly these. */
+  private lazy val exactTopkSql =
+    s"""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
+        SELECT vec_id, ${cosSql("embedding", "qe")} AS cos
+        FROM embeddings, q WHERE vec_id != 0
+        ORDER BY cos DESC, vec_id LIMIT 10"""
+
+  /** Stupid Backoff (α = 0.4) replayed over the whitespace tokens: n-gram
+    * counts from the en slice, then per token position the unigram,
+    * bigram and trigram scores `s1`..`s3` in CTE `s3c`, keyed by `keys`
+    * (columns of the position CTE `p`). Every score is a single division
+    * or an α-product of one, so the doubles match the operator exactly. */
+  private def backoffCtes(keys: String): String =
+    s"""d AS (
+          SELECT doc_id, lang, $toks AS tk
+          FROM documents WHERE text IS NOT NULL),
+        p AS (
+          SELECT doc_id, lang, CAST(u.i AS INT) AS pos,
+            tk[u.i + 1] AS w,
+            CASE WHEN u.i >= 1 THEN tk[u.i] END AS prev,
+            CASE WHEN u.i >= 2 THEN tk[u.i - 1] END AS prev2
+          FROM d, UNNEST(range(len(tk))) AS u(i)),
+        tp AS (SELECT * FROM p WHERE lang = 'en'),
+        uni AS (SELECT w, CAST(count(*) AS BIGINT) AS c FROM tp GROUP BY w),
+        bi AS (SELECT prev, w, CAST(count(*) AS BIGINT) AS c
+               FROM tp WHERE pos >= 1 GROUP BY prev, w),
+        tri AS (SELECT prev2, prev, w, CAST(count(*) AS BIGINT) AS c
+                FROM tp WHERE pos >= 2 GROUP BY prev2, prev, w),
+        tot AS (SELECT CAST(count(*) AS BIGINT) AS n_tokens,
+                  CAST(count(DISTINCT w) AS BIGINT) AS vocab FROM tp),
+        j AS (
+          SELECT $keys, u1.c AS c1w, u2.c AS c1prev,
+            b1.c AS c2, b2.c AS c2ctx, t3.c AS c3, tot.n_tokens, tot.vocab
+          FROM p
+          LEFT JOIN uni u1 ON p.w = u1.w
+          LEFT JOIN uni u2 ON p.prev = u2.w
+          LEFT JOIN bi b1 ON p.prev = b1.prev AND p.w = b1.w
+          LEFT JOIN bi b2 ON p.prev2 = b2.prev AND p.prev = b2.w
+          LEFT JOIN tri t3 ON p.prev2 = t3.prev2 AND p.prev = t3.prev
+            AND p.w = t3.w
+          CROSS JOIN tot),
+        s1c AS (
+          SELECT *, CAST(COALESCE(c1w, 0) + 1 AS DOUBLE)
+            / CAST(n_tokens + vocab AS DOUBLE) AS s1 FROM j),
+        s2c AS (
+          SELECT *, CASE WHEN c2 IS NOT NULL AND c1prev IS NOT NULL
+            THEN CAST(c2 AS DOUBLE) / CAST(c1prev AS DOUBLE)
+            ELSE 0.4 * s1 END AS s2 FROM s1c),
+        s3c AS (
+          SELECT *, CASE WHEN c3 IS NOT NULL AND c2ctx IS NOT NULL
+            THEN CAST(c3 AS DOUBLE) / CAST(c2ctx AS DOUBLE)
+            ELSE 0.4 * s2 END AS s3 FROM s2c)"""
+
   private def cosSql(a: String, b: String) =
     s"""(list_sum(list_transform(list_zip($a, $b), x -> CAST(x[1] AS DOUBLE)*CAST(x[2] AS DOUBLE)))
         / (sqrt(list_sum(list_transform($a, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
@@ -2030,9 +2418,7 @@ object TextQueries {
           CAST(list_sum(list_transform($toks, w -> length(w))) AS DOUBLE) / len($toks) AS mean_token_len,
           CAST(len(list_filter($toks, w -> w IN ('the','a','of','and','to'))) AS DOUBLE) / len($toks) AS stopword_ratio,
           CAST(len(list_distinct($toks)) AS DOUBLE) / len($toks) AS distinct_token_ratio,
-          (len($toks) >= 10
-           AND CAST(len(list_filter($toks, w -> w IN ('the','a','of','and','to'))) AS DOUBLE) / len($toks) <= 0.5
-           AND CAST(len(list_distinct($toks)) AS DOUBLE) / len($toks) >= 0.3) AS keep
+          (${qualityKeep(toks)}) AS keep
           FROM documents ORDER BY doc_id""",
     "q23_langid" ->
       s"""SELECT doc_id, lang,
@@ -2047,13 +2433,13 @@ object TextQueries {
     // '', and whitespace-only all fingerprint to md5('') — the %13
     // injected rows exercise exactly that
     "q24_fingerprint" ->
-      s"""WITH t AS (SELECT doc_id, $advNullTextSql AS text FROM documents)
+      s"""WITH t AS (SELECT doc_id, ${nullInjected("")} AS text FROM documents)
           SELECT doc_id, md5(lower(array_to_string(
             regexp_split_to_array(trim(coalesce(text, '')), '\\s+'), ' ')))
             AS fp
           FROM t ORDER BY doc_id""",
     "q25_dedup_exact" ->
-      s"""WITH t AS (SELECT doc_id, $advNullTextSql AS text FROM documents)
+      s"""WITH t AS (SELECT doc_id, ${nullInjected("")} AS text FROM documents)
           SELECT md5(lower(array_to_string(
             regexp_split_to_array(trim(coalesce(text, '')), '\\s+'), ' ')))
             AS fp,
@@ -2061,17 +2447,11 @@ object TextQueries {
           FROM t GROUP BY 1 ORDER BY doc_id""",
     "q26_ngram_jaccard" ->
       s"""WITH sh AS (
-            SELECT doc_id, lang, source,
-              list_distinct(CASE WHEN len($toks) < 3 THEN [array_to_string($toks, ' ')]
-                ELSE list_transform(range(1, len($toks) - 1),
-                       i -> array_to_string(($toks)[i:i+2], ' ')) END) AS s
+            SELECT doc_id, lang, source, ${shingleSet(toks)} AS s
             FROM documents)
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-            CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-              / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) AS jaccard
+          SELECT a.doc_id AS id_a, b.doc_id AS id_b, $jaccardSql AS jaccard
           FROM sh a JOIN sh b ON a.lang = b.lang AND a.source = b.source AND a.doc_id < b.doc_id
-          WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-              / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.8
+          WHERE $jaccardSql >= 0.8
           ORDER BY id_a, id_b""",
     "q29_embed_neardup" ->
       s"""SELECT a.vec_id AS id_a, b.vec_id AS id_b,
@@ -2080,24 +2460,15 @@ object TextQueries {
           WHERE ${cosSql("a.embedding", "b.embedding")} >= 0.35
           ORDER BY id_a, id_b""",
     "q30_ann_topk" ->
-      s"""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
-          SELECT vec_id, ${cosSql("embedding", "qe")} AS cos
-          FROM embeddings, q WHERE vec_id != 0
-          ORDER BY cos DESC, vec_id LIMIT 10""",
+      exactTopkSql,
     // full-probe LSH is exhaustive by construction → the oracle is the
     // exact top-k itself
     "q60_ann_lsh_fullprobe" ->
-      s"""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
-          SELECT vec_id, ${cosSql("embedding", "qe")} AS cos
-          FROM embeddings, q WHERE vec_id != 0
-          ORDER BY cos DESC, vec_id LIMIT 10""",
+      exactTopkSql,
     // corpus-covering shortlist + exact rerank is exhaustive by
     // construction → the oracle is the exact top-k itself
     "q77_ann_pq_rerank" ->
-      s"""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
-          SELECT vec_id, ${cosSql("embedding", "qe")} AS cos
-          FROM embeddings, q WHERE vec_id != 0
-          ORDER BY cos DESC, vec_id LIMIT 10""",
+      exactTopkSql,
     // n_exact_pairs: honest cross-check (both engines count the same
     // all-pairs exact-cosine set). recall_ok: bounded check — the oracle
     // pins the EXPECTED verdict; Spark computes the actual recall of the
@@ -2110,22 +2481,13 @@ object TextQueries {
     // blockless exact-Jaccard pair count; recall_ok pins the expected
     // verdict for the confirmed-MinHash subset
     "q62_minhash_verify" ->
-      s"""WITH sh AS (
-            SELECT doc_id,
-              list_distinct(CASE WHEN len($toks) < 3 THEN [array_to_string($toks, ' ')]
-                ELSE list_transform(range(1, len($toks) - 1),
-                       i -> array_to_string(($toks)[i:i+2], ' ')) END) AS s
-            FROM documents)
+      s"""WITH sh AS (SELECT doc_id, ${shingleSet(toks)} AS s FROM documents)
           SELECT count(*) AS n_exact_pairs, true AS recall_ok
           FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-          WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-              / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.8""",
+          WHERE $jaccardSql >= 0.8""",
     // full-probe IVF is exhaustive → oracle = the exact top-k
     "q65_ann_ivf_fullprobe" ->
-      s"""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
-          SELECT vec_id, ${cosSql("embedding", "qe")} AS cos
-          FROM embeddings, q WHERE vec_id != 0
-          ORDER BY cos DESC, vec_id LIMIT 10""",
+      exactTopkSql,
     // all columns pinned: DuckDB cannot reproduce the custom simhash
     // signatures; the oracle records the expected self-consistency verdict
     // (banding == all-pairs hamming sweep, zero missed / zero extra)
@@ -2149,15 +2511,7 @@ object TextQueries {
             FROM embeddings a JOIN embeddings b
               ON a.label = b.label AND a.vec_id < b.vec_id
             WHERE ${cosSql("a.embedding", "b.embedding")} >= 0.35),
-          edges AS (SELECT id_a AS u, id_b AS v FROM pairs
-                    UNION SELECT id_b, id_a FROM pairs),
-          reach AS (
-            SELECT u, v FROM edges
-            UNION
-            SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-            WHERE e.v <> r.u),
-          comp AS (SELECT u AS id, LEAST(u, MIN(v)) AS component
-                   FROM reach GROUP BY u)
+          $componentCtes
           SELECT e.vec_id, COALESCE(c.component, e.vec_id) AS component,
                  COALESCE(c.component, e.vec_id) = e.vec_id AS keep
           FROM embeddings e LEFT JOIN comp c ON e.vec_id = c.id
@@ -2169,15 +2523,7 @@ object TextQueries {
             FROM embeddings a JOIN embeddings b
               ON a.label = b.label AND a.vec_id < b.vec_id
             WHERE ${cosSql("a.embedding", "b.embedding")} >= 0.35),
-          edges AS (SELECT id_a AS u, id_b AS v FROM pairs
-                    UNION SELECT id_b, id_a FROM pairs),
-          reach AS (
-            SELECT u, v FROM edges
-            UNION
-            SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-            WHERE e.v <> r.u),
-          comp AS (SELECT u AS id, LEAST(u, MIN(v)) AS component
-                   FROM reach GROUP BY u),
+          $componentCtes,
           assigned AS (
             SELECT e.vec_id, COALESCE(c.component, e.vec_id) AS component
             FROM embeddings e LEFT JOIN comp c ON e.vec_id = c.id),
@@ -2200,9 +2546,7 @@ object TextQueries {
             CAST(sum(len($toks)) AS BIGINT) AS n_tokens,
             CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
             CAST(count(DISTINCT source) AS BIGINT) AS n_sources,
-            CAST(sum(CASE WHEN len($toks) >= 10
-              AND CAST(len(list_filter($toks, w -> w IN ('the','a','of','and','to'))) AS DOUBLE) / len($toks) <= 0.5
-              AND CAST(len(list_distinct($toks)) AS DOUBLE) / len($toks) >= 0.3
+            CAST(sum(CASE WHEN ${qualityKeep(toks)}
               THEN 1 ELSE 0 END) AS BIGINT) AS n_quality_pass,
             CAST(count(DISTINCT md5(lower(array_to_string($toks, ' ')))) AS BIGINT) AS n_unique_docs
           FROM documents""",
@@ -2251,17 +2595,7 @@ object TextQueries {
             CAST(length(raw) - length(regexp_replace(raw, 'https?://[^\\s]+', '', 'g')) AS INT) AS n_url_chars
           FROM raw ORDER BY doc_id""",
     "q72_containment_join" ->
-      s"""WITH sh AS (
-            SELECT doc_id,
-              list_distinct(CASE WHEN len($toks) < 3 THEN [array_to_string($toks, ' ')]
-                ELSE list_transform(range(1, len($toks) - 1),
-                       i -> array_to_string(($toks)[i:i+2], ' ')) END) AS s
-            FROM documents)
-          SELECT a.doc_id AS id_l, b.doc_id AS id_r,
-            CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) / len(a.s) AS containment
-          FROM sh a JOIN sh b ON a.doc_id % 2 = 1 AND b.doc_id % 2 = 0
-          WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) / len(a.s) >= 0.7
-          ORDER BY id_l, id_r""",
+      containmentPairsSql,
     // q72's pairs rolled up per probe doc; clean docs kept via the left
     // join with a 0 default
     "q114_contamination_report" -> contaminationReportSql,
@@ -2269,17 +2603,7 @@ object TextQueries {
     "q115_contamination_report_prebuilt" -> contaminationReportSql,
     // the prebuilt path must emit the exact same containment pairs as q72
     "q75_containment_prebuilt" ->
-      s"""WITH sh AS (
-            SELECT doc_id,
-              list_distinct(CASE WHEN len($toks) < 3 THEN [array_to_string($toks, ' ')]
-                ELSE list_transform(range(1, len($toks) - 1),
-                       i -> array_to_string(($toks)[i:i+2], ' ')) END) AS s
-            FROM documents)
-          SELECT a.doc_id AS id_l, b.doc_id AS id_r,
-            CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) / len(a.s) AS containment
-          FROM sh a JOIN sh b ON a.doc_id % 2 = 1 AND b.doc_id % 2 = 0
-          WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) / len(a.s) >= 0.7
-          ORDER BY id_l, id_r""",
+      containmentPairsSql,
     "q69_embed_join" ->
       s"""SELECT a.vec_id AS id_l, b.vec_id AS id_r,
             ${cosSql("a.embedding", "b.embedding")} AS cos
@@ -2354,44 +2678,17 @@ object TextQueries {
           FROM dt d LEFT JOIN ka USING (doc_id)
           ORDER BY d.doc_id""",
     "q67_neardup_join" ->
-      s"""WITH sh AS (
-            SELECT doc_id,
-              list_distinct(CASE WHEN len($toks) < 3 THEN [array_to_string($toks, ' ')]
-                ELSE list_transform(range(1, len($toks) - 1),
-                       i -> array_to_string(($toks)[i:i+2], ' ')) END) AS s
-            FROM documents)
-          SELECT a.doc_id AS id_l, b.doc_id AS id_r,
-            CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-              / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) AS jaccard
-          FROM sh a JOIN sh b ON a.doc_id % 2 = 1 AND b.doc_id % 2 = 0
-          WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-              / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.8
-          ORDER BY id_l, id_r""",
+      neardupPairsSql,
     // the prebuilt path must emit the exact same pairs as q67
     "q74_neardup_prebuilt" ->
-      s"""WITH sh AS (
-            SELECT doc_id,
-              list_distinct(CASE WHEN len($toks) < 3 THEN [array_to_string($toks, ' ')]
-                ELSE list_transform(range(1, len($toks) - 1),
-                       i -> array_to_string(($toks)[i:i+2], ' ')) END) AS s
-            FROM documents)
-          SELECT a.doc_id AS id_l, b.doc_id AS id_r,
-            CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-              / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) AS jaccard
-          FROM sh a JOIN sh b ON a.doc_id % 2 = 1 AND b.doc_id % 2 = 0
-          WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-              / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.8
-          ORDER BY id_l, id_r""",
+      neardupPairsSql,
     // incremental mirror: stage CTEs compose exactly like
     // Corpus.cleanIncremental (incoming = odd ids, history = even ids)
     "q68_incremental_clean" ->
       s"""WITH RECURSIVE t AS (
             SELECT doc_id, $toks AS tk FROM documents),
           q AS (
-            SELECT doc_id, tk,
-              (len(tk) >= 10
-               AND CAST(len(list_filter(tk, w -> w IN ('the','a','of','and','to'))) AS DOUBLE) / len(tk) <= 0.5
-               AND CAST(len(list_distinct(tk)) AS DOUBLE) / len(tk) >= 0.3) AS kq
+            SELECT doc_id, tk, (${qualityKeep("tk")}) AS kq
             FROM t WHERE doc_id % 2 = 1),
           hfp AS (
             SELECT DISTINCT md5(lower(array_to_string(tk, ' '))) AS fp
@@ -2404,18 +2701,15 @@ object TextQueries {
             FROM q WHERE kq),
           mksh AS (
             SELECT doc_id,
-              list_distinct(CASE WHEN len(tk) < 3 THEN [array_to_string(tk, ' ')]
-                ELSE list_transform(range(1, len(tk) - 1), i -> array_to_string((tk)[i:i+2], ' ')) END) AS s
+              ${shingleSet("tk")} AS s
             FROM e WHERE ke),
           hsh AS (
             SELECT doc_id,
-              list_distinct(CASE WHEN len(tk) < 3 THEN [array_to_string(tk, ' ')]
-                ELSE list_transform(range(1, len(tk) - 1), i -> array_to_string((tk)[i:i+2], ' ')) END) AS s
+              ${shingleSet("tk")} AS s
             FROM t WHERE doc_id % 2 = 0),
           crossdup AS (
-            SELECT DISTINCT i.doc_id FROM mksh i JOIN hsh h ON true
-            WHERE CAST(len(list_intersect(i.s, h.s)) AS DOUBLE)
-                / (len(i.s) + len(h.s) - len(list_intersect(i.s, h.s))) >= 0.5),
+            SELECT DISTINCT a.doc_id FROM mksh a JOIN hsh b ON true
+            WHERE $jaccardSql >= 0.5),
           hh AS (
             SELECT doc_id, ke,
               ke AND doc_id NOT IN (SELECT doc_id FROM crossdup) AS kh
@@ -2426,15 +2720,8 @@ object TextQueries {
           pairs AS (
             SELECT a.doc_id AS id_a, b.doc_id AS id_b
             FROM sh2 a JOIN sh2 b ON a.doc_id < b.doc_id
-            WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-                / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.5),
-          edges AS (SELECT id_a AS u, id_b AS v FROM pairs
-                    UNION SELECT id_b, id_a FROM pairs),
-          reach AS (SELECT u, v FROM edges UNION
-                    SELECT r.u, e2.v FROM reach r JOIN edges e2 ON r.v = e2.u
-                    WHERE e2.v <> r.u),
-          comp AS (SELECT u AS id, LEAST(u, MIN(v)) AS component
-                   FROM reach GROUP BY u)
+            WHERE $jaccardSql >= 0.5),
+          $componentCtes
           SELECT d.doc_id, q.kq AS keep_quality,
             COALESCE(e.ke, false) AS keep_exact,
             COALESCE(hh.kh, false) AS keep_vs_history,
@@ -2448,182 +2735,33 @@ object TextQueries {
           ORDER BY d.doc_id""",
     // assembly mirror: mixture filter → q49's clean stages → budget
     // cumulative window → chunk expansion, one staged CTE
-    "q73_assemble" ->
-      s"""WITH RECURSIVE t AS (
-            SELECT doc_id, lang, $toks AS tk FROM documents
-            WHERE lang <> 'en'
-               OR substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) < '80000000'),
-          q AS (
-            SELECT doc_id, lang, tk,
-              (len(tk) >= 10
-               AND CAST(len(list_filter(tk, w -> w IN ('the','a','of','and','to'))) AS DOUBLE) / len(tk) <= 0.5
-               AND CAST(len(list_distinct(tk)) AS DOUBLE) / len(tk) >= 0.3) AS kq
-            FROM t),
-          e AS (
-            SELECT doc_id, lang, tk,
-              doc_id = MIN(doc_id) OVER (PARTITION BY md5(lower(array_to_string(tk, ' ')))) AS ke
-            FROM q WHERE kq),
-          sh AS (
-            SELECT doc_id, lang,
-              list_distinct(CASE WHEN len(tk) < 3 THEN [array_to_string(tk, ' ')]
-                ELSE list_transform(range(1, len(tk) - 1), i -> array_to_string((tk)[i:i+2], ' ')) END) AS s
-            FROM e WHERE ke),
-          pairs AS (
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b
-            FROM sh a JOIN sh b ON a.lang = b.lang AND a.doc_id < b.doc_id
-            WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-                / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.5),
-          edges AS (SELECT id_a AS u, id_b AS v FROM pairs
-                    UNION SELECT id_b, id_a FROM pairs),
-          reach AS (SELECT u, v FROM edges UNION
-                    SELECT r.u, e2.v FROM reach r JOIN edges e2 ON r.v = e2.u
-                    WHERE e2.v <> r.u),
-          comp AS (SELECT u AS id, LEAST(u, MIN(v)) AS component
-                   FROM reach GROUP BY u),
-          kept AS (
-            SELECT e.doc_id, e.tk FROM e LEFT JOIN comp c ON e.doc_id = c.id
-            WHERE e.ke AND COALESCE(c.component, e.doc_id) = e.doc_id),
-          bud AS (
-            SELECT doc_id, tk FROM (
-              SELECT doc_id, tk, CAST(len(tk) AS BIGINT) AS n,
-                SUM(CAST(len(tk) AS BIGINT)) OVER (
-                  ORDER BY substr(md5(CAST(doc_id AS VARCHAR)), 1, 8), doc_id
-                  ROWS UNBOUNDED PRECEDING) AS cum
-              FROM kept)
-            WHERE cum - n < 5000)
-          SELECT doc_id, CAST(s // 24 AS INT) AS chunk_id,
-            array_to_string(tk[s + 1 : s + 32], ' ') AS chunk_text,
-            CAST(len(tk[s + 1 : s + 32]) AS INT) AS n_chunk_tokens
-          FROM bud, UNNEST(range(0, greatest(len(tk) - 8, 1), 24)) AS u(s)
-          ORDER BY doc_id, chunk_id""",
+    "q73_assemble" -> assembleSql("", "kept"),
     // q73's staged mirror plus a decontamination CTE between kept and bud
-    "q76_assemble_decon" ->
-      s"""WITH RECURSIVE t AS (
-            SELECT doc_id, lang, $toks AS tk FROM documents
-            WHERE lang <> 'en'
-               OR substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) < '80000000'),
-          q AS (
-            SELECT doc_id, lang, tk,
-              (len(tk) >= 10
-               AND CAST(len(list_filter(tk, w -> w IN ('the','a','of','and','to'))) AS DOUBLE) / len(tk) <= 0.5
-               AND CAST(len(list_distinct(tk)) AS DOUBLE) / len(tk) >= 0.3) AS kq
-            FROM t),
-          e AS (
-            SELECT doc_id, lang, tk,
-              doc_id = MIN(doc_id) OVER (PARTITION BY md5(lower(array_to_string(tk, ' ')))) AS ke
-            FROM q WHERE kq),
-          sh AS (
-            SELECT doc_id, lang,
-              list_distinct(CASE WHEN len(tk) < 3 THEN [array_to_string(tk, ' ')]
-                ELSE list_transform(range(1, len(tk) - 1), i -> array_to_string((tk)[i:i+2], ' ')) END) AS s
-            FROM e WHERE ke),
-          pairs AS (
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b
-            FROM sh a JOIN sh b ON a.lang = b.lang AND a.doc_id < b.doc_id
-            WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-                / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.5),
-          edges AS (SELECT id_a AS u, id_b AS v FROM pairs
-                    UNION SELECT id_b, id_a FROM pairs),
-          reach AS (SELECT u, v FROM edges UNION
-                    SELECT r.u, e2.v FROM reach r JOIN edges e2 ON r.v = e2.u
-                    WHERE e2.v <> r.u),
-          comp AS (SELECT u AS id, LEAST(u, MIN(v)) AS component
-                   FROM reach GROUP BY u),
-          kept AS (
-            SELECT e.doc_id, e.tk FROM e LEFT JOIN comp c ON e.doc_id = c.id
-            WHERE e.ke AND COALESCE(c.component, e.doc_id) = e.doc_id),
-          ksh AS (
-            SELECT doc_id, tk,
-              list_distinct(CASE WHEN len(tk) < 3 THEN [array_to_string(tk, ' ')]
-                ELSE list_transform(range(1, len(tk) - 1), i -> array_to_string((tk)[i:i+2], ' ')) END) AS s
-            FROM kept),
+    "q76_assemble_decon" -> assembleSql(
+      s"""ksh AS (SELECT doc_id, tk, ${shingleSet("tk")} AS s FROM kept),
           psh AS (
-            SELECT list_distinct(CASE WHEN len($toks) < 3 THEN [array_to_string($toks, ' ')]
-                ELSE list_transform(range(1, len($toks) - 1), i -> array_to_string(($toks)[i:i+2], ' ')) END) AS s
+            SELECT ${shingleSet(toks)} AS s
             FROM documents WHERE doc_id % 10 = 3),
           decon AS (
             -- ANTI JOIN, not NOT EXISTS: DuckDB cannot bind correlated
             -- columns inside list_intersect in a subquery
             SELECT k.doc_id, k.tk FROM ksh k
             ANTI JOIN psh p
-              ON CAST(len(list_intersect(p.s, k.s)) AS DOUBLE) / len(p.s) >= 0.7),
-          bud AS (
-            SELECT doc_id, tk FROM (
-              SELECT doc_id, tk, CAST(len(tk) AS BIGINT) AS n,
-                SUM(CAST(len(tk) AS BIGINT)) OVER (
-                  ORDER BY substr(md5(CAST(doc_id AS VARCHAR)), 1, 8), doc_id
-                  ROWS UNBOUNDED PRECEDING) AS cum
-              FROM decon)
-            WHERE cum - n < 5000)
-          SELECT doc_id, CAST(s // 24 AS INT) AS chunk_id,
-            array_to_string(tk[s + 1 : s + 32], ' ') AS chunk_text,
-            CAST(len(tk[s + 1 : s + 32]) AS INT) AS n_chunk_tokens
-          FROM bud, UNNEST(range(0, greatest(len(tk) - 8, 1), 24)) AS u(s)
-          ORDER BY doc_id, chunk_id""",
+              ON CAST(len(list_intersect(p.s, k.s)) AS DOUBLE) / len(p.s) >= 0.7),""",
+      "decon"),
     // full pipeline mirror: stage CTEs compose exactly like Corpus.clean
     "q49_corpus_clean" ->
       s"""WITH RECURSIVE t AS (
             SELECT doc_id, lang, $toks AS tk FROM documents),
-          q AS (
-            SELECT doc_id, lang, tk,
-              (len(tk) >= 10
-               AND CAST(len(list_filter(tk, w -> w IN ('the','a','of','and','to'))) AS DOUBLE) / len(tk) <= 0.5
-               AND CAST(len(list_distinct(tk)) AS DOUBLE) / len(tk) >= 0.3) AS kq
-            FROM t),
-          e AS (
-            SELECT doc_id, lang, tk,
-              doc_id = MIN(doc_id) OVER (PARTITION BY md5(lower(array_to_string(tk, ' ')))) AS ke
-            FROM q WHERE kq),
-          sh AS (
-            SELECT doc_id, lang,
-              list_distinct(CASE WHEN len(tk) < 3 THEN [array_to_string(tk, ' ')]
-                ELSE list_transform(range(1, len(tk) - 1), i -> array_to_string((tk)[i:i+2], ' ')) END) AS s
-            FROM e WHERE ke),
-          pairs AS (
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b
-            FROM sh a JOIN sh b ON a.lang = b.lang AND a.doc_id < b.doc_id
-            WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-                / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.5),
-          edges AS (SELECT id_a AS u, id_b AS v FROM pairs
-                    UNION SELECT id_b, id_a FROM pairs),
-          reach AS (SELECT u, v FROM edges UNION
-                    SELECT r.u, e2.v FROM reach r JOIN edges e2 ON r.v = e2.u
-                    WHERE e2.v <> r.u),
-          comp AS (SELECT u AS id, LEAST(u, MIN(v)) AS component
-                   FROM reach GROUP BY u)
-          SELECT d.doc_id, q.kq AS keep_quality,
-            COALESCE(e.ke, false) AS keep_exact,
-            COALESCE(e.ke AND COALESCE(c.component, d.doc_id) = d.doc_id, false) AS keep
-          FROM documents d
-          LEFT JOIN q ON d.doc_id = q.doc_id
-          LEFT JOIN e ON d.doc_id = e.doc_id
-          LEFT JOIN comp c ON d.doc_id = c.id
-          ORDER BY d.doc_id""",
+          $cleanChainCtes
+          $cleanVerdictSql""",
 
     // q97's substring rewrite feeding q49's clean chain — the Spark side
     // composes the same two oracle-gated operators
     "q104_clean_substr" ->
       s"""WITH RECURSIVE t0 AS (
             SELECT doc_id, $toks AS tk FROM documents),
-          occ AS (
-            SELECT doc_id, s AS pos, array_to_string(tk[s + 1 : s + 8], ' ') AS gram
-            FROM t0, UNNEST(range(greatest(len(tk) - 7, 0))) AS u(s)),
-          marked AS (
-            SELECT doc_id, pos,
-              count(*) OVER (PARTITION BY gram) AS cnt,
-              row_number() OVER (PARTITION BY gram ORDER BY doc_id, pos) AS rn
-            FROM occ),
-          removable AS (SELECT doc_id, pos FROM marked WHERE cnt >= 2 AND rn > 1),
-          tok AS (SELECT doc_id, s AS pos, tk[s + 1] AS w
-                  FROM t0, UNNEST(range(len(tk))) AS u(s)),
-          ev AS (
-            SELECT doc_id, pos, w, 0 AS s FROM tok
-            UNION ALL SELECT doc_id, pos, NULL, 1 FROM removable),
-          fl AS (
-            SELECT doc_id, pos, w, s,
-              max(s) OVER (PARTITION BY doc_id ORDER BY pos
-                           RANGE BETWEEN 7 PRECEDING AND CURRENT ROW) AS rem
-            FROM ev),
+          ${substringMarkCtes("t0")},
           rw AS (
             SELECT doc_id,
               coalesce(string_agg(w, ' ' ORDER BY pos) FILTER (WHERE rem = 0), '') AS ct
@@ -2632,33 +2770,7 @@ object TextQueries {
             SELECT r.doc_id, d.lang,
               regexp_split_to_array(trim(r.ct), '\\s+') AS tk
             FROM rw r JOIN documents d USING (doc_id)),
-          q AS (
-            SELECT doc_id, lang, tk,
-              (len(tk) >= 10
-               AND CAST(len(list_filter(tk, w -> w IN ('the','a','of','and','to'))) AS DOUBLE) / len(tk) <= 0.5
-               AND CAST(len(list_distinct(tk)) AS DOUBLE) / len(tk) >= 0.3) AS kq
-            FROM t),
-          e AS (
-            SELECT doc_id, lang, tk,
-              doc_id = MIN(doc_id) OVER (PARTITION BY md5(lower(array_to_string(tk, ' ')))) AS ke
-            FROM q WHERE kq),
-          sh AS (
-            SELECT doc_id, lang,
-              list_distinct(CASE WHEN len(tk) < 3 THEN [array_to_string(tk, ' ')]
-                ELSE list_transform(range(1, len(tk) - 1), i -> array_to_string((tk)[i:i+2], ' ')) END) AS s
-            FROM e WHERE ke),
-          pairs AS (
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b
-            FROM sh a JOIN sh b ON a.lang = b.lang AND a.doc_id < b.doc_id
-            WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-                / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.5),
-          edges AS (SELECT id_a AS u, id_b AS v FROM pairs
-                    UNION SELECT id_b, id_a FROM pairs),
-          reach AS (SELECT u, v FROM edges UNION
-                    SELECT r.u, e2.v FROM reach r JOIN edges e2 ON r.v = e2.u
-                    WHERE e2.v <> r.u),
-          comp AS (SELECT u AS id, LEAST(u, MIN(v)) AS component
-                   FROM reach GROUP BY u)
+          $cleanChainCtes
           SELECT t.doc_id, q.kq AS keep_quality,
             COALESCE(e.ke, false) AS keep_exact,
             COALESCE(e.ke AND COALESCE(c.component, t.doc_id) = t.doc_id, false) AS keep
@@ -2739,17 +2851,7 @@ object TextQueries {
                AND NOT contains(lower(line), 'javascript')
                AND NOT contains(lower(line), '{')) AS keep
             FROM lines),
-          agged AS (
-            SELECT doc_id,
-              CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-              CAST(sum(CASE WHEN keep THEN 0 ELSE 1 END) AS BIGINT) AS n_dropped,
-              string_agg(CASE WHEN keep THEN line END, chr(10) ORDER BY pos)
-                AS clean_text
-            FROM flagged GROUP BY doc_id)
-          SELECT d.doc_id, COALESCE(a.clean_text, '') AS clean_text,
-            COALESCE(a.n_kept, 0) AS n_kept,
-            COALESCE(a.n_dropped, 0) AS n_dropped
-          FROM documents d LEFT JOIN agged a USING (doc_id)
+          ${reassembledSql("line", "chr(10)", "documents d")}
           ORDER BY d.doc_id""",
 
     // q49's staged CTE with the q79 repetition CTEs merged: kq gains the
@@ -2794,43 +2896,14 @@ object TextQueries {
             SELECT doc_id, lang, $toks AS tk FROM documents),
           q AS (
             SELECT t.doc_id, lang, tk,
-              (len(tk) >= 10
-               AND CAST(len(list_filter(tk, w -> w IN ('the','a','of','and','to'))) AS DOUBLE) / len(tk) <= 0.5
-               AND CAST(len(list_distinct(tk)) AS DOUBLE) / len(tk) >= 0.3
+              (${qualityKeep("tk")}
                AND COALESCE(l.dlf, 0.0) <= 0.3
                AND COALESCE(b.tbf, 0.0) <= 0.1) AS kq
             FROM t
             LEFT JOIN line_sig l ON t.doc_id = l.doc_id
             LEFT JOIN big_sig b ON t.doc_id = b.doc_id),
-          e AS (
-            SELECT doc_id, lang, tk,
-              doc_id = MIN(doc_id) OVER (PARTITION BY md5(lower(array_to_string(tk, ' ')))) AS ke
-            FROM q WHERE kq),
-          sh AS (
-            SELECT doc_id, lang,
-              list_distinct(CASE WHEN len(tk) < 3 THEN [array_to_string(tk, ' ')]
-                ELSE list_transform(range(1, len(tk) - 1), i -> array_to_string((tk)[i:i+2], ' ')) END) AS s
-            FROM e WHERE ke),
-          pairs AS (
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b
-            FROM sh a JOIN sh b ON a.lang = b.lang AND a.doc_id < b.doc_id
-            WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-                / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.5),
-          edges AS (SELECT id_a AS u, id_b AS v FROM pairs
-                    UNION SELECT id_b, id_a FROM pairs),
-          reach AS (SELECT u, v FROM edges UNION
-                    SELECT r.u, e2.v FROM reach r JOIN edges e2 ON r.v = e2.u
-                    WHERE e2.v <> r.u),
-          comp AS (SELECT u AS id, LEAST(u, MIN(v)) AS component
-                   FROM reach GROUP BY u)
-          SELECT d.doc_id, q.kq AS keep_quality,
-            COALESCE(e.ke, false) AS keep_exact,
-            COALESCE(e.ke AND COALESCE(c.component, d.doc_id) = d.doc_id, false) AS keep
-          FROM documents d
-          LEFT JOIN q ON d.doc_id = q.doc_id
-          LEFT JOIN e ON d.doc_id = e.doc_id
-          LEFT JOIN comp c ON d.doc_id = c.id
-          ORDER BY d.doc_id""",
+          $dedupChainCtes
+          $cleanVerdictSql""",
 
     // integer df counting + one double division per doc — bit-identical
     // across engines (the q58 rational discipline)
@@ -2857,11 +2930,7 @@ object TextQueries {
     // element-wise decimal sums: associative, so engine-internal
     // aggregation order cannot change the result
     "q87_embed_centroids" ->
-      s"""WITH ex AS (
-            SELECT label, p['pos'] AS pos, p['v'] AS v FROM (
-              SELECT label, unnest(list_transform(range(1, len(embedding) + 1),
-                i -> {'pos': i - 1, 'v': embedding[i]})) AS p
-              FROM embeddings WHERE embedding IS NOT NULL)),
+      s"""WITH $embedPosCte,
           sums AS (
             SELECT label, CAST(pos AS INT) AS pos,
               CAST(sum(CAST(round(CAST(v AS DOUBLE) * 1000000, 0) AS BIGINT))
@@ -2892,14 +2961,7 @@ object TextQueries {
     // q82's CTE with a history exclusion: odd docs are the batch, even
     // docs' paragraphs are settled history
     "q85_paragraph_dedup_inc" ->
-      s"""WITH paras AS (
-            SELECT doc_id, p['pos'] AS pos, p['par'] AS par FROM (
-              SELECT doc_id, unnest(list_transform(range(1, len(ps) + 1),
-                i -> {'pos': i, 'par': trim(ps[i])})) AS p
-              FROM (SELECT doc_id,
-                      string_split_regex(text, '\\n{2,}') AS ps
-                    FROM documents))
-            WHERE len(p['par']) > 0),
+      s"""WITH $parasCte,
           hist AS (SELECT DISTINCT par FROM paras WHERE doc_id % 2 = 0),
           bp AS (SELECT * FROM paras WHERE doc_id % 2 = 1),
           fresh AS (SELECT * FROM bp WHERE par NOT IN (SELECT par FROM hist)),
@@ -2912,32 +2974,15 @@ object TextQueries {
                AND struct_extract(f.fi, 'id') = b.doc_id
                AND struct_extract(f.fi, 'pos') = b.pos) AS keep
             FROM bp b LEFT JOIN firsts f ON b.par = f.par),
-          agged AS (
-            SELECT doc_id,
-              CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-              CAST(sum(CASE WHEN keep THEN 0 ELSE 1 END) AS BIGINT) AS n_dropped,
-              string_agg(CASE WHEN keep THEN par END, chr(10) || chr(10)
-                ORDER BY pos) AS clean_text
-            FROM flagged GROUP BY doc_id)
-          SELECT d.doc_id, COALESCE(a.clean_text, '') AS clean_text,
-            COALESCE(a.n_kept, 0) AS n_kept,
-            COALESCE(a.n_dropped, 0) AS n_dropped
-          FROM (SELECT doc_id FROM documents WHERE doc_id % 2 = 1) d
-          LEFT JOIN agged a USING (doc_id)
+          ${reassembledSql("par", "chr(10) || chr(10)",
+            "(SELECT doc_id FROM documents WHERE doc_id % 2 = 1) d")}
           ORDER BY d.doc_id""",
 
     // mirrors Dedup.paragraphDedupe: blank-line paragraph split, global
     // first occurrence by (doc_id, pos) struct min, order-preserving
     // re-assembly of survivors
     "q82_paragraph_dedup" ->
-      s"""WITH paras AS (
-            SELECT doc_id, p['pos'] AS pos, p['par'] AS par FROM (
-              SELECT doc_id, unnest(list_transform(range(1, len(ps) + 1),
-                i -> {'pos': i, 'par': trim(ps[i])})) AS p
-              FROM (SELECT doc_id,
-                      string_split_regex(text, '\\n{2,}') AS ps
-                    FROM documents))
-            WHERE len(p['par']) > 0),
+      s"""WITH $parasCte,
           firsts AS (
             SELECT par, min({'id': doc_id, 'pos': pos}) AS fi
             FROM paras GROUP BY par),
@@ -2946,17 +2991,7 @@ object TextQueries {
               (struct_extract(fi, 'id') = p.doc_id
                AND struct_extract(fi, 'pos') = p.pos) AS keep
             FROM paras p JOIN firsts f ON p.par = f.par),
-          agged AS (
-            SELECT doc_id,
-              CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-              CAST(sum(CASE WHEN keep THEN 0 ELSE 1 END) AS BIGINT) AS n_dropped,
-              string_agg(CASE WHEN keep THEN par END, chr(10) || chr(10)
-                ORDER BY pos) AS clean_text
-            FROM flagged GROUP BY doc_id)
-          SELECT d.doc_id, COALESCE(a.clean_text, '') AS clean_text,
-            COALESCE(a.n_kept, 0) AS n_kept,
-            COALESCE(a.n_dropped, 0) AS n_dropped
-          FROM documents d LEFT JOIN agged a USING (doc_id)
+          ${reassembledSql("par", "chr(10) || chr(10)", "documents d")}
           ORDER BY d.doc_id""",
 
     // confirm=true makes the bloom pre-filter semantically invisible:
@@ -2974,13 +3009,7 @@ object TextQueries {
     // from integer-division sequence bounds (// floors on BIGINT — same
     // as Spark's `div`); all arithmetic stays integral
     "q88_pack_sequences" ->
-      s"""WITH c AS (
-            SELECT doc_id, n,
-              CAST(COALESCE(SUM(n) OVER (ORDER BY doc_id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum0
-            FROM (SELECT doc_id, CAST(len($toks) AS BIGINT) AS n
-                  FROM documents WHERE text IS NOT NULL)
-            WHERE n > 0)
+      s"""WITH $packOffsetsCte
           SELECT doc_id, s.seq AS seq,
             GREATEST(s.seq * 1024 - cum0, 0) AS doc_tok_start,
             LEAST(n, (s.seq + 1) * 1024 - cum0) AS doc_tok_end,
@@ -2990,13 +3019,7 @@ object TextQueries {
           ORDER BY doc_id, seq""",
 
     "q89_pack_greedy" ->
-      s"""WITH c AS (
-            SELECT doc_id, n,
-              CAST(COALESCE(SUM(n) OVER (ORDER BY doc_id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum0
-            FROM (SELECT doc_id, CAST(len($toks) AS BIGINT) AS n
-                  FROM documents WHERE text IS NOT NULL)
-            WHERE n > 0)
+      s"""WITH $packOffsetsCte
           SELECT doc_id, CAST(cum0 // 1024 AS BIGINT) AS seq,
             CAST(cum0 - (cum0 // 1024) * 1024 AS BIGINT) AS seq_tok_start,
             n AS n_tokens
@@ -3009,10 +3032,7 @@ object TextQueries {
                      FROM documents WHERE text IS NOT NULL),
           k AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n,
                   list_min(list_transform(
-                    list_distinct(CASE WHEN len(toks) < 3
-                      THEN [array_to_string(toks, ' ')]
-                      ELSE list_transform(range(1, len(toks) - 1),
-                        i -> array_to_string(toks[i:i+2], ' ')) END),
+                    ${shingleSet("toks")},
                     s -> md5(s))) AS ck
                 FROM t),
           c AS (SELECT doc_id, n,
@@ -3028,13 +3048,7 @@ object TextQueries {
     // the q89 map re-derived, then the report aggregates: per-seq fill,
     // overflow (greedy boundary straddle) pads nothing, integer per-mille
     "q228_packing_report" ->
-      s"""WITH c AS (
-            SELECT doc_id, n,
-              CAST(COALESCE(SUM(n) OVER (ORDER BY doc_id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum0
-            FROM (SELECT doc_id, CAST(len($toks) AS BIGINT) AS n
-                  FROM documents WHERE text IS NOT NULL)
-            WHERE n > 0),
+      s"""WITH $packOffsetsCte,
           s AS (
             SELECT cum0 // 1024 AS seq, CAST(sum(n) AS BIGINT) AS fill,
               CAST(count(*) AS BIGINT) AS docs
@@ -3113,43 +3127,7 @@ object TextQueries {
     // sums against the float-rounded centroid (associative integers —
     // fold order cannot break parity)
     "q95_ivf_cell_stats" ->
-      s"""WITH ex AS (
-            SELECT label, p['pos'] AS pos, p['v'] AS v FROM (
-              SELECT label, unnest(list_transform(range(1, len(embedding) + 1),
-                i -> {'pos': i - 1, 'v': embedding[i]})) AS p
-              FROM embeddings WHERE embedding IS NOT NULL)),
-          sums AS (
-            SELECT label, pos,
-              CAST(sum(CAST(round(CAST(v AS DOUBLE) * 1000000, 0) AS BIGINT))
-                AS BIGINT) AS mic
-            FROM ex GROUP BY label, pos),
-          cnt AS (
-            SELECT label, CAST(count(*) AS BIGINT) AS n
-            FROM embeddings WHERE embedding IS NOT NULL GROUP BY label),
-          mm AS (
-            SELECT s.label, s.pos,
-              CAST(s.mic AS DOUBLE) / 1000000 / CAST(c.n AS DOUBLE) AS m
-            FROM sums s JOIN cnt c USING (label)),
-          cent AS (
-            SELECT label,
-              list(CAST(CAST(m AS REAL) AS DOUBLE) ORDER BY pos) AS cf,
-              list_sum(list_transform(list(m ORDER BY pos), x -> x * x)) / 2 AS hn
-            FROM mm GROUP BY label),
-          cellmap AS (
-            SELECT label, cf, hn,
-              CAST(ROW_NUMBER() OVER (ORDER BY label) - 1 AS INT) AS cell
-            FROM cent),
-          scored AS (
-            SELECT e.vec_id, c.cell,
-              list_sum(list_transform(list_zip(c.cf, e.embedding),
-                x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))) - c.hn AS score
-            FROM embeddings e CROSS JOIN cellmap c
-            WHERE e.embedding IS NOT NULL),
-          assigned AS (
-            SELECT vec_id, cell FROM (
-              SELECT vec_id, cell, ROW_NUMBER() OVER (
-                PARTITION BY vec_id ORDER BY score DESC, cell ASC) AS rn
-              FROM scored) WHERE rn = 1)
+      s"""WITH $ivfAssignCtes
           SELECT s.cell AS ivf_cell, CAST(count(*) AS BIGINT) AS n_vectors,
             CAST(sum(CAST(round(${cosSql("e.embedding", "c.cf")} * 1000000, 0)
               AS BIGINT)) AS BIGINT) AS cos_sum_micro
@@ -3164,43 +3142,7 @@ object TextQueries {
     // dot − |c|²/2, ties to the lowest cell id; then q44's recursive-CTE
     // components over within-cell cosine pairs
     "q91_semantic_dedup" ->
-      s"""WITH RECURSIVE ex AS (
-            SELECT label, p['pos'] AS pos, p['v'] AS v FROM (
-              SELECT label, unnest(list_transform(range(1, len(embedding) + 1),
-                i -> {'pos': i - 1, 'v': embedding[i]})) AS p
-              FROM embeddings WHERE embedding IS NOT NULL)),
-          sums AS (
-            SELECT label, pos,
-              CAST(sum(CAST(round(CAST(v AS DOUBLE) * 1000000, 0) AS BIGINT))
-                AS BIGINT) AS mic
-            FROM ex GROUP BY label, pos),
-          cnt AS (
-            SELECT label, CAST(count(*) AS BIGINT) AS n
-            FROM embeddings WHERE embedding IS NOT NULL GROUP BY label),
-          mm AS (
-            SELECT s.label, s.pos,
-              CAST(s.mic AS DOUBLE) / 1000000 / CAST(c.n AS DOUBLE) AS m
-            FROM sums s JOIN cnt c USING (label)),
-          cent AS (
-            SELECT label,
-              list(CAST(CAST(m AS REAL) AS DOUBLE) ORDER BY pos) AS cf,
-              list_sum(list_transform(list(m ORDER BY pos), x -> x * x)) / 2 AS hn
-            FROM mm GROUP BY label),
-          cellmap AS (
-            SELECT label, cf, hn,
-              CAST(ROW_NUMBER() OVER (ORDER BY label) - 1 AS INT) AS cell
-            FROM cent),
-          scored AS (
-            SELECT e.vec_id, c.cell,
-              list_sum(list_transform(list_zip(c.cf, e.embedding),
-                x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))) - c.hn AS score
-            FROM embeddings e CROSS JOIN cellmap c
-            WHERE e.embedding IS NOT NULL),
-          assigned AS (
-            SELECT vec_id, cell FROM (
-              SELECT vec_id, cell, ROW_NUMBER() OVER (
-                PARTITION BY vec_id ORDER BY score DESC, cell ASC) AS rn
-              FROM scored) WHERE rn = 1),
+      s"""WITH RECURSIVE $ivfAssignCtes,
           pairs AS (
             SELECT a.vec_id AS id_a, b.vec_id AS id_b
             FROM (SELECT e.vec_id, e.embedding, s.cell
@@ -3209,15 +3151,7 @@ object TextQueries {
                   FROM embeddings e JOIN assigned s USING (vec_id)) b
               ON a.cell = b.cell AND a.vec_id < b.vec_id
             WHERE ${cosSql("a.embedding", "b.embedding")} >= 0.35),
-          edges AS (SELECT id_a AS u, id_b AS v FROM pairs
-                    UNION SELECT id_b, id_a FROM pairs),
-          reach AS (
-            SELECT u, v FROM edges
-            UNION
-            SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-            WHERE e.v <> r.u),
-          comp AS (SELECT u AS id, LEAST(u, MIN(v)) AS component
-                   FROM reach GROUP BY u)
+          $componentCtes
           SELECT e.vec_id, s.cell AS ivf_cell,
             COALESCE(c.component, e.vec_id) AS component,
             COALESCE(c.component, e.vec_id) = e.vec_id AS keep
@@ -3229,43 +3163,7 @@ object TextQueries {
     // with a same-cell history (even ids) neighbor >= t, survivors get
     // q44's recursive-CTE components within the batch
     "q109_semantic_dedup_inc" ->
-      s"""WITH RECURSIVE ex AS (
-            SELECT label, p['pos'] AS pos, p['v'] AS v FROM (
-              SELECT label, unnest(list_transform(range(1, len(embedding) + 1),
-                i -> {'pos': i - 1, 'v': embedding[i]})) AS p
-              FROM embeddings WHERE embedding IS NOT NULL)),
-          sums AS (
-            SELECT label, pos,
-              CAST(sum(CAST(round(CAST(v AS DOUBLE) * 1000000, 0) AS BIGINT))
-                AS BIGINT) AS mic
-            FROM ex GROUP BY label, pos),
-          cnt AS (
-            SELECT label, CAST(count(*) AS BIGINT) AS n
-            FROM embeddings WHERE embedding IS NOT NULL GROUP BY label),
-          mm AS (
-            SELECT s.label, s.pos,
-              CAST(s.mic AS DOUBLE) / 1000000 / CAST(c.n AS DOUBLE) AS m
-            FROM sums s JOIN cnt c USING (label)),
-          cent AS (
-            SELECT label,
-              list(CAST(CAST(m AS REAL) AS DOUBLE) ORDER BY pos) AS cf,
-              list_sum(list_transform(list(m ORDER BY pos), x -> x * x)) / 2 AS hn
-            FROM mm GROUP BY label),
-          cellmap AS (
-            SELECT label, cf, hn,
-              CAST(ROW_NUMBER() OVER (ORDER BY label) - 1 AS INT) AS cell
-            FROM cent),
-          scored AS (
-            SELECT e.vec_id, c.cell,
-              list_sum(list_transform(list_zip(c.cf, e.embedding),
-                x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))) - c.hn AS score
-            FROM embeddings e CROSS JOIN cellmap c
-            WHERE e.embedding IS NOT NULL),
-          assigned AS (
-            SELECT vec_id, cell FROM (
-              SELECT vec_id, cell, ROW_NUMBER() OVER (
-                PARTITION BY vec_id ORDER BY score DESC, cell ASC) AS rn
-              FROM scored) WHERE rn = 1),
+      s"""WITH RECURSIVE $ivfAssignCtes,
           av AS (
             SELECT e.vec_id, e.embedding, s.cell
             FROM embeddings e JOIN assigned s USING (vec_id)),
@@ -3281,15 +3179,7 @@ object TextQueries {
               AND a.vec_id NOT IN (SELECT vec_id FROM histdup)
               AND b.vec_id NOT IN (SELECT vec_id FROM histdup)
               AND ${cosSql("a.embedding", "b.embedding")} >= 0.35),
-          edges AS (SELECT id_a AS u, id_b AS v FROM pairs
-                    UNION SELECT id_b, id_a FROM pairs),
-          reach AS (
-            SELECT u, v FROM edges
-            UNION
-            SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-            WHERE e.v <> r.u),
-          comp AS (SELECT u AS id, LEAST(u, MIN(v)) AS component
-                   FROM reach GROUP BY u)
+          $componentCtes
           SELECT e.vec_id, s.cell AS ivf_cell,
             (h.vec_id IS NULL) AS keep_vs_history,
             COALESCE(c.component, e.vec_id) AS component,
@@ -3311,15 +3201,7 @@ object TextQueries {
               ON a.label = b.label AND a.vec_id < b.vec_id
             WHERE a.embedding IS NOT NULL AND b.embedding IS NOT NULL
               AND ${cosSql("a.embedding", "b.embedding")} >= 0.35),
-          edges AS (SELECT id_a AS u, id_b AS v FROM pairs
-                    UNION SELECT id_b, id_a FROM pairs),
-          reach AS (
-            SELECT u, v FROM edges
-            UNION
-            SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-            WHERE e.v <> r.u),
-          comp AS (SELECT u AS id, LEAST(u, MIN(v)) AS component
-                   FROM reach GROUP BY u),
+          $componentCtes,
           labeled AS (
             SELECT e.vec_id,
               COALESCE(c.component, e.vec_id) AS component,
@@ -3339,12 +3221,7 @@ object TextQueries {
     // the trainer replayed stage by stage (see bpeCtes); ranks stitch the
     // per-stage best-pair rows back together
     "q111_bpe_merges" ->
-      s"""WITH ${bpeCtes(8)}
-          SELECT CAST(rank AS INT) AS rank, l, r, pair_count FROM (
-            ${(1 to 8).map(i =>
-              s"SELECT $i AS rank, a AS l, b AS r, c AS pair_count FROM b$i")
-              .mkString("\n            UNION ALL ")})
-          ORDER BY rank""",
+      bpeMergesSql,
 
     // both arms replayed under their gated arithmetic (q136's integer
     // BM25; q30's double cosine fold), ranked with the same tie-breaks,
@@ -3356,28 +3233,7 @@ object TextQueries {
             SELECT DISTINCT doc_id AS query_id, unnest(tk[1:5]) AS token
             FROM (SELECT doc_id, $toks AS tk FROM documents
                   WHERE doc_id % 50 = 1)),
-          stats AS (
-            SELECT CAST(count(*) AS BIGINT) AS n,
-              CAST(sum(len(tk)) AS BIGINT) AS s FROM corpus),
-          dl AS (SELECT doc_id, CAST(len(tk) AS BIGINT) AS dl FROM corpus),
-          post AS (
-            SELECT doc_id, token, CAST(count(*) AS BIGINT) AS tf
-            FROM (SELECT doc_id, unnest(tk) AS token FROM corpus)
-            GROUP BY 1, 2),
-          dfreq AS (
-            SELECT token, CAST(count(*) AS BIGINT) AS df FROM post GROUP BY 1),
-          w AS (
-            SELECT qt.query_id, post.doc_id,
-              ((22000000000 * tf)
-                // (10000 * tf + 3000 + 9 * ((1000 * dl.dl * stats.n) // stats.s)))
-              * greatest(
-                  (1000000 * (2 * stats.n - 2 * dfreq.df + 1))
-                    // (2 * dfreq.df + 1), 0) AS w_pico
-            FROM qt
-            JOIN post USING (token)
-            JOIN dfreq USING (token)
-            JOIN dl ON post.doc_id = dl.doc_id
-            CROSS JOIN stats),
+          $bm25WeightCtes,
           lexsc AS (
             SELECT query_id, doc_id, CAST(sum(w_pico) AS BIGINT) AS score_pico
             FROM w GROUP BY 1, 2),
@@ -3463,18 +3319,13 @@ object TextQueries {
 
     // the driver-local trainer must replay the exact same merge chain
     "q116_bpe_merges_local" ->
-      s"""WITH ${bpeCtes(8)}
-          SELECT CAST(rank AS INT) AS rank, l, r, pair_count FROM (
-            ${(1 to 8).map(i =>
-              s"SELECT $i AS rank, a AS l, b AS r, c AS pair_count FROM b$i")
-              .mkString("\n            UNION ALL ")})
-          ORDER BY rank""",
+      bpeMergesSql,
 
     // same chain; final word state joined back to per-doc words
     "q112_bpe_segment" ->
       s"""WITH ${bpeCtes(8)},
           seg AS (SELECT word, CAST(len(ss) AS BIGINT) AS n FROM w8),
-          dw AS (SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\\s+')) AS word
+          dw AS (SELECT doc_id, unnest($toks) AS word
                  FROM documents WHERE text IS NOT NULL)
           SELECT d.doc_id, CAST(count(*) AS BIGINT) AS n_words,
             CAST(sum(g.n) AS BIGINT) AS n_subwords
@@ -3488,25 +3339,7 @@ object TextQueries {
     // lookback; rebuild = ordered string_agg over surviving tokens
     "q97_substring_dedup" ->
       s"""WITH t AS (SELECT doc_id, $toks AS tk FROM documents),
-          occ AS (
-            SELECT doc_id, s AS pos, array_to_string(tk[s + 1 : s + 8], ' ') AS gram
-            FROM t, UNNEST(range(greatest(len(tk) - 7, 0))) AS u(s)),
-          marked AS (
-            SELECT doc_id, pos,
-              count(*) OVER (PARTITION BY gram) AS cnt,
-              row_number() OVER (PARTITION BY gram ORDER BY doc_id, pos) AS rn
-            FROM occ),
-          removable AS (SELECT doc_id, pos FROM marked WHERE cnt >= 2 AND rn > 1),
-          tok AS (SELECT doc_id, s AS pos, tk[s + 1] AS w
-                  FROM t, UNNEST(range(len(tk))) AS u(s)),
-          ev AS (
-            SELECT doc_id, pos, w, 0 AS s FROM tok
-            UNION ALL SELECT doc_id, pos, NULL, 1 FROM removable),
-          fl AS (
-            SELECT doc_id, pos, w, s,
-              max(s) OVER (PARTITION BY doc_id ORDER BY pos
-                           RANGE BETWEEN 7 PRECEDING AND CURRENT ROW) AS rem
-            FROM ev)
+          ${substringMarkCtes("t")}
           SELECT doc_id,
             coalesce(string_agg(w, ' ' ORDER BY pos) FILTER (WHERE rem = 0), '') AS clean_text,
             CAST(sum(rem) AS INT) AS n_removed,
@@ -3611,43 +3444,7 @@ object TextQueries {
     // q91's exact-centroid assignment CTEs, then q96's single-window cap
     // form per cell
     "q106_cluster_balanced" ->
-      s"""WITH ex AS (
-            SELECT label, p['pos'] AS pos, p['v'] AS v FROM (
-              SELECT label, unnest(list_transform(range(1, len(embedding) + 1),
-                i -> {'pos': i - 1, 'v': embedding[i]})) AS p
-              FROM embeddings WHERE embedding IS NOT NULL)),
-          sums AS (
-            SELECT label, pos,
-              CAST(sum(CAST(round(CAST(v AS DOUBLE) * 1000000, 0) AS BIGINT))
-                AS BIGINT) AS mic
-            FROM ex GROUP BY label, pos),
-          cnt AS (
-            SELECT label, CAST(count(*) AS BIGINT) AS n
-            FROM embeddings WHERE embedding IS NOT NULL GROUP BY label),
-          mm AS (
-            SELECT s.label, s.pos,
-              CAST(s.mic AS DOUBLE) / 1000000 / CAST(c.n AS DOUBLE) AS m
-            FROM sums s JOIN cnt c USING (label)),
-          cent AS (
-            SELECT label,
-              list(CAST(CAST(m AS REAL) AS DOUBLE) ORDER BY pos) AS cf,
-              list_sum(list_transform(list(m ORDER BY pos), x -> x * x)) / 2 AS hn
-            FROM mm GROUP BY label),
-          cellmap AS (
-            SELECT label, cf, hn,
-              CAST(ROW_NUMBER() OVER (ORDER BY label) - 1 AS INT) AS cell
-            FROM cent),
-          scored AS (
-            SELECT e.vec_id, c.cell,
-              list_sum(list_transform(list_zip(c.cf, e.embedding),
-                x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))) - c.hn AS score
-            FROM embeddings e CROSS JOIN cellmap c
-            WHERE e.embedding IS NOT NULL),
-          assigned AS (
-            SELECT vec_id, cell FROM (
-              SELECT vec_id, cell, ROW_NUMBER() OVER (
-                PARTITION BY vec_id ORDER BY score DESC, cell ASC) AS rn
-              FROM scored) WHERE rn = 1)
+      s"""WITH $ivfAssignCtes
           SELECT vec_id, ivf_cell FROM (
             SELECT vec_id, cell AS ivf_cell, ROW_NUMBER() OVER (
               PARTITION BY cell
@@ -3659,45 +3456,7 @@ object TextQueries {
     // identical CASE parenthesization — every score is a single division
     // or an α-product of one, so the doubles match exactly
     "q107_lm_score" ->
-      s"""WITH d AS (
-            SELECT doc_id, lang, $toks AS tk
-            FROM documents WHERE text IS NOT NULL),
-          p AS (
-            SELECT doc_id, lang, CAST(u.i AS INT) AS pos,
-              tk[u.i + 1] AS w,
-              CASE WHEN u.i >= 1 THEN tk[u.i] END AS prev,
-              CASE WHEN u.i >= 2 THEN tk[u.i - 1] END AS prev2
-            FROM d, UNNEST(range(len(tk))) AS u(i)),
-          tp AS (SELECT * FROM p WHERE lang = 'en'),
-          uni AS (SELECT w, CAST(count(*) AS BIGINT) AS c FROM tp GROUP BY w),
-          bi AS (SELECT prev, w, CAST(count(*) AS BIGINT) AS c
-                 FROM tp WHERE pos >= 1 GROUP BY prev, w),
-          tri AS (SELECT prev2, prev, w, CAST(count(*) AS BIGINT) AS c
-                  FROM tp WHERE pos >= 2 GROUP BY prev2, prev, w),
-          tot AS (SELECT CAST(count(*) AS BIGINT) AS n_tokens,
-                    CAST(count(DISTINCT w) AS BIGINT) AS vocab FROM tp),
-          j AS (
-            SELECT p.doc_id, p.pos, p.w, u1.c AS c1w, u2.c AS c1prev,
-              b1.c AS c2, b2.c AS c2ctx, t3.c AS c3, tot.n_tokens, tot.vocab
-            FROM p
-            LEFT JOIN uni u1 ON p.w = u1.w
-            LEFT JOIN uni u2 ON p.prev = u2.w
-            LEFT JOIN bi b1 ON p.prev = b1.prev AND p.w = b1.w
-            LEFT JOIN bi b2 ON p.prev2 = b2.prev AND p.prev = b2.w
-            LEFT JOIN tri t3 ON p.prev2 = t3.prev2 AND p.prev = t3.prev
-              AND p.w = t3.w
-            CROSS JOIN tot),
-          s1c AS (
-            SELECT *, CAST(COALESCE(c1w, 0) + 1 AS DOUBLE)
-              / CAST(n_tokens + vocab AS DOUBLE) AS s1 FROM j),
-          s2c AS (
-            SELECT *, CASE WHEN c2 IS NOT NULL AND c1prev IS NOT NULL
-              THEN CAST(c2 AS DOUBLE) / CAST(c1prev AS DOUBLE)
-              ELSE 0.4 * s1 END AS s2 FROM s1c),
-          s3c AS (
-            SELECT *, CASE WHEN c3 IS NOT NULL AND c2ctx IS NOT NULL
-              THEN CAST(c3 AS DOUBLE) / CAST(c2ctx AS DOUBLE)
-              ELSE 0.4 * s2 END AS s3 FROM s2c)
+      s"""WITH ${backoffCtes("p.doc_id, p.pos, p.w")}
           SELECT doc_id, pos, w AS token,
             CASE WHEN pos >= 2 AND c3 IS NOT NULL THEN 3
                  WHEN pos >= 1 AND c2 IS NOT NULL THEN 2
@@ -3708,45 +3467,7 @@ object TextQueries {
     // per-doc pico-integer aggregate of the q107 scores; keep is the
     // integer comparison mean ≥ 1/20
     "q108_lm_filter" ->
-      s"""WITH d AS (
-            SELECT doc_id, lang, $toks AS tk
-            FROM documents WHERE text IS NOT NULL),
-          p AS (
-            SELECT doc_id, lang, CAST(u.i AS INT) AS pos,
-              tk[u.i + 1] AS w,
-              CASE WHEN u.i >= 1 THEN tk[u.i] END AS prev,
-              CASE WHEN u.i >= 2 THEN tk[u.i - 1] END AS prev2
-            FROM d, UNNEST(range(len(tk))) AS u(i)),
-          tp AS (SELECT * FROM p WHERE lang = 'en'),
-          uni AS (SELECT w, CAST(count(*) AS BIGINT) AS c FROM tp GROUP BY w),
-          bi AS (SELECT prev, w, CAST(count(*) AS BIGINT) AS c
-                 FROM tp WHERE pos >= 1 GROUP BY prev, w),
-          tri AS (SELECT prev2, prev, w, CAST(count(*) AS BIGINT) AS c
-                  FROM tp WHERE pos >= 2 GROUP BY prev2, prev, w),
-          tot AS (SELECT CAST(count(*) AS BIGINT) AS n_tokens,
-                    CAST(count(DISTINCT w) AS BIGINT) AS vocab FROM tp),
-          j AS (
-            SELECT p.doc_id, p.pos, u1.c AS c1w, u2.c AS c1prev,
-              b1.c AS c2, b2.c AS c2ctx, t3.c AS c3, tot.n_tokens, tot.vocab
-            FROM p
-            LEFT JOIN uni u1 ON p.w = u1.w
-            LEFT JOIN uni u2 ON p.prev = u2.w
-            LEFT JOIN bi b1 ON p.prev = b1.prev AND p.w = b1.w
-            LEFT JOIN bi b2 ON p.prev2 = b2.prev AND p.prev = b2.w
-            LEFT JOIN tri t3 ON p.prev2 = t3.prev2 AND p.prev = t3.prev
-              AND p.w = t3.w
-            CROSS JOIN tot),
-          s1c AS (
-            SELECT *, CAST(COALESCE(c1w, 0) + 1 AS DOUBLE)
-              / CAST(n_tokens + vocab AS DOUBLE) AS s1 FROM j),
-          s2c AS (
-            SELECT *, CASE WHEN c2 IS NOT NULL AND c1prev IS NOT NULL
-              THEN CAST(c2 AS DOUBLE) / CAST(c1prev AS DOUBLE)
-              ELSE 0.4 * s1 END AS s2 FROM s1c),
-          s3c AS (
-            SELECT *, CASE WHEN c3 IS NOT NULL AND c2ctx IS NOT NULL
-              THEN CAST(c3 AS DOUBLE) / CAST(c2ctx AS DOUBLE)
-              ELSE 0.4 * s2 END AS s3 FROM s2c),
+      s"""WITH ${backoffCtes("p.doc_id, p.pos")},
           sc AS (
             SELECT doc_id,
               CASE WHEN pos = 0 THEN s1 WHEN pos = 1 THEN s2 ELSE s3 END AS score
@@ -3765,45 +3486,7 @@ object TextQueries {
     // ceil(n/3) — no interpolation, so the only float step is the same
     // IEEE division Spark performs), labels by comparison
     "q113_ccnet_buckets" ->
-      s"""WITH d AS (
-            SELECT doc_id, lang, $toks AS tk
-            FROM documents WHERE text IS NOT NULL),
-          p AS (
-            SELECT doc_id, lang, CAST(u.i AS INT) AS pos,
-              tk[u.i + 1] AS w,
-              CASE WHEN u.i >= 1 THEN tk[u.i] END AS prev,
-              CASE WHEN u.i >= 2 THEN tk[u.i - 1] END AS prev2
-            FROM d, UNNEST(range(len(tk))) AS u(i)),
-          tp AS (SELECT * FROM p WHERE lang = 'en'),
-          uni AS (SELECT w, CAST(count(*) AS BIGINT) AS c FROM tp GROUP BY w),
-          bi AS (SELECT prev, w, CAST(count(*) AS BIGINT) AS c
-                 FROM tp WHERE pos >= 1 GROUP BY prev, w),
-          tri AS (SELECT prev2, prev, w, CAST(count(*) AS BIGINT) AS c
-                  FROM tp WHERE pos >= 2 GROUP BY prev2, prev, w),
-          tot AS (SELECT CAST(count(*) AS BIGINT) AS n_tokens,
-                    CAST(count(DISTINCT w) AS BIGINT) AS vocab FROM tp),
-          j AS (
-            SELECT p.doc_id, p.pos, u1.c AS c1w, u2.c AS c1prev,
-              b1.c AS c2, b2.c AS c2ctx, t3.c AS c3, tot.n_tokens, tot.vocab
-            FROM p
-            LEFT JOIN uni u1 ON p.w = u1.w
-            LEFT JOIN uni u2 ON p.prev = u2.w
-            LEFT JOIN bi b1 ON p.prev = b1.prev AND p.w = b1.w
-            LEFT JOIN bi b2 ON p.prev2 = b2.prev AND p.prev = b2.w
-            LEFT JOIN tri t3 ON p.prev2 = t3.prev2 AND p.prev = t3.prev
-              AND p.w = t3.w
-            CROSS JOIN tot),
-          s1c AS (
-            SELECT *, CAST(COALESCE(c1w, 0) + 1 AS DOUBLE)
-              / CAST(n_tokens + vocab AS DOUBLE) AS s1 FROM j),
-          s2c AS (
-            SELECT *, CASE WHEN c2 IS NOT NULL AND c1prev IS NOT NULL
-              THEN CAST(c2 AS DOUBLE) / CAST(c1prev AS DOUBLE)
-              ELSE 0.4 * s1 END AS s2 FROM s1c),
-          s3c AS (
-            SELECT *, CASE WHEN c3 IS NOT NULL AND c2ctx IS NOT NULL
-              THEN CAST(c3 AS DOUBLE) / CAST(c2ctx AS DOUBLE)
-              ELSE 0.4 * s2 END AS s3 FROM s2c),
+      s"""WITH ${backoffCtes("p.doc_id, p.pos")},
           sc AS (
             SELECT doc_id,
               CASE WHEN pos = 0 THEN s1 WHEN pos = 1 THEN s2 ELSE s3 END AS score
@@ -3912,45 +3595,7 @@ object TextQueries {
     // by lang, labels joined on lang) — same scoring chain, same
     // order-statistic cut per group
     "q122_ccnet_by_lang" ->
-      s"""WITH d AS (
-            SELECT doc_id, lang, $toks AS tk
-            FROM documents WHERE text IS NOT NULL),
-          p AS (
-            SELECT doc_id, lang, CAST(u.i AS INT) AS pos,
-              tk[u.i + 1] AS w,
-              CASE WHEN u.i >= 1 THEN tk[u.i] END AS prev,
-              CASE WHEN u.i >= 2 THEN tk[u.i - 1] END AS prev2
-            FROM d, UNNEST(range(len(tk))) AS u(i)),
-          tp AS (SELECT * FROM p WHERE lang = 'en'),
-          uni AS (SELECT w, CAST(count(*) AS BIGINT) AS c FROM tp GROUP BY w),
-          bi AS (SELECT prev, w, CAST(count(*) AS BIGINT) AS c
-                 FROM tp WHERE pos >= 1 GROUP BY prev, w),
-          tri AS (SELECT prev2, prev, w, CAST(count(*) AS BIGINT) AS c
-                  FROM tp WHERE pos >= 2 GROUP BY prev2, prev, w),
-          tot AS (SELECT CAST(count(*) AS BIGINT) AS n_tokens,
-                    CAST(count(DISTINCT w) AS BIGINT) AS vocab FROM tp),
-          j AS (
-            SELECT p.doc_id, p.lang, p.pos, u1.c AS c1w, u2.c AS c1prev,
-              b1.c AS c2, b2.c AS c2ctx, t3.c AS c3, tot.n_tokens, tot.vocab
-            FROM p
-            LEFT JOIN uni u1 ON p.w = u1.w
-            LEFT JOIN uni u2 ON p.prev = u2.w
-            LEFT JOIN bi b1 ON p.prev = b1.prev AND p.w = b1.w
-            LEFT JOIN bi b2 ON p.prev2 = b2.prev AND p.prev = b2.w
-            LEFT JOIN tri t3 ON p.prev2 = t3.prev2 AND p.prev = t3.prev
-              AND p.w = t3.w
-            CROSS JOIN tot),
-          s1c AS (
-            SELECT *, CAST(COALESCE(c1w, 0) + 1 AS DOUBLE)
-              / CAST(n_tokens + vocab AS DOUBLE) AS s1 FROM j),
-          s2c AS (
-            SELECT *, CASE WHEN c2 IS NOT NULL AND c1prev IS NOT NULL
-              THEN CAST(c2 AS DOUBLE) / CAST(c1prev AS DOUBLE)
-              ELSE 0.4 * s1 END AS s2 FROM s1c),
-          s3c AS (
-            SELECT *, CASE WHEN c3 IS NOT NULL AND c2ctx IS NOT NULL
-              THEN CAST(c3 AS DOUBLE) / CAST(c2ctx AS DOUBLE)
-              ELSE 0.4 * s2 END AS s3 FROM s2c),
+      s"""WITH ${backoffCtes("p.doc_id, p.lang, p.pos")},
           sc AS (
             SELECT doc_id, lang,
               CASE WHEN pos = 0 THEN s1 WHEN pos = 1 THEN s2 ELSE s3 END AS score
@@ -4022,31 +3667,13 @@ object TextQueries {
               regexp_replace(trim(url), '#.*$$', '') AS nf FROM u0),
           x AS (
             SELECT doc_id, url,
-              lower(regexp_extract(nf, '^([a-zA-Z][a-zA-Z0-9+.-]*)://', 1))
-                AS scheme,
-              lower(regexp_extract(nf,
-                '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]*)', 1)) AS hostport,
-              regexp_extract(nf,
-                '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*([^?#]*)', 1) AS path0,
-              regexp_extract(nf, '\\?([^#]*)', 1) AS query0
+              $urlPartsSql
             FROM p),
           h AS (
             SELECT doc_id, url, scheme,
-              regexp_replace(
-                CASE WHEN (scheme = 'http' AND hostport LIKE '%:80')
-                       OR (scheme = 'https' AND hostport LIKE '%:443')
-                  THEN regexp_replace(hostport, ':(80|443)$$', '')
-                  ELSE hostport END,
-                '^www\\.', '') AS host,
-              CASE WHEN length(path0) > 1
-                THEN regexp_replace(path0, '/$$', '') ELSE path0 END AS path,
-              array_to_string(list_sort(list_filter(string_split(query0, '&'),
-                q -> NOT (starts_with(q, 'utm_') OR q = ''
-                  OR q = 'gclid' OR starts_with(q, 'gclid=')
-                  OR q = 'fbclid' OR starts_with(q, 'fbclid=')
-                  OR q = 'msclkid' OR starts_with(q, 'msclkid=')
-                  OR q = 'ref' OR starts_with(q, 'ref=')
-                  OR q = 'igshid' OR starts_with(q, 'igshid=')))), '&') AS q
+              $canonHostSql AS host,
+              $canonPathSql AS path,
+              $canonQuerySql AS q
             FROM x)
           SELECT doc_id, url,
             CASE WHEN scheme = '' THEN trim(url)
@@ -4091,31 +3718,13 @@ object TextQueries {
               trim(url) AS u FROM u0),
           x AS (
             SELECT doc_id, u,
-              lower(regexp_extract(nf, '^([a-zA-Z][a-zA-Z0-9+.-]*)://', 1))
-                AS scheme,
-              lower(regexp_extract(nf,
-                '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]*)', 1)) AS hostport,
-              regexp_extract(nf,
-                '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*([^?#]*)', 1) AS path0,
-              regexp_extract(nf, '\\?([^#]*)', 1) AS query0
+              $urlPartsSql
             FROM p),
           h AS (
             SELECT doc_id, u, scheme,
-              regexp_replace(
-                CASE WHEN (scheme = 'http' AND hostport LIKE '%:80')
-                       OR (scheme = 'https' AND hostport LIKE '%:443')
-                  THEN regexp_replace(hostport, ':(80|443)$$', '')
-                  ELSE hostport END,
-                '^www\\.', '') AS host,
-              CASE WHEN length(path0) > 1
-                THEN regexp_replace(path0, '/$$', '') ELSE path0 END AS path,
-              array_to_string(list_sort(list_filter(string_split(query0, '&'),
-                q -> NOT (starts_with(q, 'utm_') OR q = ''
-                  OR q = 'gclid' OR starts_with(q, 'gclid=')
-                  OR q = 'fbclid' OR starts_with(q, 'fbclid=')
-                  OR q = 'msclkid' OR starts_with(q, 'msclkid=')
-                  OR q = 'ref' OR starts_with(q, 'ref=')
-                  OR q = 'igshid' OR starts_with(q, 'igshid=')))), '&') AS q
+              $canonHostSql AS host,
+              $canonPathSql AS path,
+              $canonQuerySql AS q
             FROM x),
           c AS (
             SELECT doc_id,
@@ -4169,22 +3778,7 @@ object TextQueries {
             FROM documents),
           m AS (
             SELECT doc_id,
-              len(tk) AS n_words,
-              CAST(list_sum(list_transform(tk, w -> length(w))) AS DOUBLE)
-                / len(tk) AS mean_len,
-              CAST(len(regexp_extract_all(text, '#'))
-                + len(regexp_extract_all(text, '\\.\\.\\.|…')) AS DOUBLE)
-                / len(tk) AS symbol_ratio,
-              CAST(len(list_filter(lines, l -> regexp_matches(trim(l),
-                  '^([-*•‣▪]|\\d+[.)])\\s'))) AS DOUBLE)
-                / greatest(len(lines), 1) AS bullet_frac,
-              CAST(len(list_filter(lines, l -> regexp_matches(trim(l),
-                  '(\\.\\.\\.|…)$$'))) AS DOUBLE)
-                / greatest(len(lines), 1) AS ellipsis_frac,
-              CAST(len(list_filter(tk, w -> regexp_matches(w, '\\p{L}')))
-                AS DOUBLE) / greatest(len(tk), 1) AS alpha_frac,
-              len(list_filter(tk,
-                w -> w IN ('the','a','of','and','to'))) AS stop_hits
+              $gopherMetricsSql
             FROM b),
           r AS (
             SELECT doc_id,
@@ -4261,41 +3855,13 @@ object TextQueries {
               regexp_replace(trim(url), '#.*$$', '') AS nf FROM u0),
           x AS (
             SELECT doc_id, text,
-              lower(regexp_extract(nf, '^([a-zA-Z][a-zA-Z0-9+.-]*)://', 1))
-                AS scheme,
-              lower(regexp_extract(nf,
-                '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]*)', 1)) AS hostport,
-              regexp_extract(nf,
-                '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*([^?#]*)', 1) AS path0,
-              regexp_extract(nf, '\\?([^#]*)', 1) AS query0
+              $urlPartsSql
             FROM p),
           h AS (
-            SELECT doc_id, text, concat(scheme, '://',
-              regexp_replace(
-                CASE WHEN (scheme = 'http' AND hostport LIKE '%:80')
-                       OR (scheme = 'https' AND hostport LIKE '%:443')
-                  THEN regexp_replace(hostport, ':(80|443)$$', '')
-                  ELSE hostport END,
-                '^www\\.', ''),
-              CASE WHEN length(path0) > 1
-                THEN regexp_replace(path0, '/$$', '') ELSE path0 END,
-              CASE WHEN array_to_string(list_sort(list_filter(
-                  string_split(query0, '&'),
-                  q -> NOT (starts_with(q, 'utm_') OR q = ''
-                    OR q = 'gclid' OR starts_with(q, 'gclid=')
-                    OR q = 'fbclid' OR starts_with(q, 'fbclid=')
-                    OR q = 'msclkid' OR starts_with(q, 'msclkid=')
-                    OR q = 'ref' OR starts_with(q, 'ref=')
-                    OR q = 'igshid' OR starts_with(q, 'igshid=')))), '&') = ''
+            SELECT doc_id, text, concat(scheme, '://', $canonHostSql, $canonPathSql,
+              CASE WHEN $canonQuerySql = ''
                 THEN ''
-                ELSE concat('?', array_to_string(list_sort(list_filter(
-                  string_split(query0, '&'),
-                  q -> NOT (starts_with(q, 'utm_') OR q = ''
-                    OR q = 'gclid' OR starts_with(q, 'gclid=')
-                    OR q = 'fbclid' OR starts_with(q, 'fbclid=')
-                    OR q = 'msclkid' OR starts_with(q, 'msclkid=')
-                    OR q = 'ref' OR starts_with(q, 'ref=')
-                    OR q = 'igshid' OR starts_with(q, 'igshid=')))), '&'))
+                ELSE concat('?', $canonQuerySql)
                 END) AS url_canon
             FROM x),
           keepers AS (
@@ -4307,22 +3873,7 @@ object TextQueries {
             FROM h JOIN keepers ON h.doc_id = keepers.doc_id),
           m AS (
             SELECT doc_id, text, tk,
-              len(tk) AS n_words,
-              CAST(list_sum(list_transform(tk, w -> length(w))) AS DOUBLE)
-                / len(tk) AS mean_len,
-              CAST(len(regexp_extract_all(text, '#'))
-                + len(regexp_extract_all(text, '\\.\\.\\.|…')) AS DOUBLE)
-                / len(tk) AS symbol_ratio,
-              CAST(len(list_filter(lines, l -> regexp_matches(trim(l),
-                  '^([-*•‣▪]|\\d+[.)])\\s'))) AS DOUBLE)
-                / greatest(len(lines), 1) AS bullet_frac,
-              CAST(len(list_filter(lines, l -> regexp_matches(trim(l),
-                  '(\\.\\.\\.|…)$$'))) AS DOUBLE)
-                / greatest(len(lines), 1) AS ellipsis_frac,
-              CAST(len(list_filter(tk, w -> regexp_matches(w, '\\p{L}')))
-                AS DOUBLE) / greatest(len(tk), 1) AS alpha_frac,
-              len(list_filter(tk,
-                w -> w IN ('the','a','of','and','to'))) AS stop_hits
+              $gopherMetricsSql
             FROM g),
           q AS (
             SELECT doc_id, tk FROM m
@@ -4409,17 +3960,7 @@ object TextQueries {
     // exact windowed watch-token counts; cms_ok is the pinned CMS
     // guarantee (the q130 bounded-anchor pattern applied per window)
     "q166_rolling_token_freq" ->
-      s"""WITH dk AS (
-            SELECT doc_id // 50 AS bucket, unnest($toks) AS token
-            FROM documents),
-          pb AS (SELECT bucket, token, CAST(count(*) AS BIGINT) AS n
-                 FROM dk GROUP BY 1, 2),
-          mb AS (SELECT max(bucket) AS m FROM dk),
-          wins AS (
-            SELECT DISTINCT w AS wend FROM (
-              SELECT unnest(generate_series(bucket,
-                least(bucket + 3, (SELECT m FROM mb)))) AS w
-              FROM (SELECT DISTINCT bucket FROM dk))),
+      s"""WITH $tokenWindowCtes,
           watch AS (
             SELECT unnest(['the', 'data', 'of', 'model']) AS token)
           SELECT w.wend AS bucket, wt.token,
@@ -4443,17 +3984,7 @@ object TextQueries {
     // the exact windowed count table — k ≥ vocabulary pins the merged
     // window summaries bit-exact (the q201 exact regime per window)
     "q205_rolling_heavy_hitters" ->
-      s"""WITH dk AS (
-            SELECT doc_id // 50 AS bucket, unnest($toks) AS token
-            FROM documents),
-          pb AS (SELECT bucket, token, CAST(count(*) AS BIGINT) AS n
-                 FROM dk GROUP BY 1, 2),
-          mb AS (SELECT max(bucket) AS m FROM dk),
-          wins AS (
-            SELECT DISTINCT w AS wend FROM (
-              SELECT unnest(generate_series(bucket,
-                least(bucket + 3, (SELECT m FROM mb)))) AS w
-              FROM (SELECT DISTINCT bucket FROM dk)))
+      s"""WITH $tokenWindowCtes
           SELECT w.wend AS bucket, pb.token,
             CAST(sum(pb.n) AS BIGINT) AS n_est
           FROM wins w JOIN pb
@@ -4570,7 +4101,7 @@ object TextQueries {
     // SoftDeDup: GROUP BY fingerprint + join-back, weight = exact
     // integer 10^6 // n; coalesce(text,'') replays the null contract
     "q236_soft_dedup" ->
-      s"""WITH t AS (SELECT doc_id, $advNullTextSql AS text FROM documents),
+      s"""WITH t AS (SELECT doc_id, ${nullInjected("")} AS text FROM documents),
           f AS (SELECT doc_id, md5(lower(array_to_string(
                   regexp_split_to_array(trim(coalesce(text, '')), '\\s+'),
                   ' '))) AS fp
@@ -4585,17 +4116,7 @@ object TextQueries {
     // recurrence through a plain SQL window — k=4 grams, w=5 windows,
     // rightmost minimum via the zero-padded reverse position
     "q237_winnowing" ->
-      """WITH tt AS (SELECT doc_id,
-                 regexp_split_to_array(trim(text), '\s+') AS tk
-               FROM documents),
-          g AS (SELECT doc_id, i AS pos,
-                  md5(array_to_string(tk[i+1:i+4], ' ')) AS h
-                FROM tt, unnest(range(greatest(len(tk) - 3, 0))) AS u(i)),
-          s AS (SELECT doc_id,
-                  min(concat(h, lpad(CAST(999999999 - pos AS VARCHAR), 9, '0')))
-                    OVER (PARTITION BY doc_id ORDER BY pos
-                          ROWS BETWEEN 4 PRECEDING AND CURRENT ROW) AS sel
-                FROM g)
+      s"""WITH $winnowCtes
           SELECT DISTINCT doc_id,
             CAST(999999999 - CAST(substr(sel, 33, 9) AS BIGINT) AS INT) AS pos,
             substr(sel, 1, 32) AS fp
@@ -4604,17 +4125,7 @@ object TextQueries {
     // winnowing pairs: q237's selection CTEs + common-fp elimination +
     // the fp self-join, distinct shared fingerprints counted
     "q239_winnowing_pairs" ->
-      """WITH tt AS (SELECT doc_id,
-                 regexp_split_to_array(trim(text), '\s+') AS tk
-               FROM documents),
-          g AS (SELECT doc_id, i AS pos,
-                  md5(array_to_string(tk[i+1:i+4], ' ')) AS h
-                FROM tt, unnest(range(greatest(len(tk) - 3, 0))) AS u(i)),
-          s AS (SELECT doc_id,
-                  min(concat(h, lpad(CAST(999999999 - pos AS VARCHAR), 9, '0')))
-                    OVER (PARTITION BY doc_id ORDER BY pos
-                          ROWS BETWEEN 4 PRECEDING AND CURRENT ROW) AS sel
-                FROM g),
+      s"""WITH $winnowCtes,
           fps AS (SELECT DISTINCT doc_id, substr(sel, 1, 32) AS fp FROM s),
           keep AS (SELECT fp FROM fps GROUP BY fp
                    HAVING count(*) >= 2 AND count(*) <= 50),
@@ -4629,7 +4140,7 @@ object TextQueries {
     // different mechanism from the scan-side sorted-run fold), exact
     // integer // division, NULL ratios for zero-token docs
     "q238_lexical_diversity" ->
-      s"""WITH t AS (SELECT doc_id, $advNullTextSql AS text FROM documents),
+      s"""WITH t AS (SELECT doc_id, ${nullInjected("")} AS text FROM documents),
           tk AS (SELECT doc_id, list_filter(
                    regexp_split_to_array(trim(coalesce(text, '')), '\\s+'),
                    x -> len(x) > 0) AS toks
@@ -4743,97 +4254,25 @@ object TextQueries {
     // per (source, paragraph, doc), bucket sizes, the strict > per-mille
     // gate with the minDocs exemption, then the same keep/reassemble
     "q224_template_strip" ->
-      s"""WITH aug AS (
-            SELECT doc_id, source,
-              '${TemplateFixture.pre}' || source ||
-              '${TemplateFixture.post}' || chr(10) || chr(10) || text ||
-              CASE WHEN doc_id % 2 = 0
-                   THEN chr(10) || chr(10) || '${TemplateFixture.footer}'
-                   ELSE '' END AS t
-            FROM documents),
-          paras AS (
-            SELECT doc_id, source, p['pos'] AS pos, p['par'] AS par FROM (
-              SELECT doc_id, source, unnest(list_transform(
-                range(1, len(ps) + 1), i -> {'pos': i, 'par': trim(ps[i])}))
-                AS p
-              FROM (SELECT doc_id, source,
-                      string_split_regex(t, '\\n{2,}') AS ps
-                    FROM aug))
-            WHERE len(p['par']) > 0),
-          present AS (SELECT DISTINCT source, par, doc_id FROM paras),
-          wc AS (SELECT source, par, CAST(count(*) AS BIGINT) AS n_with
-                 FROM present GROUP BY source, par),
-          sizes AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs
-                    FROM documents GROUP BY source),
-          tpl AS (SELECT w.source, w.par
-                  FROM wc w JOIN sizes s USING (source)
-                  WHERE s.n_docs >= 4 AND w.n_with * 1000 > 500 * s.n_docs),
+      s"""WITH ${templateCtes("doc_id % 2 = 0")},
           flagged AS (
             SELECT p.doc_id, p.pos, p.par, (t.par IS NULL) AS keep
             FROM paras p LEFT JOIN tpl t
               ON p.source = t.source AND p.par = t.par),
-          agged AS (
-            SELECT doc_id,
-              CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT)
-                AS n_kept,
-              CAST(sum(CASE WHEN keep THEN 0 ELSE 1 END) AS BIGINT)
-                AS n_dropped,
-              string_agg(CASE WHEN keep THEN par END, chr(10) || chr(10)
-                ORDER BY pos) AS clean_text
-            FROM flagged GROUP BY doc_id)
-          SELECT d.doc_id, COALESCE(a.clean_text, '') AS clean_text,
-            COALESCE(a.n_kept, 0) AS n_kept,
-            COALESCE(a.n_dropped, 0) AS n_dropped
-          FROM documents d LEFT JOIN agged a USING (doc_id)
+          ${reassembledSql("par", "chr(10) || chr(10)", "documents d")}
           ORDER BY d.doc_id""",
 
     // combined history+batch counts equal FULL-corpus counts (even/odd
     // partition the table), so the oracle thresholds over everything
     // and re-assembles only the odd half
     "q226_template_strip_inc" ->
-      s"""WITH aug AS (
-            SELECT doc_id, source,
-              '${TemplateFixture.pre}' || source ||
-              '${TemplateFixture.post}' || chr(10) || chr(10) || text ||
-              CASE WHEN doc_id % 3 <> 0
-                   THEN chr(10) || chr(10) || '${TemplateFixture.footer}'
-                   ELSE '' END AS t
-            FROM documents),
-          paras AS (
-            SELECT doc_id, source, p['pos'] AS pos, p['par'] AS par FROM (
-              SELECT doc_id, source, unnest(list_transform(
-                range(1, len(ps) + 1), i -> {'pos': i, 'par': trim(ps[i])}))
-                AS p
-              FROM (SELECT doc_id, source,
-                      string_split_regex(t, '\\n{2,}') AS ps
-                    FROM aug))
-            WHERE len(p['par']) > 0),
-          present AS (SELECT DISTINCT source, par, doc_id FROM paras),
-          wc AS (SELECT source, par, CAST(count(*) AS BIGINT) AS n_with
-                 FROM present GROUP BY source, par),
-          sizes AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs
-                    FROM documents GROUP BY source),
-          tpl AS (SELECT w.source, w.par
-                  FROM wc w JOIN sizes s USING (source)
-                  WHERE s.n_docs >= 4 AND w.n_with * 1000 > 500 * s.n_docs),
+      s"""WITH ${templateCtes("doc_id % 3 <> 0")},
           flagged AS (
             SELECT p.doc_id, p.pos, p.par, (t.par IS NULL) AS keep
             FROM paras p LEFT JOIN tpl t
               ON p.source = t.source AND p.par = t.par
             WHERE p.doc_id % 2 = 1),
-          agged AS (
-            SELECT doc_id,
-              CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT)
-                AS n_kept,
-              CAST(sum(CASE WHEN keep THEN 0 ELSE 1 END) AS BIGINT)
-                AS n_dropped,
-              string_agg(CASE WHEN keep THEN par END, chr(10) || chr(10)
-                ORDER BY pos) AS clean_text
-            FROM flagged GROUP BY doc_id)
-          SELECT d.doc_id, COALESCE(a.clean_text, '') AS clean_text,
-            COALESCE(a.n_kept, 0) AS n_kept,
-            COALESCE(a.n_dropped, 0) AS n_dropped
-          FROM documents d LEFT JOIN agged a USING (doc_id)
+          ${reassembledSql("par", "chr(10) || chr(10)", "documents d")}
           WHERE d.doc_id % 2 = 1
           ORDER BY d.doc_id""",
 
@@ -4894,18 +4333,12 @@ object TextQueries {
          FROM sc ORDER BY vec_id"""
   )
 
-  /** q136/q137's shared replay — the prebuilt path must emit the exact
-    * same ranked lists as the inline build. */
-  /** The shared BM25 scoring chain (through per-(query, doc) pico
-    * scores in CTE `sc`) — q136/q137's replay and q206's eval base. */
-  private def bm25ScoreCtes: String =
-    s"""corpus AS (
-          SELECT doc_id, $toks AS tk FROM documents WHERE doc_id % 2 = 0),
-        qt AS (
-          SELECT DISTINCT doc_id AS query_id, unnest(tk[1:5]) AS token
-          FROM (SELECT doc_id, $toks AS tk FROM documents
-                WHERE doc_id % 10 = 1)),
-        stats AS (
+  /** BM25 odds-idf term weights in integer fixed point (k1 = 1.2, b =
+    * 0.75; `//` == Spark's `div` on these non-negative operands): per
+    * (query, doc, token) `w.w_pico` over CTEs `corpus(doc_id, tk)` and
+    * `qt(query_id, token)`. */
+  private def bm25WeightCtes: String =
+    s"""stats AS (
           SELECT CAST(count(*) AS BIGINT) AS n,
             CAST(sum(len(tk)) AS BIGINT) AS s FROM corpus),
         dl AS (SELECT doc_id, CAST(len(tk) AS BIGINT) AS dl FROM corpus),
@@ -4926,11 +4359,24 @@ object TextQueries {
           JOIN post USING (token)
           JOIN dfreq USING (token)
           JOIN dl ON post.doc_id = dl.doc_id
-          CROSS JOIN stats),
+          CROSS JOIN stats)"""
+
+  /** The shared BM25 scoring chain (through per-(query, doc) pico
+    * scores in CTE `sc`) — q136/q137's replay and q206's eval base. */
+  private def bm25ScoreCtes: String =
+    s"""corpus AS (
+          SELECT doc_id, $toks AS tk FROM documents WHERE doc_id % 2 = 0),
+        qt AS (
+          SELECT DISTINCT doc_id AS query_id, unnest(tk[1:5]) AS token
+          FROM (SELECT doc_id, $toks AS tk FROM documents
+                WHERE doc_id % 10 = 1)),
+        $bm25WeightCtes,
         sc AS (
           SELECT query_id, doc_id, CAST(sum(w_pico) AS BIGINT) AS score_pico
           FROM w GROUP BY 1, 2)"""
 
+  /** q136/q137's shared replay — the prebuilt path must emit the exact
+    * same ranked lists as the inline build. */
   private def bm25OddsSql: String =
     s"""WITH $bm25ScoreCtes,
         r AS (
@@ -4942,14 +4388,6 @@ object TextQueries {
 
   /** q124/q125's messy-url build as DuckDB SQL — must mirror
     * [[messyUrl]] exactly. */
-  /** q24/q25's injected text as DuckDB SQL — must mirror
-    * [[advNullText]] exactly. */
-  private def advNullTextSql: String =
-    """CASE WHEN doc_id % 13 = 0 THEN NULL
-        WHEN doc_id % 13 = 1 THEN ''
-        WHEN doc_id % 13 = 2 THEN '   '
-        ELSE text END"""
-
   private def messyUrlSql: String =
     """concat(
       CASE doc_id % 3 WHEN 0 THEN 'HTTP://WWW.'

@@ -1,7 +1,9 @@
 package graft.streaming
 
+import java.io.File
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimitedTests}
 import org.scalatest.time.{Minutes, Span}
@@ -14,6 +16,23 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
   // A wedged streaming query must FAIL the suite, not hang sbt test forever.
   override val timeLimit: Span = Span(5, Minutes)
   override val defaultTestSignaler: Signaler = ThreadSignaler
+
+  /** Appends each drop to the parquet directory `path` in order and stamps
+    * the files each drop adds with mtimes one second apart, ten seconds in
+    * the past. The file source orders files — and `maxFilesPerTrigger`
+    * admits them — by mtime, so the drops keep their order without waiting
+    * out the filesystem's timestamp granularity, and files appended later
+    * at real time still sort after them. */
+  private def writeDrops(path: String, drops: DataFrame*): Unit = {
+    val dir = new File(path)
+    def files() = Option(dir.listFiles()).fold(Set.empty[File])(_.toSet)
+    val base = System.currentTimeMillis() / 1000 * 1000 - 10000
+    drops.zipWithIndex.foreach { case (df, i) =>
+      val before = files()
+      df.write.mode("append").parquet(path)
+      (files() -- before).foreach(f => assert(f.setLastModified(base + 1000L * i)))
+    }
+  }
 
   test("file stream → windowed counts → memory sink (batch-driven)") {
     val dir = Files.createTempDirectory("graft_stream").toString
@@ -267,9 +286,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
       (java.sql.Timestamp.valueOf("2024-01-01 00:05:00"), 5L,
         "fresh unique words carry twelve distinct tokens here more pad fill end")
     ).toDF("ts", "doc_id", "text")
-    b1.coalesce(1).write.parquet(s"$dir/in")
-    Thread.sleep(1100) // distinct mtimes: maxFilesPerTrigger orders on them
-    b2.coalesce(1).write.mode("append").parquet(s"$dir/in")
+    writeDrops(s"$dir/in", b1.coalesce(1), b2.coalesce(1))
     // history compressed to a fingerprint bloom — built once, shipped as
     // bytes; oversized so the deterministic test can't false-positive
     val bloom = graft.dedup.Dedup.keyBloom(
@@ -311,9 +328,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
     val b2 = Seq(
       (java.sql.Timestamp.valueOf("2024-01-01 02:00:00"), 99L, onModel)
     ).toDF("ts", "doc_id", "text")
-    b1.coalesce(1).write.parquet(s"$dir/in")
-    Thread.sleep(1100)
-    b2.coalesce(1).write.mode("append").parquet(s"$dir/in")
+    writeDrops(s"$dir/in", b1.coalesce(1), b2.coalesce(1))
     val stream = spark.readStream.schema(b1.schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$dir/in")
     val out = NgramLm.streamingFilterByScore(stream, model, "text", "doc_id",
@@ -375,9 +390,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
       (java.sql.Timestamp.valueOf("2024-01-01 02:00:00"), 99L,
         "alpha beta gamma delta")
     ).toDF("ts", "doc_id", "text")
-    b1.coalesce(1).write.parquet(s"$dir/in")
-    Thread.sleep(1100)
-    b2.coalesce(1).write.mode("append").parquet(s"$dir/in")
+    writeDrops(s"$dir/in", b1.coalesce(1), b2.coalesce(1))
     val stream = spark.readStream.schema(b1.schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$dir/in")
     val hits = Dedup.streamingContaminationHits(stream, corpusIdx,
@@ -417,9 +430,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
       FunnelEvent(1L, 0, 200L), // out-of-order anchor, inside the delay
       FunnelEvent(1L, 2, 800L),
       FunnelEvent(3L, 1, 950L), FunnelEvent(3L, 2, 1500L))
-    b1.toDF().write.parquet(s"$dir/in")
-    Thread.sleep(1100)
-    b2.toDF().write.mode("append").parquet(s"$dir/in")
+    writeDrops(s"$dir/in", b1.toDF(), b2.toDF())
     val stream = StreamingViews.fileStream(spark, s"$dir/in",
       b1.toDF().schema).as[FunnelEvent]
     val out = StreamingViews.streamingFunnel(stream, nSteps = 3,
@@ -471,9 +482,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
     val b2 = Seq(
       ActivityEvent(2L, 150L),                        // bucket 1, late-ish
       ActivityEvent(3L, 400L))                        // bucket 4
-    b1.toDF().write.parquet(s"$dir/in")
-    Thread.sleep(1100)
-    b2.toDF().write.mode("append").parquet(s"$dir/in")
+    writeDrops(s"$dir/in", b1.toDF(), b2.toDF())
     val stream = StreamingViews.fileStream(spark, s"$dir/in",
       b1.toDF().schema).as[ActivityEvent]
     val out = StreamingViews.streamingRollingActive(stream,
@@ -519,9 +528,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
       (0L until 25L).map(u => ActivityEvent(u * 3, 250L + u))
     val b2 = Seq(ActivityEvent(500L, 150L)) ++ // bucket 1, arrives late-ish
       (0L until 30L).map(u => ActivityEvent(u * 2, 430L + u))
-    b1.toDF().write.parquet(s"$dir/in")
-    Thread.sleep(1100)
-    b2.toDF().write.mode("append").parquet(s"$dir/in")
+    writeDrops(s"$dir/in", b1.toDF(), b2.toDF())
     val stream = StreamingViews.fileStream(spark, s"$dir/in",
       b1.toDF().schema).as[ActivityEvent]
     val out = StreamingViews.streamingRollingActiveApprox(stream,
@@ -584,9 +591,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
       ActivityEvent(1L, 230L), ActivityEvent(1L, 240L), // bucket 2 more
       ActivityEvent(1L, 250L), ActivityEvent(1L, 260L),
       ActivityEvent(1L, 350L))                          // bucket 3: 1
-    b1.toDF().write.parquet(s"$dir/in")
-    Thread.sleep(1100)
-    b2.toDF().write.mode("append").parquet(s"$dir/in")
+    writeDrops(s"$dir/in", b1.toDF(), b2.toDF())
     val stream = StreamingViews.fileStream(spark, s"$dir/in",
       b1.toDF().schema).as[ActivityEvent]
     val out = StreamingViews.streamingEwma(stream, bucketMillis = 100L,
@@ -633,9 +638,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
     val b2 = Seq(ChangeEvent(1L, 300L, "b"), ChangeEvent(1L, 150L, "a"),
       ChangeEvent(1L, 400L, "a"), ChangeEvent(2L, 500L, "y"))
     import spark.implicits._
-    b1.toDF().write.parquet(s"$dir/in")
-    Thread.sleep(1100)
-    b2.toDF().write.mode("append").parquet(s"$dir/in")
+    writeDrops(s"$dir/in", b1.toDF(), b2.toDF())
     val out = StreamingViews.streamingScd2(
       StreamingViews.fileStream(spark, s"$dir/in", b1.toDF().schema)
         .as[ChangeEvent],
@@ -678,11 +681,9 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
     // batch 2: a LATE interval and points that must match batch-1 state
     val i2 = Seq((3L, 1L, 50L, 120L))
     val p2 = Seq((12L, 1L, 110L), (13L, 2L, 200L), (14L, 1L, 210L))
-    i1.toDF("iid", "key", "st", "en").write.parquet(s"$dir/i")
-    p1.toDF("pid", "key", "ts").write.parquet(s"$dir/p")
-    Thread.sleep(1100)
-    i2.toDF("iid", "key", "st", "en").write.mode("append").parquet(s"$dir/i")
-    p2.toDF("pid", "key", "ts").write.mode("append").parquet(s"$dir/p")
+    writeDrops(s"$dir/i", i1.toDF("iid", "key", "st", "en"),
+      i2.toDF("iid", "key", "st", "en"))
+    writeDrops(s"$dir/p", p1.toDF("pid", "key", "ts"), p2.toDF("pid", "key", "ts"))
     val out = StreamingViews.streamingIntervalJoin(
       StreamingViews.fileStream(spark, s"$dir/i",
         i1.toDF("iid", "key", "st", "en").schema),
@@ -723,9 +724,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
     val b2 = Seq(CdcChangeEvent(1L, 200L, "U", 99L),
       CdcChangeEvent(3L, 1100L, "U", 33L),
       CdcChangeEvent(1L, 1500L, "D", 0L))
-    b1.toDF().write.parquet(s"$dir/in")
-    Thread.sleep(1100)
-    b2.toDF().write.mode("append").parquet(s"$dir/in")
+    writeDrops(s"$dir/in", b1.toDF(), b2.toDF())
     val out = StreamingViews.streamingDailyChangelog(
       StreamingViews.fileStream(spark, s"$dir/in", b1.toDF().schema)
         .as[CdcChangeEvent],
@@ -779,9 +778,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
     // two 100ms buckets; one out-of-order bucket-0 doc arrives in batch 2
     val b1 = Seq(("alpha beta beta", 10L), ("gamma alpha", 150L))
     val b2 = Seq(("beta gamma gamma", 60L), ("delta", 160L))
-    b1.toDF("text", "ts").write.parquet(s"$dir/in")
-    Thread.sleep(1100)
-    b2.toDF("text", "ts").write.mode("append").parquet(s"$dir/in")
+    writeDrops(s"$dir/in", b1.toDF("text", "ts"), b2.toDF("text", "ts"))
     val stream = StreamingViews.fileStream(spark, s"$dir/in",
       b1.toDF("text", "ts").schema)
     val out = StreamingViews.streamingTokenCms(stream, "text", "ts",
@@ -831,9 +828,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
     // two 100ms buckets; one out-of-order bucket-0 vector in batch 2
     val b1 = Seq((Seq(1.0f, 2.0f), 10L), (Seq(2.0f, 2.0f), 150L))
     val b2 = Seq((Seq(3.0f, 4.0f), 60L), (Seq(-1.5f, 0.5f), 160L))
-    b1.toDF("embedding", "ts").write.parquet(s"$dir/in")
-    Thread.sleep(1100)
-    b2.toDF("embedding", "ts").write.mode("append").parquet(s"$dir/in")
+    writeDrops(s"$dir/in", b1.toDF("embedding", "ts"), b2.toDF("embedding", "ts"))
     val stream = StreamingViews.fileStream(spark, s"$dir/in",
       b1.toDF("embedding", "ts").schema)
     val out = StreamingViews.streamingCentroidSums(stream, "embedding", "ts",
@@ -883,9 +878,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
     // two 100ms buckets; one out-of-order bucket-0 row arrives in batch 2
     val b1 = Seq(("k1", 10L), ("k2", 40L), ("k1", 150L))
     val b2 = Seq(("k3", 60L), ("k2", 160L), ("k2", 170L))
-    b1.toDF("key", "ts").write.parquet(s"$dir/in")
-    Thread.sleep(1100)
-    b2.toDF("key", "ts").write.mode("append").parquet(s"$dir/in")
+    writeDrops(s"$dir/in", b1.toDF("key", "ts"), b2.toDF("key", "ts"))
     val stream = StreamingViews.fileStream(spark, s"$dir/in",
       b1.toDF("key", "ts").schema)
     val (depth, width, seed) = (5, 16, 7)
@@ -939,9 +932,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
     // be bit-exact equal to a batch per-bucket mgAgg build
     val b1 = Seq(("alpha beta beta", 10L), ("gamma alpha", 150L))
     val b2 = Seq(("beta gamma gamma", 60L), ("delta", 160L))
-    b1.toDF("text", "ts").write.parquet(s"$dir/in")
-    Thread.sleep(1100)
-    b2.toDF("text", "ts").write.mode("append").parquet(s"$dir/in")
+    writeDrops(s"$dir/in", b1.toDF("text", "ts"), b2.toDF("text", "ts"))
     val stream = StreamingViews.fileStream(spark, s"$dir/in",
       b1.toDF("text", "ts").schema)
     val out = StreamingViews.streamingTokenHeavyHitters(stream, "text", "ts",
@@ -1003,9 +994,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
       Seq(MeasureEvent(777.0, 255L)) // bucket 2, early arrival
     val b2 = (0 until 10).map(i => MeasureEvent(200.0 + i, 150L + i)) ++ // late bucket-1 burst
       (0 until 15).map(i => MeasureEvent(300.0 + i, 200L + i))
-    b1.toDF().write.parquet(s"$dir/in")
-    Thread.sleep(1100)
-    b2.toDF().write.mode("append").parquet(s"$dir/in")
+    writeDrops(s"$dir/in", b1.toDF(), b2.toDF())
     val stream = StreamingViews.fileStream(spark, s"$dir/in",
       b1.toDF().schema).as[MeasureEvent]
     val out = StreamingViews.streamingBucketQuantileSketches(stream,
@@ -1058,9 +1047,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
     val b2 = Seq(
       SegmentEvent("B", 4L, 60L),   // late-ish, bucket 0
       SegmentEvent("B", 3L, 160L), SegmentEvent("B", 5L, 170L))
-    b1.toDF().write.parquet(s"$dir/in")
-    Thread.sleep(1100)
-    b2.toDF().write.mode("append").parquet(s"$dir/in")
+    writeDrops(s"$dir/in", b1.toDF(), b2.toDF())
     val stream = StreamingViews.fileStream(spark, s"$dir/in",
       b1.toDF().schema).as[SegmentEvent]
     val out = StreamingViews.streamingSegmentSketches(stream,
@@ -1127,9 +1114,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
       (java.sql.Timestamp.valueOf("2024-01-01 00:04:00"), 4L,
         "https://new.com/p")
     ).toDF("ts", "doc_id", "url")
-    b1.coalesce(1).write.parquet(s"$dir/in")
-    Thread.sleep(1100)
-    b2.coalesce(1).write.mode("append").parquet(s"$dir/in")
+    writeDrops(s"$dir/in", b1.coalesce(1), b2.coalesce(1))
     val bloom = graft.dedup.Dedup.keyBloom(
       Seq("http://old.com/seen").toDF("u")
         .select(graft.text.UrlOps.canonicalizeUrl($"u").as("k")),
@@ -1169,9 +1154,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
       ActivityEvent(1L, 330L),
       ActivityEvent(1L, 410L), ActivityEvent(1L, 420L), // bucket 4: 3
       ActivityEvent(1L, 430L))
-    b1.toDF().write.parquet(s"$dir/in")
-    Thread.sleep(1100)
-    b2.toDF().write.mode("append").parquet(s"$dir/in")
+    writeDrops(s"$dir/in", b1.toDF(), b2.toDF())
     val stream = StreamingViews.fileStream(spark, s"$dir/in",
       b1.toDF().schema).as[ActivityEvent]
     val out = StreamingViews.streamingCusum(stream, bucketMillis = 100L,
