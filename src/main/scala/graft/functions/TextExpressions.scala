@@ -1,10 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.expressions.codegen.{Block, CodeGenerator, CodegenContext, ExprCode, ExprValue, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -13,15 +15,52 @@ import org.apache.spark.unsafe.types.UTF8String
   * functions (`filter(t, w -> ...)`, `aggregate(t, 0, ...)`) — interpreted
   * per element (CodegenFallback), which puts a lambda interpreter in the
   * hottest scan of the corpus-clean pipeline. Same values, compiled loops,
-  * full codegen — the [[FloatVectorDot]] discipline applied to text. */
+  * full codegen.
+  *
+  * The rule for every native expression in `graft.functions`: its
+  * algorithm is ONE Scala kernel on its companion object. Interpreted
+  * eval calls the kernel, and `doGenCode` emits a single call to the same
+  * kernel (referenced arrays ride through `ctx.addReferenceObj`, the
+  * float-vs-double choice as an argument) — generated code is never a
+  * second, hand-written copy of the loop, so the interpreted path
+  * (`ConvertToLocalRelation`, codegen fallback) and whole-stage codegen
+  * cannot drift apart. `KernelCodegenSpec` pins both paths equal for
+  * every expression and fails on a hand-built Java body in this
+  * package. */
+
+/** Unary expressions over one `array<string>` input: the type check and
+  * its failure text, written once. */
+private[functions] trait StringArrayInput extends UnaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(s"$nodeName needs array<string>, got $t")
+  }
+}
+
+private[functions] object StringArrayInput {
+  /** Element `i` of a string array, or null. */
+  def elem(arr: ArrayData, i: Int): UTF8String =
+    if (arr.isNullAt(i)) null else arr.getUTF8String(i)
+}
+
+/** Binary expressions over two `array<string>` inputs. */
+private[functions] trait StringArrayPair extends BinaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult =
+    (left.dataType, right.dataType) match {
+      case (ArrayType(StringType, _), ArrayType(StringType, _)) =>
+        TypeCheckResult.TypeCheckSuccess
+      case (l, r) => TypeCheckResult.TypeCheckFailure(
+        s"$nodeName needs two array<string> inputs, got ($l, $r)")
+    }
+}
 
 /** Count of array elements contained in a FIXED string set (occurrences,
   * not distinct — `array_except` dedupes and cannot express this). The
-  * set rides as one referenced UTF8String[] turned into a HashSet at
-  * codegen init, so membership is O(1) per element. Null elements don't
-  * count (the tokenizer never produces them; defensive). */
+  * set rides as one referenced UTF8String HashSet, so membership is O(1)
+  * per element. Null elements don't count (the tokenizer never produces
+  * them; defensive). */
 case class ArrayCountInSet(child: Expression, set: Seq[String])
-    extends UnaryExpression {
+    extends UnaryExpression with StringArrayInput {
 
   @transient private lazy val utf8Set: java.util.HashSet[UTF8String] = {
     val s = new java.util.HashSet[UTF8String](math.max(16, set.size * 2))
@@ -31,57 +70,52 @@ case class ArrayCountInSet(child: Expression, set: Seq[String])
 
   override def dataType: DataType = IntegerType
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"ArrayCountInSet needs array<string>, got $t")
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    var n = 0
-    var i = 0
-    while (i < arr.numElements()) {
-      if (!arr.isNullAt(i) && utf8Set.contains(arr.getUTF8String(i))) n += 1
-      i += 1
-    }
-    n
-  }
+  override def nullSafeEval(input: Any): Any =
+    ArrayCountInSet.count(input.asInstanceOf[ArrayData], utf8Set)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val setRef = ctx.addReferenceObj("wordSet", utf8Set, "java.util.HashSet")
-    nullSafeCodeGen(ctx, ev, arr => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      s"""
-         |int $n = 0;
-         |for (int $i = 0; $i < $arr.numElements(); $i++) {
-         |  if (!$arr.isNullAt($i) && $setRef.contains($arr.getUTF8String($i))) $n++;
-         |}
-         |${ev.value} = $n;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, arr =>
+      s"graft.functions.ArrayCountInSet$$.MODULE$$.count($arr, $setRef)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
+object ArrayCountInSet {
+  private[functions] def count(arr: ArrayData, set: java.util.HashSet[UTF8String]): Int = {
+    var n = 0
+    var i = 0
+    while (i < arr.numElements()) {
+      if (!arr.isNullAt(i) && set.contains(arr.getUTF8String(i))) n += 1
+      i += 1
+    }
+    n
+  }
+}
+
 /** Sum of string lengths (in characters) over an array — the numerator of
   * mean-token-length, as one compiled loop. Null elements contribute 0. */
-case class ArrayStringLenSum(child: Expression) extends UnaryExpression {
+case class ArrayStringLenSum(child: Expression)
+    extends UnaryExpression with StringArrayInput {
   import org.apache.spark.sql.types.LongType
 
   override def dataType: DataType = LongType
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"ArrayStringLenSum needs array<string>, got $t")
-  }
+  override def nullSafeEval(input: Any): Any =
+    ArrayStringLenSum.lenSum(input.asInstanceOf[ArrayData])
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, arr =>
+      s"graft.functions.ArrayStringLenSum$$.MODULE$$.lenSum($arr)")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object ArrayStringLenSum {
+  private[functions] def lenSum(arr: ArrayData): Long = {
     var acc = 0L
     var i = 0
     while (i < arr.numElements()) {
@@ -90,22 +124,6 @@ case class ArrayStringLenSum(child: Expression) extends UnaryExpression {
     }
     acc
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr => {
-      val acc = ctx.freshName("acc")
-      val i = ctx.freshName("i")
-      s"""
-         |long $acc = 0L;
-         |for (int $i = 0; $i < $arr.numElements(); $i++) {
-         |  if (!$arr.isNullAt($i)) $acc += $arr.getUTF8String($i).numChars();
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 /** Unicode NFC normalization (composed canonical form) — no Spark
@@ -165,17 +183,12 @@ object NfcNormalize {
   * A native expression rather than HOFs because the HOF form is
   * O(dim × tokens) per document (filter per bucket) and interpreted;
   * this is one compiled O(tokens) pass with a long[dim] accumulator. */
-case class HashingVector(child: Expression, dim: Int) extends UnaryExpression {
+case class HashingVector(child: Expression, dim: Int)
+    extends UnaryExpression with StringArrayInput {
   require(dim > 0, s"dim must be positive: $dim")
 
   override def dataType: DataType =
     ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"HashingVector needs array<string>, got $t")
-  }
 
   override def nullSafeEval(input: Any): Any =
     HashingVector.count(input.asInstanceOf[ArrayData], dim)
@@ -189,19 +202,48 @@ case class HashingVector(child: Expression, dim: Int) extends UnaryExpression {
 }
 
 object HashingVector {
-  private val md = ThreadLocal.withInitial[java.security.MessageDigest](() =>
-    java.security.MessageDigest.getInstance("MD5"))
+  /** One md5 digest and its 16-byte output buffer per thread, reused at
+    * every position. */
+  private final class Md5 {
+    val digest: java.security.MessageDigest = java.security.MessageDigest.getInstance("MD5")
+    val out = new Array[Byte](16)
+  }
+  private val md5 = ThreadLocal.withInitial[Md5](() => new Md5)
 
   /** Bucket = first 4 digest bytes as an unsigned 32-bit int, mod dim —
     * exactly the value of the first 8 md5 HEX DIGITS, so any engine with
     * md5 + hex parsing replays it. */
-  def bucket(w: UTF8String, dim: Int): Int = {
-    val d = md.get(); d.reset()
-    val h = d.digest(w.getBytes)
+  def bucket(w: UTF8String, dim: Int): Int = bucket(w, null, dim)
+
+  /** The md5-prefix bucket of `a ++ " " ++ b` — a unigram when `b` is
+    * null, a bigram otherwise — without materializing the gram. A null
+    * part contributes nothing (concat_ws semantics: the separator only
+    * between two non-null parts). The one md5-prefix fold under
+    * [[HashingVector]], [[DsirWeight]] and [[DsirBuckets]]; it allocates
+    * nothing for on-heap strings. */
+  private[functions] def bucket(a: UTF8String, b: UTF8String, dim: Int): Int = {
+    val s = md5.get()
+    val d = s.digest
+    d.reset()
+    if (a != null) update(d, a)
+    if (a != null && b != null) d.update(' '.toByte)
+    if (b != null) update(d, b)
+    d.digest(s.out, 0, 16)
+    val h = s.out
     val v = ((h(0) & 0xffL) << 24) | ((h(1) & 0xffL) << 16) |
       ((h(2) & 0xffL) << 8) | (h(3) & 0xffL)
     (v % dim).toInt
   }
+
+  /** Feeds the string's UTF-8 bytes in place when they live in a byte
+    * array (every on-heap row); copies only for off-heap memory. */
+  private def update(d: java.security.MessageDigest, s: UTF8String): Unit =
+    s.getBaseObject match {
+      case bytes: Array[Byte] => d.update(bytes,
+        (s.getBaseOffset - org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET).toInt,
+        s.numBytes)
+      case _ => d.update(s.getBytes)
+    }
 
   def count(arr: ArrayData, dim: Int): ArrayData = {
     val counts = new Array[Long](dim)
@@ -210,7 +252,7 @@ object HashingVector {
       if (!arr.isNullAt(i)) counts(bucket(arr.getUTF8String(i), dim)) += 1
       i += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(counts)
+    new GenericArrayData(counts)
   }
 }
 
@@ -233,16 +275,10 @@ object HashingVector {
   * `md5(a || ' ' || b)` replay still matches. Fewer than 2 tokens →
   * neutral weight 1.0 (matches the HOF's empty-array fold). */
 case class DsirWeight(child: Expression, ratios: Array[Double])
-    extends UnaryExpression {
+    extends UnaryExpression with StringArrayInput {
   require(ratios.nonEmpty, "ratios must be non-empty")
 
   override def dataType: DataType = org.apache.spark.sql.types.DoubleType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"DsirWeight needs array<string>, got $t")
-  }
 
   override def nullSafeEval(input: Any): Any =
     DsirWeight.weight(input.asInstanceOf[ArrayData], ratios)
@@ -258,37 +294,17 @@ case class DsirWeight(child: Expression, ratios: Array[Double])
 }
 
 object DsirWeight {
-  private val md = ThreadLocal.withInitial[java.security.MessageDigest](() =>
-    java.security.MessageDigest.getInstance("MD5"))
-
-  private val SPACE = Array[Byte](' ')
-
-  /** Bucket of one bigram: md5 over `a ++ " " ++ b`, first 4 digest bytes
-    * as an unsigned 32-bit int, mod dim — [[HashingVector.bucket]] over
-    * the concatenated gram, without materializing the gram string.
-    * A null token contributes nothing (concat_ws semantics: separator
-    * only between non-null args; the tokenizer never emits nulls —
-    * defensive parity with the HOF form). */
+  /** A null token contributes nothing to its bigram (concat_ws
+    * semantics; the tokenizer never emits nulls — defensive parity with
+    * the HOF form). */
   def weight(arr: ArrayData, ratios: Array[Double]): Double = {
-    val dim = ratios.length
     val n = arr.numElements()
     var acc = 1.0
-    if (n >= 2) {
-      val d = md.get()
-      var i = 0
-      while (i < n - 1) {
-        d.reset()
-        val aNull = arr.isNullAt(i)
-        val bNull = arr.isNullAt(i + 1)
-        if (!aNull) d.update(arr.getUTF8String(i).getBytes)
-        if (!aNull && !bNull) d.update(SPACE)
-        if (!bNull) d.update(arr.getUTF8String(i + 1).getBytes)
-        val h = d.digest()
-        val v = ((h(0) & 0xffL) << 24) | ((h(1) & 0xffL) << 16) |
-          ((h(2) & 0xffL) << 8) | (h(3) & 0xffL)
-        acc *= ratios((v % dim).toInt)
-        i += 1
-      }
+    var i = 0
+    while (i < n - 1) {
+      acc *= ratios(HashingVector.bucket(StringArrayInput.elem(arr, i),
+        StringArrayInput.elem(arr, i + 1), ratios.length))
+      i += 1
     }
     acc
   }
@@ -307,46 +323,18 @@ object DsirWeight {
   * (a null condition falls to the otherwise branch), so both forms are
   * ratio-neutral on null docs and callers need no isNotNull pre-filter
   * for agreement. */
-case class BigramArray(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def nullable: Boolean = false
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"BigramArray needs array<string>, got $t")
-  }
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) BigramArray.emptyArray
-    else BigramArray.bigrams(v.asInstanceOf[ArrayData])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val childGen = child.genCode(ctx)
-    val javaType = org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
-      .javaType(dataType)
-    ev.copy(
-      code = childGen.code +
-        code"""
-        $javaType ${ev.value} = ${childGen.isNull}
-          ? graft.functions.BigramArray$$.MODULE$$.emptyArray()
-          : graft.functions.BigramArray$$.MODULE$$.bigrams(${childGen.value});""",
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
+case class BigramArray(child: Expression)
+    extends UnaryExpression with NullToEmptyGrams with StringArrayInput {
+  override protected def kernel: GramKernel = BigramArray
+  override protected def grams(v: Any): ArrayData =
+    BigramArray.bigrams(v.asInstanceOf[ArrayData])
+  override protected def gramsCall(v: ExprValue): Block = code"bigrams($v)"
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
-object BigramArray {
-  /** Shared empty result — null input and <2-token input both land here
-    * (ratio-neutral, matching the HOF twin). */
-  def emptyArray(): ArrayData = GramArrays.Empty
-
+object BigramArray extends GramKernel {
   /** The n=2 case of [[TokenNgrams.grams]] (identical concat_ws
     * null-skip semantics) — one window-join implementation to keep in
     * behavioral lockstep, not two. */
@@ -361,16 +349,11 @@ object BigramArray {
   * radix parse per gram). Feeds the DSIR fit scan: `explode` over ints,
   * then a dim-bounded groupBy. Values replay in DuckDB as
   * `CAST('0x' || substr(md5(a || ' ' || b),1,8) AS BIGINT) % dim`. */
-case class DsirBuckets(child: Expression, dim: Int) extends UnaryExpression {
+case class DsirBuckets(child: Expression, dim: Int)
+    extends UnaryExpression with StringArrayInput {
   require(dim > 0, s"dim must be positive: $dim")
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"DsirBuckets needs array<string>, got $t")
-  }
 
   override def nullSafeEval(input: Any): Any =
     DsirBuckets.buckets(input.asInstanceOf[ArrayData], dim)
@@ -384,35 +367,18 @@ case class DsirBuckets(child: Expression, dim: Int) extends UnaryExpression {
 }
 
 object DsirBuckets {
-  private val md = ThreadLocal.withInitial[java.security.MessageDigest](() =>
-    java.security.MessageDigest.getInstance("MD5"))
-
-  private val SPACE = Array[Byte](' ')
-
   def buckets(arr: ArrayData, dim: Int): ArrayData = {
-    val n = arr.numElements()
-    if (n < 2) new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Int])
-    else {
-      val out = new Array[Int](n - 1)
-      val d = md.get()
-      var i = 0
-      while (i < n - 1) {
-        d.reset()
-        val aNull = arr.isNullAt(i)
-        val bNull = arr.isNullAt(i + 1)
-        if (!aNull) d.update(arr.getUTF8String(i).getBytes)
-        if (!aNull && !bNull) d.update(SPACE)
-        if (!bNull) d.update(arr.getUTF8String(i + 1).getBytes)
-        val h = d.digest()
-        val v = ((h(0) & 0xffL) << 24) | ((h(1) & 0xffL) << 16) |
-          ((h(2) & 0xffL) << 8) | (h(3) & 0xffL)
-        out(i) = (v % dim).toInt
-        i += 1
-      }
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    val out = new Array[Int](math.max(0, arr.numElements() - 1))
+    var i = 0
+    while (i < out.length) {
+      out(i) = HashingVector.bucket(StringArrayInput.elem(arr, i),
+        StringArrayInput.elem(arr, i + 1), dim)
+      i += 1
     }
+    new GenericArrayData(out)
   }
 }
+
 
 /** Token-sequence LCS length — the ROUGE-L kernel (Lin 2004 §3.2). The
   * classic O(C·R) two-row DP, doc-bounded: both sides are single
@@ -427,18 +393,10 @@ object DsirBuckets {
   * null intolerance — [[graft.text.EvalOps.rougeL]] feeds it non-null
   * staged token arrays). */
 case class LcsTokenLength(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with StringArrayPair {
   import org.apache.spark.sql.types.LongType
 
   override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(StringType, _), ArrayType(StringType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"LcsTokenLength needs two array<string> inputs, got ($l, $r)")
-    }
 
   override def nullSafeEval(a: Any, b: Any): Any =
     LcsKernel.lcs(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
@@ -463,14 +421,14 @@ object LcsKernel {
     val bt = new Array[UTF8String](m)
     var j = 0
     while (j < m) {
-      bt(j) = if (b.isNullAt(j)) null else b.getUTF8String(j)
+      bt(j) = StringArrayInput.elem(b, j)
       j += 1
     }
     var prev = new Array[Int](m + 1)
     var cur = new Array[Int](m + 1)
     var i = 0
     while (i < n) {
-      val ai = if (a.isNullAt(i)) null else a.getUTF8String(i)
+      val ai = StringArrayInput.elem(a, i)
       var jj = 0
       while (jj < m) {
         cur(jj + 1) =
@@ -495,18 +453,10 @@ object LcsKernel {
   * stage non-null token arrays). Satisfies `d ≥ max(|a|,|b|) − LCS`
   * (KernelParitySpec pins the bound against [[LcsTokenLength]]). */
 case class TokenEditDistance(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with StringArrayPair {
   import org.apache.spark.sql.types.LongType
 
   override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(StringType, _), ArrayType(StringType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"TokenEditDistance needs two array<string> inputs, got ($l, $r)")
-    }
 
   override def nullSafeEval(a: Any, b: Any): Any =
     EditDistanceKernel.dist(a.asInstanceOf[ArrayData],
@@ -532,7 +482,7 @@ object EditDistanceKernel {
     val bt = new Array[UTF8String](m)
     var j = 0
     while (j < m) {
-      bt(j) = if (b.isNullAt(j)) null else b.getUTF8String(j)
+      bt(j) = StringArrayInput.elem(b, j)
       j += 1
     }
     var prev = new Array[Int](m + 1)
@@ -542,7 +492,7 @@ object EditDistanceKernel {
     var i = 0
     while (i < n) {
       cur(0) = i + 1
-      val ai = if (a.isNullAt(i)) null else a.getUTF8String(i)
+      val ai = StringArrayInput.elem(a, i)
       var jj = 0
       while (jj < m) {
         val sub = prev(jj) + (if (ai != null && ai.equals(bt(jj))) 0 else 1)
@@ -569,18 +519,10 @@ object EditDistanceKernel {
   * null ARRAYS → null out (callers coalesce — the EvalOps gram
   * builders already produce empty, never null). */
 case class ClippedOverlapCount(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with StringArrayPair {
   import org.apache.spark.sql.types.LongType
 
   override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(StringType, _), ArrayType(StringType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"ClippedOverlapCount needs two array<string> inputs, got ($l, $r)")
-    }
 
   override def nullSafeEval(a: Any, b: Any): Any =
     ClippedOverlapKernel.count(a.asInstanceOf[ArrayData],
@@ -731,6 +673,54 @@ object ClippedOverlapMaxKernel {
   }
 }
 
+
+
+/** The null-to-empty gram expressions ([[BigramArray]], [[CharNgrams]],
+  * [[TokenNgrams]]): `array<string>` out, never null — NULL input yields
+  * the companion's shared empty array (the ratio-neutral
+  * null contract) and any other input goes to the companion's kernel, in
+  * eval and in generated code alike. */
+private[functions] trait NullToEmptyGrams extends UnaryExpression {
+  /** The companion holding the kernel and `emptyArray()`. */
+  protected def kernel: GramKernel
+  /** The kernel on a non-null input. */
+  protected def grams(v: Any): ArrayData
+  /** The same kernel call in Java, on the companion, for the value `v`. */
+  protected def gramsCall(v: ExprValue): Block
+
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+
+  override def nullable: Boolean = false
+
+  override def eval(input: InternalRow): Any = {
+    val v = child.eval(input)
+    if (v == null) kernel.emptyArray() else grams(v)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val k = s"${kernel.getClass.getName}.MODULE$$"
+    val childGen = child.genCode(ctx)
+    val javaType = CodeGenerator.javaType(dataType)
+    ev.copy(
+      code = childGen.code +
+        code"""
+        $javaType ${ev.value} = ${childGen.isNull}
+          ? $k.emptyArray()
+          : $k.${gramsCall(childGen.value)};""",
+      isNull = FalseLiteral)
+  }
+}
+
+private[functions] trait GramKernel {
+  /** Shared empty result — one immutable instance for every null or
+    * too-short input, not an allocation per row. */
+  def emptyArray(): ArrayData = GramKernel.Empty
+}
+
+private[functions] object GramKernel {
+  val Empty: ArrayData = new GenericArrayData(Array.empty[Any])
+}
+
 /** Character n-gram array of a string — the chrF gram builder as one
   * compiled pass: gram i is the CODEPOINT substring [i, i+n) (the
   * `substring`/`length` char notion; NOTE this is deliberately NOT
@@ -744,45 +734,25 @@ object ClippedOverlapMaxKernel {
   * ratio-neutral null contract, like [[BigramArray]]). Caller removes
   * whitespace first (the chrF convention) — this builder grams exactly
   * what it is given. */
-case class CharNgrams(child: Expression, n: Int) extends UnaryExpression {
+case class CharNgrams(child: Expression, n: Int)
+    extends UnaryExpression with NullToEmptyGrams {
   require(n >= 1, s"n-gram order must be positive: $n")
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def nullable: Boolean = false
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case StringType => TypeCheckResult.TypeCheckSuccess
     case t => TypeCheckResult.TypeCheckFailure(s"CharNgrams needs string, got $t")
   }
 
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) CharNgrams.emptyArray()
-    else CharNgrams.grams(v.asInstanceOf[UTF8String], n)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val childGen = child.genCode(ctx)
-    val javaType = org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
-      .javaType(dataType)
-    ev.copy(
-      code = childGen.code +
-        code"""
-        $javaType ${ev.value} = ${childGen.isNull}
-          ? graft.functions.CharNgrams$$.MODULE$$.emptyArray()
-          : graft.functions.CharNgrams$$.MODULE$$.grams(${childGen.value}, $n);""",
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
+  override protected def kernel: GramKernel = CharNgrams
+  override protected def grams(v: Any): ArrayData =
+    CharNgrams.grams(v.asInstanceOf[UTF8String], n)
+  override protected def gramsCall(v: ExprValue): Block = code"grams($v, $n)"
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
-object CharNgrams {
-  def emptyArray(): ArrayData = GramArrays.Empty
-
+object CharNgrams extends GramKernel {
   /** O(bytes) total: one private byte copy + one codepoint-offset walk,
     * then each gram is a zero-copy view into the private buffer —
     * `substring(i, i+n)` per gram would re-walk the buffer from byte 0
@@ -812,16 +782,9 @@ object CharNgrams {
           offsets(g + n) - offsets(g))
         g += 1
       }
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+      new GenericArrayData(out)
     }
   }
-}
-
-/** Shared empty gram array — one immutable instance for every
-  * null-to-empty gram builder, not an allocation per null row. */
-private[functions] object GramArrays {
-  val Empty: ArrayData =
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any])
 }
 
 /** Word n-gram array of a token array — [[BigramArray]] generalized to
@@ -832,47 +795,21 @@ private[functions] object GramArrays {
   * re-slices an array per position). Fewer than `n` tokens → empty
   * array; NULL input → empty array (the gram builders' ratio-neutral
   * null contract). */
-case class TokenNgrams(child: Expression, n: Int) extends UnaryExpression {
+case class TokenNgrams(child: Expression, n: Int)
+    extends UnaryExpression with NullToEmptyGrams with StringArrayInput {
   require(n >= 1, s"n-gram order must be positive: $n")
 
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def nullable: Boolean = false
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"TokenNgrams needs array<string>, got $t")
-  }
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) TokenNgrams.emptyArray()
-    else TokenNgrams.grams(v.asInstanceOf[ArrayData], n)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val childGen = child.genCode(ctx)
-    val javaType = org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
-      .javaType(dataType)
-    ev.copy(
-      code = childGen.code +
-        code"""
-        $javaType ${ev.value} = ${childGen.isNull}
-          ? graft.functions.TokenNgrams$$.MODULE$$.emptyArray()
-          : graft.functions.TokenNgrams$$.MODULE$$.grams(${childGen.value}, $n);""",
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
+  override protected def kernel: GramKernel = TokenNgrams
+  override protected def grams(v: Any): ArrayData =
+    TokenNgrams.grams(v.asInstanceOf[ArrayData], n)
+  override protected def gramsCall(v: ExprValue): Block = code"grams($v, $n)"
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
-object TokenNgrams {
+object TokenNgrams extends GramKernel {
   private val SPACE = UTF8String.fromString(" ")
-
-  def emptyArray(): ArrayData = GramArrays.Empty
 
   def grams(arr: ArrayData, n: Int): ArrayData = {
     val len = arr.numElements()
@@ -881,7 +818,7 @@ object TokenNgrams {
       val toks = new Array[UTF8String](len)
       var i = 0
       while (i < len) {
-        toks(i) = if (arr.isNullAt(i)) null else arr.getUTF8String(i)
+        toks(i) = StringArrayInput.elem(arr, i)
         i += 1
       }
       val out = new Array[Any](len - n + 1)
@@ -894,7 +831,7 @@ object TokenNgrams {
         out(i) = UTF8String.concatWs(SPACE, window: _*)
         i += 1
       }
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+      new GenericArrayData(out)
     }
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native Catalyst expression for vector dot products over
@@ -14,62 +14,82 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * higher-order function — interpreted per element (CodegenFallback), which
   * dominates CPU in pairwise-similarity joins. This expression computes the
   * SAME left-to-right sequential double fold (bit-identical results) as a
-  * tight compiled loop, with full codegen support (`doGenCode`), so cosine
-  * stays inside whole-stage codegen.
+  * tight compiled loop whose generated code calls the same kernel, so
+  * cosine stays inside whole-stage codegen.
   */
 case class FloatVectorDot(left: Expression, right: Expression)
     extends BinaryExpression {
 
   override def dataType: DataType = DoubleType
 
-  private def elemType(e: Expression): Option[DataType] = e.dataType match {
-    case ArrayType(FloatType, _)  => Some(FloatType)
-    case ArrayType(DoubleType, _) => Some(DoubleType)
-    case _                        => None
-  }
+  override def checkInputDataTypes(): TypeCheckResult = VectorInput.check(
+    VectorInput.floatElems(left.dataType).isDefined &&
+      VectorInput.floatElems(right.dataType).isDefined,
+    s"FloatVectorDot needs array<float|double> args, got ${left.dataType} / ${right.dataType}")
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (elemType(left).isDefined && elemType(right).isDefined) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"FloatVectorDot needs array<float|double> args, got ${left.dataType} / ${right.dataType}")
+  private def lf = VectorInput.floatElems(left.dataType).contains(true)
+  private def rf = VectorInput.floatElems(right.dataType).contains(true)
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val lf = elemType(left).contains(FloatType)
-    val rf = elemType(right).contains(FloatType)
+  override def nullSafeEval(a: Any, b: Any): Any =
+    FloatVectorDot.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], lf, rf)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (x, y) =>
+      s"graft.functions.FloatVectorDot$$.MODULE$$.dot($x, $y, $lf, $rf)")
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object FloatVectorDot {
+  /** Left-to-right double fold over the common prefix. */
+  private[functions] def dot(x: ArrayData, y: ArrayData, xFloat: Boolean,
+                             yFloat: Boolean): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var acc = 0.0
     var i = 0
     while (i < n) {
-      val xv = if (lf) x.getFloat(i).toDouble else x.getDouble(i)
-      val yv = if (rf) y.getFloat(i).toDouble else y.getDouble(i)
-      acc += xv * yv
+      acc += VectorInput.get(x, i, xFloat) * VectorInput.get(y, i, yFloat)
+      i += 1
+    }
+    acc
+  }
+}
+
+/** The `array<float|double>` input of the vector expressions: its
+  * element-type test, its element read and its dot against a row of a
+  * referenced matrix, each written once. Each expression decides float
+  * vs double once, from its input type, and passes the flag to its
+  * kernel. */
+private[functions] object VectorInput {
+  /** Some(true) for array<float>, Some(false) for array<double>, None
+    * for anything else. */
+  def floatElems(t: DataType): Option[Boolean] = t match {
+    case ArrayType(FloatType, _)  => Some(true)
+    case ArrayType(DoubleType, _) => Some(false)
+    case _                        => None
+  }
+
+  /** Element `i` as a double (float widening is exact). */
+  @inline def get(v: ArrayData, i: Int, isFloat: Boolean): Double =
+    if (isFloat) v.getFloat(i).toDouble else v.getDouble(i)
+
+  /** `Σ_{i<n} m(base+i) · v_i`, the [[FloatVectorDot]] fold against one
+    * row of a flattened matrix. */
+  def rowDot(m: Array[Double], base: Int, v: ArrayData, n: Int,
+             isFloat: Boolean): Double = {
+    var acc = 0.0
+    var i = 0
+    while (i < n) {
+      acc += m(base + i) * get(v, i, isFloat)
       i += 1
     }
     acc
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      def get(arr: String, e: Expression) =
-        if (elemType(e).contains(FloatType)) s"((double) $arr.getFloat($i))"
-        else s"$arr.getDouble($i)"
-      s"""
-         |int $n = Math.min($x.numElements(), $y.numElements());
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $acc += ${get(x, left)} * ${get(y, right)};
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
+  def check(ok: Boolean, failure: => String): TypeCheckResult =
+    if (ok) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(failure)
 }
 
 /** All random-hyperplane LSH band signatures of a vector in ONE pass.
@@ -85,60 +105,61 @@ case class FloatVectorDot(left: Expression, right: Expression)
   * leaves — the generated projection blows past JVM method/constant-pool
   * limits, Janino fails, and the whole stage falls back to interpreted
   * evaluation (~100× slower; this dominated the LSH-banding benchmarks).
-  * Here the matrix rides along as ONE referenced `double[]` and the loop
-  * is three nested `for`s — small generated code, JIT-friendly, and the
+  * Here the matrix rides along as ONE referenced `double[]` and the
+  * generated code is one kernel call — small, JIT-friendly, and the
   * matrix is read from the reference array instead of the constant pool.
   */
 case class HyperplaneSignatures(child: Expression, planes: Seq[Double],
                                 planesPerBand: Int, dim: Int)
     extends UnaryExpression {
   import org.apache.spark.sql.types.LongType
-  import org.apache.spark.sql.catalyst.util.GenericArrayData
 
   @transient private lazy val planeArr: Array[Double] = planes.toArray
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  private def isFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _                       => false
+  private def isFloat = VectorInput.floatElems(child.dataType).contains(true)
+
+  override def checkInputDataTypes(): TypeCheckResult = VectorInput.check(
+    VectorInput.floatElems(child.dataType).isDefined &&
+      planesPerBand > 0 && planesPerBand <= 64 && dim > 0 &&
+      planes.nonEmpty && planes.size % (planesPerBand * dim) == 0,
+    s"HyperplaneSignatures needs array<float|double> input and a plane " +
+      s"matrix divisible into 1..64 planes per band of dim > 0, got " +
+      s"${child.dataType}, ${planes.size} coefficients, " +
+      s"$planesPerBand planes/band, dim $dim")
+
+  override def nullSafeEval(input: Any): Any = HyperplaneSignatures.signatures(
+    input.asInstanceOf[ArrayData], planeArr, planesPerBand, dim, isFloat)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val planesRef = ctx.addReferenceObj("planes", planeArr, "double[]")
+    defineCodeGen(ctx, ev, v => "graft.functions.HyperplaneSignatures$.MODULE$" +
+      s".signatures($v, $planesRef, $planesPerBand, $dim, $isFloat)")
   }
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _)
-      if planesPerBand > 0 && planesPerBand <= 64 && dim > 0 &&
-        planes.nonEmpty && planes.size % (planesPerBand * dim) == 0 =>
-      TypeCheckResult.TypeCheckSuccess
-    case _ => TypeCheckResult.TypeCheckFailure(
-      s"HyperplaneSignatures needs array<float|double> input and a plane " +
-        s"matrix divisible into 1..64 planes per band of dim > 0, got " +
-        s"${child.dataType}, ${planes.size} coefficients, " +
-        s"$planesPerBand planes/band, dim $dim")
-  }
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
 
-  // `dim` is the declared plane dimension: bands derive from it, never
-  // from the row (a row of deviant length would silently misalign plane
-  // offsets). Rows shorter than dim are zero-padded (same result as the
-  // composed min-length dot); longer rows ignore the tail.
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
+object HyperplaneSignatures {
+  /** `dim` is the declared plane dimension: bands derive from it, never
+    * from the row (a row of deviant length would silently misalign plane
+    * offsets). Rows shorter than dim are zero-padded (same result as the
+    * composed min-length dot); longer rows ignore the tail. */
+  private[functions] def signatures(v: ArrayData, planes: Array[Double],
+                                    planesPerBand: Int, dim: Int,
+                                    isFloat: Boolean): ArrayData = {
     val n = math.min(dim, v.numElements())
-    val bands = planeArr.length / (planesPerBand * dim)
+    val bands = planes.length / (planesPerBand * dim)
     val out = new Array[Long](bands)
-    val f = isFloat
     var b = 0
     while (b < bands) {
       var sig = 0L
       var p = 0
       while (p < planesPerBand) {
         val base = (b * planesPerBand + p) * dim
-        var acc = 0.0
-        var i = 0
-        while (i < n) {
-          acc += planeArr(base + i) * (if (f) v.getFloat(i).toDouble else v.getDouble(i))
-          i += 1
-        }
-        if (acc > 0) sig |= 1L << p
+        if (VectorInput.rowDot(planes, base, v, n, isFloat) > 0) sig |= 1L << p
         p += 1
       }
       out(b) = sig
@@ -146,43 +167,6 @@ case class HyperplaneSignatures(child: Expression, planes: Seq[Double],
     }
     new GenericArrayData(out)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val planesRef = ctx.addReferenceObj("planes", planeArr, "double[]")
-    nullSafeCodeGen(ctx, ev, v => {
-      val n = ctx.freshName("n")
-      val bands = ctx.freshName("bands")
-      val out = ctx.freshName("out")
-      val base = ctx.freshName("base")
-      val b = ctx.freshName("b")
-      val p = ctx.freshName("p")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      val sig = ctx.freshName("sig")
-      val elem = if (isFloat) s"((double) $v.getFloat($i))" else s"$v.getDouble($i)"
-      s"""
-         |int $n = Math.min($dim, $v.numElements());
-         |int $bands = $planesRef.length / ($planesPerBand * $dim);
-         |long[] $out = new long[$bands];
-         |for (int $b = 0; $b < $bands; $b++) {
-         |  long $sig = 0L;
-         |  for (int $p = 0; $p < $planesPerBand; $p++) {
-         |    int $base = ($b * $planesPerBand + $p) * $dim;
-         |    double $acc = 0.0;
-         |    for (int $i = 0; $i < $n; $i++) {
-         |      $acc += $planesRef[$base + $i] * $elem;
-         |    }
-         |    if ($acc > 0) $sig |= 1L << $p;
-         |  }
-         |  $out[$b] = $sig;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 /** Nearest-centroid cell id (IVF assignment) in one codegen pass: argmax
@@ -210,78 +194,46 @@ case class NearestCentroid(child: Expression, centroids: Seq[Double],
 
   override def dataType: DataType = IntegerType
 
-  private def isFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _                       => false
+  private def isFloat = VectorInput.floatElems(child.dataType).contains(true)
+
+  override def checkInputDataTypes(): TypeCheckResult = VectorInput.check(
+    VectorInput.floatElems(child.dataType).isDefined &&
+      halfNorms.nonEmpty && centroids.nonEmpty &&
+      centroids.size % halfNorms.size == 0,
+    s"NearestCentroid needs array<float|double> input and a non-empty " +
+      s"centroid matrix divisible by ${halfNorms.size} cells, got ${child.dataType}")
+
+  override def nullSafeEval(input: Any): Any = NearestCentroid.cell(
+    input.asInstanceOf[ArrayData], centArr, normArr, dim, isFloat)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val centsRef = ctx.addReferenceObj("centroids", centArr, "double[]")
+    val normsRef = ctx.addReferenceObj("halfNorms", normArr, "double[]")
+    defineCodeGen(ctx, ev, v => "graft.functions.NearestCentroid$.MODULE$" +
+      s".cell($v, $centsRef, $normsRef, $dim, $isFloat)")
   }
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _)
-      if halfNorms.nonEmpty && centroids.nonEmpty &&
-        centroids.size % halfNorms.size == 0 =>
-      TypeCheckResult.TypeCheckSuccess
-    case _ => TypeCheckResult.TypeCheckFailure(
-      s"NearestCentroid needs array<float|double> input and a non-empty " +
-        s"centroid matrix divisible by ${halfNorms.size} cells, got ${child.dataType}")
-  }
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
 
-  // rows shorter than dim zero-pad (min-length dot, like FloatVectorDot);
-  // longer rows ignore the tail — never an out-of-bounds read
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
+object NearestCentroid {
+  /** Rows shorter than dim zero-pad (min-length dot, like FloatVectorDot);
+    * longer rows ignore the tail — never an out-of-bounds read. */
+  private[functions] def cell(v: ArrayData, centroids: Array[Double],
+                              halfNorms: Array[Double], dim: Int,
+                              isFloat: Boolean): Int = {
     val n = math.min(dim, v.numElements())
-    val f = isFloat
     var best = 0
     var bestScore = Double.NegativeInfinity
     var c = 0
-    while (c < normArr.length) {
-      val base = c * dim
-      var acc = 0.0
-      var i = 0
-      while (i < n) {
-        acc += centArr(base + i) * (if (f) v.getFloat(i).toDouble else v.getDouble(i))
-        i += 1
-      }
-      val score = acc - normArr(c)
+    while (c < halfNorms.length) {
+      val score = VectorInput.rowDot(centroids, c * dim, v, n, isFloat) - halfNorms(c)
       if (score > bestScore) { bestScore = score; best = c }
       c += 1
     }
     best
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val centsRef = ctx.addReferenceObj("centroids", centArr, "double[]")
-    val normsRef = ctx.addReferenceObj("halfNorms", normArr, "double[]")
-    nullSafeCodeGen(ctx, ev, v => {
-      val n = ctx.freshName("n")
-      val best = ctx.freshName("best")
-      val bestScore = ctx.freshName("bestScore")
-      val base = ctx.freshName("base")
-      val c = ctx.freshName("c")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      val score = ctx.freshName("score")
-      val elem = if (isFloat) s"((double) $v.getFloat($i))" else s"$v.getDouble($i)"
-      s"""
-         |int $n = Math.min($dim, $v.numElements());
-         |int $best = 0;
-         |double $bestScore = Double.NEGATIVE_INFINITY;
-         |for (int $c = 0; $c < $normsRef.length; $c++) {
-         |  int $base = $c * $dim;
-         |  double $acc = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    $acc += $centsRef[$base + $i] * $elem;
-         |  }
-         |  double $score = $acc - $normsRef[$c];
-         |  if ($score > $bestScore) { $bestScore = $score; $best = $c; }
-         |}
-         |${ev.value} = $best;
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 /** Product-quantization encoder: one codegen pass maps a vector to its `m`
@@ -305,7 +257,6 @@ case class PqEncode(child: Expression, codebooks: Seq[Double], m: Int, k: Int,
                     normalize: Boolean)
     extends UnaryExpression {
   import org.apache.spark.sql.types.IntegerType
-  import org.apache.spark.sql.catalyst.util.GenericArrayData
 
   @transient private lazy val bookArr: Array[Double] = codebooks.toArray
   // per-code |c|²/2, [sub][code] flattened — derived once from the tensor
@@ -321,35 +272,43 @@ case class PqEncode(child: Expression, codebooks: Seq[Double], m: Int, k: Int,
     h
   }
   private def dsub: Int = codebooks.size / (m * k)
-  private def dim: Int = dsub * m
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
 
-  private def isFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _                       => false
+  private def isFloat = VectorInput.floatElems(child.dataType).contains(true)
+
+  override def checkInputDataTypes(): TypeCheckResult = VectorInput.check(
+    VectorInput.floatElems(child.dataType).isDefined &&
+      m > 0 && k > 0 && codebooks.nonEmpty && codebooks.size % (m * k) == 0,
+    s"PqEncode needs array<float|double> input and a codebook tensor " +
+      s"divisible into m=$m × k=$k codes, got ${child.dataType}, " +
+      s"${codebooks.size} coefficients")
+
+  override def nullSafeEval(input: Any): Any = PqEncode.encode(
+    input.asInstanceOf[ArrayData], bookArr, halfArr, m, k, normalize, isFloat)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val bookRef = ctx.addReferenceObj("codebooks", bookArr, "double[]")
+    val halfRef = ctx.addReferenceObj("halfNorms", halfArr, "double[]")
+    defineCodeGen(ctx, ev, v => "graft.functions.PqEncode$.MODULE$" +
+      s".encode($v, $bookRef, $halfRef, $m, $k, $normalize, $isFloat)")
   }
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _)
-      if m > 0 && k > 0 && codebooks.nonEmpty && codebooks.size % (m * k) == 0 =>
-      TypeCheckResult.TypeCheckSuccess
-    case _ => TypeCheckResult.TypeCheckFailure(
-      s"PqEncode needs array<float|double> input and a codebook tensor " +
-        s"divisible into m=$m × k=$k codes, got ${child.dataType}, " +
-        s"${codebooks.size} coefficients")
-  }
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
 
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    val n = math.min(dim, v.numElements())
-    val f = isFloat
-    def elem(i: Int): Double = if (f) v.getFloat(i).toDouble else v.getDouble(i)
+object PqEncode {
+  private[functions] def encode(v: ArrayData, books: Array[Double],
+                                halfNorms: Array[Double], m: Int, k: Int,
+                                normalize: Boolean, isFloat: Boolean): ArrayData = {
+    val dsub = books.length / (m * k)
+    val n = math.min(dsub * m, v.numElements())
     var inv = 1.0
     if (normalize) {
       var acc = 0.0; var i = 0
-      while (i < n) { val e = elem(i); acc += e * e; i += 1 }
-      inv = if (acc > 0) 1.0 / math.sqrt(acc) else 1.0
+      while (i < n) { val e = VectorInput.get(v, i, isFloat); acc += e * e; i += 1 }
+      if (acc > 0) inv = 1.0 / math.sqrt(acc)
     }
     val codes = new Array[Int](m)
     var s = 0
@@ -363,8 +322,11 @@ case class PqEncode(child: Expression, codebooks: Seq[Double], m: Int, k: Int,
         val base = (s * k + c) * dsub
         var acc = 0.0
         var i = 0
-        while (i < lim) { acc += bookArr(base + i) * (elem(off + i) * inv); i += 1 }
-        val score = acc - halfArr(s * k + c)
+        while (i < lim) {
+          acc += books(base + i) * (VectorInput.get(v, off + i, isFloat) * inv)
+          i += 1
+        }
+        val score = acc - halfNorms(s * k + c)
         if (score > bestScore) { bestScore = score; best = c }
         c += 1
       }
@@ -373,64 +335,6 @@ case class PqEncode(child: Expression, codebooks: Seq[Double], m: Int, k: Int,
     }
     new GenericArrayData(codes)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bookRef = ctx.addReferenceObj("codebooks", bookArr, "double[]")
-    val halfRef = ctx.addReferenceObj("halfNorms", halfArr, "double[]")
-    nullSafeCodeGen(ctx, ev, v => {
-      val n = ctx.freshName("n")
-      val inv = ctx.freshName("inv")
-      val nacc = ctx.freshName("nacc")
-      val codes = ctx.freshName("codes")
-      val s = ctx.freshName("s")
-      val off = ctx.freshName("off")
-      val lim = ctx.freshName("lim")
-      val best = ctx.freshName("best")
-      val bestScore = ctx.freshName("bestScore")
-      val c = ctx.freshName("c")
-      val base = ctx.freshName("base")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      val score = ctx.freshName("score")
-      def elem(ix: String) =
-        if (isFloat) s"((double) $v.getFloat($ix))" else s"$v.getDouble($ix)"
-      val normBlock = if (normalize)
-        s"""
-           |double $nacc = 0.0;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  double __e = ${elem(i)}; $nacc += __e * __e;
-           |}
-           |if ($nacc > 0) $inv = 1.0 / Math.sqrt($nacc);
-         """.stripMargin
-      else ""
-      s"""
-         |int $n = Math.min($dim, $v.numElements());
-         |double $inv = 1.0;
-         |$normBlock
-         |int[] $codes = new int[$m];
-         |for (int $s = 0; $s < $m; $s++) {
-         |  int $off = $s * $dsub;
-         |  int $lim = Math.min($dsub, Math.max(0, $n - $off));
-         |  int $best = 0;
-         |  double $bestScore = Double.NEGATIVE_INFINITY;
-         |  for (int $c = 0; $c < $k; $c++) {
-         |    int $base = ($s * $k + $c) * $dsub;
-         |    double $acc = 0.0;
-         |    for (int $i = 0; $i < $lim; $i++) {
-         |      $acc += $bookRef[$base + $i] * (${elem(s"($off + $i)")} * $inv);
-         |    }
-         |    double $score = $acc - $halfRef[$s * $k + $c];
-         |    if ($score > $bestScore) { $bestScore = $score; $best = $c; }
-         |  }
-         |  $codes[$s] = $best;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($codes);
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 /** Asymmetric-distance (ADC) scorer: sums the per-subspace lookup table at
@@ -446,7 +350,6 @@ case class PqAdcScore(child: Expression, table: Seq[Double], k: Int)
   import org.apache.spark.sql.types.IntegerType
 
   @transient private lazy val tabArr: Array[Double] = table.toArray
-  private def m: Int = table.size / k
 
   override def dataType: DataType = DoubleType
 
@@ -459,40 +362,31 @@ case class PqAdcScore(child: Expression, table: Seq[Double], k: Int)
         s"got ${child.dataType}, ${table.size} entries")
   }
 
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    val n = math.min(m, v.numElements())
-    var acc = 0.0
-    var s = 0
-    while (s < n) {
-      val code = v.getInt(s)
-      if (code >= 0 && code < k) acc += tabArr(s * k + code)
-      s += 1
-    }
-    acc
-  }
+  override def nullSafeEval(input: Any): Any =
+    PqAdcScore.score(input.asInstanceOf[ArrayData], tabArr, k)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val tabRef = ctx.addReferenceObj("adcTable", tabArr, "double[]")
-    nullSafeCodeGen(ctx, ev, v => {
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      val s = ctx.freshName("s")
-      val code = ctx.freshName("code")
-      s"""
-         |int $n = Math.min($m, $v.numElements());
-         |double $acc = 0.0;
-         |for (int $s = 0; $s < $n; $s++) {
-         |  int $code = $v.getInt($s);
-         |  if ($code >= 0 && $code < $k) $acc += $tabRef[$s * $k + $code];
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, v =>
+      s"graft.functions.PqAdcScore$$.MODULE$$.score($v, $tabRef, $k)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+}
+
+object PqAdcScore {
+  private[functions] def score(codes: ArrayData, table: Array[Double], k: Int): Double = {
+    val n = math.min(table.length / k, codes.numElements())
+    var acc = 0.0
+    var s = 0
+    while (s < n) {
+      val code = codes.getInt(s)
+      if (code >= 0 && code < k) acc += table(s * k + code)
+      s += 1
+    }
+    acc
+  }
 }
 
 /** Symmetric int8 scalar-quantization scale of a vector: `max|v_i| / 127`
@@ -507,52 +401,35 @@ case class Int8Scale(child: Expression) extends UnaryExpression {
 
   override def dataType: DataType = DoubleType
 
-  private def isFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _                       => false
-  }
+  private def isFloat = VectorInput.floatElems(child.dataType).contains(true)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case _ => TypeCheckResult.TypeCheckFailure(
-      s"Int8Scale needs array<float|double>, got ${child.dataType}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult = VectorInput.check(
+    VectorInput.floatElems(child.dataType).isDefined,
+    s"Int8Scale needs array<float|double>, got ${child.dataType}")
 
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any =
+    Int8Scale.scale(input.asInstanceOf[ArrayData], isFloat)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, v =>
+      s"graft.functions.Int8Scale$$.MODULE$$.scale($v, $isFloat)")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object Int8Scale {
+  private[functions] def scale(v: ArrayData, isFloat: Boolean): Double = {
     val n = v.numElements()
-    val f = isFloat
     var m = 0.0
     var i = 0
     while (i < n) {
-      val x = math.abs(if (f) v.getFloat(i).toDouble else v.getDouble(i))
+      val x = math.abs(VectorInput.get(v, i, isFloat))
       if (x > m) m = x
       i += 1
     }
     m / 127.0
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val m = ctx.freshName("m")
-      val x = ctx.freshName("x")
-      val elem = if (isFloat) s"((double) $v.getFloat($i))" else s"$v.getDouble($i)"
-      s"""
-         |int $n = $v.numElements();
-         |double $m = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $x = Math.abs($elem);
-         |  if ($x > $m) $m = $x;
-         |}
-         |${ev.value} = $m / 127.0;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 /** Int8 codes of a vector given its quantization scale:
@@ -571,33 +448,35 @@ case class Int8Scale(child: Expression) extends UnaryExpression {
 case class Int8Codes(left: Expression, right: Expression)
     extends BinaryExpression {
   import org.apache.spark.sql.types.ByteType
-  import org.apache.spark.sql.catalyst.util.GenericArrayData
 
   override def dataType: DataType = ArrayType(ByteType, containsNull = false)
 
-  private def isFloat: Boolean = left.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _                       => false
-  }
+  private def isFloat = VectorInput.floatElems(left.dataType).contains(true)
 
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(FloatType, _) | ArrayType(DoubleType, _), DoubleType) =>
-      TypeCheckResult.TypeCheckSuccess
-    case _ => TypeCheckResult.TypeCheckFailure(
-      s"Int8Codes needs (array<float|double>, double), got " +
-        s"${left.dataType} / ${right.dataType}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult = VectorInput.check(
+    VectorInput.floatElems(left.dataType).isDefined && right.dataType == DoubleType,
+    s"Int8Codes needs (array<float|double>, double), got " +
+      s"${left.dataType} / ${right.dataType}")
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val v = a.asInstanceOf[ArrayData]
-    val scale = b.asInstanceOf[Double]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    Int8Codes.codes(a.asInstanceOf[ArrayData], b.asInstanceOf[Double], isFloat)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (v, scale) =>
+      s"graft.functions.Int8Codes$$.MODULE$$.codes($v, $scale, $isFloat)")
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object Int8Codes {
+  private[functions] def codes(v: ArrayData, scale: Double, isFloat: Boolean): ArrayData = {
     val n = v.numElements()
-    val f = isFloat
     val out = new Array[Byte](n)
     if (scale != 0.0) {
       var i = 0
       while (i < n) {
-        val x = (if (f) v.getFloat(i).toDouble else v.getDouble(i)) / scale
+        val x = VectorInput.get(v, i, isFloat) / scale
         val r = if (x >= 0) math.floor(x + 0.5) else math.ceil(x - 0.5)
         out(i) = math.max(-127.0, math.min(127.0, r)).toByte
         i += 1
@@ -605,31 +484,6 @@ case class Int8Codes(left: Expression, right: Expression)
     }
     new GenericArrayData(out)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (v, scale) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val x = ctx.freshName("x")
-      val r = ctx.freshName("r")
-      val out = ctx.freshName("out")
-      val elem = if (isFloat) s"((double) $v.getFloat($i))" else s"$v.getDouble($i)"
-      s"""
-         |int $n = $v.numElements();
-         |byte[] $out = new byte[$n];
-         |if ($scale != 0.0) {
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    double $x = $elem / $scale;
-         |    double $r = $x >= 0 ? Math.floor($x + 0.5) : Math.ceil($x - 0.5);
-         |    $out[$i] = (byte) Math.max(-127.0, Math.min(127.0, $r));
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 /** Exact integer dot product of two `array<tinyint>` code columns — the
@@ -650,9 +504,18 @@ case class Int8Dot(left: Expression, right: Expression)
       s"Int8Dot needs two array<tinyint> args, got ${left.dataType} / ${right.dataType}")
   }
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    Int8Dot.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (x, y) => s"graft.functions.Int8Dot$$.MODULE$$.dot($x, $y)")
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object Int8Dot {
+  private[functions] def dot(x: ArrayData, y: ArrayData): Long = {
     val n = math.min(x.numElements(), y.numElements())
     var acc = 0L
     var i = 0
@@ -662,24 +525,6 @@ case class Int8Dot(left: Expression, right: Expression)
     }
     acc
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      s"""
-         |int $n = Math.min($x.numElements(), $y.numElements());
-         |long $acc = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $acc += ((long) $x.getByte($i)) * ((long) $y.getByte($i));
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 /** Int8 dot product against a FIXED query-code vector (the ANN serving
@@ -704,37 +549,29 @@ case class Int8QueryDot(child: Expression, query: Seq[Byte])
         s"got ${child.dataType}, ${query.size} query codes")
   }
 
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    val n = math.min(qArr.length, v.numElements())
-    var acc = 0L
-    var i = 0
-    while (i < n) {
-      acc += v.getByte(i).toLong * qArr(i).toLong
-      i += 1
-    }
-    acc
-  }
+  override def nullSafeEval(input: Any): Any =
+    Int8QueryDot.dot(input.asInstanceOf[ArrayData], qArr)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val qRef = ctx.addReferenceObj("queryCodes", qArr, "byte[]")
-    nullSafeCodeGen(ctx, ev, v => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      s"""
-         |int $n = Math.min($qRef.length, $v.numElements());
-         |long $acc = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $acc += ((long) $v.getByte($i)) * ((long) $qRef[$i]);
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, v => s"graft.functions.Int8QueryDot$$.MODULE$$.dot($v, $qRef)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+}
+
+object Int8QueryDot {
+  private[functions] def dot(v: ArrayData, q: Array[Byte]): Long = {
+    val n = math.min(q.length, v.numElements())
+    var acc = 0L
+    var i = 0
+    while (i < n) {
+      acc += v.getByte(i).toLong * q(i).toLong
+      i += 1
+    }
+    acc
+  }
 }
 
 object VectorExpressions {

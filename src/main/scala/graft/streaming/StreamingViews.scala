@@ -926,8 +926,11 @@ object StreamingViews {
     * columns, so the caller declares `maxIntervalLen` (an interval
     * literal, e.g. `"3 days"`): the join condition carries
     * `point < start + maxIntervalLen` alongside the exact containment
-    * `start ≤ point < end`, which lets both sides' buffers purge at
-    * the watermark instead of growing forever. Intervals longer than
+    * `start ≤ point < end`, all as event-time timestamp comparisons, which
+    * lets both sides' buffers purge at the watermark instead of growing
+    * forever: once the watermark (the min over both sides) passes
+    * `start + maxIntervalLen`, that interval leaves state, and a point
+    * leaves state once the watermark passes it. Intervals longer than
     * `maxIntervalLen` are truncated (matches past the bound drop) —
     * size it at the schema's maximum interval length. Both inputs
     * carry epoch-MILLIS longs (`startCol`/`endCol`/`tsCol`); output is
@@ -945,17 +948,19 @@ object StreamingViews {
       s"payload ${payload.mkString(",")} collides with an interval column")
     val i = intervals
       .withColumn("__istart", timestamp_millis(col(startCol).cast("long")))
+      .withColumn("__iend", timestamp_millis(col(endCol).cast("long")))
       .withWatermark("__istart", watermarkDelay)
     val p = points
       .select(keys.map(k => col(k).as(s"__k_$k")) ++ Seq(
-        col(tsCol).cast("long").as("__pmillis"),
+        timestamp_millis(col(tsCol).cast("long")).as("__pts"),
         struct(payload.map(col): _*).as("__p")): _*)
-      .withColumn("__pts", timestamp_millis(col("__pmillis")))
       .withWatermark("__pts", watermarkDelay)
+    // every range term compares event-time timestamps (exact: millis map
+    // to timestamps one-to-one), so the state-eviction planner can bound
+    // both sides from the condition
     val cond = keys.map(k => col(k) === col(s"__k_$k")).reduce(_ && _) &&
-      col("__pts") >= col("__istart") &&
-      col("__pts") < col("__istart") + expr(s"INTERVAL $maxIntervalLen") &&
-      col("__pmillis") >= col(startCol) && col("__pmillis") < col(endCol)
+      col("__pts") >= col("__istart") && col("__pts") < col("__iend") &&
+      col("__pts") < col("__istart") + expr(s"INTERVAL $maxIntervalLen")
     i.join(p, cond)
       .select(iCols.map(col) ++ payload.map(c => col(s"__p.$c").as(c)): _*)
   }

@@ -20,4 +20,32 @@ trait SparkSpec extends AnyFunSuite {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Runs `body`, whose query is expected to fail, with the loggers
+    * that report the failure off — Spark's `Executor` and
+    * `TaskSetManager` for a failed task, `ExecutionListenerBus` for the
+    * listener that re-raises it asynchronously — so the expected failure
+    * prints no stack trace into the result lines. The listener bus is
+    * drained before the loggers are restored, inherited levels
+    * included. */
+  def quietTaskFailures[T](body: => T): T = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.LoggerContext
+    import org.apache.logging.log4j.core.config.Configurator
+    val names = Seq("org.apache.spark.executor.Executor",
+      "org.apache.spark.scheduler.TaskSetManager",
+      "org.apache.spark.sql.util.ExecutionListenerBus")
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val own = names.map(n => n -> Option(ctx.getConfiguration.getLoggers.get(n)).map(_.getLevel))
+    names.foreach(Configurator.setLevel(_, Level.OFF))
+    try body
+    finally {
+      org.apache.spark.graft.ListenerBusBridge.drain(spark.sparkContext)
+      own.foreach {
+        case (n, Some(level)) => Configurator.setLevel(n, level)
+        case (n, None) => ctx.getConfiguration.removeLogger(n)
+      }
+      ctx.updateLoggers()
+    }
+  }
 }

@@ -44,21 +44,21 @@ class PreferenceSpec extends SparkSpec {
     assert(out(("b", "c")) === ((1L, 0L, 0L, 0L)))
     assert(out.size === 2)
     // first-presented player must be one of the duel sides
-    val e1 = intercept[Exception] {
+    val e1 = quietTaskFailures(intercept[Exception] {
       Preference.positionBias(
         Seq(("a", "b", "z")).toDF("w", "l", "f"), "w", "l", "f").collect()
-    }
+    })
     assert(e1.getMessage.contains("neither duel side"))
-    val e2 = intercept[Exception] {
+    val e2 = quietTaskFailures(intercept[Exception] {
       Preference.positionBias(
         Seq(("a", "b", null.asInstanceOf[String])).toDF("w", "l", "f"),
         "w", "l", "f").collect()
-    }
+    })
     assert(e2.getMessage.contains("null first-presented"))
-    val e3 = intercept[Exception] {
+    val e3 = quietTaskFailures(intercept[Exception] {
       Preference.positionBias(
         Seq(("a", "a", "a")).toDF("w", "l", "f"), "w", "l", "f").collect()
-    }
+    })
     assert(e3.getMessage.contains("self-duel"))
   }
 

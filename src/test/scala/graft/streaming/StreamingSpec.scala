@@ -710,6 +710,49 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
     } finally q.stop()
   }
 
+  test("streamingIntervalJoin evicts both sides once the watermarks pass start + maxIntervalLen") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    // both sides come off ONE in-memory source, so every data batch
+    // reaches both sides of the join together; no no-data batches, so
+    // each step is exactly one batch, run at the watermark the previous
+    // step left (the min over both sides)
+    val src = MemoryStream[(String, Long, Long, Long, Long)](spark)
+    val rows = src.toDF().toDF("side", "id", "key", "a", "b")
+    val out = StreamingViews.streamingIntervalJoin(
+      rows.where(col("side") === "i")
+        .select(col("id").as("iid"), col("key"), col("a").as("st"), col("b").as("en")),
+      rows.where(col("side") === "p")
+        .select(col("id").as("pid"), col("key"), col("a").as("ts")),
+      Seq("key"), "st", "en", "ts", payload = Seq("pid"),
+      maxIntervalLen = "1 seconds")
+    val conf = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val prev = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    val q = out.writeStream.outputMode("append").format("memory")
+      .queryName("sij_evict").start()
+    def step(is: Seq[(Long, Long, Long, Long)], ps: Seq[(Long, Long, Long)]): Long = {
+      src.addData(is.map { case (i, k, st, en) => ("i", i, k, st, en) } ++
+        ps.map { case (p, k, ts) => ("p", p, k, ts, 0L) })
+      q.processAllAvailable()
+      q.lastProgress.stateOperators(0).numRowsTotal
+    }
+    try {
+      assert(step(Seq((1L, 1L, 100L, 200L), (2L, 2L, 150L, 900L)),
+        Seq((10L, 1L, 120L), (11L, 2L, 100L), (12L, 2L, 880L))) === 5L)
+      // runs at 150: points before the interval-side watermark go
+      assert(step(Seq((3L, 3L, 5000L, 5500L)), Seq((13L, 3L, 5100L))) === 5L)
+      // runs at 5000, past every batch-1 start + 1 s: intervals 1-2 and
+      // point 12 leave state, the live rows stay
+      assert(step(Seq((4L, 4L, 6000L, 6100L)), Seq((14L, 4L, 6050L))) === 4L)
+      val got = spark.table("sij_evict").select(col("iid"), col("pid"))
+        .as[(Long, Long)].collect().toSet
+      assert(got === Set((1L, 10L), (2L, 12L), (3L, 13L), (4L, 14L)))
+    } finally {
+      q.stop()
+      spark.conf.set(conf, prev)
+    }
+  }
+
   test("streamingDailyChangelog seals net changes; applying them == batch CDC") {
     import StreamingViews.CdcChangeEvent
     val dir = Files.createTempDirectory("graft_stream_cdc").toString

@@ -691,14 +691,14 @@ class EvalOpsSpec extends SparkSpec {
   }
 
   test("passAtK misuse fails loudly: under-sampled problem, null verdict") {
-    val e1 = intercept[Exception] {
+    val e1 = quietTaskFailures(intercept[Exception] {
       passk(Seq(("p1", true), ("p1", false)), 3)
-    }
+    })
     assert(e1.getMessage.contains("fewer than k=3"))
-    val e2 = intercept[Exception] {
+    val e2 = quietTaskFailures(intercept[Exception] {
       EvalOps.passAtK(Seq(("p1", Some(true)), ("p1", None), ("p1", Some(false)))
         .toDF("p", "ok"), "p", "ok", 2).collect()
-    }
+    })
     assert(e2.getMessage.contains("null ok"))
   }
 
@@ -766,16 +766,16 @@ class EvalOpsSpec extends SparkSpec {
     // bucket 1: one miss one hit -> acc 500000, mean conf 150000
     assert(out(1L) === ((1L, 2L, 1L, 500000L, 150000L, 350000L)))
     assert(!out.contains(10L)) // no one-value bucket for exact 1.0
-    val e1 = intercept[Exception] {
+    val e1 = quietTaskFailures(intercept[Exception] {
       EvalOps.calibrationReport(Seq((1000001L, true)).toDF("conf", "ok"),
         "conf", "ok", 100000L).collect()
-    }
+    })
     assert(e1.getMessage.contains("confidence out of"))
-    val e2 = intercept[Exception] {
+    val e2 = quietTaskFailures(intercept[Exception] {
       EvalOps.calibrationReport(
         Seq((Some(5L), None: Option[Boolean])).toDF("conf", "ok"),
         "conf", "ok", 100000L).collect()
-    }
+    })
     assert(e2.getMessage.contains("null ok"))
   }
 
