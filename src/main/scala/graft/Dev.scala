@@ -46,45 +46,30 @@ object Dev {
 
   private def prof(spark: SparkSession, sfDir: String, reps: Int,
                    name: String): Unit = {
-    // job id -> (description, start ms, end ms, stages); stage id -> (name, wall ms, tasks)
-    val jobs = mutable.LinkedHashMap[Int, (String, Long, Long, Int)]()
-    val stages = mutable.LinkedHashMap[Int, (String, Long, Int)]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.synchronized {
-        val desc = Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-        jobs(e.jobId) = (desc.getOrElse(""), e.time, 0L, e.stageInfos.size)
-      }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = jobs.synchronized {
-        jobs.get(e.jobId).foreach(j => jobs(e.jobId) = j.copy(_3 = e.time))
-      }
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = stages.synchronized {
-        val si = e.stageInfo
-        val ms = (for (s <- si.submissionTime; c <- si.completionTime) yield c - s).getOrElse(0L)
-        stages(si.stageId) = (si.name.takeWhile(_ != '\n').take(90), ms, si.numTasks)
-      }
-    }
+    val log = new JobLog
     val fn = SparkEntry.queries(name)
     warmUp(spark, Seq(fn), sfDir)
-    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.addSparkListener(log)
     val secs = (1 to reps).map { _ =>
-      jobs.clear(); stages.clear()
+      log.synchronized { log.jobs.clear(); log.stages.clear() }
       val t0 = System.nanoTime()
       Bench.noop(fn(spark, sfDir))
       val sec = (System.nanoTime() - t0) / 1e9
-      println(f"RUN $name sec=$sec%.3f jobs=${jobs.size} stages=${stages.size}")
+      println(f"RUN $name sec=$sec%.3f jobs=${log.jobs.size} stages=${log.stages.size}")
       sec
     }
-    spark.sparkContext.removeSparkListener(listener)
+    spark.sparkContext.removeSparkListener(log)
     println("== jobs (last run) ==")
     var gap = 0L; var prevEnd = 0L
-    jobs.foreach { case (id, (desc, start, end, nStages)) =>
+    log.jobs.foreach { case (id, (props, start, end, nStages)) =>
       if (prevEnd > 0 && start > prevEnd) gap += start - prevEnd
       prevEnd = math.max(prevEnd, end)
+      val desc = props.fold("")(_.getProperty("spark.job.description", ""))
       println(f"job $id%3d ${end - start}%6d ms  stages=$nStages%2d  ${desc.take(80)}")
     }
     println(f"driver gaps between jobs: $gap%d ms")
     println("== stages by wall ms (last run) ==")
-    stages.toSeq.sortBy(-_._2._2).take(25).foreach { case (id, (nm, ms, nt)) =>
+    log.stages.toSeq.sortBy(-_._2._2).take(25).foreach { case (id, (nm, ms, nt)) =>
       println(f"stage $id%4d $ms%6d ms tasks=$nt%3d  $nm")
     }
     println(f"BEST $name sec=${secs.min}%.3f")
@@ -99,5 +84,23 @@ object Dev {
       Files.writeString(Paths.get(s"$outDir/${name}_$tag.txt"), plan)
       println(s"PLAN $name exchanges=${"Exchange".r.findAllIn(plan).size} chars=${plan.length}")
     }
+  }
+}
+
+/** The jobs and completed stages a session runs while this listener is
+  * added. Events arrive on the listener-bus thread: read under its lock.
+  * `jobs`: id -> (local properties, start ms, end ms — 0 while running,
+  * stages), in start order; `stages`: id -> (name, wall ms, tasks). */
+private[graft] final class JobLog extends SparkListener {
+  val jobs = mutable.LinkedHashMap[Int, (Option[java.util.Properties], Long, Long, Int)]()
+  val stages = mutable.LinkedHashMap[Int, (String, Long, Int)]()
+  override def onJobStart(e: SparkListenerJobStart): Unit =
+    synchronized(jobs(e.jobId) = (Option(e.properties), e.time, 0L, e.stageInfos.size))
+  override def onJobEnd(e: SparkListenerJobEnd): Unit =
+    synchronized(jobs.updateWith(e.jobId)(_.map(_.copy(_3 = e.time))))
+  override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
+    val si = e.stageInfo
+    val ms = (for (s <- si.submissionTime; c <- si.completionTime) yield c - s).getOrElse(0L)
+    stages(si.stageId) = (si.name.takeWhile(_ != '\n').take(90), ms, si.numTasks)
   }
 }

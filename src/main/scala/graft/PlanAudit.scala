@@ -71,59 +71,6 @@ object PlanAudit {
     PlanStats(cartesians, bigCross, globalWindows, windows)
   }
 
-  /** [[inspect]] at the LOGICAL level, for STREAMING frames: physical
-    * planning of a streaming query exists only inside a started
-    * micro-batch (IncrementalExecution injects the state info physical
-    * planning needs), but the optimized LOGICAL plan is fully buildable
-    * pre-start — and it carries the same scale-killer signatures.
-    * Two logical join checks stand in for the physical cartesian match:
-    * a condition-LESS Join between two non-single-row sides, and — the
-    * case the physical planner ALSO lowers to CartesianProduct /
-    * nested-loop — a join whose condition carries NO equi-key conjunct
-    * spanning both sides (a pure range/theta predicate re-evaluates the
-    * full static side per stream row every micro-batch). A logical
-    * Window with an empty partitionSpec is the single-partition funnel.
-    * `cartesians` is structurally 0 here (physical-only node); the two
-    * join checks subsume it for the streaming surface.
-    * Caller must disable `spark.sql.streaming.unsupportedOperationCheck`
-    * around the call (the batch-execution guard fires in optimizedPlan's
-    * withCachedData otherwise). */
-  def inspectLogical(df: DataFrame): PlanStats = {
-    import org.apache.spark.sql.catalyst.expressions.{And, EqualNullSafe, EqualTo, Expression}
-    import org.apache.spark.sql.catalyst.plans.logical
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(a, b) => conjuncts(a) ++ conjuncts(b)
-      case x => Seq(x)
-    }
-    def spansBothSides(j: logical.Join, l: Expression, r: Expression): Boolean =
-      (l.references.subsetOf(j.left.outputSet) &&
-        r.references.subsetOf(j.right.outputSet)) ||
-        (l.references.subsetOf(j.right.outputSet) &&
-          r.references.subsetOf(j.left.outputSet))
-    def hasEquiKey(j: logical.Join): Boolean =
-      j.condition.map(conjuncts).getOrElse(Nil).exists {
-        case EqualTo(l, r) => spansBothSides(j, l, r)
-        case EqualNullSafe(l, r) => spansBothSides(j, l, r)
-        case _ => false
-      }
-    def bothSidesBig(j: logical.Join): Boolean =
-      j.left.maxRows.getOrElse(Long.MaxValue) > 1L &&
-        j.right.maxRows.getOrElse(Long.MaxValue) > 1L
-    val plan = df.queryExecution.optimizedPlan
-    val bigCross = plan.collect {
-      case j: logical.Join if j.condition.isEmpty && bothSidesBig(j) => j
-    }.size
-    val nonEqui = plan.collect {
-      case j: logical.Join
-          if j.condition.isDefined && !hasEquiKey(j) && bothSidesBig(j) => j
-    }.size
-    val globalWindows = plan.collect {
-      case w: logical.Window if w.partitionSpec.isEmpty => w
-    }.size
-    val windows = plan.collect { case w: logical.Window => w }.size
-    PlanStats(0, bigCross, globalWindows, windows, nonEqui)
-  }
-
   /** The gate: violations for one query's plan (empty = clean). */
   def violations(name: String, stats: PlanStats): Seq[String] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[String]

@@ -39,7 +39,6 @@ object Tables {
   def lineitem(s: SparkSession, d: String): DataFrame   = apply(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame     = apply(s, d, "orders")
   def customer(s: SparkSession, d: String): DataFrame   = apply(s, d, "customer")
-  def supplier(s: SparkSession, d: String): DataFrame   = apply(s, d, "supplier")
   def part(s: SparkSession, d: String): DataFrame       = apply(s, d, "part")
   def nation(s: SparkSession, d: String): DataFrame     = apply(s, d, "nation")
   def region(s: SparkSession, d: String): DataFrame     = apply(s, d, "region")

@@ -207,18 +207,6 @@ object Dedup {
     reassemble(batch, flagged, idCol)
   }
 
-  /** Per-group TEMPLATE paragraphs — the audit form of [[stripTemplates]]:
-    * within each `groupCol` bucket (domain / source / crawl site), the
-    * paragraphs present in more than `maxDocPerMille`/1000 of the
-    * bucket's documents, with their presence counts. Buckets smaller
-    * than `minDocs` are exempt (in a 2-doc bucket any shared banner is
-    * "100 % of docs"). */
-  def templateParagraphs(docs: DataFrame, textCol: String, idCol: String,
-                         groupCol: String, maxDocPerMille: Int = 500,
-                         minDocs: Long = 4L): DataFrame =
-    templateFps(paragraphRows(docs, textCol, idCol, Seq(groupCol)), docs,
-      idCol, groupCol, maxDocPerMille, minDocs)
-
   /** Shared threshold pass over an extracted paragraph frame:
     * (groupCol, __fp, paragraph, n_docs_with, n_docs_group) for every
     * over-threshold fingerprint. */

@@ -54,9 +54,6 @@ object Strings {
       (parts.head +: parts.tail.map(_.capitalize)).mkString
     })
 
-  def uncamelize(name: String, overrides: Map[String, String] = Map.empty): String =
-    overrides.getOrElse(name, snakify(name))
-
   /** F13 — gunzip bytes to a UTF-8 string (shared by the Column UDF and
     * the SQL registration in GraftFunctions).
     * Reference: utils/DatasetShim.scala:48,58. */

@@ -8,13 +8,10 @@ import graft.ops.BatchView
 
 /** Bucketed catalog home for the GROW-FOREVER incremental-state
   * artifacts (the SURVEY §7 "history keeps growing" risk): template
-  * presence/sizes counts, paragraph fingerprints, the containment
-  * document-frequency index, the exact-substring gram set, and the
-  * assigned semantic-dedup survivor embeddings. The operators that
-  * consume these states ([[Dedup.stripTemplatesIncremental]], [[Dedup
-  * .paragraphDedupeIncremental]], [[Dedup.containmentJoinPrebuilt]],
-  * [[graft.text.SubstringDedup.substringDedupAgainstHistory]],
-  * [[graft.sim.Similarity.semanticDedupIncrementalAssigned]])
+  * presence/sizes counts, paragraph fingerprints and the containment
+  * document-frequency index. The operators that consume these states
+  * ([[Dedup.stripTemplatesIncremental]], [[Dedup
+  * .paragraphDedupeIncremental]], [[Dedup.containmentJoinPrebuilt]])
   * take them as plain DataFrames; this job gives them a 100-TB storage
   * discipline (reference operational model: per-day idempotent view
   * jobs, BatchJobBase.scala:29-54):
@@ -36,12 +33,8 @@ import graft.ops.BatchView
   *
   * State sizes stay artifact-shaped: presence is (bucket × distinct
   * paragraph) rows, fingerprints one 32-hex row per distinct paragraph,
-  * the df index one row per distinct shingle, the gram set 8 bytes per
-  * distinct k-gram — tiny next to the corpus, and every one of them
-  * sum- or set-mergeable. The semantic table is the one embedding-sized
-  * state (survivor vectors ARE the state semantic dedup needs), and
-  * persisting its cell assignment is what keeps the daily cost
-  * batch-shaped instead of history-shaped.
+  * the df index one row per distinct shingle — tiny next to the corpus,
+  * and every one of them sum- or set-mergeable.
   */
 object HistoryStateJob {
 
@@ -50,8 +43,6 @@ object HistoryStateJob {
   val ParagraphFpTable = "graft_paragraph_fps"
   val ContainDfTable = "graft_containment_df"
   val ContainSizesTable = "graft_containment_sizes"
-  val GramTable = "graft_substring_grams"
-  val SemanticTable = "graft_semantic_history"
 
   /** Compute one day's state partials from that day's raw docs and
     * append them (presence/sizes for template removal, paragraph fps for
@@ -77,22 +68,6 @@ object HistoryStateJob {
       Seq(idCol), buckets)
   }
 
-  /** Template state accumulated over days strictly BEFORE `beforeDay`
-    * (all days when empty) — the (presence, sizes) pair
-    * [[Dedup.stripTemplatesIncremental]] consumes. The groupBy-sum
-    * merges per-day partials with no exchange (bucketed scan). */
-  def readTemplateState(spark: SparkSession, groupCol: String,
-                        beforeDay: String = ""): (DataFrame, DataFrame) = {
-    def upTo(t: String) = {
-      val all = spark.table(t)
-      if (beforeDay.isEmpty) all else all.where(col("day") < beforeDay)
-    }
-    (upTo(PresenceTable).groupBy(col(groupCol), col("__fp"))
-       .agg(sum(col("n_docs_with")).as("n_docs_with")),
-     upTo(SizesTable).groupBy(col(groupCol))
-       .agg(sum(col("n_docs_group")).as("n_docs_group")))
-  }
-
   /** Distinct history paragraph fingerprints before `beforeDay` — the
     * state [[Dedup.paragraphDedupeIncremental]] consumes. The distinct
     * is a groupBy on the bucket key: exchange-free. */
@@ -116,156 +91,5 @@ object HistoryStateJob {
     (upTo(ContainDfTable).groupBy(col("g")).agg(sum(col("df")).as("df")),
      upTo(ContainSizesTable).groupBy(col(idCol))
        .agg(sum(col("n_sh")).as("n_sh")))
-  }
-
-  /** Append one day's distinct k-gram hashes — the state
-    * [[graft.text.SubstringDedup.substringDedupAgainstHistory]] consumes
-    * (8 bytes per unique gram, the honest minimum for exact cross-batch
-    * span dedup). Bucketed by `g`: the read-back distinct AND the
-    * consumer's join-back both key on it. */
-  def appendSubstringDay(spark: SparkSession, dayDocs: DataFrame, day: String,
-                         textCol: String, idCol: String, k: Int,
-                         buckets: Int = 32): Unit =
-    BatchView.writeDayBucketed(
-      graft.text.SubstringDedup.gramIndex(dayDocs, textCol, idCol, k)
-        .withColumn("day", lit(day)),
-      GramTable, "day", Seq("g"), buckets)
-
-  /** Distinct history gram hashes before `beforeDay` — set-merge of the
-    * per-day partials. The distinct is a groupBy on the bucket key:
-    * exchange-free however many days accumulated. */
-  def readGramIndex(spark: SparkSession, beforeDay: String = ""): DataFrame = {
-    val all = spark.table(GramTable)
-    (if (beforeDay.isEmpty) all else all.where(col("day") < beforeDay))
-      .select(col("g")).distinct()
-  }
-
-  /** Append one day's semantic-dedup SURVIVORS with their IVF cell —
-    * rows of (idCol, vecCol, ivf_cell), the pre-assigned history
-    * [[graft.sim.Similarity.semanticDedupIncrementalAssigned]] consumes.
-    * Persisting the assignment is the point: re-deriving cells over an
-    * ever-growing history is the one incremental cost that scales with
-    * the corpus instead of the batch. Bucketed by `ivf_cell` (the cell
-    * is the probe block key). One IVF model per state home — a retrain
-    * invalidates the table (drop and re-append). */
-  def appendSemanticDay(spark: SparkSession, survivorsAssigned: DataFrame,
-                        day: String, vecCol: String, idCol: String,
-                        buckets: Int = 32): Unit =
-    BatchView.writeDayBucketed(
-      survivorsAssigned.select(col(idCol), col(vecCol), col("ivf_cell"))
-        .withColumn("day", lit(day)),
-      SemanticTable, "day", Seq("ivf_cell"), buckets)
-
-  /** Assigned history embeddings before `beforeDay`. No merge aggregate
-    * at all: days are disjoint id sets (each day appended only its own
-    * survivors), so the multi-day bucketed scan IS the state — zero
-    * exchanges by construction. */
-  def readSemanticHistory(spark: SparkSession, beforeDay: String = ""): DataFrame = {
-    val all = spark.table(SemanticTable)
-    (if (beforeDay.isEmpty) all else all.where(col("day") < beforeDay))
-      .drop("day")
-  }
-
-  /** One full exact-substring ingest day: scrub `dayDocs` against all
-    * EARLIER days' grams, then append this day's own gram index. Day one
-    * (no table yet) dedupes within the batch only. Returns the
-    * [[graft.text.SubstringDedup.substringDedup]]-shaped cleaned frame. */
-  def runSubstringDay(spark: SparkSession, dayDocs: DataFrame, day: String,
-                      textCol: String, idCol: String, k: Int,
-                      buckets: Int = 32): DataFrame = {
-    val hist =
-      if (spark.catalog.tableExists(GramTable))
-        readGramIndex(spark, beforeDay = day)
-      else
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("g",
-              org.apache.spark.sql.types.LongType))))
-    // EAGER checkpoint before appending (the read-before-write snapshot
-    // discipline of runTemplateDay)
-    val cleaned = graft.text.SubstringDedup
-      .substringDedupAgainstHistory(dayDocs, hist, textCol, idCol, k)
-      .localCheckpoint()
-    appendSubstringDay(spark, dayDocs, day, textCol, idCol, k, buckets)
-    cleaned
-  }
-
-  /** One full semantic-dedup ingest day: dedupe `dayVecs` against the
-    * accumulated assigned history, then append this day's SURVIVORS
-    * (keep == true — the history stays "already deduped" by
-    * construction). Returns the
-    * [[graft.sim.Similarity.semanticDedupIncremental]]-shaped frame. */
-  def runSemanticDay(spark: SparkSession, dayVecs: DataFrame, day: String,
-                     vecCol: String, idCol: String,
-                     model: graft.sim.Ivf.IvfModel, threshold: Double,
-                     saltBuckets: Int = 8, buckets: Int = 32): DataFrame = {
-    val hist =
-      if (spark.catalog.tableExists(SemanticTable))
-        readSemanticHistory(spark, beforeDay = day)
-      else {
-        val idType = dayVecs.schema(idCol).dataType
-        val vecType = dayVecs.schema(vecCol).dataType
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField(idCol, idType),
-            org.apache.spark.sql.types.StructField(vecCol, vecType),
-            org.apache.spark.sql.types.StructField("ivf_cell",
-              org.apache.spark.sql.types.IntegerType))))
-      }
-    val out = graft.sim.Similarity.semanticDedupIncrementalAssigned(
-        dayVecs, hist, vecCol, idCol, model, threshold, saltBuckets)
-      .localCheckpoint()
-    appendSemanticDay(spark, out.where(col("keep")), day, vecCol, idCol,
-      buckets)
-    out
-  }
-
-  /** One full template-removal ingest day: strip `dayDocs` against the
-    * state of all EARLIER days, then append this day's partials. Day
-    * one (no tables yet) strips against empty state — every paragraph
-    * survives until the corpus proves a template. Returns the cleaned
-    * frame ([[Dedup.stripTemplatesIncremental]] shape). */
-  def runTemplateDay(spark: SparkSession, dayDocs: DataFrame, day: String,
-                     textCol: String, idCol: String, groupCol: String,
-                     maxDocPerMille: Int = 500, minDocs: Long = 4L,
-                     buckets: Int = 32): DataFrame = {
-    // gate on BOTH tables: appendDay writes them non-atomically
-    // (presence first), so a crash between the two writes must not wedge
-    // every later run on a missing SizesTable — the empty-state path
-    // runs instead, and re-running the crashed day's appendDay is
-    // idempotent and heals both tables
-    val (hp, hs) =
-      if (spark.catalog.tableExists(PresenceTable) &&
-          spark.catalog.tableExists(SizesTable))
-        readTemplateState(spark, groupCol, beforeDay = day)
-      else {
-        val fpType = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField(groupCol,
-            dayDocs.schema(groupCol).dataType),
-          org.apache.spark.sql.types.StructField("__fp",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("n_docs_with",
-            org.apache.spark.sql.types.LongType)))
-        val szType = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField(groupCol,
-            dayDocs.schema(groupCol).dataType),
-          org.apache.spark.sql.types.StructField("n_docs_group",
-            org.apache.spark.sql.types.LongType)))
-        (spark.createDataFrame(
-           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], fpType),
-         spark.createDataFrame(
-           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], szType))
-      }
-    // EAGER checkpoint before appending: the cleaned plan reads the state
-    // tables lazily, and this day's append mutates them — materialize the
-    // read-before-write snapshot first (batch-sized, not corpus-sized)
-    val cleaned = Dedup.stripTemplatesIncremental(dayDocs, hp, hs,
-      textCol, idCol, groupCol, maxDocPerMille, minDocs)
-      .localCheckpoint()
-    appendDay(spark, dayDocs, day, textCol, idCol, groupCol,
-      buckets = buckets)
-    cleaned
   }
 }

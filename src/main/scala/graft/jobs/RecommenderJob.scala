@@ -2,11 +2,11 @@ package graft.jobs
 
 import java.nio.file.{Path, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ml.{AddonMeta, Recommender}
-import graft.sources.{PagedHttp, PageFetcher}
+import graft.sources.PagedHttp
 
 /** The §3.3 lifecycle as a runnable job (reference:
   * AddonRecommender.scala:187-295 `train`): addon catalog from the
@@ -72,10 +72,4 @@ object RecommenderJob {
       }
     } finally spark.stop()
   }
-
-  /** Test seam: run with an injected transport instead of JdkFetcher. */
-  def runWithFetcher(spark: SparkSession, installs: DataFrame,
-                     fetcher: PageFetcher, apiUri: String, k: Int = 10): DataFrame =
-    run(installs, "user_id", "addon_id",
-      AddonMeta.load(spark, fetcher, apiUri), k = k)
 }

@@ -98,15 +98,4 @@ object SketchRollupJob {
       .agg(graft.udafs.JoinSize.agmsMergeAgg(col("agms_keys"),
         agmsDepth, agmsWidth, agmsSeed).as("__s"))
       .head().getAs[Array[Byte]]("__s")
-
-  /** A value quantile over the day range: an N-row KLL merge. */
-  def valueQuantile(spark: SparkSession, base: String, fromDay: String,
-                    toDay: String, q: Double, version: Int = 1,
-                    kllK: Int = 200): DataFrame = {
-    require(q > 0.0 && q < 1.0, s"quantile must be in (0, 1): $q")
-    read(spark, base, fromDay, toDay, version)
-      .agg(kll_sketch_get_quantile_double(
-        kll_merge_agg_double(col("kll_value"), lit(kllK)), lit(q))
-        .as("quantile_est"))
-  }
 }

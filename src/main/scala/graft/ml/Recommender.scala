@@ -52,53 +52,6 @@ object Recommender {
 
   /** Distributed top-k per user. */
   def recommendAll(model: ALSModel, k: Int): DataFrame = model.recommendForAllUsers(k)
-
-  /** Grid cross-validation with the NaN-dropping evaluator — the
-    * reference's training plan (rank × regParam × alpha grid, parallel
-    * fold evaluation, seed-fixed; AddonRecommender.scala:224-251). Grid
-    * sizes are caller-chosen: the reference's 18-combo × 10-fold plan is
-    * `crossValidate(df, Seq(15,25,35), Seq(0.01,0.1), Seq(1,10,20), 10)`. */
-  def crossValidate(ratingsDf: DataFrame,
-                    ranks: Seq[Int] = Seq(15, 25, 35),
-                    regParams: Seq[Double] = Seq(0.01, 0.1),
-                    alphas: Seq[Double] = Seq(1, 10, 20),
-                    numFolds: Int = 10, parallelism: Int = 20,
-                    maxIter: Int = 20, seed: Long = 42L): org.apache.spark.ml.tuning.CrossValidatorModel = {
-    import org.apache.spark.ml.tuning.{CrossValidator, ParamGridBuilder}
-    val als = new ALS()
-      .setImplicitPrefs(true).setMaxIter(maxIter).setSeed(seed)
-      .setUserCol("user").setItemCol("item").setRatingCol("rating")
-      .setColdStartStrategy("nan")
-    val grid = new ParamGridBuilder()
-      .addGrid(als.rank, ranks)
-      .addGrid(als.regParam, regParams)
-      .addGrid(als.alpha, alphas)
-      .build()
-    new CrossValidator()
-      .setEstimator(als)
-      .setEvaluator(new NaNRMSEEvaluator())
-      .setEstimatorParamMaps(grid)
-      .setNumFolds(numFolds)
-      .setParallelism(parallelism)
-      .setSeed(seed)
-      .fit(ratingsDf)
-  }
-
-  /** Driver-side top-k for one user from the (small) item-factor matrix —
-    * the reference's Spark-free `recommend` path (AddonRecommender.scala:151-183). */
-  def recommendForUser(model: ALSModel, userId: Int, k: Int): Seq[(Int, Float)] = {
-    val userRow = model.userFactors.where(col("id") === userId)
-      .select("features").collect()
-    if (userRow.isEmpty) return Nil
-    val uf = userRow.head.getSeq[Float](0).toArray
-    model.itemFactors.collect().map { r =>
-      val f = r.getSeq[Float](1).toArray
-      var dot = 0.0f
-      var i = 0
-      while (i < uf.length) { dot += uf(i) * f(i); i += 1 }
-      (r.getInt(0), dot)
-    }.sortBy(-_._2).take(k).toSeq
-  }
 }
 
 /** RMSE evaluator that drops NaN predictions before scoring — implicit ALS

@@ -464,9 +464,4 @@ object BinaryOps {
       }
     }(enc)
   }
-
-  /** Rebalance partitions by cumulative payload size before expensive
-    * decode — avoids one task decoding all the large payloads. */
-  def repartitionByPayloadSize(df: DataFrame, binCol: String, targetPartitions: Int): DataFrame =
-    df.repartitionByRange(targetPartitions, length(col(binCol)), rand(42))
 }

@@ -26,16 +26,6 @@ object Comparator {
         rowsOnlyLeft == 0 && rowsOnlyRight == 0 && rowsMultiplicityDiff == 0
   }
 
-  /** One-pass per-column null counts (A3). */
-  def nullCounts(df: DataFrame, cols: Seq[String]): Map[String, Long] = {
-    if (cols.isEmpty) return Map.empty
-    // coalesce: sum over an EMPTY frame is null, and getLong would NPE
-    val aggs = cols.map(c =>
-      coalesce(sum(when(col(c).isNull, 1L).otherwise(0L)), lit(0L)).as(c))
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    cols.zipWithIndex.map { case (c, i) => c -> row.getLong(i) }.toMap
-  }
-
   /** Single-pass row diff: tag-union both sides, group once on a 16-byte
     * PAIR of independently-streamed `xxhash64` fingerprints of the full
     * row, derive (leftCount, rightCount, onlyLeft, onlyRight) from the

@@ -6,10 +6,9 @@ import org.apache.spark.sql.functions._
 /** Data profiling — the ANALYZE-style one-pass table summary every
   * ingest pipeline runs before trusting a new source: per column, the
   * row count, null count, EXACT distinct count, and min/max (as
-  * strings, for a uniform long schema). Complements
-  * [[Comparator.nullCounts]] (wide, null-only) with the long-format
-  * full profile, and the HLL sketches ([[graft.udafs.Sketches]]) own
-  * the approximate regime when exact distincts are too hot.
+  * strings, for a uniform long schema). The HLL sketches
+  * ([[graft.udafs.Sketches]]) own the approximate regime when exact
+  * distincts are too hot.
   *
   * ONE scan: all columns' aggregates ride a single `agg` — Spark plans
   * the multiple DISTINCT aggregates through one Expand (the standard
@@ -130,8 +129,7 @@ object Profile {
     *
     * This EXACT form collects the sorted value list in one aggregate —
     * O(rows) driver-side-free but single-task state; oracle/fixture
-    * scale, same wall as `TertileCut.Exact`.
-    * [[equiDepthHistogramApprox]] is the 10⁹-row path. Bucket ASSIGN
+    * scale, same wall as `TertileCut.Exact`. Bucket ASSIGN
     * is a comparison against the broadcast 1-row boundary frame — no
     * global rank window ever. Null values are excluded (they have no
     * rank); integral input enforced loudly ([[Checks.madOutliers]]'
@@ -141,19 +139,6 @@ object Profile {
       s"""transform(sequence(1, ${k - 1}),
             i -> element_at(__s, cast((i * size(__s) + $k - 1) div $k as int)))""",
       s"sort_array(collect_list(__v))")
-    assignAndCount(df, valCol, bounds)
-  }
-
-  /** [[equiDepthHistogram]] on `percentile_approx`'s mergeable KLL-style
-    * sketch — bounded task state (rank error ≤ n/accuracy), the
-    * production cut for 10⁹⁺ rows; bucket labels can differ from exact
-    * only for values within that rank band of a boundary. */
-  def equiDepthHistogramApprox(df: DataFrame, valCol: String, k: Int,
-                               accuracy: Int = 10000): DataFrame = {
-    val fracs = (1 until k).map(i => i.toDouble / k)
-      .mkString("array(", ", ", ")")
-    val bounds = boundsFrame(df, valCol, k,
-      "__s", s"percentile_approx(__v, $fracs, $accuracy)")
     assignAndCount(df, valCol, bounds)
   }
 

@@ -31,11 +31,6 @@ object Sources {
   def dimensionedScan(spark: SparkSession, path: String,
                       dims: Map[String, String]): DataFrame =
     spark.read.parquet(path).where(dimensionPredicate(dims))
-
-  /** F13 — decode a gzip'd binary payload column to string rows
-    * (the shim's `gunzip` + `decode` step, DatasetShim.scala:48,58). */
-  def decodePayload(df: DataFrame, binCol: String, as: String = "payload"): DataFrame =
-    df.withColumn(as, Strings.gunzip(col(binCol)))
 }
 
 /** Dimension→partition-path model (reference:

@@ -2,23 +2,20 @@ package graft.streaming
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured-Streaming forms of the batch views (SURVEY.md §2.9).
   *
   * The reference has NO streaming — its incremental model is per-day batch
-  * overwrite driven by a date loop. These are the Spark-native streaming
-  * equivalents of its two incremental patterns, offered as the
-  * modernization path:
-  *  - day-partition re-run → file-source stream + `Trigger.AvailableNow`
-  *    (idempotent catch-up runs, exactly the batch loop's semantics);
-  *  - dedupe-against-history (S6+J1+A1) → `dropDuplicates` over the key
-  *    with a watermark bounding state (the reference instead re-reads all
-  *    prior output every day — unbounded at 100 TB; watermarked state is
-  *    the scale-correct form).
+  * overwrite driven by a date loop. Its dedupe-against-history pattern
+  * (S6+J1+A1) becomes `dropDuplicates` over the key with a watermark
+  * bounding state (the reference instead re-reads all prior output every
+  * day — unbounded at 100 TB; watermarked state is the scale-correct
+  * form). The stateful operators are streaming twins of batch operators
+  * that declared queries run, each pinned in StreamingSpec against its
+  * twin over the same admitted events.
   *
   * '''Seal contract.''' Every stateful operator here runs
   * `flatMapGroupsWithState` in append mode with EVENT-TIME timeouts over
@@ -52,10 +49,6 @@ import org.apache.spark.sql.types.StructType
   * dropped; size it to the pipeline's real delivery skew.
   */
 object StreamingViews {
-
-  /** File-source stream over a directory of parquet drops. */
-  def fileStream(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.readStream.schema(schema).parquet(path)
 
   /** Windowed per-key counts with late-data watermark. */
   def windowedCounts(events: DataFrame, tsCol: String, keyCol: String,
@@ -965,63 +958,6 @@ object StreamingViews {
       .select(iCols.map(col) ++ payload.map(c => col(s"__p.$c").as(c)): _*)
   }
 
-  /** Streaming corpus ingest: the stateless prefix of
-    * [[graft.text.Corpus.cleanIncremental]] as a live stream —
-    *
-    *   quality gate → (optional) Bloom history filter → watermarked
-    *   first-fingerprint-wins dedupe
-    *
-    * Every stage keeps the scale shape of its batch twin: the quality
-    * gate and fingerprint are pure codegen expressions on the scan, the
-    * history test is a stateless predicate (no stream-static join, no
-    * per-micro-batch history scan), and the only state is the
-    * watermark-bounded in-stream fingerprint dedupe. Near-dup clustering
-    * is deliberately NOT here: PPJoin + connected components need the
-    * whole batch's candidate graph, so the streaming pipeline lands
-    * cleaned docs and the nightly `cleanIncremental` run clusters them —
-    * the standard lambda split for dedup state too big to keep hot.
-    *
-    * Emits the input columns plus `fp` (the md5 fingerprint, for
-    * downstream history maintenance). Quality failures and duplicates are
-    * dropped, not flagged — append-mode streams cannot retract a flag. */
-  def streamingClean(docs: DataFrame, textCol: String, tsCol: String,
-                     stopwords: Seq[String],
-                     historyBloom: Option[Array[Byte]] = None,
-                     watermark: String = "1 hour"): DataFrame = {
-    val gated = docs
-      .where(graft.text.Corpus.qualityKeep(col(textCol), stopwords))
-      .withColumn("fp", graft.text.TextOps.fingerprint(col(textCol)))
-    val unseen = historyBloom.fold(gated)(b =>
-      gated.where(!graft.dedup.Dedup.bloomMightContain(b, col("fp"))))
-    // WithinWatermark (not dropDuplicates(fp, ts)): a re-crawled dup
-    // carries a DIFFERENT timestamp, so ts must not be part of the key —
-    // any same-fp arrival inside the watermark horizon drops, and state
-    // still expires at the horizon
-    unseen.withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark(Seq("fp"))
-  }
-
-  /** Streaming URL-frontier dedup: [[graft.text.UrlOps.canonicalizeUrl]]
-    * as a scan-side expression (a pure codegen projection, so it streams
-    * unchanged), an optional Bloom of already-crawled canonical URLs as
-    * a stateless predicate, then watermarked first-canonical-URL-wins
-    * dedupe — the streaming twin of [[graft.text.UrlOps.urlDedupe]]'s
-    * keeper rule under arrival order. Same state discipline as
-    * [[streamingClean]]: the only state is the watermark-bounded key
-    * set; a re-crawl carries a different timestamp, so the key is
-    * `url_canon` alone (WithinWatermark semantics). Emits input columns
-    * plus `url_canon` for downstream history maintenance. */
-  def streamingUrlDedupe(docs: DataFrame, urlCol: String, tsCol: String,
-                         historyBloom: Option[Array[Byte]] = None,
-                         watermark: String = "1 hour"): DataFrame = {
-    val keyed = docs.withColumn("url_canon",
-      graft.text.UrlOps.canonicalizeUrl(col(urlCol)))
-    val unseen = historyBloom.fold(keyed)(b =>
-      keyed.where(!graft.dedup.Dedup.bloomMightContain(b, col("url_canon"))))
-    unseen.withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark(Seq("url_canon"))
-  }
-
   /** Streaming domain-blocklist gate — the robots/opt-out check a live
     * crawl frontier runs before fetching: the streaming twin of
     * [[graft.text.UrlOps.domainBlocklistFilter]]. Entirely STATELESS: the
@@ -1062,12 +998,4 @@ object StreamingViews {
         coalesce(arrays_overlap(suffixes, pats), lit(false)))
       .drop("__lbl")
   }
-
-  /** One-shot catch-up run into a day-partitioned view — the streaming
-    * equivalent of the reference's per-day batch loop. */
-  def availableNowWriter(df: DataFrame, checkpoint: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
 }

@@ -64,23 +64,15 @@ object EvalOps {
       transform(loudRefs(col(refsCol)), r => toksOrEmpty(r)).as("__rts"): _*)
   }
 
-  /** Word n-grams of order `n` as an array column (multiplicity kept —
-    * ROUGE clips per distinct gram, so duplicates matter). Docs with
-    * fewer than `n` tokens have NO n-grams (the standard ROUGE
-    * convention — unlike the dedup shingles' whole-text fallback, an
-    * eval metric must not invent a pseudo-gram). NULL / empty /
-    * whitespace-only text yields the empty array, not null. */
-  def wordNgrams(text: Column, n: Int): Column =
-    ngramsOfTokens(filter(TextOps.tokens(text), t => length(t) > 0), n)
-
-  /** [[wordNgrams]] over a PRE-MATERIALIZED token-array column, as a
-    * native codegen builder ([[graft.functions.TokenNgrams]]) — one
-    * compiled pass, `concat_ws` join semantics, <n tokens (or NULL
-    * input) → empty array. (Two earlier costs retired here: the inline
-    * non-staged form re-ran the regex split per gram position — q240's
-    * first cut, the q229 lesson — and the staged HOF form still
-    * interpreted a slice+concat per gram, which dominated the BLEU
-    * 4-order scan; BENCH_NOTES round 16.) */
+  /** Word n-grams of order `n` (multiplicity kept — ROUGE clips per
+    * distinct gram, so duplicates matter) over a PRE-MATERIALIZED
+    * token-array column, as one native codegen expression
+    * ([[graft.functions.TokenNgrams]]) — one compiled pass, `concat_ws`
+    * join semantics, <n tokens (or NULL input) → empty array. (Two
+    * earlier costs retired here: the inline non-staged form re-ran the
+    * regex split per gram position — q240's first cut, the q229 lesson —
+    * and the staged HOF form still interpreted a slice+concat per gram,
+    * which dominated the BLEU 4-order scan; BENCH_NOTES round 16.) */
   def ngramsOfTokens(toks: Column, n: Int): Column = {
     require(n >= 1, s"n-gram order must be positive: $n")
     graft.functions.TextExpressions.tokenNgrams(toks, n)

@@ -23,8 +23,8 @@ import org.apache.spark.sql.functions._
   *    agrees with classic BM25 wherever one term dominates or df spread
   *    is moderate; it is a DIFFERENT (log-free) scoring function and is
   *    documented as such — the spec pins top-k agreement with the
-  *    production scorer on the fixture corpus.
-  *  - [[bm25ScoresPrebuilt]]/[[bm25TopK]] — the PRODUCTION scorer: Lucene-style
+  *    ln-idf scorer on the fixture corpus.
+  *  - [[bm25ScoresPrebuilt]] — the ln-idf scorer: Lucene-style
   *    `ln(1 + odds)` idf in doubles (always positive, no clamp cliff).
   *    Not oracle-gated (transcendental replay across engines is a
   *    documented flake risk — the round-7 ccnet lesson); gated instead
@@ -34,7 +34,7 @@ import org.apache.spark.sql.functions._
   * Integer envelope of the exact variant: per-term weight is
   * `tfn_micro · idf_micro` with `tfn_micro ≤ 2.2e6` and
   * `idf_micro ≤ 2e6·N`, so scores stay inside int64 for corpora up to
-  * ~2e6 docs — exactly the verification context. The production scorer
+  * ~2e6 docs — exactly the verification context. The ln-idf scorer
   * has no such bound.
   *
   * Scale shape (both scorers): the corpus pays ONE tokenize+explode
@@ -268,7 +268,7 @@ object Retrieval {
       .agg(sum(col("w")).as("score"))
   }
 
-  /** One-shot production BM25 top-k: `(query_id, doc_id, score)`. */
+  /** One-shot ln-idf BM25 top-k: `(query_id, doc_id, score)`. */
   def bm25TopK(queries: DataFrame, corpus: DataFrame,
                textCol: String, idCol: String, k: Int): DataFrame = {
     val (postings, dfreq, dl, stats) = bm25Index(corpus, textCol, idCol)
@@ -509,20 +509,4 @@ object Retrieval {
           expr("coalesce(hits_at_k, 0) * 1000000 div n_rel"))
           .otherwise(lit(0L)).cast("long").as("recall_micro"))
   }
-
-  /** Corpus rollup of [[evalRanking]]'s per-query rows: one row of
-    * exact sums plus truncating micro means (MRR, mean P@k, mean
-    * recall). Means divide by the full query count — the standard
-    * convention where a zero-retrieval query drags the mean. */
-  def evalSummary(perQuery: DataFrame): DataFrame =
-    perQuery.agg(
-        count(lit(1)).as("n_queries"),
-        sum(col("hits_at_k")).as("sum_hits"),
-        sum(col("rr_micro")).as("__srr"),
-        sum(col("prec_at_k_micro")).as("__sp"),
-        sum(col("recall_micro")).as("__sr"))
-      .select(col("n_queries"), col("sum_hits"),
-        expr("__srr div n_queries").as("mrr_micro"),
-        expr("__sp div n_queries").as("mean_prec_micro"),
-        expr("__sr div n_queries").as("mean_recall_micro"))
 }

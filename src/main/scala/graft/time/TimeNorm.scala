@@ -39,15 +39,6 @@ object TimeNorm {
     c => f(c)
   }
 
-  /** F4 — `"yyyyMMdd"` day string → ISO UTC midnight string.
-    * Reference: utils/package.scala:122-125. */
-  def normalizeYYYYMMDDTimestamp(c: Column): Column =
-    date_format(to_timestamp(c, "yyyyMMdd"), "yyyy-MM-dd'T'HH:mm:ss.SSSxxx")
-
-  /** F5 — epoch DAYS → ISO UTC string. Reference: utils/package.scala:127-129. */
-  def normalizeEpochTimestamp(c: Column): Column =
-    date_format(timestamp_seconds(c.cast("long") * 86400L), "yyyy-MM-dd'T'HH:mm:ss.SSSxxx")
-
   /** F7 — epoch millis → `"yyyyMMdd"` day string (UTC). The reference's
     * `yyy` pattern quirk truncates identically for 4-digit years; its own
     * tests pin 8-digit output (reference: SyncPingConversion.scala:546). */
@@ -64,22 +55,10 @@ object TimeNorm {
   def isoToEpochMillis(c: Column, fmt: String): Column =
     unix_millis(to_timestamp(c, fmt))
 
-  /** F10 — deterministic sample bucket: crc32(id) mod numBlocks.
-    * Reference: utils/package.scala:156-160. */
-  def blockIdFromString(c: Column, numBlocks: Int): Column =
-    crc32(encode(c, "UTF-8")) % numBlocks
-
   /** F10-variant with a cross-engine-checkable hash: first 8 md5 hex chars
     * as an int, mod numBlocks (same distribution properties as crc32). */
   def md5Block(c: Column, numBlocks: Int): Column =
     conv(substring(md5(encode(c, "UTF-8")), 1, 8), 16, 10).cast("long") % numBlocks
-
-  /** F11 — positive 23-bit hash as a codegen Column (Murmur3, any input
-    * type). NOT the same function as `Recommender.positiveHash`, which
-    * reproduces the reference's exact `String.hashCode & 0x7FFFFF`
-    * (ml/AddonRecommender.scala:84) so its ids round-trip against
-    * reference-era data — never mix the two on the same id column. */
-  def positiveHash(c: Column): Column = hash(c).bitwiseAND(lit(0x7FFFFF))
 
   /** F8 — inclusive `yyyyMMdd` day range; default `to` = yesterday.
     * Driver-side job orchestration, injectable clock for tests.

@@ -76,10 +76,4 @@ object CollectOps {
       .agg(min_by(col("e"), col("pos")).as("first"))
       .drop("__dedupe_id")
   }
-
-  /** Grouped AggRowFirst: `flatten(collect_list(arr))` → dedupe by id.
-    * Group-level "first" follows collect order (nondeterministic after
-    * shuffle, like the reference which declares deterministic=false). */
-  def collectRowFirst(arr: Column, idField: String): Column =
-    arrayDedupeById(flatten(collect_list(arr)), idField)
 }

@@ -170,9 +170,6 @@ object JoinSize {
     dots(da / 2)
   }
 
-  /** Self inner product — the F₂ / self-join-size estimate. */
-  def estimateF2(a: Array[Byte]): Long = estimate(a, a)
-
   /** Column form for query use (runs once per row AFTER the aggregates,
     * never per event — the [[Sketches.cmsEstimates]] size argument). */
   def estimateCol(a: Column, b: Column): Column = {

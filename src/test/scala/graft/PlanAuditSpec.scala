@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+
 /** The plan-hygiene GATE, in `sbt test` so a scale-killer turns red
   * before the driver ever runs a query: every declared query's plan must
   * be free of CartesianProducts, condition-less joins between two
@@ -26,6 +28,59 @@ class PlanAuditSpec extends SparkSpec {
     "q76_assemble_decon" -> 1 // same
   )
 
+  /** [[PlanAudit.inspect]] at the LOGICAL level, for STREAMING frames: physical
+    * planning of a streaming query exists only inside a started
+    * micro-batch (IncrementalExecution injects the state info physical
+    * planning needs), but the optimized LOGICAL plan is fully buildable
+    * pre-start — and it carries the same scale-killer signatures.
+    * Two logical join checks stand in for the physical cartesian match:
+    * a condition-LESS Join between two non-single-row sides, and — the
+    * case the physical planner ALSO lowers to CartesianProduct /
+    * nested-loop — a join whose condition carries NO equi-key conjunct
+    * spanning both sides (a pure range/theta predicate re-evaluates the
+    * full static side per stream row every micro-batch). A logical
+    * Window with an empty partitionSpec is the single-partition funnel.
+    * `cartesians` is structurally 0 here (physical-only node); the two
+    * join checks subsume it for the streaming surface.
+    * Caller must disable `spark.sql.streaming.unsupportedOperationCheck`
+    * around the call (the batch-execution guard fires in optimizedPlan's
+    * withCachedData otherwise). */
+  private def inspectLogical(df: DataFrame): PlanAudit.PlanStats = {
+    import org.apache.spark.sql.catalyst.expressions.{And, EqualNullSafe, EqualTo, Expression}
+    import org.apache.spark.sql.catalyst.plans.logical
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(a, b) => conjuncts(a) ++ conjuncts(b)
+      case x => Seq(x)
+    }
+    def spansBothSides(j: logical.Join, l: Expression, r: Expression): Boolean =
+      (l.references.subsetOf(j.left.outputSet) &&
+        r.references.subsetOf(j.right.outputSet)) ||
+        (l.references.subsetOf(j.right.outputSet) &&
+          r.references.subsetOf(j.left.outputSet))
+    def hasEquiKey(j: logical.Join): Boolean =
+      j.condition.map(conjuncts).getOrElse(Nil).exists {
+        case EqualTo(l, r) => spansBothSides(j, l, r)
+        case EqualNullSafe(l, r) => spansBothSides(j, l, r)
+        case _ => false
+      }
+    def bothSidesBig(j: logical.Join): Boolean =
+      j.left.maxRows.getOrElse(Long.MaxValue) > 1L &&
+        j.right.maxRows.getOrElse(Long.MaxValue) > 1L
+    val plan = df.queryExecution.optimizedPlan
+    val bigCross = plan.collect {
+      case j: logical.Join if j.condition.isEmpty && bothSidesBig(j) => j
+    }.size
+    val nonEqui = plan.collect {
+      case j: logical.Join
+          if j.condition.isDefined && !hasEquiKey(j) && bothSidesBig(j) => j
+    }.size
+    val globalWindows = plan.collect {
+      case w: logical.Window if w.partitionSpec.isEmpty => w
+    }.size
+    val windows = plan.collect { case w: logical.Window => w }.size
+    PlanAudit.PlanStats(0, bigCross, globalWindows, windows, nonEqui)
+  }
+
   test("streaming twins pass the structural plan gate (pre-start plans)") {
     // The batch==streaming parity pins (StreamingSpec) check VALUES; this
     // checks STRUCTURE: the optimized logical plan of every
@@ -48,7 +103,7 @@ class PlanAuditSpec extends SparkSpec {
     // documented contract)
     spark.conf.set("spark.sql.streaming.unsupportedOperationCheck", "false")
     try {
-      val dir = java.nio.file.Files.createTempDirectory("graft_plan_stream")
+      val dir = SparkSpec.tempDir("graft_plan_stream")
         .toString
       def stream(name: String, sample: org.apache.spark.sql.DataFrame)
           : org.apache.spark.sql.DataFrame = {
@@ -103,11 +158,6 @@ class PlanAuditSpec extends SparkSpec {
             events, history, "ts", Seq("k")),
         "streamingDedupeBloom" ->
           StreamingViews.streamingDedupeBloom(events, bloom, "ts", Seq("k")),
-        "streamingClean" ->
-          StreamingViews.streamingClean(docsT, "text", "ts",
-            Seq("the", "a"), Some(bloom)),
-        "streamingUrlDedupe" ->
-          StreamingViews.streamingUrlDedupe(docsT, "url", "ts", Some(bloom)),
         "streamingDomainBlocklist" ->
           StreamingViews.streamingDomainBlocklist(docsT, "url",
             Seq("bad.example.com")),
@@ -152,7 +202,7 @@ class PlanAuditSpec extends SparkSpec {
       val violations = scala.collection.mutable.ArrayBuffer.empty[String]
       views.foreach { case (name, df) =>
         val stats =
-          try PlanAudit.inspectLogical(df)
+          try inspectLogical(df)
           catch { case e: Throwable =>
             fail(s"$name failed to plan: ${e.getMessage.take(200)}")
           }
@@ -166,7 +216,7 @@ class PlanAuditSpec extends SparkSpec {
       val staticRanges = Seq((0L, 5000L), (5000L, 9000L)).toDF("lo_b", "hi_b")
       val bad = docsL.join(staticRanges,
         col("ts") >= col("lo_b") && col("ts") < col("hi_b"))
-      val badStats = PlanAudit.inspectLogical(bad)
+      val badStats = inspectLogical(bad)
       assert(PlanAudit.violations("rangeOnlyJoin", badStats)
         .exists(_.contains("no equi-key conjunct")))
       // ...while the equi-keyed interval join above stays clean (its
@@ -175,7 +225,7 @@ class PlanAuditSpec extends SparkSpec {
       val oneRow = Seq(Tuple1(7L)).toDF("threshold").limit(1)
       val ok = docsL.join(oneRow, col("ts") >= col("threshold"))
       assert(PlanAudit.violations("scalarRangeJoin",
-        PlanAudit.inspectLogical(ok)).isEmpty)
+        inspectLogical(ok)).isEmpty)
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       spark.conf.set("spark.sql.streaming.unsupportedOperationCheck", "true")

@@ -10,8 +10,22 @@ object TestSession {
     "spark.app.name" -> "graft-test",
     // bucketed-table tests write via saveAsTable: keep the warehouse out
     // of the repo tree
-    "spark.sql.warehouse.dir" ->
-      java.nio.file.Files.createTempDirectory("graft-warehouse").toString))
+    "spark.sql.warehouse.dir" -> SparkSpec.tempDir("graft-warehouse").toString))
+}
+
+object SparkSpec {
+  /** One directory per test JVM, deleted with everything in it when the
+    * JVM exits. */
+  private lazy val root: java.nio.file.Path = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-test")
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile))
+    dir
+  }
+
+  /** A fresh directory under the per-JVM root: every file a test writes
+    * goes when the test JVM exits. */
+  def tempDir(prefix: String): java.nio.file.Path =
+    java.nio.file.Files.createTempDirectory(root, prefix)
 }
 
 trait SparkSpec extends AnyFunSuite {

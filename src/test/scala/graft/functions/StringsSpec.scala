@@ -24,8 +24,6 @@ class StringsSpec extends SparkSpec {
     assert(Strings.camelize("ram") === "RAM")
     assert(Strings.camelize("gpu_active") === "GPUActive")
     assert(Strings.camelize("memory_mbx") === "memoryMbx") // non-special stays mechanical
-    assert(Strings.uncamelize("submissionURL", Map("submissionURL" -> "submission_url"))
-      === "submission_url")
   }
 
   test("gunzip UDF decompresses payload columns") {

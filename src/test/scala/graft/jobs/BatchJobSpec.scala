@@ -1,6 +1,5 @@
 package graft.jobs
 
-import java.nio.file.Files
 import java.time.{Clock, Instant, ZoneOffset}
 
 import org.apache.spark.sql.functions._
@@ -26,7 +25,7 @@ class BatchJobSpec extends SparkSpec {
   }
 
   test("EventsDailyView: day-partitioned backfill, pushed-down day filter, idempotent re-run") {
-    val out = Files.createTempDirectory("batchjob").toString
+    val out = SparkSpec.tempDir("batchjob").toString
     val args = EventsDailyView.Args("20240105", Some("20240106"), sf, out)
     EventsDailyView.run(spark, args)
 

@@ -17,8 +17,7 @@ class HistoryStateJobSpec extends SparkSpec {
   private val tables = Seq(
     HistoryStateJob.PresenceTable, HistoryStateJob.SizesTable,
     HistoryStateJob.ParagraphFpTable, HistoryStateJob.ContainDfTable,
-    HistoryStateJob.ContainSizesTable, HistoryStateJob.GramTable,
-    HistoryStateJob.SemanticTable)
+    HistoryStateJob.ContainSizesTable)
 
   private def dropAll(): Unit =
     tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
@@ -37,6 +36,19 @@ class HistoryStateJobSpec extends SparkSpec {
     doc(4L, "a", "kappa lambda mu"),
     doc(5L, "a", "nu xi omicron"),
     doc(6L, "b", "pi rho sigma")).toDF("doc_id", "site", "text")
+
+  /** The template partials summed over days before `beforeDay` (all days
+    * when empty) — the merged state the template consumer reads. */
+  private def templateState(beforeDay: String = "") = {
+    def upTo(t: String) = {
+      val all = spark.table(t)
+      if (beforeDay.isEmpty) all else all.where(col("day") < beforeDay)
+    }
+    (upTo(HistoryStateJob.PresenceTable).groupBy(col("site"), col("__fp"))
+       .agg(sum(col("n_docs_with")).as("n_docs_with")),
+     upTo(HistoryStateJob.SizesTable).groupBy(col("site"))
+       .agg(sum(col("n_docs_group")).as("n_docs_group")))
+  }
 
   private def noShuffle(df: org.apache.spark.sql.DataFrame, what: String): Unit = {
     df.count() // materialize so AQE resolves the final plan
@@ -58,11 +70,11 @@ class HistoryStateJobSpec extends SparkSpec {
       val modelPresence = mp.as[(String, String, Long)].collect().toSet
       val modelSizes = ms.as[(String, Long)].collect().toSet
       def presence() = {
-        val (p, _) = HistoryStateJob.readTemplateState(spark, "site")
+        val (p, _) = templateState()
         p.as[(String, String, Long)].collect().toSet
       }
       def sizes() = {
-        val (_, s) = HistoryStateJob.readTemplateState(spark, "site")
+        val (_, s) = templateState()
         s.as[(String, Long)].collect().toSet
       }
       assert(presence() === modelPresence)
@@ -86,7 +98,7 @@ class HistoryStateJobSpec extends SparkSpec {
       assert(presence() === modelPresence, "day re-run must not double-count")
       assert(sizes() === modelSizes)
       // day filter: history BEFORE day 2 is exactly day 1's state
-      val (p1, _) = HistoryStateJob.readTemplateState(spark, "site", "2026-08-02")
+      val (p1, _) = templateState("2026-08-02")
       val (d1p, _) = Dedup.templateState(day1Docs, "text", "doc_id", "site")
       assert(p1.as[(String, String, Long)].collect().toSet ===
         d1p.as[(String, String, Long)].collect().toSet)
@@ -100,7 +112,7 @@ class HistoryStateJobSpec extends SparkSpec {
         "text", "doc_id", "site", buckets = 4)
       HistoryStateJob.appendDay(spark, day2Docs, "2026-08-02",
         "text", "doc_id", "site", buckets = 4)
-      val (p, _) = HistoryStateJob.readTemplateState(spark, "site")
+      val (p, _) = templateState()
       noShuffle(p, "template presence groupBy(site, __fp)+sum")
       noShuffle(HistoryStateJob.readParagraphFps(spark),
         "paragraph-fp distinct")
@@ -108,122 +120,5 @@ class HistoryStateJobSpec extends SparkSpec {
       noShuffle(gdf, "containment df groupBy(g)+sum")
       noShuffle(gsz, "containment sizes groupBy(doc_id)+sum")
     } finally dropAll()
-  }
-
-  test("runTemplateDay strips against earlier days' state and appends its own") {
-    dropAll()
-    try {
-      // low threshold + minDocs so day 1 alone can't prove the banner but
-      // day1+day2 history can prove it for day 3's batch
-      val out1 = HistoryStateJob.runTemplateDay(spark, day1Docs, "2026-08-01",
-        "text", "doc_id", "site", maxDocPerMille = 500, minDocs = 4L, buckets = 4)
-      // day one: no history, banner not yet template — everything survives
-      assert(out1.where(col("n_dropped") > 0).count() === 0L)
-      val out2 = HistoryStateJob.runTemplateDay(spark, day2Docs, "2026-08-02",
-        "text", "doc_id", "site", maxDocPerMille = 500, minDocs = 4L, buckets = 4)
-      // model day 2 against day 1's state exactly
-      val (hp, hs) = Dedup.templateState(day1Docs, "text", "doc_id", "site")
-      val model2 = Dedup.stripTemplatesIncremental(day2Docs, hp, hs,
-        "text", "doc_id", "site", 500, 4L)
-      assert(out2.orderBy("doc_id").as[(Long, String, Long, Long)].collect().toSeq ===
-        model2.orderBy("doc_id").as[(Long, String, Long, Long)].collect().toSeq)
-      // day 3: site a now has 4 history docs all carrying the banner —
-      // over-threshold ⇒ the banner strips from the new batch
-      val day3 = Seq(doc(7L, "a", "tau upsilon phi")).toDF("doc_id", "site", "text")
-      val out3 = HistoryStateJob.runTemplateDay(spark, day3, "2026-08-03",
-        "text", "doc_id", "site", maxDocPerMille = 500, minDocs = 4L, buckets = 4)
-      val r = out3.as[(Long, String, Long, Long)].collect().head
-      assert(r._4 === 1L, s"banner must strip via history counts: $r")
-      assert(r._2 === "tau upsilon phi")
-    } finally dropAll()
-  }
-
-  test("substring gram state: day partials set-merge exchange-free; " +
-       "runSubstringDay scrubs a later day against earlier grams") {
-    dropAll()
-    try {
-      import graft.text.SubstringDedup
-      val d1 = Seq(
-        (1L, "the quick brown fox jumps high"),
-        (2L, "completely unrelated words here today")).toDF("doc_id", "text")
-      // day 2 repeats day 1's 3-gram run — history must scrub it
-      val d2 = Seq(
-        (11L, "intro the quick brown fox jumps high outro"),
-        (12L, "fresh content with no repeats at all")).toDF("doc_id", "text")
-      val out1 = HistoryStateJob.runSubstringDay(spark, d1, "2026-08-01",
-        "text", "doc_id", k = 3, buckets = 4)
-      // day one: nothing repeats within the batch — all tokens survive
-      assert(out1.where(col("n_removed") > 0).count() === 0L)
-      val out2 = HistoryStateJob.runSubstringDay(spark, d2, "2026-08-02",
-        "text", "doc_id", k = 3, buckets = 4)
-      // model: the plain incremental operator against day 1's gram index
-      val model2 = SubstringDedup.substringDedupAgainstHistory(
-        d2, SubstringDedup.gramIndex(d1, "text", "doc_id", 3),
-        "text", "doc_id", 3)
-      assert(out2.orderBy("doc_id").as[(Long, String, Int, Int)].collect().toSeq ===
-        model2.orderBy("doc_id").as[(Long, String, Int, Int)].collect().toSeq)
-      assert(out2.where(col("doc_id") === 11L)
-        .select(col("n_removed")).as[Int].head() > 0,
-        "day-1 span must scrub from day 2")
-      // read-back: union-distinct of both days; day filter honors day <
-      val allG = SubstringDedup.gramIndex(d1.unionByName(d2), "text", "doc_id", 3)
-        .as[Long].collect().toSet
-      assert(HistoryStateJob.readGramIndex(spark).as[Long].collect().toSet === allG)
-      assert(HistoryStateJob.readGramIndex(spark, "2026-08-02")
-        .as[Long].collect().toSet ===
-        SubstringDedup.gramIndex(d1, "text", "doc_id", 3).as[Long].collect().toSet)
-      // re-running day 2 is idempotent (its partition overwrites itself)
-      HistoryStateJob.appendSubstringDay(spark, d2, "2026-08-02",
-        "text", "doc_id", k = 3, buckets = 4)
-      assert(HistoryStateJob.readGramIndex(spark).as[Long].collect().toSet === allG)
-      // the set-merge plans with NO exchange over the bucketed scan
-      noShuffle(HistoryStateJob.readGramIndex(spark), "gram-set distinct")
-    } finally spark.sql(s"DROP TABLE IF EXISTS ${HistoryStateJob.GramTable}")
-  }
-
-  test("semantic history: runSemanticDay dedupes against persisted assigned " +
-       "survivors and appends only keepers, exchange-free read-back") {
-    dropAll()
-    try {
-      import graft.sim.{Ivf, Similarity}
-      val model = Ivf.IvfModel(Array(Array(1.0, 0.0), Array(0.0, 1.0)))
-      def v(x: Double, y: Double) = Seq(x.toFloat, y.toFloat)
-      val d1 = Seq(
-        (2L, v(1.0, 0.05)), (4L, v(0.99, 0.06)),   // near-dups, cell 0
-        (6L, v(0.05, 1.0))                          // cell 1
-      ).toDF("vec_id", "embedding")
-      val d2 = Seq(
-        (11L, v(1.0, 0.04)),  // dup of day-1 survivor 2 → dropped vs history
-        (13L, v(0.04, 0.99)), // dup of day-1 survivor 6 → dropped vs history
-        (15L, v(-1.0, 0.2))   // genuinely new
-      ).toDF("vec_id", "embedding")
-      val out1 = HistoryStateJob.runSemanticDay(spark, d1, "2026-08-01",
-        "embedding", "vec_id", model, threshold = 0.98, buckets = 4)
-      // day one: empty history — in-batch dedup only, 2 survives, 4 dups it
-      val k1 = out1.select(col("vec_id"), col("keep"))
-        .as[(Long, Boolean)].collect().toMap
-      assert(k1 === Map(2L -> true, 4L -> false, 6L -> true))
-      val out2 = HistoryStateJob.runSemanticDay(spark, d2, "2026-08-02",
-        "embedding", "vec_id", model, threshold = 0.98, buckets = 4)
-      // model: the raw-history incremental form over day 1's SURVIVORS
-      val hist1 = d1.where(col("vec_id").isin(2L, 6L))
-      val want = Similarity.semanticDedupIncremental(d2, hist1,
-          "embedding", "vec_id", model, threshold = 0.98)
-        .select(col("vec_id"), col("keep_vs_history"), col("keep"))
-        .as[(Long, Boolean, Boolean)].collect().sortBy(_._1).toSeq
-      val got = out2.select(col("vec_id"), col("keep_vs_history"), col("keep"))
-        .as[(Long, Boolean, Boolean)].collect().sortBy(_._1).toSeq
-      assert(got === want)
-      assert(got === Seq((11L, false, false), (13L, false, false),
-        (15L, true, true)))
-      // state after day 2 = day-1 survivors + day-2 keepers, cells intact
-      val st = HistoryStateJob.readSemanticHistory(spark)
-        .select(col("vec_id"), col("ivf_cell"))
-        .as[(Long, Int)].collect().toSet
-      assert(st === Set((2L, 0), (6L, 1), (15L, 1)))
-      // scan-only read-back: zero exchanges by construction
-      noShuffle(HistoryStateJob.readSemanticHistory(spark),
-        "semantic history scan")
-    } finally spark.sql(s"DROP TABLE IF EXISTS ${HistoryStateJob.SemanticTable}")
   }
 }

@@ -2,6 +2,7 @@ package graft.jobs
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.ml.AddonMeta
 import graft.sources.PageFetcher
 
 /** End-to-end §3.3 lifecycle on fixtures: canned API pages → addon
@@ -34,8 +35,8 @@ class RecommenderJobSpec extends SparkSpec {
       addons.map(a => (s"user$u", a))
     }.toDF("user_id", "addon_id")
 
-    val recs = RecommenderJob.runWithFetcher(spark, installs, fetcher,
-      "http://amo.test/p1", k = 3)
+    val recs = RecommenderJob.run(installs, "user_id", "addon_id",
+      AddonMeta.load(spark, fetcher, "http://amo.test/p1"), k = 3)
     val rows = recs.collect()
     assert(rows.nonEmpty)
     assert(recs.columns.toSeq ===

@@ -1,7 +1,5 @@
 package graft.jobs
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
@@ -19,7 +17,7 @@ class SketchRollupJobSpec extends SparkSpec {
   }
 
   test("two-day rollup: range reads merge exactly; day re-run idempotent") {
-    val base = Files.createTempDirectory("graft_sketchroll").toString
+    val base = SparkSpec.tempDir("graft_sketchroll").toString
     val d1 = day(1, (1L to 40L))
     val d2 = day(2, (25L to 70L))
     SketchRollupJob.runDay(spark, d1, "20240101", base, "user_id", "value")
@@ -44,8 +42,10 @@ class SketchRollupJobSpec extends SparkSpec {
     // merged quantile == one-pass KLL over the union (below-k exact
     // regime: 400 values < k=200 per sketch... use the rank band
     // instead: both sketches are below capacity so merge is exact)
-    val q = SketchRollupJob.valueQuantile(spark, base,
-        "20240101", "20240102", q = 0.5).as[Double].collect().head
+    val q = SketchRollupJob.read(spark, base, "20240101", "20240102")
+      .agg(kll_sketch_get_quantile_double(
+        kll_merge_agg_double(col("kll_value"), lit(200)), lit(0.5)))
+      .as[Double].collect().head
     val exact = d1.unionAll(d2).select(col("value")).as[Double]
       .collect().sorted
     // KLL below capacity stores values exactly; the merged sketch holds
@@ -69,7 +69,7 @@ class SketchRollupJobSpec extends SparkSpec {
   }
 
   test("heavy keys and join-size planning ride the same daily rows") {
-    val base = Files.createTempDirectory("graft_sketchroll2").toString
+    val base = SparkSpec.tempDir("graft_sketchroll2").toString
     val d1 = day(1, (1L to 40L))
     val d2 = day(2, (25L to 70L))
     // mgK 128 ≥ the 70-key union vocabulary: the exact regime — merged

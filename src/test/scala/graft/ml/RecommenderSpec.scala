@@ -19,8 +19,9 @@ class RecommenderSpec extends SparkSpec {
     // an even user's top recommendation should be an even-clique item
     val u2 = Recommender.positiveHash("u2")
     val evenItems = Seq("i100", "i101", "i102").map(Recommender.positiveHash).toSet
-    val top = Recommender.recommendForUser(model, u2, 1)
-    assert(top.nonEmpty && evenItems.contains(top.head._1))
+    val top = Recommender.recommendAll(model, 1).where(col("user") === u2)
+      .select(col("recommendations")(0)("item")).as[Int].collect()
+    assert(top.nonEmpty && evenItems.contains(top.head))
   }
 
   test("NaNRMSEEvaluator drops NaN predictions, RMSE over the rest") {

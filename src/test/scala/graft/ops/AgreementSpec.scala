@@ -50,18 +50,18 @@ class AgreementSpec extends SparkSpec {
 
   test("fleissKappa misuse fails loudly: unequal raters, dup pair, null label") {
     val unequal = Seq(("i1", "r1", "a"), ("i1", "r2", "a"), ("i2", "r1", "a"))
-    val e1 = intercept[Exception] { fleiss(unequal) }
+    val e1 = quietTaskFailures(intercept[Exception] { fleiss(unequal) })
     assert(e1.getMessage.contains("constant rater count"))
     val dup = Seq(("i1", "r1", "a"), ("i1", "r1", "b"),
       ("i2", "r1", "a"), ("i2", "r2", "b"))
-    val e2 = intercept[Exception] { fleiss(dup) }
+    val e2 = quietTaskFailures(intercept[Exception] { fleiss(dup) })
     assert(e2.getMessage.contains("duplicate"))
-    val e3 = intercept[Exception] {
+    val e3 = quietTaskFailures(intercept[Exception] {
       Agreement.fleissKappa(
         Seq(("i1", "r1", null.asInstanceOf[String]),
           ("i1", "r2", "a")).toDF("item", "rater", "label"),
         "item", "rater", "label").collect()
-    }
+    })
     assert(e3.getMessage.contains("null label"))
   }
 
@@ -115,9 +115,9 @@ class AgreementSpec extends SparkSpec {
       .as[(String, Long, Long, Long)].collect().map(r => r._1 -> r._3).toMap
     assert(t("a") === 1L && t("b") === 0L)
     val dup = Seq(("i1", "a", "x"), ("i1", "a", "y")).toDF("item", "rater", "label")
-    val e = intercept[Exception] {
+    val e = quietTaskFailures(intercept[Exception] {
       Agreement.annotatorReport(dup, "item", "rater", "label").collect()
-    }
+    })
     assert(e.getMessage.contains("duplicate (item, rater)"))
   }
 
@@ -205,20 +205,20 @@ class AgreementSpec extends SparkSpec {
     assert(nv1 === 1L && de1 === 0L && a1 === None)
     val dup = Seq(("i1", "r1", 1L), ("i1", "r1", 2L), ("i2", "r1", 1L),
       ("i2", "r2", 2L))
-    val e1 = intercept[Exception] {
+    val e1 = quietTaskFailures(intercept[Exception] {
       Agreement.krippendorffAlphaInterval(dup.toDF("item", "rater", "v"),
         "item", "rater", "v").select("alpha_micro").collect()
-    }
+    })
     assert(e1.getMessage.contains("duplicate (item, rater)"))
-    val e2 = intercept[Exception] { alphaI(Seq(("i1", "r1", 1L))) }
+    val e2 = quietTaskFailures(intercept[Exception] { alphaI(Seq(("i1", "r1", 1L))) })
     assert(e2.getMessage.contains("no item has 2 or more ratings"))
-    val e3 = intercept[Exception] {
+    val e3 = quietTaskFailures(intercept[Exception] {
       Agreement.krippendorffAlphaInterval(
         Seq(("i1", "r1", null.asInstanceOf[java.lang.Long]),
           ("i1", "r2", java.lang.Long.valueOf(1L)))
           .toDF("item", "rater", "v"),
         "item", "rater", "v").collect()
-    }
+    })
     assert(e3.getMessage.contains("null value"))
   }
 
@@ -275,18 +275,18 @@ class AgreementSpec extends SparkSpec {
     assert(nv1 === 1L && de1 === 0L && a1 === None)
     val dup = Seq(("i1", "r1", 1L), ("i1", "r1", 2L),
       ("i2", "r1", 1L), ("i2", "r2", 2L))
-    val e1 = intercept[Exception] {
+    val e1 = quietTaskFailures(intercept[Exception] {
       Agreement.krippendorffAlphaOrdinal(dup.toDF("item", "rater", "v"),
         "item", "rater", "v").select("n_values").collect()
-    }
+    })
     assert(e1.getMessage.contains("duplicate (item, rater)"))
-    val e2 = intercept[Exception] { alphaO(Seq(("i1", "r1", 1L))) }
+    val e2 = quietTaskFailures(intercept[Exception] { alphaO(Seq(("i1", "r1", 1L))) })
     assert(e2.getMessage.contains("no item has 2 or more ratings"))
     val frac = Seq(("i1", "r1", 4.5), ("i1", "r2", 4.0))
       .toDF("item", "rater", "v")
-    val e3 = intercept[Exception] {
+    val e3 = quietTaskFailures(intercept[Exception] {
       Agreement.krippendorffAlphaOrdinal(frac, "item", "rater", "v").collect()
-    }
+    })
     assert(e3.getMessage.contains("non-integral rating"))
   }
 
@@ -331,20 +331,20 @@ class AgreementSpec extends SparkSpec {
     val (_, _, nv1, _, de1, a1) = alphaR(one)
     assert(nv1 === 1L && de1 === 0L && a1 === None)
     val neg = Seq(("i1", "r1", -1L), ("i1", "r2", 2L))
-    val e1 = intercept[Exception] { alphaR(neg) }
+    val e1 = quietTaskFailures(intercept[Exception] { alphaR(neg) })
     assert(e1.getMessage.contains("negative rating"))
     val dup = Seq(("i1", "r1", 1L), ("i1", "r1", 2L),
       ("i2", "r1", 1L), ("i2", "r2", 2L))
-    val e2 = intercept[Exception] {
+    val e2 = quietTaskFailures(intercept[Exception] {
       Agreement.krippendorffAlphaRatio(dup.toDF("item", "rater", "v"),
         "item", "rater", "v").select("n_values").collect()
-    }
+    })
     assert(e2.getMessage.contains("duplicate (item, rater)"))
     val frac = Seq(("i1", "r1", 4.5), ("i1", "r2", 4.0))
       .toDF("item", "rater", "v")
-    val e3 = intercept[Exception] {
+    val e3 = quietTaskFailures(intercept[Exception] {
       Agreement.krippendorffAlphaRatio(frac, "item", "rater", "v").collect()
-    }
+    })
     assert(e3.getMessage.contains("non-integral rating"))
   }
 
@@ -369,9 +369,9 @@ class AgreementSpec extends SparkSpec {
       "instead of silently truncating; count guards survive pruning") {
     val frac = Seq(("i1", "r1", 4.5), ("i1", "r2", 4.0))
       .toDF("item", "rater", "v")
-    val e = intercept[Exception] {
+    val e = quietTaskFailures(intercept[Exception] {
       Agreement.krippendorffAlphaInterval(frac, "item", "rater", "v").collect()
-    }
+    })
     assert(e.getMessage.contains("non-integral rating"))
     // integral doubles pass the gate (4.0 is an exact 4)
     val okD = Seq(("i1", "r1", 3.0), ("i1", "r2", 4.0))
@@ -382,37 +382,37 @@ class AgreementSpec extends SparkSpec {
     // count from a duplicate-keyed table must still raise
     val dupS = Seq(("i1", "r1", "a"), ("i1", "r1", "b"),
       ("i2", "r1", "a"), ("i2", "r2", "b")).toDF("item", "rater", "label")
-    val eN = intercept[Exception] {
+    val eN = quietTaskFailures(intercept[Exception] {
       Agreement.krippendorffAlpha(dupS, "item", "rater", "label")
         .select("n_items", "n_categories").collect()
-    }
+    })
     assert(eN.getMessage.contains("duplicate"))
     val dupV = Seq(("i1", "r1", 1L), ("i1", "r1", 2L),
       ("i2", "r1", 1L), ("i2", "r2", 2L)).toDF("item", "rater", "v")
-    val eV = intercept[Exception] {
+    val eV = quietTaskFailures(intercept[Exception] {
       Agreement.krippendorffAlphaInterval(dupV, "item", "rater", "v")
         .select("n_values").collect()
-    }
+    })
     assert(eV.getMessage.contains("duplicate"))
   }
 
   test("krippendorffAlpha misuse fails loudly; guards survive pruning") {
     val dup = Seq(("i1", "r1", "a"), ("i1", "r1", "b"), ("i2", "r1", "a"),
       ("i2", "r2", "b"))
-    val e1 = intercept[Exception] {
+    val e1 = quietTaskFailures(intercept[Exception] {
       Agreement.krippendorffAlpha(dup.toDF("item", "rater", "label"),
         "item", "rater", "label").select("alpha_micro").collect()
-    }
+    })
     assert(e1.getMessage.contains("duplicate (item, rater)"))
     val singles = Seq(("i1", "r1", "a"), ("i2", "r2", "b"))
-    val e2 = intercept[Exception] { alpha(singles) }
+    val e2 = quietTaskFailures(intercept[Exception] { alpha(singles) })
     assert(e2.getMessage.contains("no item has 2 or more ratings"))
-    val e3 = intercept[Exception] {
+    val e3 = quietTaskFailures(intercept[Exception] {
       Agreement.krippendorffAlpha(
         Seq(("i1", "r1", null.asInstanceOf[String]), ("i1", "r2", "a"))
           .toDF("item", "rater", "label"),
         "item", "rater", "label").collect()
-    }
+    })
     assert(e3.getMessage.contains("null label"))
   }
 
@@ -422,44 +422,44 @@ class AgreementSpec extends SparkSpec {
     // value column reads — pruning a sibling column must not drop them
     val unequal = Seq(("i1", "r1", "a"), ("i1", "r2", "a"), ("i2", "r1", "a"))
       .toDF("item", "rater", "label")
-    val e1 = intercept[Exception] {
+    val e1 = quietTaskFailures(intercept[Exception] {
       Agreement.fleissKappa(unequal, "item", "rater", "label")
         .select("kappa_micro").collect()
-    }
+    })
     assert(e1.getMessage.contains("constant rater count"))
     assert(e1.getMessage.contains("krippendorffAlpha"))
     val dup = Seq(("i1", "r1", "a"), ("i1", "r1", "b"),
       ("i2", "r1", "a"), ("i2", "r2", "b")).toDF("item", "rater", "label")
-    val e2 = intercept[Exception] {
+    val e2 = quietTaskFailures(intercept[Exception] {
       Agreement.fleissKappa(dup, "item", "rater", "label")
         .select("kappa_den").collect()
-    }
+    })
     assert(e2.getMessage.contains("duplicate"))
     // n_items carries its OWN dup guard: a bare item count from a
     // duplicate-keyed table is still a lie
-    val e2b = intercept[Exception] {
+    val e2b = quietTaskFailures(intercept[Exception] {
       Agreement.fleissKappa(dup, "item", "rater", "label")
         .select("n_items").collect()
-    }
+    })
     assert(e2b.getMessage.contains("duplicate"))
-    val e3 = intercept[Exception] {
+    val e3 = quietTaskFailures(intercept[Exception] {
       Agreement.cohenKappa(Seq.empty[(String, String)].toDF("la", "lb"),
         "la", "lb").select("kappa_micro").collect()
-    }
+    })
     assert(e3.getMessage.contains("empty annotation table"))
   }
 
   test("empty annotation tables fail loudly on both kappas") {
-    val ef = intercept[Exception] { fleiss(Seq.empty) }
+    val ef = quietTaskFailures(intercept[Exception] { fleiss(Seq.empty) })
     assert(ef.getMessage.contains("empty annotation table"))
-    val ec = intercept[Exception] { cohen(Seq.empty) }
+    val ec = quietTaskFailures(intercept[Exception] { cohen(Seq.empty) })
     assert(ec.getMessage.contains("empty annotation table"))
   }
 
   test("cohenKappa: null label fails loudly") {
-    val e = intercept[Exception] {
+    val e = quietTaskFailures(intercept[Exception] {
       cohen(Seq(("a", null.asInstanceOf[String]), ("a", "a")))
-    }
+    })
     assert(e.getMessage.contains("null label"))
   }
 }

@@ -3,7 +3,6 @@ package graft.ops
 import graft.SparkSpec
 import java.nio.file.{Files, Paths}
 import org.apache.spark.SparkException
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.concurrent.Eventually._
@@ -15,38 +14,28 @@ import scala.jdk.CollectionConverters._
   * read. Plus the source rule that keeps them the only home. */
 class CkptSpec extends SparkSpec {
 
-  /** Spark jobs `body` ran. Listener events arrive asynchronously, so a
-    * marker job in its own group runs last: once its end is seen, every
-    * earlier event has been delivered. */
+  /** Spark jobs `body` ran, counted by [[graft.JobLog]]. Listener events
+    * arrive asynchronously, so a marker job in its own group runs last:
+    * once its end is seen, every earlier event has been delivered. */
   private def jobsOf(body: => Unit): Int = {
     val sc = spark.sparkContext
-    val starts = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-    @volatile var markerDone = false
-    def group(p: java.util.Properties) =
-      Option(p).flatMap(q => Option(q.getProperty("spark.jobGroup.id")))
-    val markers = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        group(e.properties) match {
-          case Some("ckpt-spec") => starts.add(e.jobId)
-          case Some("ckpt-spec-marker") => markers.add(e.jobId)
-          case _ =>
-        }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (markers.contains(e.jobId)) markerDone = true
-    }
-    sc.addSparkListener(listener)
+    val log = new graft.JobLog
+    def inGroup(g: String) = log.synchronized(log.jobs.values.toSeq).filter(
+      _._1.exists(_.getProperty("spark.jobGroup.id") == g))
+    sc.addSparkListener(log)
     try {
       sc.setJobGroup("ckpt-spec", "measured")
       body
       sc.setJobGroup("ckpt-spec-marker", "marker")
       sc.parallelize(Seq(1), 1).count()
-      eventually(timeout(Span(30, Seconds))) { assert(markerDone) }
+      eventually(timeout(Span(30, Seconds))) {
+        assert(inGroup("ckpt-spec-marker").exists(_._3 > 0L))
+      }
     } finally {
       sc.clearJobGroup()
-      sc.removeSparkListener(listener)
+      sc.removeSparkListener(log)
     }
-    starts.size
+    inGroup("ckpt-spec").size
   }
 
   private def ids: DataFrame = spark.range(0, 1000, 1, 4).toDF("id")
@@ -79,9 +68,9 @@ class CkptSpec extends SparkSpec {
     Ckpt.release(df)
     // the block removal is asynchronous; once it lands the read must
     // fail — never recompute, never come back short
-    eventually(timeout(Span(30, Seconds))) {
+    quietTaskFailures(eventually(timeout(Span(30, Seconds))) {
       intercept[SparkException](df.collect())
-    }
+    })
   }
 
   test("source rule: one Observation home, one withNodeIds hint in Graphs") {

@@ -141,7 +141,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("BatchView: dynamic partition overwrite rewrites only incoming days") {
-    val base = Files.createTempDirectory("graft_bv").toString
+    val base = SparkSpec.tempDir("graft_bv").toString
     val day1 = Seq((1L, "d1"), (2L, "d1"), (3L, "d2")).toDF("id", "day")
     BatchView.write(day1, base, "t", 1, Seq("day"))
     // overwrite ONLY d2 with new content; d1 must survive
@@ -159,7 +159,7 @@ class PipelineSpec extends SparkSpec {
     // on an attribute — the day set to scan is only known at runtime,
     // and DPP must push it into the fact scan's partition filters
     // (without it, a dim-filtered join reads every day)
-    val base = Files.createTempDirectory("graft_dpp").toString
+    val base = SparkSpec.tempDir("graft_dpp").toString
     val fact = (1 to 300).map(i => (i.toLong, s"d${i % 3}"))
       .toDF("id", "day")
     BatchView.write(fact, base, "f", 1, Seq("day"))
@@ -356,7 +356,7 @@ class PipelineSpec extends SparkSpec {
   test("two-day runbook: every history artifact survives parquet and the filesystem") {
     import graft.dedup.Dedup
     import graft.text.Corpus
-    val dir = Files.createTempDirectory("graft_runbook").toString
+    val dir = SparkSpec.tempDir("graft_runbook").toString
     val stop = Seq("the", "a")
     def doc(i: Int, body: String) = (i.toLong, body)
     val day1 = Seq(
@@ -601,7 +601,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("BatchView.write plants parquet bloom filters on the listed columns") {
-    val dir = Files.createTempDirectory("graft_bloom_view").toString
+    val dir = SparkSpec.tempDir("graft_bloom_view").toString
     val df = (1L to 500L)
       .map(i => (i, org.apache.commons.codec.digest.DigestUtils.md5Hex(i.toString), "d1"))
       .toDF("doc_id", "fp", "day").coalesce(1)
@@ -632,8 +632,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("BatchView.compact collapses small files, preserves rows, keeps sorted layout") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_compact").toString + "/t"
+    val dir = SparkSpec.tempDir("graft_compact").toString + "/t"
     val rows = (0L until 500L).map(i => (i, s"v$i"))
     // a deliberately fragmented write: many tiny files
     rows.toDF("k", "v").repartition(25).write.parquet(dir)
@@ -660,8 +659,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("BatchView.compact fails fast on stale swap dirs and on partitioned roots") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_compact_guard").toString
+    val base = SparkSpec.tempDir("graft_compact_guard").toString
     val dir = base + "/t"
     (0L until 50L).map(i => (i, s"v$i")).toDF("k", "v")
       .repartition(5).write.parquet(dir)
@@ -690,8 +688,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("BatchView.compactPartitioned walks leaves: fewer files, same rows, pruning intact") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_compact_part").toString
+    val base = SparkSpec.tempDir("graft_compact_part").toString
     // a 2-day partitioned view written FRAGMENTED (the streaming-sink
     // small-file shape: many tiny files per day)
     val rows = (0L until 400L).map(i => (i, s"d${i % 2}", s"v$i"))
@@ -733,7 +730,7 @@ class PipelineSpec extends SparkSpec {
     val prev = spark.conf.getOption(key)
     try {
       spark.conf.set(key, "static")
-      val base = java.nio.file.Files.createTempDirectory("graft_bv_conf").toString
+      val base = SparkSpec.tempDir("graft_bv_conf").toString
       BatchView.write(Seq((1L, "d1")).toDF("id", "day"), base, "t", 1, Seq("day"))
       assert(spark.conf.get(key) === "static",
         "per-write option must not mutate the session conf")

@@ -20,13 +20,13 @@ class PreferenceSpec extends SparkSpec {
   }
 
   test("winRates misuse fails loudly: self-duel and null player") {
-    val e1 = intercept[Exception] { rates(Seq(("a", "a"), ("a", "b"))) }
+    val e1 = quietTaskFailures(intercept[Exception] { rates(Seq(("a", "a"), ("a", "b"))) })
     assert(e1.getMessage.contains("self-duel"))
-    val e2 = intercept[Exception] {
+    val e2 = quietTaskFailures(intercept[Exception] {
       Preference.winRates(
         Seq(("a", null.asInstanceOf[String])).toDF("w", "l"), "w", "l")
         .collect()
-    }
+    })
     assert(e2.getMessage.contains("null loser"))
   }
 
@@ -76,34 +76,34 @@ class PreferenceSpec extends SparkSpec {
       .as[(String, String, Long, Long, Long, Long, Option[Long])].head()
     assert(out === (("a", "b", 3L, 2L, 1L, 1L, Some(500000L))))
     // a third judgment for one match is a log defect, not a vote
-    val e1 = intercept[Exception] {
+    val e1 = quietTaskFailures(intercept[Exception] {
       Preference.orderConsistency(duels.unionAll(
           Seq(("m1", "b", "a", "a")).toDF("m", "w", "l", "f")),
         "m", "w", "l", "f").collect()
-    }
+    })
     assert(e1.getMessage.contains("more than two judgments"))
     // two judgments in the SAME order are a re-judge, not an order flip
-    val e2 = intercept[Exception] {
+    val e2 = quietTaskFailures(intercept[Exception] {
       Preference.orderConsistency(
         Seq(("m9", "a", "b", "a"), ("m9", "b", "a", "a"))
           .toDF("m", "w", "l", "f"),
         "m", "w", "l", "f").collect()
-    }
+    })
     assert(e2.getMessage.contains("SAME presentation order"))
-    val e3 = intercept[Exception] {
+    val e3 = quietTaskFailures(intercept[Exception] {
       Preference.orderConsistency(
         Seq(("m1", "a", "b", "z")).toDF("m", "w", "l", "f"),
         "m", "w", "l", "f").collect()
-    }
+    })
     assert(e3.getMessage.contains("neither duel side"))
     // a match id reused across DIFFERENT player pairs is a key
     // collision, not two unpaired matches
-    val e4 = intercept[Exception] {
+    val e4 = quietTaskFailures(intercept[Exception] {
       Preference.orderConsistency(
         Seq(("m1", "a", "b", "a"), ("m1", "a", "c", "a"))
           .toDF("m", "w", "l", "f"),
         "m", "w", "l", "f").collect()
-    }
+    })
     assert(e4.getMessage.contains("more than one player pair"))
   }
 
@@ -123,11 +123,11 @@ class PreferenceSpec extends SparkSpec {
     val eq = Preference.lengthBias(Seq((4L, 4L)).toDF("wl", "ll"), "wl", "ll", 5L)
       .as[(Long, Long, Long, Long, Option[Long])].head()
     assert(eq._5 === None)
-    val e = intercept[Exception] {
+    val e = quietTaskFailures(intercept[Exception] {
       Preference.lengthBias(
         Seq((Some(1L), None: Option[Long])).toDF("wl", "ll"), "wl", "ll", 5L)
         .collect()
-    }
+    })
     assert(e.getMessage.contains("null loser length"))
   }
 

@@ -167,9 +167,9 @@ class TimeseriesSpec extends SparkSpec {
 
   test("zeroFill fails loudly on duplicate (key, bucket) rows") {
     val dup = Seq((1L, 3L, 10L), (1L, 3L, 4L)).toDF("k", "bucket", "n")
-    val e = intercept[Exception] {
+    val e = quietTaskFailures(intercept[Exception] {
       Timeseries.zeroFill(dup, "k", "bucket", "n").collect()
-    }
+    })
     assert(e.getMessage.toLowerCase.contains("duplicate"))
   }
 

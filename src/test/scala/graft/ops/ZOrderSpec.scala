@@ -52,7 +52,7 @@ class ZOrderSpec extends SparkSpec {
     // read each file's FOOTER column statistics, and count files whose
     // [min,max] intervals intersect an 8×8 query box on BOTH dimensions —
     // that count is exactly the row groups a stats-pruning reader scans
-    val dir = java.nio.file.Files.createTempDirectory("graft_zwrite").toString
+    val dir = SparkSpec.tempDir("graft_zwrite").toString
     val df = (for { a <- 0L until 64L; b <- 0L until 64L } yield (a, b))
       .toDF("a", "b")
     ZOrder.cluster(df, "a", "b", 16).write.parquet(s"$dir/z")

@@ -162,7 +162,7 @@ class PqSpec extends SparkSpec {
     val others = emb.where(col("vec_id") =!= 0)
     val (ivfModel, assigned) = Ivf.build(others, "embedding", "vec_id", nCells = 8)
     val pqModel = Pq.train(others, "embedding", "vec_id", dim, m = 8, k = 16)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq").toString
+    val dir = SparkSpec.tempDir("graft_ivfpq").toString
     // the persisted index carries ONLY (id, codes) inside cell partitions
     Pq.encode(assigned, "embedding", pqModel)
       .select(col("vec_id"), col("ivf_cell"), col("pq_codes"))
@@ -199,7 +199,7 @@ class PqSpec extends SparkSpec {
     val q = emb.where(col("vec_id") === 0).select(col("embedding")).head().getSeq[Float](0)
     val pq = Pq.train(emb, "embedding", "vec_id", dim, m = 8, k = 16)
     val ivf = Ivf.train(emb, "embedding", "vec_id", nCells = 8)
-    val dir = java.nio.file.Files.createTempDirectory("graft_models").toString
+    val dir = SparkSpec.tempDir("graft_models").toString
     Pq.save(pq, s"$dir/pq", spark)
     Ivf.save(ivf, s"$dir/ivf", spark)
     val pq2 = Pq.load(s"$dir/pq", spark)

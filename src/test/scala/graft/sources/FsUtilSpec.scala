@@ -7,7 +7,7 @@ import graft.SparkSpec
 class FsUtilSpec extends SparkSpec {
 
   test("exists/write/read/delete round-trip, plain and gzip by extension") {
-    val dir = Files.createTempDirectory("fsutil").toString
+    val dir = SparkSpec.tempDir("fsutil").toString
     val plain = s"$dir/note.txt"
     val gz = s"$dir/note.txt.gz"
 

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.ml.AddonMeta
@@ -63,7 +61,7 @@ class PagedHttpSpec extends SparkSpec {
   }
 
   test("cachedPages: miss fetches + persists, hit skips the transport") {
-    val cache = Files.createTempDirectory("pagedhttp").resolve("amo.json")
+    val cache = SparkSpec.tempDir("pagedhttp").resolve("amo.json")
     val f1 = fetcher
     val first = PagedHttp.cachedPages(cache)(PagedHttp.fetchPages(f1, "http://amo.test/p1"))
     assert(first.size === 3 && f1.calls === 3)

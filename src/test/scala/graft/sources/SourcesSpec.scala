@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -22,7 +20,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("generic format load round-trips") {
-    val dir = Files.createTempDirectory("graft_src").toString
+    val dir = SparkSpec.tempDir("graft_src").toString
     Seq((1, "a"), (2, "b")).toDF("id", "s").write.json(s"$dir/j")
     val back = Sources.load(spark, "json", s"$dir/j")
     assert(back.count() === 2)
@@ -35,7 +33,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("S5/K4/K5 built-ins: SQL temp-view scan, JSON sink, gzip text sink") {
-    val dir = Files.createTempDirectory("graft_sinks").toString
+    val dir = SparkSpec.tempDir("graft_sinks").toString
     val df = Seq((1, "alpha"), (2, "beta")).toDF("id", "s")
     // S5: SQL scan over a registered table
     df.createOrReplaceTempView("sinks_t")
@@ -53,7 +51,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("dimensionedScan prunes partition dirs via predicates") {
-    val dir = Files.createTempDirectory("graft_src2").toString
+    val dir = SparkSpec.tempDir("graft_src2").toString
     Seq((1L, "20180607"), (2L, "20180608")).toDF("id", "submission_date")
       .write.partitionBy("submission_date").parquet(s"$dir/t")
     val out = Sources.dimensionedScan(spark, s"$dir/t",

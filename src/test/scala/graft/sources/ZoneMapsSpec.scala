@@ -2,7 +2,6 @@ package graft.sources
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** File-level zone maps ([[ZoneMaps]]): the manifest-pruned read must
   * (a) equal the plain filtered read exactly and (b) actually SKIP
@@ -12,7 +11,7 @@ class ZoneMapsSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(): String =
-    Files.createTempDirectory("graft-zm").toString
+    SparkSpec.tempDir("graft-zm").toString
 
   test("pruned read equals the filtered read and skips files") {
     val dir = tmp()

@@ -1,10 +1,10 @@
 package graft.streaming
 
 import java.io.File
-import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimitedTests}
 import org.scalatest.time.{Minutes, Span}
 import graft.SparkSpec
@@ -16,6 +16,10 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
   // A wedged streaming query must FAIL the suite, not hang sbt test forever.
   override val timeLimit: Span = Span(5, Minutes)
   override val defaultTestSignaler: Signaler = ThreadSignaler
+
+  /** A file-source stream over a directory of parquet drops. */
+  private def fileStream(path: String, schema: StructType): DataFrame =
+    spark.readStream.schema(schema).parquet(path)
 
   /** Appends each drop to the parquet directory `path` in order and stamps
     * the files each drop adds with mtimes one second apart, ten seconds in
@@ -35,7 +39,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
   }
 
   test("file stream → windowed counts → memory sink (batch-driven)") {
-    val dir = Files.createTempDirectory("graft_stream").toString
+    val dir = SparkSpec.tempDir("graft_stream").toString
     val data = Seq(
       (java.sql.Timestamp.valueOf("2024-01-01 00:01:00"), "click", 1.0),
       (java.sql.Timestamp.valueOf("2024-01-01 00:02:00"), "click", 2.0),
@@ -43,7 +47,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
     ).toDF("ts", "event_type", "value")
     data.write.parquet(s"$dir/in")
 
-    val stream = StreamingViews.fileStream(spark, s"$dir/in", data.schema)
+    val stream = fileStream(s"$dir/in", data.schema)
     val agg = StreamingViews.windowedCounts(stream, "ts", "event_type")
     val q = agg.writeStream.outputMode("complete")
       .format("memory").queryName("wc").start()
@@ -56,13 +60,13 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
   }
 
   test("sessionize folds events into per-user state and emits on watermark timeout") {
-    val dir = Files.createTempDirectory("graft_stream3").toString
+    val dir = SparkSpec.tempDir("graft_stream3").toString
     Seq(
       StreamingViews.SessionEvent(1L, 1000L, 2.0),
       StreamingViews.SessionEvent(1L, 2000L, 3.0),
       StreamingViews.SessionEvent(2L, 1500L, 7.0)
     ).toDF().write.parquet(s"$dir/in")
-    val stream = StreamingViews.fileStream(spark, s"$dir/in",
+    val stream = fileStream(s"$dir/in",
       Seq(StreamingViews.SessionEvent(0L, 0L, 0.0)).toDF().schema)
       .as[StreamingViews.SessionEvent]
     val sessions = StreamingViews.sessionize(stream, gapMillis = 100L)
@@ -97,7 +101,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
     // (admitted by a nonzero watermarkDelay) must close as its own earlier
     // session — not extend the open session backwards — so streaming
     // output matches a batch replay (Relational.sessionize) of the data
-    val dir = Files.createTempDirectory("graft_stream4").toString
+    val dir = SparkSpec.tempDir("graft_stream4").toString
     val batch1 = Seq(
       StreamingViews.SessionEvent(1L, 5000L, 1.0),
       StreamingViews.SessionEvent(1L, 5050L, 2.0))
@@ -105,7 +109,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
       StreamingViews.SessionEvent(1L, 1000L, 7.0),  // 4000 ms BEFORE the open session
       StreamingViews.SessionEvent(1L, 5120L, 3.0))  // extends the open session
     batch1.toDF().write.parquet(s"$dir/in")
-    val stream = StreamingViews.fileStream(spark, s"$dir/in",
+    val stream = fileStream(s"$dir/in",
       batch1.toDF().schema).as[StreamingViews.SessionEvent]
     val sessions = StreamingViews.sessionize(stream, gapMillis = 100L,
       watermarkDelay = "10 seconds")
@@ -145,7 +149,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
   }
 
   test("streaming dedupe against static history drops known keys") {
-    val dir = Files.createTempDirectory("graft_stream5").toString
+    val dir = SparkSpec.tempDir("graft_stream5").toString
     val data = Seq(
       (java.sql.Timestamp.valueOf("2024-01-01 00:01:00"), "k1", "dup-of-history"),
       (java.sql.Timestamp.valueOf("2024-01-01 00:02:00"), "k2", "new"),
@@ -154,7 +158,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
     ).toDF("ts", "key", "payload")
     data.write.parquet(s"$dir/in")
     val history = Seq("k1", "k9").toDF("key")
-    val stream = StreamingViews.fileStream(spark, s"$dir/in", data.schema)
+    val stream = fileStream(s"$dir/in", data.schema)
     val out = StreamingViews.streamingDedupeAgainstHistory(
       stream, history, "ts", Seq("key"))
     val q = out.writeStream.outputMode("append")
@@ -167,7 +171,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
   }
 
   test("streaming bloom dedupe: history as a predicate, no stream-static join") {
-    val dir = Files.createTempDirectory("graft_stream_bloom").toString
+    val dir = SparkSpec.tempDir("graft_stream_bloom").toString
     val data = Seq(
       (java.sql.Timestamp.valueOf("2024-01-01 00:01:00"), "k1", "dup-of-history"),
       (java.sql.Timestamp.valueOf("2024-01-01 00:02:00"), "k2", "new"),
@@ -181,7 +185,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
     val bloom = graft.dedup.Dedup.keyBloom(
       Seq("k1", "k9").toDF("key"), org.apache.spark.sql.functions.struct($"key"),
       expectedItems = 2, numBits = 1 << 16)
-    val stream = StreamingViews.fileStream(spark, s"$dir/in", data.schema)
+    val stream = fileStream(s"$dir/in", data.schema)
     val out = StreamingViews.streamingDedupeBloom(stream, bloom, "ts", Seq("key"))
     val q = out.writeStream.outputMode("append")
       .format("memory").queryName("ddb").start()
@@ -204,9 +208,9 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
         1L + rnd.nextInt(2), rnd.nextInt(2000).toLong, rnd.nextInt(10).toDouble))
         .distinctBy(e => (e.userId, e.tsMillis))
       val batches = rnd.shuffle(events).grouped(8).toSeq // arbitrary order+split
-      val dir = Files.createTempDirectory(s"graft_stream_rnd$round").toString
+      val dir = SparkSpec.tempDir(s"graft_stream_rnd$round").toString
       batches.head.toDF().write.parquet(s"$dir/in")
-      val stream = StreamingViews.fileStream(spark, s"$dir/in",
+      val stream = fileStream(s"$dir/in",
         batches.head.toDF().schema).as[StreamingViews.SessionEvent]
       val sessions = StreamingViews.sessionize(stream, gap,
         watermarkDelay = "1 hour") // admit every out-of-order delivery
@@ -247,7 +251,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
   }
 
   test("streaming dedupe keeps first occurrence per key") {
-    val dir = Files.createTempDirectory("graft_stream2").toString
+    val dir = SparkSpec.tempDir("graft_stream2").toString
     val data = Seq(
       (java.sql.Timestamp.valueOf("2024-01-01 00:01:00"), "k1", "first"),
       (java.sql.Timestamp.valueOf("2024-01-01 00:01:00"), "k1", "first"),
@@ -255,7 +259,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
     ).toDF("ts", "key", "payload")
     data.write.parquet(s"$dir/in")
 
-    val stream = StreamingViews.fileStream(spark, s"$dir/in", data.schema)
+    val stream = fileStream(s"$dir/in", data.schema)
     val deduped = StreamingViews.streamingDedupe(stream, "ts", Seq("key"))
     val q = deduped.writeStream.outputMode("append")
       .format("memory").queryName("dd").start()
@@ -265,53 +269,9 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
     } finally q.stop()
   }
 
-  test("streamingClean gates quality, drops history dups, dedups whitespace-equal docs") {
-    import graft.text.TextOps
-    val dir = Files.createTempDirectory("graft_stream_clean").toString
-    val good = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
-    val hist = "one two three four five six seven eight nine ten eleven twelve"
-    // batch 1: the original good doc, a quality failure, a history dup
-    val b1 = Seq(
-      (java.sql.Timestamp.valueOf("2024-01-01 00:01:00"), 1L, good),
-      (java.sql.Timestamp.valueOf("2024-01-01 00:03:00"), 3L, "too short"),
-      (java.sql.Timestamp.valueOf("2024-01-01 00:04:00"), 4L, hist)
-    ).toDF("ts", "doc_id", "text")
-    // batch 2 (a LATER micro-batch): a whitespace-variant of doc 1 — same
-    // fingerprint, different ts — must be dropped by RETAINED dedup state
-    // (only WithinWatermark semantics catch this; (fp, ts)-keyed dedup
-    // wouldn't), plus a genuinely fresh doc
-    val b2 = Seq(
-      (java.sql.Timestamp.valueOf("2024-01-01 00:02:00"), 2L,
-        "  " + good.replace(" ", "   ")),
-      (java.sql.Timestamp.valueOf("2024-01-01 00:05:00"), 5L,
-        "fresh unique words carry twelve distinct tokens here more pad fill end")
-    ).toDF("ts", "doc_id", "text")
-    writeDrops(s"$dir/in", b1.coalesce(1), b2.coalesce(1))
-    // history compressed to a fingerprint bloom — built once, shipped as
-    // bytes; oversized so the deterministic test can't false-positive
-    val bloom = graft.dedup.Dedup.keyBloom(
-      Seq(hist).toDF("text").select(TextOps.fingerprint($"text").as("fp")),
-      $"fp", expectedItems = 1, numBits = 1 << 16)
-    val stream = spark.readStream.schema(b1.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$dir/in")
-    val out = StreamingViews.streamingClean(stream, "text", "ts",
-      Seq("the", "a", "of", "and", "to"), Some(bloom))
-    val q = out.writeStream.outputMode("append")
-      .format("memory").queryName("sclean").start()
-    try {
-      q.processAllAvailable()
-      val rows = spark.table("sclean").select("doc_id", "fp")
-        .as[(Long, String)].collect().sortBy(_._1)
-      assert(rows.map(_._1).toSeq === Seq(1L, 5L))
-      // the emitted fp is the real md5 fingerprint (usable as history state)
-      assert(rows.head._2 ===
-        org.apache.commons.codec.digest.DigestUtils.md5Hex(good))
-    } finally q.stop()
-  }
-
   test("streamingFilterByScore equals the batch LM filter once the watermark seals") {
     import graft.text.NgramLm
-    val dir = Files.createTempDirectory("graft_stream_lm").toString
+    val dir = SparkSpec.tempDir("graft_stream_lm").toString
     val modelDocs = Seq(
       (100L, "the fast scan the fast scan the fast scan"),
       (101L, "the fast scan runs the fast scan runs again")).toDF("doc_id", "text")
@@ -373,7 +333,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
 
   test("streamingContaminationHits equals the batch containment join once sealed") {
     import graft.dedup.Dedup
-    val dir = Files.createTempDirectory("graft_stream_decon").toString
+    val dir = SparkSpec.tempDir("graft_stream_decon").toString
     // corpus: two training docs; probe doc 1 is covered by corpus doc 10
     // (≥0.7 of its shingles), probe 2 shares nothing
     val corpus = Seq(
@@ -417,7 +377,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
 
   test("streamingFunnel seals on the watermark and equals the batch chain") {
     import StreamingViews.FunnelEvent
-    val dir = Files.createTempDirectory("graft_stream_funnel").toString
+    val dir = SparkSpec.tempDir("graft_stream_funnel").toString
     // steps 0→1→2, window 1000 ms. u1 completes ACROSS micro-batches with
     // an out-of-order first step (step-1 event arrives before its
     // anchoring step-0); u2 stalls at depth 1; u3's step-2 misses the
@@ -431,7 +391,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
       FunnelEvent(1L, 2, 800L),
       FunnelEvent(3L, 1, 950L), FunnelEvent(3L, 2, 1500L))
     writeDrops(s"$dir/in", b1.toDF(), b2.toDF())
-    val stream = StreamingViews.fileStream(spark, s"$dir/in",
+    val stream = fileStream(s"$dir/in",
       b1.toDF().schema).as[FunnelEvent]
     val out = StreamingViews.streamingFunnel(stream, nSteps = 3,
       windowMillis = 1000L, watermarkDelay = "10 seconds")
@@ -472,7 +432,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
 
   test("streamingRollingActive seals per-bucket distinct counts equal to the batch operator") {
     import StreamingViews.ActivityEvent
-    val dir = Files.createTempDirectory("graft_stream_ract").toString
+    val dir = SparkSpec.tempDir("graft_stream_ract").toString
     // bucketMillis = 100, window = 3 buckets. u1 active in buckets 0 and
     // 2 (counts ONCE in the overlapping windows), u2 in bucket 1 — with
     // u2's event arriving out of order in the second micro-batch
@@ -483,7 +443,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
       ActivityEvent(2L, 150L),                        // bucket 1, late-ish
       ActivityEvent(3L, 400L))                        // bucket 4
     writeDrops(s"$dir/in", b1.toDF(), b2.toDF())
-    val stream = StreamingViews.fileStream(spark, s"$dir/in",
+    val stream = fileStream(s"$dir/in",
       b1.toDF().schema).as[ActivityEvent]
     val out = StreamingViews.streamingRollingActive(stream,
       bucketMillis = 100L, windowBuckets = 3, watermarkDelay = "10 seconds")
@@ -521,7 +481,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
 
   test("streamingRollingActiveApprox sketch estimates equal the batch sketch path") {
     import StreamingViews.ActivityEvent
-    val dir = Files.createTempDirectory("graft_stream_ract_sk").toString
+    val dir = SparkSpec.tempDir("graft_stream_ract_sk").toString
     // enough distinct keys across buckets that the estimate is doing
     // real work, split over two micro-batches with an out-of-order row
     val b1 = (0L until 40L).map(u => ActivityEvent(u, 50L + u)) ++
@@ -529,7 +489,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
     val b2 = Seq(ActivityEvent(500L, 150L)) ++ // bucket 1, arrives late-ish
       (0L until 30L).map(u => ActivityEvent(u * 2, 430L + u))
     writeDrops(s"$dir/in", b1.toDF(), b2.toDF())
-    val stream = StreamingViews.fileStream(spark, s"$dir/in",
+    val stream = fileStream(s"$dir/in",
       b1.toDF().schema).as[ActivityEvent]
     val out = StreamingViews.streamingRollingActiveApprox(stream,
       bucketMillis = 100L, windowBuckets = 3, lgConfigK = 12,
@@ -579,7 +539,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
 
   test("streamingEwma seals buckets in order and equals the batch fold") {
     import StreamingViews.ActivityEvent
-    val dir = Files.createTempDirectory("graft_stream_ewma").toString
+    val dir = SparkSpec.tempDir("graft_stream_ewma").toString
     // key 1: buckets 0..3 with counts 2, 1, 6, 1 (bucket 2 is a spike);
     // the bucket-2 burst arrives partly out of order in batch 2
     val b1 = Seq(
@@ -592,7 +552,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
       ActivityEvent(1L, 250L), ActivityEvent(1L, 260L),
       ActivityEvent(1L, 350L))                          // bucket 3: 1
     writeDrops(s"$dir/in", b1.toDF(), b2.toDF())
-    val stream = StreamingViews.fileStream(spark, s"$dir/in",
+    val stream = fileStream(s"$dir/in",
       b1.toDF().schema).as[ActivityEvent]
     val out = StreamingViews.streamingEwma(stream, bucketMillis = 100L,
       watermarkDelay = "10 seconds")
@@ -630,7 +590,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
 
   test("streamingScd2 seals the batch operator's closed intervals in order") {
     import StreamingViews.ChangeEvent
-    val dir = Files.createTempDirectory("graft_stream_scd2").toString
+    val dir = SparkSpec.tempDir("graft_stream_scd2").toString
     // key 1 changes a→a→b→a (middle a collapses); key 2 changes once.
     // Batch 2 delivers an OUT-OF-ORDER change (ts 150 after ts 300).
     val b1 = Seq(ChangeEvent(1L, 100L, "a"), ChangeEvent(1L, 200L, "a"),
@@ -640,7 +600,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
     import spark.implicits._
     writeDrops(s"$dir/in", b1.toDF(), b2.toDF())
     val out = StreamingViews.streamingScd2(
-      StreamingViews.fileStream(spark, s"$dir/in", b1.toDF().schema)
+      fileStream(s"$dir/in", b1.toDF().schema)
         .as[ChangeEvent],
       watermarkDelay = "10 seconds")
     val q = out.writeStream.outputMode("append")
@@ -675,7 +635,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
   }
 
   test("streamingIntervalJoin matches the batch bucketized interval join") {
-    val dir = Files.createTempDirectory("graft_stream_ij").toString
+    val dir = SparkSpec.tempDir("graft_stream_ij").toString
     val i1 = Seq((1L, 1L, 100L, 200L), (2L, 2L, 150L, 260L))
     val p1 = Seq((10L, 1L, 120L), (11L, 2L, 100L))
     // batch 2: a LATE interval and points that must match batch-1 state
@@ -685,9 +645,9 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
       i2.toDF("iid", "key", "st", "en"))
     writeDrops(s"$dir/p", p1.toDF("pid", "key", "ts"), p2.toDF("pid", "key", "ts"))
     val out = StreamingViews.streamingIntervalJoin(
-      StreamingViews.fileStream(spark, s"$dir/i",
+      fileStream(s"$dir/i",
         i1.toDF("iid", "key", "st", "en").schema),
-      StreamingViews.fileStream(spark, s"$dir/p",
+      fileStream(s"$dir/p",
         p1.toDF("pid", "key", "ts").schema),
       Seq("key"), "st", "en", "ts", payload = Seq("pid"),
       maxIntervalLen = "1 seconds", watermarkDelay = "10 seconds")
@@ -755,7 +715,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
 
   test("streamingDailyChangelog seals net changes; applying them == batch CDC") {
     import StreamingViews.CdcChangeEvent
-    val dir = Files.createTempDirectory("graft_stream_cdc").toString
+    val dir = SparkSpec.tempDir("graft_stream_cdc").toString
     // 1s "days". Day 0: key 1 updated twice (latest wins), key 2
     // deleted, key 6 inserted. Day 1: key 3 updated, key 1 deleted.
     // Batch 2 delivers an OUT-OF-ORDER day-0 change (ts 200) that must
@@ -769,7 +729,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
       CdcChangeEvent(1L, 1500L, "D", 0L))
     writeDrops(s"$dir/in", b1.toDF(), b2.toDF())
     val out = StreamingViews.streamingDailyChangelog(
-      StreamingViews.fileStream(spark, s"$dir/in", b1.toDF().schema)
+      fileStream(s"$dir/in", b1.toDF().schema)
         .as[CdcChangeEvent],
       bucketMillis = 1000L, watermarkDelay = "10 seconds")
     val q = out.writeStream.outputMode("append")
@@ -817,12 +777,12 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
 
   test("streamingTokenCms seals byte-identical frequency artifacts") {
     import org.apache.spark.util.sketch.CountMinSketch
-    val dir = Files.createTempDirectory("graft_stream_cms").toString
+    val dir = SparkSpec.tempDir("graft_stream_cms").toString
     // two 100ms buckets; one out-of-order bucket-0 doc arrives in batch 2
     val b1 = Seq(("alpha beta beta", 10L), ("gamma alpha", 150L))
     val b2 = Seq(("beta gamma gamma", 60L), ("delta", 160L))
     writeDrops(s"$dir/in", b1.toDF("text", "ts"), b2.toDF("text", "ts"))
-    val stream = StreamingViews.fileStream(spark, s"$dir/in",
+    val stream = fileStream(s"$dir/in",
       b1.toDF("text", "ts").schema)
     val out = StreamingViews.streamingTokenCms(stream, "text", "ts",
       bucketMillis = 100L, eps = 0.01, confidence = 0.99, seed = 42,
@@ -867,12 +827,12 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
   }
 
   test("streamingCentroidSums seals bit-exact vector artifacts; drift runs live") {
-    val dir = Files.createTempDirectory("graft_stream_vec").toString
+    val dir = SparkSpec.tempDir("graft_stream_vec").toString
     // two 100ms buckets; one out-of-order bucket-0 vector in batch 2
     val b1 = Seq((Seq(1.0f, 2.0f), 10L), (Seq(2.0f, 2.0f), 150L))
     val b2 = Seq((Seq(3.0f, 4.0f), 60L), (Seq(-1.5f, 0.5f), 160L))
     writeDrops(s"$dir/in", b1.toDF("embedding", "ts"), b2.toDF("embedding", "ts"))
-    val stream = StreamingViews.fileStream(spark, s"$dir/in",
+    val stream = fileStream(s"$dir/in",
       b1.toDF("embedding", "ts").schema)
     val out = StreamingViews.streamingCentroidSums(stream, "embedding", "ts",
       bucketMillis = 100L, watermarkDelay = "10 seconds")
@@ -917,12 +877,12 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
 
   test("streamingKeyAgms seals byte-identical join-size artifacts") {
     import graft.udafs.JoinSize
-    val dir = Files.createTempDirectory("graft_stream_agms").toString
+    val dir = SparkSpec.tempDir("graft_stream_agms").toString
     // two 100ms buckets; one out-of-order bucket-0 row arrives in batch 2
     val b1 = Seq(("k1", 10L), ("k2", 40L), ("k1", 150L))
     val b2 = Seq(("k3", 60L), ("k2", 160L), ("k2", 170L))
     writeDrops(s"$dir/in", b1.toDF("key", "ts"), b2.toDF("key", "ts"))
-    val stream = StreamingViews.fileStream(spark, s"$dir/in",
+    val stream = fileStream(s"$dir/in",
       b1.toDF("key", "ts").schema)
     val (depth, width, seed) = (5, 16, 7)
     val out = StreamingViews.streamingKeyAgms(stream, "key", "ts",
@@ -964,19 +924,19 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
       // the merged artifact answers the planning question: its self
       // inner product is the exact F2 = 2² + 3² + 1² = 14 (median over
       // 5 rows under the fixed seed — deterministic)
-      assert(JoinSize.estimateF2(batch) === 14L)
+      assert(JoinSize.estimate(batch, batch) === 14L)
     } finally q.stop()
   }
 
   test("streamingTokenHeavyHitters seals per-bucket MG summaries equal to batch") {
-    val dir = Files.createTempDirectory("graft_stream_mg").toString
+    val dir = SparkSpec.tempDir("graft_stream_mg").toString
     // two 100ms buckets; one out-of-order bucket-0 doc arrives in batch 2;
     // per-bucket vocabulary ≤ k ⇒ the exact regime — sealed summaries must
     // be bit-exact equal to a batch per-bucket mgAgg build
     val b1 = Seq(("alpha beta beta", 10L), ("gamma alpha", 150L))
     val b2 = Seq(("beta gamma gamma", 60L), ("delta", 160L))
     writeDrops(s"$dir/in", b1.toDF("text", "ts"), b2.toDF("text", "ts"))
-    val stream = StreamingViews.fileStream(spark, s"$dir/in",
+    val stream = fileStream(s"$dir/in",
       b1.toDF("text", "ts").schema)
     val out = StreamingViews.streamingTokenHeavyHitters(stream, "text", "ts",
       bucketMillis = 100L, k = 8, watermarkDelay = "10 seconds")
@@ -1024,7 +984,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
 
   test("streamingBucketQuantileSketches seal to the batch KLL artifacts") {
     import StreamingViews.MeasureEvent
-    val dir = Files.createTempDirectory("graft_stream_kll").toString
+    val dir = SparkSpec.tempDir("graft_stream_kll").toString
     // three 100ms buckets, < k values each (KLL retains everything below
     // k — no randomized compaction — so stream and batch estimates must
     // agree EXACTLY); bucket 1 gets an out-of-order burst in batch 2
@@ -1038,7 +998,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
     val b2 = (0 until 10).map(i => MeasureEvent(200.0 + i, 150L + i)) ++ // late bucket-1 burst
       (0 until 15).map(i => MeasureEvent(300.0 + i, 200L + i))
     writeDrops(s"$dir/in", b1.toDF(), b2.toDF())
-    val stream = StreamingViews.fileStream(spark, s"$dir/in",
+    val stream = fileStream(s"$dir/in",
       b1.toDF().schema).as[MeasureEvent]
     val out = StreamingViews.streamingBucketQuantileSketches(stream,
       bucketMillis = 100L, watermarkDelay = "10 seconds")
@@ -1079,7 +1039,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
 
   test("streamingSegmentSketches seal to the batch theta artifacts") {
     import StreamingViews.SegmentEvent
-    val dir = Files.createTempDirectory("graft_stream_theta").toString
+    val dir = SparkSpec.tempDir("graft_stream_theta").toString
     // two segments over two 100ms buckets; u3 overlaps both segments,
     // u1 repeats within a bucket (distinct semantics), one out-of-order
     // arrival in batch 2
@@ -1091,7 +1051,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
       SegmentEvent("B", 4L, 60L),   // late-ish, bucket 0
       SegmentEvent("B", 3L, 160L), SegmentEvent("B", 5L, 170L))
     writeDrops(s"$dir/in", b1.toDF(), b2.toDF())
-    val stream = StreamingViews.fileStream(spark, s"$dir/in",
+    val stream = fileStream(s"$dir/in",
       b1.toDF().schema).as[SegmentEvent]
     val out = StreamingViews.streamingSegmentSketches(stream,
       bucketMillis = 100L, watermarkDelay = "10 seconds")
@@ -1140,48 +1100,9 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
     } finally q.stop()
   }
 
-  test("streamingUrlDedupe: canonical twins collapse across micro-batches, bloom drops crawled") {
-    val dir = Files.createTempDirectory("graft_stream_url").toString
-    // batch 1: a fresh URL, and one already in the crawled-history bloom
-    val b1 = Seq(
-      (java.sql.Timestamp.valueOf("2024-01-01 00:01:00"), 1L,
-        "HTTP://WWW.New.COM:80/p?utm_x=1"),
-      (java.sql.Timestamp.valueOf("2024-01-01 00:02:00"), 2L,
-        "http://old.com/seen")
-    ).toDF("ts", "doc_id", "url")
-    // batch 2: a cosmetic variant of doc 1's URL (different ts — only
-    // WithinWatermark key semantics catch it) and a genuinely new URL
-    val b2 = Seq(
-      (java.sql.Timestamp.valueOf("2024-01-01 00:03:00"), 3L,
-        "http://new.com/p#frag"),
-      (java.sql.Timestamp.valueOf("2024-01-01 00:04:00"), 4L,
-        "https://new.com/p")
-    ).toDF("ts", "doc_id", "url")
-    writeDrops(s"$dir/in", b1.coalesce(1), b2.coalesce(1))
-    val bloom = graft.dedup.Dedup.keyBloom(
-      Seq("http://old.com/seen").toDF("u")
-        .select(graft.text.UrlOps.canonicalizeUrl($"u").as("k")),
-      $"k", expectedItems = 1, numBits = 1 << 16)
-    val stream = spark.readStream.schema(b1.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$dir/in")
-    val out = StreamingViews.streamingUrlDedupe(stream, "url", "ts", Some(bloom))
-    val q = out.writeStream.outputMode("append")
-      .format("memory").queryName("surl").start()
-    try {
-      q.processAllAvailable()
-      val rows = spark.table("surl").select("doc_id", "url_canon")
-        .as[(Long, String)].collect().sortBy(_._1)
-      // doc 2 bloom-dropped; doc 3 is doc 1's canonical twin; doc 4's
-      // https scheme is a different canonical key and survives
-      assert(rows.map(_._1).toSeq === Seq(1L, 4L))
-      assert(rows.head._2 === "http://new.com/p")
-      assert(rows.last._2 === "https://new.com/p")
-    } finally q.stop()
-  }
-
   test("streamingCusum seals buckets in order and equals the batch fold") {
     import StreamingViews.ActivityEvent
-    val dir = Files.createTempDirectory("graft_stream_cusum").toString
+    val dir = SparkSpec.tempDir("graft_stream_cusum").toString
     // key 1: buckets 0..4 with counts 2, 2, 3, 3, 3 — warmup 2 pins
     // mu = 2, then the persistent +1 shift accumulates S+ = 1, 2, 3 and
     // crosses threshold 2 at bucket 4; bucket 3's events arrive out of
@@ -1198,7 +1119,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
       ActivityEvent(1L, 410L), ActivityEvent(1L, 420L), // bucket 4: 3
       ActivityEvent(1L, 430L))
     writeDrops(s"$dir/in", b1.toDF(), b2.toDF())
-    val stream = StreamingViews.fileStream(spark, s"$dir/in",
+    val stream = fileStream(s"$dir/in",
       b1.toDF().schema).as[ActivityEvent]
     val out = StreamingViews.streamingCusum(stream, bucketMillis = 100L,
       warmup = 2, slack = 0L, threshold = 2L, watermarkDelay = "10 seconds")
@@ -1320,7 +1241,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
   }
 
   test("chatStats is a stateless projection: stream == batch verdicts") {
-    val dir = Files.createTempDirectory("graft_streamchat").toString
+    val dir = SparkSpec.tempDir("graft_streamchat").toString
     val data = Seq(
       (1L, """[{"role":"user","content":"hi"},{"role":"assistant","content":"yo"}]"""),
       (2L, """[{"role":"user","content":"a"},{"role":"user","content":"b"}]"""),
@@ -1331,7 +1252,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
     val statsCols = graft.json.ChatOps.chatStats(col("j"))
     def project(df: org.apache.spark.sql.DataFrame) =
       df.select(col("doc_id") +: statsCols.map { case (n, c) => c.as(n) }: _*)
-    val stream = StreamingViews.fileStream(spark, s"$dir/in", data.schema)
+    val stream = fileStream(s"$dir/in", data.schema)
     val q = project(stream).writeStream.outputMode("append")
       .format("memory").queryName("schat").start()
     try {
@@ -1348,7 +1269,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
   }
 
   test("streamingDomainBlocklist is stateless and equals the batch gate") {
-    val dir = Files.createTempDirectory("graft_streambl").toString
+    val dir = SparkSpec.tempDir("graft_streambl").toString
     val data = Seq(
       (1L, "http://a.b.example.com/x"),
       (2L, "https://www.example.com:443/y"),
@@ -1359,7 +1280,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
     ).toDF("doc_id", "url")
     data.write.parquet(s"$dir/in")
     val patterns = Seq("Example.COM", "  ", "unused.net")
-    val stream = StreamingViews.fileStream(spark, s"$dir/in", data.schema)
+    val stream = fileStream(s"$dir/in", data.schema)
     val out = StreamingViews.streamingDomainBlocklist(stream, "url", patterns)
     val q = out.writeStream.outputMode("append")
       .format("memory").queryName("sbl").start()

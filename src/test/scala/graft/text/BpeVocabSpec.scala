@@ -146,9 +146,9 @@ class BpeVocabSpec extends SparkSpec {
 
   test("wordTable fails loudly on a token containing U+001F") {
     val docs = Seq((1L, "ok bad\u001ftoken")).toDF("doc_id", "text")
-    val e = intercept[Exception] {
+    val e = quietTaskFailures(intercept[Exception] {
       BpeVocab.wordTable(docs, "text").collect()
-    }
+    })
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => x.getMessage +: messages(x.getCause))
     assert(messages(e).exists(m => m != null && m.contains("U+001F")))

@@ -62,8 +62,8 @@ class EvalOpsSpec extends SparkSpec {
       (i.toLong, txt(), txt())
     }
     val df = docs.toDF("id", "a", "b")
-    val ga = EvalOps.wordNgrams(col("a"), 2)
-    val gb = EvalOps.wordNgrams(col("b"), 2)
+    val ga = EvalOps.ngramsOfTokens(TextOps.tokens(col("a")), 2)
+    val gb = EvalOps.ngramsOfTokens(TextOps.tokens(col("b")), 2)
     val rows = df.select(col("id"), EvalOps.clippedOverlap(ga, gb).as("ab"),
         EvalOps.clippedOverlap(gb, ga).as("ba"),
         size(ga).as("na"), size(gb).as("nb"))
@@ -254,11 +254,11 @@ class EvalOpsSpec extends SparkSpec {
     // null ref element reads as the empty reference — and WINS for an
     // empty cand, with the undefined (NULL) rate reported honestly
     assert(run(null, Seq(null, "x y")) === ((0L, 2L, 0L, 0L, None)))
-    val e = intercept[Exception] {
+    val e = quietTaskFailures(intercept[Exception] {
       EvalOps.werMulti(
         Seq((1L, "a b", Seq.empty[String])).toDF("id", "cand", "refs"),
         "cand", "refs").select("n_refs").collect()
-    }
+    })
     assert(e.getMessage.contains("no references"))
     val e2 = intercept[IllegalArgumentException] {
       EvalOps.werMulti(
@@ -339,10 +339,10 @@ class EvalOpsSpec extends SparkSpec {
     val m2 = bleuMulti("a b", Seq(null, "a b"))
     assert(m2("p1_num") === 2L && m2("p2_num") === 1L && m2("ref_len") === 2L)
     val empty = Seq((1L, "a b", Seq.empty[String])).toDF("id", "cand", "refs")
-    val e = intercept[Exception] {
+    val e = quietTaskFailures(intercept[Exception] {
       EvalOps.bleuComponentsMulti(empty, "cand", "refs")
         .select("p1_den").collect()
-    }
+    })
     assert(e.getMessage.contains("no references"))
     val e2 = intercept[IllegalArgumentException] {
       EvalOps.bleuComponentsMulti(
@@ -390,11 +390,11 @@ class EvalOpsSpec extends SparkSpec {
           .toDF("id", "cand", "refs"), "cand", "refs")
       .select("rougel_best_micro").as[Option[Long]].head()
     assert(allNull === None)
-    val e = intercept[Exception] {
+    val e = quietTaskFailures(intercept[Exception] {
       EvalOps.rougeNMulti(
         Seq((1L, "a b", Seq.empty[String])).toDF("id", "cand", "refs"),
         "cand", "refs", 2).select("n_cand_grams").collect()
-    }
+    })
     assert(e.getMessage.contains("no references"))
     val e2 = intercept[IllegalArgumentException] {
       EvalOps.rougeLMulti(
@@ -493,11 +493,11 @@ class EvalOpsSpec extends SparkSpec {
     val score = corpus.select(EvalOps.bleuScore().as("b"))
       .as[Option[Long]].head()
     assert(score.nonEmpty && score.get > 0L && score.get < 1000000L)
-    val e = intercept[Exception] {
+    val e = quietTaskFailures(intercept[Exception] {
       EvalOps.corpusBleu(EvalOps.bleuComponents(
         Seq.empty[(String, String)].toDF("cand", "ref"), "cand", "ref"))
         .select("p1_den").collect()
-    }
+    })
     assert(e.getMessage.contains("empty components table"))
     // order mismatch is loud: BLEU-6 parts rolled up as BLEU-4 would be
     // a silently different statistic
@@ -525,11 +525,11 @@ class EvalOpsSpec extends SparkSpec {
     assert(f1 === 666666L)
     val segF1s = seg.select("chrf1_f_micro").as[Long].collect().sorted
     assert(segF1s.sum / 2 === 500000L)
-    val e = intercept[Exception] {
+    val e = quietTaskFailures(intercept[Exception] {
       EvalOps.corpusChrf(EvalOps.chrF(
         Seq.empty[(String, String)].toDF("cand", "ref"), "cand", "ref"))
         .select("chrf_micro").collect()
-    }
+    })
     assert(e.getMessage.contains("empty components table"))
     // a chrF++ table rolled up with the default wordN = 0 would drop
     // the word-order components silently — loud instead; the matched
@@ -563,11 +563,11 @@ class EvalOpsSpec extends SparkSpec {
     val wm = EvalOps.corpusWer(multi, "edit_dist_best", "ref_len_best")
       .select("wer_micro").as[Option[Long]].head()
     assert(wm === Some(333333L))
-    val e = intercept[Exception] {
+    val e = quietTaskFailures(intercept[Exception] {
       EvalOps.corpusWer(EvalOps.wer(
         Seq.empty[(String, String)].toDF("cand", "ref"), "cand", "ref"))
         .select("wer_micro").collect()
-    }
+    })
     assert(e.getMessage.contains("empty components table"))
     val z = EvalOps.corpusWer(EvalOps.wer(
         Seq(("a b", null.asInstanceOf[String])).toDF("cand", "ref"),
@@ -588,9 +588,9 @@ class EvalOpsSpec extends SparkSpec {
     assert(n === 4L && ece === 250000L && mce === 400000L)
     val empty = EvalOps.calibrationReport(
       Seq.empty[(Long, Boolean)].toDF("conf", "ok"), "conf", "ok", 500000L)
-    val e = intercept[Exception] {
+    val e = quietTaskFailures(intercept[Exception] {
       EvalOps.eceReport(empty).select("mce_micro").collect()
-    }
+    })
     assert(e.getMessage.contains("empty calibration report"))
   }
 
@@ -738,15 +738,15 @@ class EvalOpsSpec extends SparkSpec {
     assert(EvalOps.selfConsistency(rows, "p", "ans", None).columns.toSeq ===
       Seq("p", "n_samples", "majority_answer", "n_votes", "majority_micro"))
     val conflict = Seq(("p1", "x", "g1"), ("p1", "x", "g2")).toDF("p", "ans", "gold")
-    val e1 = intercept[Exception] {
+    val e1 = quietTaskFailures(intercept[Exception] {
       EvalOps.selfConsistency(conflict, "p", "ans", Some("gold")).collect()
-    }
+    })
     assert(e1.getMessage.contains("conflicting gold"))
-    val e2 = intercept[Exception] {
+    val e2 = quietTaskFailures(intercept[Exception] {
       EvalOps.selfConsistency(
         Seq(("p1", null.asInstanceOf[String], "g")).toDF("p", "ans", "gold"),
         "p", "ans", Some("gold")).collect()
-    }
+    })
     assert(e2.getMessage.contains("null ans"))
   }
 

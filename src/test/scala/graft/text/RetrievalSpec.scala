@@ -435,11 +435,5 @@ class RetrievalSpec extends SparkSpec {
         Seq((9L, 5L), (9L, 5L)).toDF("query_id", "doc_id"), k = 3)
       .as[(Long, Long, Long, Long, Long, Long, Long)].head()
     assert(dup === ((9L, 1L, 1L, 1L, 1000000L, 333333L, 1000000L)))
-    // the corpus rollup: exact sums, truncating micro means over ALL
-    // queries (zero-retrieval rows drag the mean — the convention)
-    val summary = Retrieval.evalSummary(
-        Retrieval.evalRanking(ranked, labels, k = 3))
-      .as[(Long, Long, Long, Long, Long)].head()
-    assert(summary === ((4L, 2L, 125000L, 166666L, 250000L)))
   }
 }

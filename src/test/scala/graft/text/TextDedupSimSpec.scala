@@ -552,7 +552,7 @@ class TextDedupSimSpec extends SparkSpec {
   }
 
   test("connectedComponents reliable=true checkpoints durably and converges") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val dir = SparkSpec.tempDir("graft_ckpt").toString
     spark.sparkContext.setCheckpointDir(dir)
     // a 40-node path has diameter 40 → needs several large/small-star
     // rounds, so multiple reliable checkpoints hit the durable dir
@@ -655,7 +655,7 @@ class TextDedupSimSpec extends SparkSpec {
     val q = emb.where(col("vec_id") === 0).select("embedding").head().getSeq[Float](0)
     val others = emb.where(col("vec_id") =!= 0)
     val (model, assigned) = Ivf.build(others, "embedding", "vec_id", nCells = 8)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf").toString
+    val dir = SparkSpec.tempDir("graft_ivf").toString
     assigned.write.mode("overwrite").partitionBy("ivf_cell").parquet(dir)
     val back = spark.read.parquet(dir)
     val probed = Ivf.topK(back, model, "embedding", "vec_id", q, 10, nProbe = 2)
@@ -1019,12 +1019,6 @@ class TextDedupSimSpec extends SparkSpec {
     assert(out(4L) === (("body four", 1L, 2L)))
     assert(out(5L) === (("SMALLBANNER\n\nbody five", 2L, 0L)))
     assert(out(6L) === (("SMALLBANNER\n\nbody six", 2L, 0L)))
-    // audit form agrees: exactly one template fingerprint, in group A
-    val tpl = Dedup.templateParagraphs(docs, "text", "doc_id", "source",
-        maxDocPerMille = 500, minDocs = 4L)
-      .select("source", "paragraph", "n_docs_with", "n_docs_group")
-      .as[(String, String, Long, Long)].collect()
-    assert(tpl === Array(("A", "BANNER", 4L, 4L)))
   }
 
   test("stripTemplatesIncremental: history counts prove a template the " +

@@ -55,7 +55,7 @@ class JoinSizeSpec extends SparkSpec {
     assert(math.abs(est - exact) <= band,
       s"est $est vs exact $exact, band $band")
     // F2 self-estimate obeys the same band against the exact F2
-    val estF2 = JoinSize.estimateF2(sketchOf(a))
+    val estF2 = JoinSize.estimate(sketchOf(a), sketchOf(a))
     assert(math.abs(estF2 - f2(a)) <= 4.0 * f2(a) / math.sqrt(width.toDouble))
   }
 
