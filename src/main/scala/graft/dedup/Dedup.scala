@@ -303,9 +303,11 @@ object Dedup {
     * counted its own docs; overlapping ids would double-count presence).
     * The aggregated state carries no doc ids, so disjointness is NOT
     * checkable from the state — get it structurally instead: ingest
-    * day-keyed batches and build history strictly from earlier days
-    * ([[graft.jobs.HistoryStateJob]] / [[graft.jobs.DailyCorpusJob]]'s
-    * `day <` read), which makes overlap impossible by construction.
+    * day-keyed batches and run [[templateState]] over strictly earlier
+    * days' docs only (the `day <` discipline of
+    * [[graft.jobs.DailyCorpusJob]]'s history read; q226 splits one table
+    * by id parity instead), which makes overlap impossible by
+    * construction.
     * When the caller DOES hold the history's doc-id set, pass it as
     * `assertDisjointWith` and misuse fails loudly: one semi-join count
     * (debug-run discipline — the check costs a join over the id
@@ -330,8 +332,7 @@ object Dedup {
           s"${overlap.mkString(", ")}); the history state already counted " +
           "those docs — an overlapping batch double-counts presence and " +
           "over-strips. Ingest disjoint day-keyed batches " +
-          "(graft.jobs.HistoryStateJob builds history from strictly " +
-          "earlier days)")
+          "(build the history state from strictly earlier days)")
     }
     val g = col(groupCol)
     val paras = paragraphRows(batch, textCol, idCol, Seq(groupCol))

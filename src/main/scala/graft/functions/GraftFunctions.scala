@@ -1,21 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Divide, Expression, ExpressionInfo, Literal, Multiply, RegExpExtractAll, RegExpReplace, Size, Sqrt}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.{Divide, Expression, Literal, Multiply, RegExpExtractAll, RegExpReplace, Size, Sqrt}
 
 /** SQL-callable surface of the graft function library: a user who only
   * speaks `spark.sql(...)` gets the same native expressions and scalar
   * helpers the Column API exposes.
   *
-  * Two registration paths, same builder table:
-  *  - [[GraftFunctions.register]] installs into a LIVE session (temp
-  *    functions in its FunctionRegistry + `spark.udf` for the JVM-logic
-  *    scalars) — what notebooks and tests want;
-  *  - [[GraftExtensions]] is the `spark.sql.extensions=graft.functions
-  *    .GraftExtensions` config path for clusters that inject the library
-  *    at session build time — native expressions only (UDF-backed scalars
-  *    need a live session and are added by `register`).
+  * [[GraftFunctions.register]] installs into a LIVE session (temp
+  * functions in its FunctionRegistry + `spark.udf` for the JVM-logic
+  * scalars) — what notebooks and tests want.
   */
 object GraftFunctions {
 
@@ -160,15 +154,4 @@ object GraftFunctions {
     spark.udf.register("graft_vector_mean",
       org.apache.spark.sql.functions.udaf(new graft.sim.VectorAgg.VectorMean))
   }
-}
-
-/** `spark.sql.extensions` entry point: injects the native graft
-  * expressions at session-build time (no live session required). */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
-    GraftFunctions.nativeBuilders.foreach { case (name, builder) =>
-      ext.injectFunction((FunctionIdentifier(name),
-        new ExpressionInfo("graft.functions.VectorExpressions", name),
-        builder))
-    }
 }

@@ -33,25 +33,30 @@ object DailyCorpusJob {
 
   val HistoryView = "corpus_history"
 
-  /** History survivors from days strictly BEFORE `day` (empty frame on
-    * day one). The `day <` predicate prunes partitions, and it is what
-    * makes a day re-run idempotent: the re-run never sees its own
-    * previous output as history. */
+  /** History survivors from days strictly BEFORE `day` (empty frame
+    * until a day has committed a partition, asked of the file system so
+    * day one reads nothing and logs no failed query). The `day <`
+    * predicate prunes partitions, and it is what makes a day re-run
+    * idempotent: the re-run never sees its own previous output as
+    * history. */
   def readHistory(spark: SparkSession, base: String, version: Int,
-                  textCol: String, idCol: String, day: String): DataFrame =
-    try BatchView.read(spark, base, HistoryView, version)
-      .where(col("day") < day)
-      .select(col(idCol), col(textCol))
-    catch {
-      case _: org.apache.spark.sql.AnalysisException =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField(idCol,
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField(textCol,
-              org.apache.spark.sql.types.StringType))))
-    }
+                  textCol: String, idCol: String, day: String): DataFrame = {
+    val days = new org.apache.hadoop.fs.Path(
+      BatchView.viewPath(base, HistoryView, version), "day=*")
+    val fs = days.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (Option(fs.globStatus(days)).exists(_.nonEmpty))
+      BatchView.read(spark, base, HistoryView, version)
+        .where(col("day") < day)
+        .select(col(idCol), col(textCol))
+    else
+      spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField(idCol,
+            org.apache.spark.sql.types.LongType),
+          org.apache.spark.sql.types.StructField(textCol,
+            org.apache.spark.sql.types.StringType))))
+  }
 
   /** Run one day: clean `dayDocs` against history, append survivors
     * (with their text, for future history passes) to the view's `day`

@@ -7,11 +7,10 @@ import graft.dedup.Dedup
 import graft.ops.BatchView
 
 /** Bucketed catalog home for the GROW-FOREVER incremental-state
-  * artifacts (the SURVEY §7 "history keeps growing" risk): template
-  * presence/sizes counts, paragraph fingerprints and the containment
+  * artifacts (the SURVEY §7 "history keeps growing" risk) that a reader
+  * consumes: paragraph fingerprints and the containment
   * document-frequency index. The operators that consume these states
-  * ([[Dedup.stripTemplatesIncremental]], [[Dedup
-  * .paragraphDedupeIncremental]], [[Dedup.containmentJoinPrebuilt]])
+  * ([[Dedup.paragraphDedupeIncremental]], [[Dedup.containmentJoinPrebuilt]])
   * take them as plain DataFrames; this job gives them a 100-TB storage
   * discipline (reference operational model: per-day idempotent view
   * jobs, BatchJobBase.scala:29-54):
@@ -25,19 +24,24 @@ import graft.ops.BatchView
   *  - The read-back merge (the `union + groupBy-sum` the consumers need)
   *    is ONE bucketed scan + aggregate: the scan delivers
   *    `HashPartitioning(bucket key)`, which satisfies the aggregate's
-  *    clustering on (group, key) — NO exchange, regardless of how many
+  *    clustering on the key — NO exchange, regardless of how many
   *    days accumulated. The "union" of days is the multi-file scan
   *    itself; a DataFrame union would discard the partitioning and
   *    re-shuffle the full history every run (plan-pinned in
   *    HistoryStateJobSpec).
   *
-  * State sizes stay artifact-shaped: presence is (bucket × distinct
-  * paragraph) rows, fingerprints one 32-hex row per distinct paragraph,
-  * the df index one row per distinct shingle — tiny next to the corpus,
-  * and every one of them sum- or set-mergeable.
+  * State sizes stay artifact-shaped: fingerprints one 32-hex row per
+  * distinct paragraph, the df index one row per distinct shingle — tiny
+  * next to the corpus, and each of them sum- or set-mergeable.
+  *
+  * Template-removal state ([[Dedup.templateState]]) has no stored home:
+  * no reader merges it back, and [[Dedup.stripTemplatesIncremental]]
+  * takes its history state from the caller.
   */
 object HistoryStateJob {
 
+  /** Retired table names: no longer written, kept so a caller can drop
+    * them from a warehouse an older version filled. */
   val PresenceTable = "graft_template_presence"
   val SizesTable = "graft_template_sizes"
   val ParagraphFpTable = "graft_paragraph_fps"
@@ -45,18 +49,14 @@ object HistoryStateJob {
   val ContainSizesTable = "graft_containment_sizes"
 
   /** Compute one day's state partials from that day's raw docs and
-    * append them (presence/sizes for template removal, paragraph fps for
-    * paragraph dedup, shingle df + per-doc sizes for containment).
-    * Bucket keys are each artifact's merge/probe key. */
+    * append them (paragraph fps for paragraph dedup, shingle df + per-doc
+    * sizes for containment). Bucket keys are each artifact's merge/probe
+    * key. `groupCol` is unused; it stays so positional callers keep
+    * compiling. */
   def appendDay(spark: SparkSession, dayDocs: DataFrame, day: String,
                 textCol: String, idCol: String, groupCol: String,
                 shingleN: Int = 3, buckets: Int = 32): Unit = {
     val tagged = (df: DataFrame) => df.withColumn("day", lit(day))
-    val (presence, sizes) = Dedup.templateState(dayDocs, textCol, idCol, groupCol)
-    BatchView.writeDayBucketed(tagged(presence), PresenceTable, "day",
-      Seq("__fp"), buckets)
-    BatchView.writeDayBucketed(tagged(sizes), SizesTable, "day",
-      Seq(groupCol), buckets)
     BatchView.writeDayBucketed(tagged(Dedup.paragraphFps(dayDocs, textCol, idCol)),
       ParagraphFpTable, "day", Seq("fp"), buckets)
     val rows = Dedup.shingleRows(dayDocs, textCol, idCol, Nil, shingleN)

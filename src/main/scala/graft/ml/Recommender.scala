@@ -1,24 +1,19 @@
 package graft.ml
 
-import org.apache.spark.ml.evaluation.Evaluator
-import org.apache.spark.ml.param.{Param, ParamMap}
 import org.apache.spark.ml.recommendation.{ALS, ALSModel}
-import org.apache.spark.ml.util.Identifiable
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** ALS-based implicit-preference recommender + NaN-tolerant RMSE evaluator
-  * (SURVEY.md §3.3; reference: src/main/scala/com/mozilla/telemetry/ml/AddonRecommender.scala:187-295,
-  * NaNRegressionEvaluator.scala:41-59).
+/** ALS-based implicit-preference recommender
+  * (SURVEY.md §3.3; reference: src/main/scala/com/mozilla/telemetry/ml/AddonRecommender.scala:187-295).
   *
   * The reference trains implicit ALS over (client, addon) installs with a
   * hashed positive id space, evaluates with an RMSE that DROPS NaN
   * predictions (cold-start items in CV folds), and serializes item factors
   * for a Spark-free serving path. Reproduced Spark-first:
   *  - ids via `positiveHash` (crc-free, matches F11 semantics);
-  *  - `coldStartStrategy` stays "nan" + the NaN-dropping evaluator (the
-  *    reference's exact cross-validation behavior) rather than "drop",
-  *    which would silently change fold metrics;
+  *  - `coldStartStrategy` stays "nan" (the reference's behavior) rather
+  *    than "drop", so an unseen item scores NaN instead of vanishing;
   *  - serving = broadcast item-factor matrix dot products, driver-side
   *    top-k for one user (O2), distributed `recommendForAllUsers` at scale.
   */
@@ -52,31 +47,4 @@ object Recommender {
 
   /** Distributed top-k per user. */
   def recommendAll(model: ALSModel, k: Int): DataFrame = model.recommendForAllUsers(k)
-}
-
-/** RMSE evaluator that drops NaN predictions before scoring — implicit ALS
-  * cold-start folds yield NaN for unseen items and the built-in
-  * RegressionEvaluator would return NaN for the whole fold.
-  * Reference: NaNRegressionEvaluator.scala:41-59 (which patched itself into
-  * the spark-private package; the public `Evaluator` API suffices now). */
-class NaNRMSEEvaluator(override val uid: String) extends Evaluator {
-  def this() = this(Identifiable.randomUID("nanRmseEval"))
-
-  val predictionCol = new Param[String](this, "predictionCol", "prediction column")
-  val labelCol = new Param[String](this, "labelCol", "label column")
-  setDefault(predictionCol -> "prediction", labelCol -> "rating")
-
-  override def evaluate(dataset: Dataset[_]): Double = {
-    val df = dataset.select(col($(predictionCol)).cast("double").as("p"),
-      col($(labelCol)).cast("double").as("l"))
-      .where(!isnan(col("p")))
-    val row = df.agg(sqrt(avg(pow(col("p") - col("l"), 2)))).head()
-    // all-NaN fold (pure cold-start test split): +Inf, NOT NaN — NaN
-    // compares false both ways, so CrossValidator's min-metric selection
-    // could pick the degenerate combo as "best"; +Inf disqualifies it
-    if (row.isNullAt(0)) Double.PositiveInfinity else row.getDouble(0)
-  }
-
-  override def isLargerBetter: Boolean = false // RMSE: lower is better
-  override def copy(extra: ParamMap): NaNRMSEEvaluator = defaultCopy(extra)
 }

@@ -67,7 +67,10 @@ object BatchView {
     * the same rows; the swap window (old gone → new in place) is the
     * non-transactional-FS caveat, documented rather than hidden — on
     * object stores front this with a manifest or table format.
-    * Returns (filesBefore, filesAfter). */
+    * A leaf that is already one file of at most `targetRecordsPerFile`
+    * rows is left untouched when no `sortCols` are given (nothing to
+    * split, merge or sort); with `sortCols` it is still rewritten, since
+    * the sort is the point. Returns (filesBefore, filesAfter). */
   def compact(spark: SparkSession, dir: String,
               targetRecordsPerFile: Long,
               sortCols: Seq[String] = Nil): (Int, Int) = {
@@ -96,6 +99,10 @@ object BatchView {
     val before = parquetFiles(dir)
     val df = spark.read.parquet(dir)
     val rows = df.count()
+    // already compact: one file within target and no sort order to
+    // impose — a rewrite would write back the same single file
+    if (before == 1 && sortCols.isEmpty && rows <= targetRecordsPerFile)
+      return (before, before)
     val nFiles = math.max(1L, (rows + targetRecordsPerFile - 1) / targetRecordsPerFile).toInt
     val shaped =
       if (sortCols.nonEmpty)
@@ -187,8 +194,8 @@ object BatchView {
   }
 
   /** Day-partitioned AND hash-bucketed catalog table — the home for
-    * grow-forever incremental-STATE artifacts (template presence counts,
-    * paragraph fingerprints, containment document frequencies): states
+    * grow-forever incremental-STATE artifacts (paragraph fingerprints,
+    * containment document frequencies): states
     * accumulate as per-day partials, each day idempotently re-runnable
     * (dynamic overwrite rewrites ONLY that day's partition, inside the
     * table's bucket layout), and every read-back merge on the bucket key

@@ -4,18 +4,21 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The reachability contract: every public def in `src/main` has a caller
-  * in `src/main` or in the perfbench harness — the code the declared
-  * queries, the mains and the benchmark run — or an entry in
-  * `src/test/resources/reachability-allowlist.txt` that says why it stays.
-  * Tests are not callers: a def only a test calls is surface nothing uses.
+/** The reachability contract: every public def, class and case class in
+  * `src/main` has a user in `src/main` or in the perfbench harness — the
+  * code the declared queries, the mains and the benchmark run — or an
+  * entry in `src/test/resources/reachability-allowlist.txt` that says why
+  * it stays. Tests are not users: a member only a test uses is surface
+  * nothing uses.
   *
-  * A name scan, not a call graph. A def counts as called when its name
+  * A name scan, not a call graph. A member counts as used when its name
   * appears on a code line outside its own body; for a member of an
   * `object`, only in its own file or in a file that names the object.
-  * Private and overriding defs, `main`s and the query entry points in
-  * [[SparkEntry]] are exempt. The scan over-approximates — any same-name
-  * token is a caller — so what it flags is surely unreached. */
+  * Classes are scanned at the top level and as members of a top-level
+  * owner. Private, implicit and overriding members, `main`s and the
+  * query entry points in [[SparkEntry]] are exempt. The scan
+  * over-approximates — any same-name token is a user — so what it flags
+  * is surely unreached. */
 class ReachabilitySpec extends AnyFunSuite {
 
   private val mainRoot = Paths.get("src/main/scala")
@@ -27,16 +30,20 @@ class ReachabilitySpec extends AnyFunSuite {
 
   private final class Source(val path: Path, val lines: Seq[(Int, String)]) {
     val text: String = lines.map(_._2).mkString("\n")
-    /** Line number → the line that opens its top-level member (the last
-      * code line indented two spaces or less). */
-    val memberOf: Map[Int, Int] = lines.scanLeft((0, 0)) { case ((_, cur), (n, l)) =>
-      (n, if (indent(l) <= 2) n else cur)
-    }.tail.toMap
+    /** Indent → (line number → the line that opens its member at that
+      * indent: the last code line indented that little or less). */
+    val openerAt: Map[Int, Map[Int, Int]] = Seq(0, 2).map { depth =>
+      depth -> lines.scanLeft((0, 0)) { case ((_, cur), (n, l)) =>
+        (n, if (indent(l) <= depth) n else cur)
+      }.tail.toMap
+    }.toMap
   }
 
-  private final class Def(val src: Source, val line: Int, val name: String,
-                          val kind: String, val owner: String) {
-    def id: String = s"$owner.$name"
+  /** A public def or class at `line`, indented `depth`; `owner` is the
+    * enclosing top-level (kind, name), None for a top-level class. */
+  private final class Member(val src: Source, val line: Int, val depth: Int,
+                             val name: String, val owner: Option[(String, String)]) {
+    def id: String = owner.fold(name)(o => s"${o._2}.$name")
   }
 
   private def indent(l: String): Int = l.length - l.dropWhile(_ == ' ').length
@@ -61,36 +68,46 @@ class ReachabilitySpec extends AnyFunSuite {
 
   private val ownerLine = """^(?:[a-z]+\s+)*(object|class|trait)\s+(\w+).*""".r
   private val defLine = """^  ((?:\S+\s+)*?)def\s+(\w+).*""".r
+  private val classLine =
+    """^((?:  )?)((?:(?:private|protected)(?:\[\w+\])?\s+|[a-z]+\s+)*)class\s+(\w+).*""".r
+
+  private def hidden(mods: String): Boolean = mods.split("\\s+").exists(m =>
+    m.startsWith("private") || m.startsWith("protected") || m == "override")
 
   private lazy val main = sources(mainRoot)
   private lazy val callers = main ++ sources(harnessRoot)
 
-  private lazy val publicDefs: Seq[Def] = main.flatMap { src =>
+  private lazy val publicMembers: Seq[Member] = main.flatMap { src =>
     var owner: Option[(String, String)] = None
-    src.lines.flatMap {
-      case (_, ownerLine(kind, name)) => owner = Some((kind, name)); None
-      case (n, defLine(mods, name)) =>
-        val hidden = mods.split("\\s+").exists(m =>
-          m.startsWith("private") || m.startsWith("protected") || m == "override")
-        owner.filterNot(o => hidden || name == "main" || o._2 == "SparkEntry")
-          .map { case (kind, o) => new Def(src, n, name, kind, o) }
-      case _ => None
+    src.lines.flatMap { case (n, l) =>
+      val cls = l match {
+        case classLine(ind, mods, name) if !hidden(mods) && !mods.contains("implicit") =>
+          Some(new Member(src, n, ind.length, name, if (ind.isEmpty) None else owner))
+        case _ => None
+      }
+      val defn = l match {
+        case ownerLine(kind, name) => owner = Some((kind, name)); None
+        case defLine(mods, name) if !hidden(mods) && name != "main" =>
+          owner.map(o => new Member(src, n, 2, name, Some(o)))
+        case _ => None
+      }
+      (cls ++ defn).filterNot(_.owner.exists(_._2 == "SparkEntry"))
     }
   }
 
-  private def isCalled(d: Def): Boolean = {
+  private def isCalled(d: Member): Boolean = {
     val word = ("\\b" + java.util.regex.Pattern.quote(d.name) + "\\b").r
-    val ownerWord = ("\\b" + d.owner + "\\b").r
+    val inObject = d.owner.collect { case ("object", o) => ("\\b" + o + "\\b").r }
     callers.exists { src =>
       val sameFile = src.path == d.src.path
-      (d.kind != "object" || sameFile || ownerWord.findFirstIn(src.text).isDefined) &&
+      (sameFile || inObject.forall(_.findFirstIn(src.text).isDefined)) &&
         src.lines.exists { case (n, l) =>
-          !(sameFile && src.memberOf(n) == d.line) && word.findFirstIn(l).isDefined
+          !(sameFile && src.openerAt(d.depth)(n) == d.line) && word.findFirstIn(l).isDefined
         }
     }
   }
 
-  private lazy val unreached: Set[String] = publicDefs.filterNot(isCalled).map(_.id).toSet
+  private lazy val unreached: Set[String] = publicMembers.filterNot(isCalled).map(_.id).toSet
 
   /** Entry id → reason. */
   private lazy val allowlist: Seq[(String, String)] =
@@ -101,7 +118,7 @@ class ReachabilitySpec extends AnyFunSuite {
   test("every public def in src/main is reached from a root or allowlisted") {
     val missing = unreached -- allowlist.map(_._1)
     assert(missing.isEmpty,
-      s"\nno caller in src/main or perfbench/harness (delete it, or allowlist it " +
+      s"\nno user in src/main or perfbench/harness (delete it, or allowlist it " +
         s"with a reason):\n  ${missing.toSeq.sorted.mkString("\n  ")}")
   }
 

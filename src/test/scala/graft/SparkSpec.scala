@@ -35,6 +35,32 @@ trait SparkSpec extends AnyFunSuite {
     s
   }
 
+  /** Spark jobs `body` ran, counted by [[JobLog]]. Listener events
+    * arrive asynchronously, so a marker job in its own group runs last:
+    * once its end is seen, every earlier event has been delivered. */
+  def jobsOf(body: => Unit): Int = {
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.{Seconds, Span}
+    val sc = spark.sparkContext
+    val log = new JobLog
+    def inGroup(g: String) = log.synchronized(log.jobs.values.toSeq).filter(
+      _._1.exists(_.getProperty("spark.jobGroup.id") == g))
+    sc.addSparkListener(log)
+    try {
+      sc.setJobGroup("spark-spec-measured", "measured")
+      body
+      sc.setJobGroup("spark-spec-marker", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      eventually(timeout(Span(30, Seconds))) {
+        assert(inGroup("spark-spec-marker").exists(_._3 > 0L))
+      }
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(log)
+    }
+    inGroup("spark-spec-measured").size
+  }
+
   /** Runs `body`, whose query is expected to fail, with the loggers
     * that report the failure off — Spark's `Executor` and
     * `TaskSetManager` for a failed task, `ExecutionListenerBus` for the

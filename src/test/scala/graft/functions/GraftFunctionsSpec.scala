@@ -192,14 +192,6 @@ class GraftFunctionsSpec extends SparkSpec {
     assert(r === "ping <EMAIL> or <URL> end")
   }
 
-  test("extensions path injects the same native builders") {
-    // SparkSessionExtensions is instantiable; verify injection is accepted
-    // (the config path `spark.sql.extensions=graft.functions.GraftExtensions`
-    // exercises the same code at session build).
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftExtensions().apply(ext) // must not throw; builders validated above
-  }
-
   test("NfcNormalize: codegen matches interpreted; fast paths return input") {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}

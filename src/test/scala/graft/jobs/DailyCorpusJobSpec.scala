@@ -13,11 +13,11 @@ class DailyCorpusJobSpec extends SparkSpec {
 
   test("two-day run: day 2 dedups against day 1 survivors; re-run idempotent") {
     val base = SparkSpec.tempDir("graft_daily").toString
-    // day 1: two keepers + a quality failure; the history read fails (no
-    // view yet) and falls back to the empty history
+    // day 1: two keepers + a quality failure; no view yet, so the
+    // history is the empty frame (no failed read, nothing logged)
     val d1 = Seq((1L, good1), (2L, good2), (3L, "too short")).toDF("doc_id", "text")
-    val v1 = quietTaskFailures(DailyCorpusJob.runDay(spark, d1, "20240101", base, 1,
-      "text", "doc_id", stop))
+    val v1 = DailyCorpusJob.runDay(spark, d1, "20240101", base, 1,
+      "text", "doc_id", stop)
       .select("doc_id", "keep").as[(Long, Boolean)].collect().toMap
     assert(v1 === Map(1L -> true, 2L -> true, 3L -> false))
     // day 2: an exact dup of a day-1 survivor (whitespace variant), a

@@ -1,6 +1,5 @@
 package graft.jobs
 
-import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.dedup.Dedup
 
@@ -10,20 +9,20 @@ import graft.dedup.Dedup
   * read-back merge — the union+groupBy-sum the consumers need — runs
   * with NO exchange, because the "union" of days is the bucketed scan
   * itself). The plan pins are the 100-TB claim: history re-shuffling
-  * would grow with the corpus; a bucketed-scan merge does not. */
+  * would grow with the corpus; a bucketed-scan merge does not. Plus the
+  * write side: a day writes only the tables a reader merges back. */
 class HistoryStateJobSpec extends SparkSpec {
   import spark.implicits._
 
-  private val tables = Seq(
-    HistoryStateJob.PresenceTable, HistoryStateJob.SizesTable,
-    HistoryStateJob.ParagraphFpTable, HistoryStateJob.ContainDfTable,
-    HistoryStateJob.ContainSizesTable)
+  private val tables = Seq(HistoryStateJob.ParagraphFpTable,
+    HistoryStateJob.ContainDfTable, HistoryStateJob.ContainSizesTable)
+  private val retired = Seq(HistoryStateJob.PresenceTable, HistoryStateJob.SizesTable)
 
   private def dropAll(): Unit =
-    tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    (tables ++ retired).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
 
-  // paragraphs separated by blank lines; "cookie banner" is the template
-  // candidate once enough docs of a site carry it
+  // paragraphs separated by blank lines; "cookie banner" repeats across
+  // docs, so paragraph fps and shingles overlap between days
   private def doc(i: Long, site: String, body: String) =
     (i, site, s"cookie banner $site\n\n$body")
 
@@ -37,17 +36,22 @@ class HistoryStateJobSpec extends SparkSpec {
     doc(5L, "a", "nu xi omicron"),
     doc(6L, "b", "pi rho sigma")).toDF("doc_id", "site", "text")
 
-  /** The template partials summed over days before `beforeDay` (all days
-    * when empty) — the merged state the template consumer reads. */
-  private def templateState(beforeDay: String = "") = {
-    def upTo(t: String) = {
-      val all = spark.table(t)
-      if (beforeDay.isEmpty) all else all.where(col("day") < beforeDay)
-    }
-    (upTo(HistoryStateJob.PresenceTable).groupBy(col("site"), col("__fp"))
-       .agg(sum(col("n_docs_with")).as("n_docs_with")),
-     upTo(HistoryStateJob.SizesTable).groupBy(col("site"))
-       .agg(sum(col("n_docs_group")).as("n_docs_group")))
+  private def append(docs: org.apache.spark.sql.DataFrame, day: String): Unit =
+    HistoryStateJob.appendDay(spark, docs, day, "text", "doc_id", "site", buckets = 4)
+
+  private def fps(docs: org.apache.spark.sql.DataFrame) =
+    Dedup.paragraphFps(docs, "text", "doc_id").as[String].collect().toSet
+
+  /** (df, sizes) of the one-shot containment index over `docs`. */
+  private def index(docs: org.apache.spark.sql.DataFrame) = {
+    val (df, sz) = Dedup.corpusContainmentIndex(
+      Dedup.shingleRows(docs, "text", "doc_id", Nil, 3), "doc_id")
+    (df.as[(String, Long)].collect().toSet, sz.as[(Long, Long)].collect().toSet)
+  }
+
+  private def storedIndex(beforeDay: String = "") = {
+    val (df, sz) = HistoryStateJob.readContainmentIndex(spark, "doc_id", beforeDay)
+    (df.as[(String, Long)].collect().toSet, sz.as[(Long, Long)].collect().toSet)
   }
 
   private def noShuffle(df: org.apache.spark.sql.DataFrame, what: String): Unit = {
@@ -60,65 +64,58 @@ class HistoryStateJobSpec extends SparkSpec {
   test("per-day partials merge to the union-of-days state; day re-runs are idempotent") {
     dropAll()
     try {
-      HistoryStateJob.appendDay(spark, day1Docs, "2026-08-01",
-        "text", "doc_id", "site", buckets = 4)
-      HistoryStateJob.appendDay(spark, day2Docs, "2026-08-02",
-        "text", "doc_id", "site", buckets = 4)
+      append(day1Docs, "2026-08-01")
+      append(day2Docs, "2026-08-02")
       // model: the state computed in one shot over both days' docs
       val allDocs = day1Docs.unionByName(day2Docs)
-      val (mp, ms) = Dedup.templateState(allDocs, "text", "doc_id", "site")
-      val modelPresence = mp.as[(String, String, Long)].collect().toSet
-      val modelSizes = ms.as[(String, Long)].collect().toSet
-      def presence() = {
-        val (p, _) = templateState()
-        p.as[(String, String, Long)].collect().toSet
-      }
-      def sizes() = {
-        val (_, s) = templateState()
-        s.as[(String, Long)].collect().toSet
-      }
-      assert(presence() === modelPresence)
-      assert(sizes() === modelSizes)
+      val modelFps = fps(allDocs)
+      val modelIndex = index(allDocs)
       // paragraph fps: distinct over both days
-      val modelFps = Dedup.paragraphFps(allDocs, "text", "doc_id")
-        .as[String].collect().toSet
-      assert(HistoryStateJob.readParagraphFps(spark)
-        .as[String].collect().toSet === modelFps)
+      assert(HistoryStateJob.readParagraphFps(spark).as[String].collect().toSet === modelFps)
       // containment: df sums match the one-shot index
-      val rows = Dedup.shingleRows(allDocs, "text", "doc_id", Nil, 3)
-      val (mdf, msz) = Dedup.corpusContainmentIndex(rows, "doc_id")
-      val (gdf, gsz) = HistoryStateJob.readContainmentIndex(spark, "doc_id")
-      assert(gdf.as[(String, Long)].collect().toSet ===
-        mdf.as[(String, Long)].collect().toSet)
-      assert(gsz.as[(Long, Long)].collect().toSet ===
-        msz.as[(Long, Long)].collect().toSet)
-      // idempotence: re-running day 2 replaces its own partition only
-      HistoryStateJob.appendDay(spark, day2Docs, "2026-08-02",
-        "text", "doc_id", "site", buckets = 4)
-      assert(presence() === modelPresence, "day re-run must not double-count")
-      assert(sizes() === modelSizes)
+      assert(storedIndex() === modelIndex)
+      // idempotence: re-running day 2 replaces its own partition only —
+      // a double-counted day would double the shared shingles' df
+      append(day2Docs, "2026-08-02")
+      assert(storedIndex() === modelIndex, "day re-run must not double-count")
+      assert(HistoryStateJob.readParagraphFps(spark).as[String].collect().toSet === modelFps)
       // day filter: history BEFORE day 2 is exactly day 1's state
-      val (p1, _) = templateState("2026-08-02")
-      val (d1p, _) = Dedup.templateState(day1Docs, "text", "doc_id", "site")
-      assert(p1.as[(String, String, Long)].collect().toSet ===
-        d1p.as[(String, String, Long)].collect().toSet)
+      assert(HistoryStateJob.readParagraphFps(spark, "2026-08-02")
+        .as[String].collect().toSet === fps(day1Docs))
+      assert(storedIndex("2026-08-02") === index(day1Docs))
     } finally dropAll()
   }
 
   test("read-back merges plan with NO exchange over the bucketed day scans") {
     dropAll()
     try {
-      HistoryStateJob.appendDay(spark, day1Docs, "2026-08-01",
-        "text", "doc_id", "site", buckets = 4)
-      HistoryStateJob.appendDay(spark, day2Docs, "2026-08-02",
-        "text", "doc_id", "site", buckets = 4)
-      val (p, _) = templateState()
-      noShuffle(p, "template presence groupBy(site, __fp)+sum")
+      append(day1Docs, "2026-08-01")
+      append(day2Docs, "2026-08-02")
       noShuffle(HistoryStateJob.readParagraphFps(spark),
         "paragraph-fp distinct")
       val (gdf, gsz) = HistoryStateJob.readContainmentIndex(spark, "doc_id")
       noShuffle(gdf, "containment df groupBy(g)+sum")
       noShuffle(gsz, "containment sizes groupBy(doc_id)+sum")
+    } finally dropAll()
+  }
+
+  test("appendDay creates exactly the three reader tables and no template table") {
+    dropAll()
+    try {
+      append(day1Docs, "2026-08-01")
+      assert(tables.forall(spark.catalog.tableExists), tables)
+      val template = spark.catalog.listTables()
+        .collect().map(_.name).filter(_.startsWith("graft_template_"))
+      assert(template.isEmpty, template.toSeq)
+      assert(!retired.exists(spark.catalog.tableExists))
+    } finally dropAll()
+  }
+
+  test("appendDay runs 7 Spark jobs per day") {
+    dropAll()
+    try {
+      assert(jobsOf(append(day1Docs, "2026-08-01")) === 7)
+      assert(jobsOf(append(day2Docs, "2026-08-02")) === 7)
     } finally dropAll()
   }
 }

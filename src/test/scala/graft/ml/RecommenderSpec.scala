@@ -23,12 +23,4 @@ class RecommenderSpec extends SparkSpec {
       .select(col("recommendations")(0)("item")).as[Int].collect()
     assert(top.nonEmpty && evenItems.contains(top.head))
   }
-
-  test("NaNRMSEEvaluator drops NaN predictions, RMSE over the rest") {
-    val df = Seq((1.0, 1.0), (3.0, 5.0), (Double.NaN, 2.0)).toDF("prediction", "rating")
-    val e = new NaNRMSEEvaluator()
-    // NaN row dropped: rmse = sqrt(((1-1)^2 + (3-5)^2)/2) = sqrt(2)
-    assert(math.abs(e.evaluate(df) - math.sqrt(2.0)) < 1e-12)
-    assert(!e.isLargerBetter)
-  }
 }

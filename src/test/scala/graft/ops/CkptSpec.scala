@@ -14,30 +14,6 @@ import scala.jdk.CollectionConverters._
   * read. Plus the source rule that keeps them the only home. */
 class CkptSpec extends SparkSpec {
 
-  /** Spark jobs `body` ran, counted by [[graft.JobLog]]. Listener events
-    * arrive asynchronously, so a marker job in its own group runs last:
-    * once its end is seen, every earlier event has been delivered. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val log = new graft.JobLog
-    def inGroup(g: String) = log.synchronized(log.jobs.values.toSeq).filter(
-      _._1.exists(_.getProperty("spark.jobGroup.id") == g))
-    sc.addSparkListener(log)
-    try {
-      sc.setJobGroup("ckpt-spec", "measured")
-      body
-      sc.setJobGroup("ckpt-spec-marker", "marker")
-      sc.parallelize(Seq(1), 1).count()
-      eventually(timeout(Span(30, Seconds))) {
-        assert(inGroup("ckpt-spec-marker").exists(_._3 > 0L))
-      }
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(log)
-    }
-    inGroup("ckpt-spec").size
-  }
-
   private def ids: DataFrame = spark.range(0, 1000, 1, 4).toDF("id")
 
   test("counts: every flag rides the one checkpoint job") {

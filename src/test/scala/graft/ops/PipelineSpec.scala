@@ -658,6 +658,30 @@ class PipelineSpec extends SparkSpec {
     assert(b2 == 2 && a2 == 2)
   }
 
+  private def parquetFileNames(dir: String): Seq[String] =
+    new java.io.File(dir).listFiles().map(_.getName).filter(_.endsWith(".parquet")).toSeq
+
+  test("BatchView.compact leaves a one-file leaf within target untouched") {
+    val dir = SparkSpec.tempDir("graft_compact_noop").toString + "/t"
+    val rows = (0L until 50L).map(i => (i, s"v$i"))
+    rows.toDF("k", "v").coalesce(1).write.parquet(dir)
+    val files = parquetFileNames(dir)
+    assert(files.size == 1)
+    // no sortCols, 50 rows <= 250: nothing to split, merge or sort
+    assert(BatchView.compact(spark, dir, 250L) === ((1, 1)))
+    assert(parquetFileNames(dir) === files, "an already-compact leaf must not be rewritten")
+    assert(spark.read.parquet(dir).as[(Long, String)].collect().sortBy(_._1).toSeq === rows)
+  }
+
+  test("BatchView.compact still splits a one-file leaf over target") {
+    val dir = SparkSpec.tempDir("graft_compact_split").toString + "/t"
+    val rows = (0L until 500L).map(i => (i, s"v$i"))
+    rows.toDF("k", "v").coalesce(1).write.parquet(dir)
+    val (before, after) = BatchView.compact(spark, dir, 200L)
+    assert(before == 1 && after == 3)
+    assert(spark.read.parquet(dir).as[(Long, String)].collect().sortBy(_._1).toSeq === rows)
+  }
+
   test("BatchView.compact fails fast on stale swap dirs and on partitioned roots") {
     val base = SparkSpec.tempDir("graft_compact_guard").toString
     val dir = base + "/t"
