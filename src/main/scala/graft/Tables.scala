@@ -23,17 +23,17 @@ object Tables {
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
-  /** Nanos-since-epoch view of a timestamp-ish column, schema-dispatched:
+  /** Nanos-since-epoch view of the timestamp-ish `ts` column, schema-dispatched:
     * LongType passes through (already nanos under nanosAsLong); timestamp
     * variants convert via `unix_micros` (sessions run UTC, so NTZ wall
     * time == instant). A projection expression, not a filter bound — for
     * pushdown-friendly range filters on a timestamp column, compare the
     * RAW column against literals of its own type instead
     * (see [[graft.jobs.EventsDailyView.dayRange]]). */
-  def tsNanos(df: DataFrame, c: String = "ts"): Column =
-    df.schema(c).dataType match {
-      case LongType => col(c)
-      case _        => unix_micros(col(c).cast("timestamp")) * 1000L
+  def tsNanos(df: DataFrame): Column =
+    df.schema("ts").dataType match {
+      case LongType => col("ts")
+      case _        => unix_micros(col("ts").cast("timestamp")) * 1000L
     }
 
   def lineitem(s: SparkSession, d: String): DataFrame   = apply(s, d, "lineitem")

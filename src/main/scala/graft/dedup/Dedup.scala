@@ -375,10 +375,9 @@ object Dedup {
     * to pre-filter the membership join when history is cold storage.
     * Same output shape as [[paragraphDedupe]]. */
   def paragraphDedupeIncremental(batch: DataFrame, historyParagraphFps: DataFrame,
-                                 textCol: String, idCol: String,
-                                 fpCol: String = "fp"): DataFrame =
+                                 textCol: String, idCol: String): DataFrame =
     paragraphDedupeImpl(batch, textCol, idCol,
-      Some(historyParagraphFps.select(col(fpCol).as("__fp"))))
+      Some(historyParagraphFps.select(col("fp").as("__fp"))))
 
   /** Distinct (md5) paragraph fingerprints of a corpus — the history
     * state [[paragraphDedupeIncremental]] consumes; persist and append
@@ -398,15 +397,14 @@ object Dedup {
     * history representation for membership. Persist the bytes beside the
     * corpus and rebuild [[bloomMightContain]] plans anywhere.
     *
-    * `numBits` defaults to ~10 bits/item (≈1% fpp), floored at 64.
+    * The filter takes ~10 bits/item (≈1% fpp), floored at 64.
     * Catalyst enforces the session caps
     * `spark.sql.optimizer.runtime.bloomFilter.maxNumItems/maxNumBits`
     * (defaults 4M items / 2²⁶ bits = 8 MiB) — both inputs clamp to them,
     * so an over-sized request degrades to a denser (higher-fpp) filter
     * instead of failing analysis; raise the confs for 10⁸⁺-item
     * histories, or shard the filter per partition. */
-  def keyBloom(df: DataFrame, key: Column, expectedItems: Long,
-               numBits: Long = 0L): Array[Byte] = {
+  def keyBloom(df: DataFrame, key: Column, expectedItems: Long): Array[Byte] = {
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.graft.ColumnBridge
@@ -415,12 +413,10 @@ object Dedup {
     val maxItems = SQLConf.get.getConf(SQLConf.RUNTIME_BLOOM_FILTER_MAX_NUM_ITEMS)
     val maxBits = SQLConf.get.getConf(SQLConf.RUNTIME_BLOOM_FILTER_MAX_NUM_BITS)
     val items = math.min(expectedItems, maxItems)
-    val bits = math.min(
-      if (numBits > 0) numBits
-      // overflow-safe ×10: anything past maxBits/10 saturates anyway
-      else if (expectedItems > maxBits / 10) maxBits
-      else math.max(expectedItems * 10, 64L),
-      maxBits)
+    // overflow-safe ×10: anything past maxBits/10 saturates anyway
+    val bits =
+      if (expectedItems > maxBits / 10) maxBits
+      else math.min(math.max(expectedItems * 10, 64L), maxBits)
     val agg = new BloomFilterAggregate(
       ColumnBridge.expression(xxhash64(key)),
       Literal(items), Literal(bits))
@@ -1199,11 +1195,10 @@ object Dedup {
     * incremental near-dup primitive when storing history shingles is too
     * expensive. */
   def minhashSigTable(rows: DataFrame, idCol: String,
-                      bands: Int = 16, rowsPerBand: Int = 4,
-                      seed: Long = 42L): DataFrame = {
+                      bands: Int = 16, rowsPerBand: Int = 4): DataFrame = {
     val p = MinhashP
     val numHashes = bands * rowsPerBand
-    val rnd = new scala.util.Random(seed)
+    val rnd = new scala.util.Random(42L)
     val params = Seq.fill(numHashes)((rnd.nextInt((p - 1).toInt).toLong + 1L,
       rnd.nextInt(p.toInt).toLong))
     val base = rows.select(col(idCol), pmod(col("g"), lit(p)).as("h"))
@@ -1379,14 +1374,14 @@ object Dedup {
       .dropDuplicates("id_l", "id_r") // a pair can agree on several blocks
   }
 
-  /** Connected components over a near-dup pair list — the step that turns
+  /** Connected components over an `(id_a, id_b)` near-dup pair list — the step that turns
     * pairwise similarity into actual deduplication: every id in a cluster
     * maps to the cluster's minimum id (its "component"), so keeping only
     * `id == component` retains exactly one survivor per cluster. Returns
     * (id, component) for every id that appears in a NON-self-loop pair
     * (an id seen only as (x, x) has no edge, hence no row — callers
     * wanting every-doc coverage left-join and coalesce, as
-    * [[dedupeByPairs]] does). Throws if `maxIter` rounds pass without
+    * [[dedupeByPairs]] does). Throws if 50 rounds pass without
     * convergence rather than returning a silently-partial edge set
     * (which would map one id to several components and fan out joins).
     *
@@ -1400,30 +1395,21 @@ object Dedup {
     * the edge set is checkpointed per round to truncate the iterative
     * lineage; once a round's checkpoint materializes, the PREVIOUS round's
     * blocks are unpersisted, so at most two rounds' edge sets occupy
-    * executor storage at any time (vs maxIter copies pinned for the job's
+    * executor storage at any time (vs one copy per round pinned for the job's
     * lifetime). Convergence is an order-independent (count, hash-XOR)
     * signature of the directed edge set — one tiny aggregate per round,
     * no edge-set EXCEPT join.
-    *
-    * @param reliable use `checkpoint` (written to the session's checkpoint
-    *                 dir, survives executor loss) instead of
-    *                 `localCheckpoint` (executor-local blocks, cheaper but
-    *                 lost with the executor) — set on clusters where a
-    *                 mid-job executor loss must not kill a long CC run
     */
-  def connectedComponents(pairs: DataFrame, aCol: String = "id_a",
-                          bCol: String = "id_b", maxIter: Int = 50,
-                          reliable: Boolean = false): DataFrame = {
+  def connectedComponents(pairs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("u")
     // lazy checkpoints: the per-round signature aggregate is the action
     // that materializes them, so each round costs ONE job instead of two
-    def ckpt(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = false) else df.localCheckpoint(eager = false)
+    def ckpt(df: DataFrame): DataFrame = df.localCheckpoint(eager = false)
     // directed large→small; self-loops dropped
     var edges = ckpt(pairs
-      .select(greatest(col(aCol), col(bCol)).as("u"),
-        least(col(aCol), col(bCol)).as("v"))
+      .select(greatest(col("id_a"), col("id_b")).as("u"),
+        least(col("id_a"), col("id_b")).as("v"))
       .where(col("u") =!= col("v")).distinct())
     // order-independent set signature: (count, XOR of row hashes) — XOR
     // never overflows (vs SUM under ANSI) and distinct inputs mean no
@@ -1435,7 +1421,7 @@ object Dedup {
     var cur = sig(edges)
     var done = cur._1 == 0L
     var it = 0
-    while (!done && it < maxIter) {
+    while (!done && it < 50) {
       // large-star, over the symmetric view: every neighbor v > u links to
       // m = min(Γ(u) ∪ {u}); output stays directed large→small
       val sym = edges.unionAll(edges.select(col("v").as("u"), col("u").as("v")))
@@ -1461,27 +1447,27 @@ object Dedup {
       it += 1
     }
     if (!done) throw new IllegalStateException(
-      s"connectedComponents did not converge in $maxIter rounds " +
-        s"(${cur._1} directed edges remain) — raise maxIter")
+      s"connectedComponents did not converge in 50 rounds " +
+        s"(${cur._1} directed edges remain)")
     edges.select(col("u").as("id"), col("v").as("component"))
       .unionAll(edges.select(col("v").as("id"), col("v").as("component")))
       .distinct()
   }
 
-  /** Corpus dedupe from a pair list: label every doc with its component
+  /** Corpus dedupe from an `(id_a, id_b)` pair list: label every doc with its component
     * and a survivor flag (`keep` = the cluster's min id; docs in no pair
     * keep themselves). The component map only holds docs that appear in a
     * pair — tiny next to the corpus — so AQE turns the join back into a
     * broadcast at any scale where near-dups are a small fraction. */
-  def dedupeByPairs(docs: DataFrame, idCol: String, pairs: DataFrame,
-                    aCol: String = "id_a", bCol: String = "id_b"): DataFrame = {
-    val cc = connectedComponents(pairs, aCol, bCol)
+  def dedupeByPairs(docs: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
+    val cc = connectedComponents(pairs)
     docs.join(cc.withColumnRenamed("id", idCol), Seq(idCol), "left")
       .withColumn("component", coalesce(col("component"), col(idCol)))
       .withColumn("keep", col("component") === col(idCol))
   }
 
-  /** [[dedupeByPairs]] with QUALITY-AWARE survivor selection: instead of
+  /** [[dedupeByPairs]] over `(id_a, id_b)` pairs with QUALITY-AWARE
+    * survivor selection: instead of
     * the min-id member, each near-dup cluster keeps its best member by
     * `prefer` (highest wins; ties to the lowest id) — the curation form a
     * training pipeline actually wants ("of these near-duplicate pages,
@@ -1496,9 +1482,8 @@ object Dedup {
     * appear in a pair, so both joins stay broadcast-promotable where
     * near-dups are a small fraction. */
   def dedupeByPairsBest(docs: DataFrame, idCol: String, pairs: DataFrame,
-                        prefer: Column,
-                        aCol: String = "id_a", bCol: String = "id_b"): DataFrame = {
-    val cc = connectedComponents(pairs, aCol, bCol)
+                        prefer: Column): DataFrame = {
+    val cc = connectedComponents(pairs)
     val labeled = docs.join(cc.withColumnRenamed("id", idCol), Seq(idCol), "left")
       .withColumn("component", coalesce(col("component"), col(idCol)))
     val best = labeled

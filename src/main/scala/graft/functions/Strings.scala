@@ -8,8 +8,8 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Misc scalar-function layer (SURVEY.md §2.7 F1/F2/F13/F14).
-  * Pure-Scala helpers stay plain functions; only gunzip and eTLD need UDFs
-  * (JVM logic with no Catalyst equivalent).
+  * Pure-Scala helpers; GraftFunctions registers gunzip, domain and
+  * compression ratio as SQL UDFs (JVM logic with no Catalyst equivalent).
   */
 object Strings {
 
@@ -24,8 +24,7 @@ object Strings {
     * (utils/package.scala:25-69): acronym-bearing telemetry field names
     * whose mechanical capitalization would mangle the acronym
     * (memory_mb → memoryMb instead of the schema's memoryMB). Shipped as
-    * the default override table so `camelize` matches the reference out
-    * of the box; callers can pass their own map to extend or disable. */
+    * `camelize`'s override table so it matches the reference. */
   val CamelizeSpecialCases: Map[String, String] = Map(
     "submission_url" -> "submissionURL",
     "memory_mb" -> "memoryMB",
@@ -44,18 +43,16 @@ object Strings {
     "first_load_uri" -> "firstLoadURI",
     "" -> "")
 
-  /** F1 — snake_case → camelCase with an override table for irregular
-    * mappings (defaults to the reference's hard-coded special cases,
-    * utils/package.scala:25-69). */
-  def camelize(name: String,
-               overrides: Map[String, String] = CamelizeSpecialCases): String =
-    overrides.getOrElse(name, {
+  /** F1 — snake_case → camelCase, with the reference's hard-coded special
+    * cases for irregular mappings (utils/package.scala:25-69). */
+  def camelize(name: String): String =
+    CamelizeSpecialCases.getOrElse(name, {
       val parts = name.split("_").toSeq
       (parts.head +: parts.tail.map(_.capitalize)).mkString
     })
 
-  /** F13 — gunzip bytes to a UTF-8 string (shared by the Column UDF and
-    * the SQL registration in GraftFunctions).
+  /** F13 — gunzip bytes to a UTF-8 string (the SQL registration in
+    * GraftFunctions).
     * Reference: utils/DatasetShim.scala:48,58. */
   def gunzipBytes(bytes: Array[Byte]): String =
     if (bytes == null) null
@@ -63,11 +60,6 @@ object Strings {
       val in = new GZIPInputStream(new ByteArrayInputStream(bytes))
       try new String(in.readAllBytes(), "UTF-8") finally in.close()
     }
-
-  val gunzip: Column => Column = {
-    val f = udf(gunzipBytes _)
-    c => f(c)
-  }
 
   /** Deflate compression ratio (compressed bytes / raw UTF-8 bytes) — the
     * Gopher/RefinedWeb redundancy proxy: boilerplate and repetitive spam
@@ -97,11 +89,6 @@ object Strings {
       }
     }
 
-  val compressionRatio: Column => Column = {
-    val f = udf(deflateRatio _)
-    c => f(c)
-  }
-
   /** F14 — URL → registrable-ish domain: host's last two labels, with a
     * regex fallback for URIs `new URI` rejects.
     * Reference: views/pioneer/package.scala:19-31. */
@@ -111,10 +98,5 @@ object Strings {
       .orElse("""^(?:[a-zA-Z][a-zA-Z0-9+.-]*://)?([^/:?#]+)""".r
         .findFirstMatchIn(url).map(_.group(1)))
     host.map(_.split('.').takeRight(2).mkString("."))
-  }
-
-  val domainUdf: Column => Column = {
-    val f = udf((s: String) => domainOf(s).orNull)
-    c => f(c)
   }
 }

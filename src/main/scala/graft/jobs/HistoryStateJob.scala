@@ -18,9 +18,7 @@ import graft.ops.BatchView
   *  - Each ingest day APPENDS its own partials into a day-partitioned,
   *    hash-bucketed table ([[BatchView.writeDayBucketed]]). A re-run day
   *    overwrites only its own partition — idempotent, never
-  *    double-counts — and the day partitioning makes the
-  *    batch/history-disjointness contract structural: history for day D
-  *    is read with `day < D`, so a batch can never see its own counts.
+  *    double-counts.
   *  - The read-back merge (the `union + groupBy-sum` the consumers need)
   *    is ONE bucketed scan + aggregate: the scan delivers
   *    `HashPartitioning(bucket key)`, which satisfies the aggregate's
@@ -48,48 +46,41 @@ object HistoryStateJob {
   val ContainDfTable = "graft_containment_df"
   val ContainSizesTable = "graft_containment_sizes"
 
+  /** Hash buckets of every state table. */
+  private val Buckets = 32
+
   /** Compute one day's state partials from that day's raw docs and
     * append them (paragraph fps for paragraph dedup, shingle df + per-doc
-    * sizes for containment). Bucket keys are each artifact's merge/probe
-    * key. `groupCol` is unused; it stays so positional callers keep
-    * compiling. */
+    * sizes for containment, over word 3-gram shingles). Bucket keys are
+    * each artifact's merge/probe key. `groupCol` is unused; it stays so
+    * positional callers keep compiling. */
   def appendDay(spark: SparkSession, dayDocs: DataFrame, day: String,
-                textCol: String, idCol: String, groupCol: String,
-                shingleN: Int = 3, buckets: Int = 32): Unit = {
+                textCol: String, idCol: String, groupCol: String): Unit = {
     val tagged = (df: DataFrame) => df.withColumn("day", lit(day))
     BatchView.writeDayBucketed(tagged(Dedup.paragraphFps(dayDocs, textCol, idCol)),
-      ParagraphFpTable, "day", Seq("fp"), buckets)
-    val rows = Dedup.shingleRows(dayDocs, textCol, idCol, Nil, shingleN)
+      ParagraphFpTable, "day", Seq("fp"), Buckets)
+    val rows = Dedup.shingleRows(dayDocs, textCol, idCol, Nil, 3)
       .localCheckpoint(eager = false) // two consumers below — shingle once
     val (df, sz) = Dedup.corpusContainmentIndex(rows, idCol)
     BatchView.writeDayBucketed(tagged(df), ContainDfTable, "day",
-      Seq("g"), buckets)
+      Seq("g"), Buckets)
     BatchView.writeDayBucketed(tagged(sz), ContainSizesTable, "day",
-      Seq(idCol), buckets)
+      Seq(idCol), Buckets)
   }
 
-  /** Distinct history paragraph fingerprints before `beforeDay` — the
+  /** Distinct history paragraph fingerprints over every stored day — the
     * state [[Dedup.paragraphDedupeIncremental]] consumes. The distinct
     * is a groupBy on the bucket key: exchange-free. */
-  def readParagraphFps(spark: SparkSession, beforeDay: String = ""): DataFrame = {
-    val all = spark.table(ParagraphFpTable)
-    (if (beforeDay.isEmpty) all else all.where(col("day") < beforeDay))
-      .select(col("fp")).distinct()
-  }
+  def readParagraphFps(spark: SparkSession): DataFrame =
+    spark.table(ParagraphFpTable).select(col("fp")).distinct()
 
-  /** Containment index (per-shingle df, per-doc shingle counts) before
-    * `beforeDay` — the artifacts [[Dedup.containmentJoinPrebuilt]]
+  /** Containment index (per-shingle df, per-doc shingle counts) over
+    * every stored day — the artifacts [[Dedup.containmentJoinPrebuilt]]
     * consumes. df partials sum-merge exchange-free on the bucketed `g`;
     * doc sizes never repeat across disjoint days, so the sum is a
     * pass-through that keeps the same merged shape. */
-  def readContainmentIndex(spark: SparkSession, idCol: String,
-                           beforeDay: String = ""): (DataFrame, DataFrame) = {
-    def upTo(t: String) = {
-      val all = spark.table(t)
-      if (beforeDay.isEmpty) all else all.where(col("day") < beforeDay)
-    }
-    (upTo(ContainDfTable).groupBy(col("g")).agg(sum(col("df")).as("df")),
-     upTo(ContainSizesTable).groupBy(col(idCol))
+  def readContainmentIndex(spark: SparkSession, idCol: String): (DataFrame, DataFrame) =
+    (spark.table(ContainDfTable).groupBy(col("g")).agg(sum(col("df")).as("df")),
+     spark.table(ContainSizesTable).groupBy(col(idCol))
        .agg(sum(col("n_sh")).as("n_sh")))
-  }
 }

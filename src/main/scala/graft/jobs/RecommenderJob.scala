@@ -24,10 +24,9 @@ object RecommenderJob {
     * `catalog` is the AddonMeta frame. Returns one row per (user, rank)
     * with guid, score, addon_name, is_webextension. */
   def run(installs: DataFrame, userCol: String, itemCol: String,
-          catalog: DataFrame, k: Int = 10,
-          rank: Int = 15, maxIter: Int = 10, seed: Long = 42L): DataFrame = {
+          catalog: DataFrame, k: Int = 10): DataFrame = {
     val ratings = Recommender.ratings(installs, userCol, itemCol)
-    val model = Recommender.train(ratings, rank = rank, maxIter = maxIter, seed = seed)
+    val model = Recommender.train(ratings)
     // hash -> guid resolution frame (the reference's addonMap lookup,
     // AddonRecommender.scala:258-266, kept distributed)
     val hashed = installs

@@ -41,9 +41,10 @@ object RetrievalIndexJob {
   private val AllTables = Seq(PostingsTable, DfTable, DlTable, StatsTable)
 
   /** Ingest one day's docs into the persisted index artifacts —
-    * idempotent per day (dynamic partition overwrite). */
+    * idempotent per day (dynamic partition overwrite). Postings bucket
+    * 64 ways on `token`. */
   def runDay(spark: SparkSession, dayDocs: DataFrame, day: String,
-             textCol: String, idCol: String, buckets: Int = 64): Unit = {
+             textCol: String, idCol: String): Unit = {
     val (post, dfreq, dl, stats) = Retrieval.bm25Index(dayDocs, textCol, idCol)
     // `insertInto` takes no per-write options, so dynamic overwrite must go
     // through the session conf — save and RESTORE it, or a later unrelated
@@ -55,7 +56,7 @@ object RetrievalIndexJob {
       val withDay = df.withColumn("day", lit(day))
       if (!spark.catalog.tableExists(table)) {
         val w = withDay.write.format("parquet").partitionBy("day")
-        (if (bucketed) w.bucketBy(buckets, "token").sortBy("token") else w)
+        (if (bucketed) w.bucketBy(64, "token").sortBy("token") else w)
           .saveAsTable(table)
       } else {
         // insertInto is position-based: data columns then the partition

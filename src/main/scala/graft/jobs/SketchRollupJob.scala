@@ -32,6 +32,11 @@ object SketchRollupJob {
 
   val ViewName = "sketch_daily"
 
+  /** View version, and the Misra–Gries size: the read-side merge must
+    * use the size the write side summarized with. */
+  private val Version = 1
+  private val MgK = 64
+
   /** Ingest one day's events — idempotent per day. Round 11 widens the
     * row to the FULL mergeable-summary family: beside HLL (distinct)
     * and KLL (quantiles), `mg_keys` (Misra–Gries map — the heavy-key
@@ -41,51 +46,46 @@ object SketchRollupJob {
     * key stream pre-collapses to exact per-key counts first (codegen'd,
     * map-side combined), then both key summaries ride ONE aggregate. */
   def runDay(spark: SparkSession, dayEvents: DataFrame, day: String,
-             base: String, userCol: String, valueCol: String,
-             version: Int = 1, lgK: Int = 12, kllK: Int = 200,
-             mgK: Int = 64, agmsDepth: Int = 5, agmsWidth: Int = 64,
-             agmsSeed: Int = 7): Unit = {
+             base: String, userCol: String, valueCol: String): Unit = {
     val sketches = dayEvents.agg(
-      Sketches.hllSketch(col(userCol), lgK).as("hll_users"),
-      kll_sketch_agg_double(col(valueCol).cast("double"), lit(kllK))
+      Sketches.hllSketch(col(userCol)).as("hll_users"),
+      kll_sketch_agg_double(col(valueCol).cast("double"), lit(200))
         .as("kll_value"),
       count(lit(1)).as("n_events"))
     val keyed = dayEvents
       .groupBy(col(userCol).cast("string").as("__k"))
       .agg(count(lit(1)).as("__n"))
-      .agg(graft.udafs.FreqItems.mgAgg(col("__k"), col("__n"), mgK)
+      .agg(graft.udafs.FreqItems.mgAgg(col("__k"), col("__n"), MgK)
           .as("mg_keys"),
-        graft.udafs.JoinSize.agmsAgg(col("__k"), col("__n"),
-          agmsDepth, agmsWidth, agmsSeed).as("agms_keys"))
+        graft.udafs.JoinSize.agmsAgg(col("__k"), col("__n"), 5, 64, 7)
+          .as("agms_keys"))
     val row = sketches.crossJoin(broadcast(keyed))
       .withColumn("day", lit(day))
-    BatchView.write(row, base, ViewName, version, partitionCols = Seq("day"))
+    BatchView.write(row, base, ViewName, Version, partitionCols = Seq("day"))
   }
 
   /** The artifact table, filtered to an inclusive day range
     * (partition-pruned — `day` is the partition column). */
   def read(spark: SparkSession, base: String, fromDay: String,
-           toDay: String, version: Int = 1): DataFrame =
+           toDay: String, version: Int = Version): DataFrame =
     BatchView.read(spark, base, ViewName, version)
       .where(col("day") >= fromDay && col("day") <= toDay)
 
   /** Distinct actives over the day range: an N-row HLL union. */
   def activeUsers(spark: SparkSession, base: String, fromDay: String,
-                  toDay: String, version: Int = 1): DataFrame =
-    read(spark, base, fromDay, toDay, version)
+                  toDay: String): DataFrame =
+    read(spark, base, fromDay, toDay)
       .agg(Sketches.hllCardinality(Sketches.hllMerge(col("hll_users")))
           .as("active_users"),
         sum(col("n_events")).as("n_events"))
 
   /** Heavy-key candidates over the day range: an N-row Misra–Gries
     * merge — the "who dominated this week" question from kilobyte
-    * artifacts, no watchlist needed. `mgK` must match the write side
-    * (a larger-k input merges soundly; the result carries this k's
-    * bound). */
+    * artifacts, no watchlist needed, merged at the write side's k. */
   def heavyKeys(spark: SparkSession, base: String, fromDay: String,
-                toDay: String, version: Int = 1, mgK: Int = 64): DataFrame =
-    read(spark, base, fromDay, toDay, version)
-      .agg(graft.udafs.FreqItems.mgMergeAgg(col("mg_keys"), mgK).as("__m"))
+                toDay: String): DataFrame =
+    read(spark, base, fromDay, toDay)
+      .agg(graft.udafs.FreqItems.mgMergeAgg(col("mg_keys"), MgK).as("__m"))
       .select(explode(col("__m")).as(Seq("key", "est")))
 
   /** The merged AGMS key sketch over a day range (counter-wise exact

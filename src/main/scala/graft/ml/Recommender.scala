@@ -34,12 +34,13 @@ object Recommender {
       .groupBy(col("user"), col("item"))
       .agg(count(lit(1)).cast("float").as("rating"))
 
-  def train(ratingsDf: DataFrame, rank: Int = 15, regParam: Double = 0.01,
-            alpha: Double = 1.0, maxIter: Int = 10, seed: Long = 42L): ALSModel = {
+  /** Implicit ALS: rank 15, regParam 0.01, alpha 1.0, 10 iterations,
+    * seed 42. */
+  def train(ratingsDf: DataFrame): ALSModel = {
     new ALS()
       .setImplicitPrefs(true)
-      .setRank(rank).setRegParam(regParam).setAlpha(alpha)
-      .setMaxIter(maxIter).setSeed(seed)
+      .setRank(15).setRegParam(0.01).setAlpha(1.0)
+      .setMaxIter(10).setSeed(42L)
       .setUserCol("user").setItemCol("item").setRatingCol("rating")
       .setColdStartStrategy("nan")
       .fit(ratingsDf)

@@ -25,16 +25,20 @@ import org.apache.spark.sql.functions._
   * approximate regime is spec-banded in ScalaTest. */
 object Audience {
 
+  /** Sketch size (log2 of nominal entries) of every sketch built or
+    * unioned here; the segment-pair frame's driver-side cap. */
+  private val LgK = 12
+  private val MaxSegments = 1000
+
   /** One theta sketch per segment: `(seg, sk)` — the persistable
     * artifact. `seg` is cast to string (the pair frame is driver-built;
     * a typed key adds nothing downstream). Null-segment rows are
     * DROPPED here: a null is not an audience, and letting it through
     * would NPE the driver-side pair build in [[segmentOverlap]]. */
-  def segmentSketches(events: DataFrame, keyCol: String, segCol: String,
-                      lgK: Int = 12): DataFrame =
+  def segmentSketches(events: DataFrame, keyCol: String, segCol: String): DataFrame =
     events.where(col(segCol).isNotNull)
       .groupBy(col(segCol).cast("string").as("seg"))
-      .agg(theta_sketch_agg(col(keyCol), lit(lgK)).as("sk"))
+      .agg(theta_sketch_agg(col(keyCol), lit(LgK)).as("sk"))
 
   /** Merge per-day sketch tables into corpus totals — sketch-sized
     * input, no raw-event rescan. */
@@ -48,12 +52,11 @@ object Audience {
   /** The pairwise overlap matrix over a prebuilt sketch table:
     * `(seg_a, seg_b, n_a, n_b, n_both, n_union, n_only_a)` for every
     * unordered segment pair (seg_a < seg_b lexicographically). The
-    * segment list is collected to the driver (guarded by `maxSegments`
+    * segment list is collected to the driver (guarded by `MaxSegments`
     * — segments are dashboard-cardinality by construction; the guard
     * turns a mis-keyed call into a loud error instead of a driver OOM)
     * and the pair frame joins the sketch table twice on equality. */
-  def segmentOverlap(sketches: DataFrame, lgK: Int = 12,
-                     maxSegments: Int = 1000): DataFrame = {
+  def segmentOverlap(sketches: DataFrame): DataFrame = {
     val spark = sketches.sparkSession
     import spark.implicits._
     val sk = sketches.localCheckpoint(eager = true) // both join sides reuse it
@@ -63,8 +66,8 @@ object Audience {
         "(segmentSketches drops them) or fix the segment column")
     val sorted = segs.sorted
     val pairsSeq = sorted.flatMap(a => sorted.collect { case b if a < b => (a, b) })
-    require(segs.length <= maxSegments,
-      s"${segs.length} segments exceed maxSegments=$maxSegments — " +
+    require(segs.length <= MaxSegments,
+      s"${segs.length} segments exceed maxSegments=$MaxSegments — " +
         "is the segment column actually a key column?")
     val pairs = pairsSeq.toSeq.toDF("seg_a", "seg_b")
     pairs
@@ -75,7 +78,7 @@ object Audience {
         theta_sketch_estimate(col("sk_b")).cast("long").as("n_b"),
         theta_sketch_estimate(theta_intersection(col("sk_a"), col("sk_b")))
           .cast("long").as("n_both"),
-        theta_sketch_estimate(theta_union(col("sk_a"), col("sk_b"), lit(lgK)))
+        theta_sketch_estimate(theta_union(col("sk_a"), col("sk_b"), lit(LgK)))
           .cast("long").as("n_union"),
         theta_sketch_estimate(theta_difference(col("sk_a"), col("sk_b")))
           .cast("long").as("n_only_a"))
@@ -83,8 +86,8 @@ object Audience {
 
   /** Events → overlap matrix in one call (the one-shot form). */
   def segmentOverlapFromEvents(events: DataFrame, keyCol: String,
-                               segCol: String, lgK: Int = 12): DataFrame =
-    segmentOverlap(segmentSketches(events, keyCol, segCol, lgK), lgK)
+                               segCol: String): DataFrame =
+    segmentOverlap(segmentSketches(events, keyCol, segCol))
 
   /** Day-over-day churn from a per-BUCKET theta sketch table
     * (`(bucket, sk)` — [[segmentSketches]] keyed on the day works):
@@ -99,12 +102,11 @@ object Audience {
     * while days stay under 2^lgK distinct keys, ~2 % RSE beyond. Both
     * join sides are fully renamed (the streaming-view self-join
     * lesson). */
-  def bucketChurn(sketches: DataFrame, bucketCol: String,
-                  sketchCol: String = "sk"): DataFrame = {
+  def bucketChurn(sketches: DataFrame, bucketCol: String): DataFrame = {
     val left = sketches.select(col(bucketCol).cast("long").as("__xb"),
-      col(sketchCol).as("__xs"))
+      col("sk").as("__xs"))
     val right = sketches.select(col(bucketCol).cast("long").as("__yb"),
-      col(sketchCol).as("__ys"))
+      col("sk").as("__ys"))
     left.join(right, col("__yb") === col("__xb") + 1L)
       .select(col("__xb").as("bucket"), col("__yb").as("bucket_next"),
         theta_sketch_estimate(col("__xs")).cast("long").as("n_prev"),

@@ -31,12 +31,10 @@ object BatchView {
     * incremental-dedup probe takes) skip whole row groups whose filter
     * rules the value out, without any clustering requirement. Use for
     * high-cardinality keys where min/max stats are useless (hashes,
-    * fingerprints); `bloomFilterNdv` sizes the filters (expected distinct
-    * values per row group). */
+    * fingerprints); each filter is sized for 10⁶ distinct values per row
+    * group. Files hold at most 5·10⁶ rows. */
   def write(df: DataFrame, base: String, name: String, version: Int,
-            partitionCols: Seq[String], maxRecordsPerFile: Long = 5000000L,
-            bloomFilterCols: Seq[String] = Nil,
-            bloomFilterNdv: Long = 1000000L): Unit = {
+            partitionCols: Seq[String], bloomFilterCols: Seq[String] = Nil): Unit = {
     val spark = df.sparkSession
     spark.sparkContext.hadoopConfiguration
       .set("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
@@ -46,11 +44,11 @@ object BatchView {
     val w0 = df.write
       .mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
+      .option("maxRecordsPerFile", 5000000L)
       .option("compression", "snappy")
     val w = bloomFilterCols.foldLeft(w0) { (w, c) =>
       w.option(s"parquet.bloom.filter.enabled#$c", "true")
-        .option(s"parquet.bloom.filter.expected.ndv#$c", bloomFilterNdv)
+        .option(s"parquet.bloom.filter.expected.ndv#$c", 1000000L)
     }
     w.partitionBy(partitionCols: _*)
       .parquet(viewPath(base, name, version))
@@ -60,20 +58,17 @@ object BatchView {
     * to streaming sinks and high-parallelism writes leaving thousands of
     * KB-sized files per partition (each one a scan task + a NameNode
     * entry at 100 TB). Reads the directory, repartitions to
-    * `ceil(rows / targetRecordsPerFile)` tasks (optionally RANGE-
-    * partitioned + sorted by `sortCols`, preserving a clustered layout's
-    * min/max pruning through the rewrite), writes to a sibling temp dir,
-    * then atomically swaps via two FS renames. Content is byte-for-byte
-    * the same rows; the swap window (old gone → new in place) is the
-    * non-transactional-FS caveat, documented rather than hidden — on
-    * object stores front this with a manifest or table format.
-    * A leaf that is already one file of at most `targetRecordsPerFile`
-    * rows is left untouched when no `sortCols` are given (nothing to
-    * split, merge or sort); with `sortCols` it is still rewritten, since
-    * the sort is the point. Returns (filesBefore, filesAfter). */
+    * `ceil(rows / targetRecordsPerFile)` tasks, writes to a sibling temp
+    * dir, then atomically swaps via two FS renames. Content is
+    * byte-for-byte the same rows; the swap window (old gone → new in
+    * place) is the non-transactional-FS caveat, documented rather than
+    * hidden — on object stores front this with a manifest or table
+    * format. A leaf that is already one file of at most
+    * `targetRecordsPerFile` rows is left untouched (nothing to split or
+    * merge), and its row count comes from that file's parquet footer, so
+    * such a leaf runs no Spark job. Returns (filesBefore, filesAfter). */
   def compact(spark: SparkSession, dir: String,
-              targetRecordsPerFile: Long,
-              sortCols: Seq[String] = Nil): (Int, Int) = {
+              targetRecordsPerFile: Long): (Int, Int) = {
     import org.apache.hadoop.fs.Path
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new Path(dir.stripSuffix("/") + "_compacting")
@@ -92,24 +87,24 @@ object BatchView {
     require(subdirs.isEmpty,
       s"$dir contains subdirectories (${subdirs.take(3).map(_.getPath.getName).mkString(", ")}…) — " +
         "compact leaf partition directories individually, not a partitioned root")
-    def parquetFiles(p: String): Int =
-      fs.listStatus(new Path(p)).count(_.getPath.getName.endsWith(".parquet"))
+    def parquetFiles(p: String): Seq[Path] =
+      fs.listStatus(new Path(p)).map(_.getPath).filter(_.getName.endsWith(".parquet")).toSeq
     def renameOrThrow(src: Path, dst: Path): Unit =
       require(fs.rename(src, dst), s"rename $src -> $dst failed")
-    val before = parquetFiles(dir)
+    def footerRows(p: Path): Long = {
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, fs.getConf))
+      try reader.getRecordCount finally reader.close()
+    }
+    val files = parquetFiles(dir)
+    val before = files.size
+    // already compact: a rewrite would write back the same single file
+    if (before == 1 && footerRows(files.head) <= targetRecordsPerFile)
+      return (before, before)
     val df = spark.read.parquet(dir)
     val rows = df.count()
-    // already compact: one file within target and no sort order to
-    // impose — a rewrite would write back the same single file
-    if (before == 1 && sortCols.isEmpty && rows <= targetRecordsPerFile)
-      return (before, before)
     val nFiles = math.max(1L, (rows + targetRecordsPerFile - 1) / targetRecordsPerFile).toInt
-    val shaped =
-      if (sortCols.nonEmpty)
-        df.repartitionByRange(nFiles, sortCols.map(df.col): _*)
-          .sortWithinPartitions(sortCols.map(df.col): _*)
-      else df.repartition(nFiles)
-    shaped.write.mode("overwrite")
+    df.repartition(nFiles).write.mode("overwrite")
       .option("maxRecordsPerFile", targetRecordsPerFile)
       .option("compression", "snappy")
       .parquet(tmp.toString)
@@ -118,7 +113,7 @@ object BatchView {
     if (!fs.delete(old, true))
       throw new java.io.IOException(
         s"compacted $dir but could not delete the pre-compaction copy $old")
-    (before, parquetFiles(dir))
+    (before, parquetFiles(dir).size)
   }
 
   /** Walk a partitioned view root and [[compact]] each LEAF partition
@@ -134,8 +129,7 @@ object BatchView {
     * were a partition). Returns `(leafPath, filesBefore, filesAfter)`
     * per leaf, leaves ordered by path. */
   def compactPartitioned(spark: SparkSession, root: String,
-                         targetRecordsPerFile: Long,
-                         sortCols: Seq[String] = Nil): Seq[(String, Int, Int)] = {
+                         targetRecordsPerFile: Long): Seq[(String, Int, Int)] = {
     import org.apache.hadoop.fs.Path
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     def isSwapDir(name: String): Boolean =
@@ -157,8 +151,7 @@ object BatchView {
       s"stale compaction dirs under $root (${stale.take(3).mkString(", ")}…) — " +
         "a prior run crashed mid-swap; inspect and remove them first")
     leaves.sortBy(_.toString).map { leaf =>
-      val (before, after) = compact(spark, leaf.toString,
-        targetRecordsPerFile, sortCols)
+      val (before, after) = compact(spark, leaf.toString, targetRecordsPerFile)
       (leaf.toString, before, after)
     }
   }

@@ -68,7 +68,8 @@ object Cdc {
           .otherwise(col(s"__n_$c")).as(c)) :+ col("op"): _*)
   }
 
-  /** Apply a changelog to a snapshot: keys touched by the changelog
+  /** Apply a changelog (`keys`, `seqCol`, an `op` column and `base`'s
+    * payload) to a snapshot: keys touched by the changelog
     * take their LATEST change (max `seqCol` per key; I and U are both
     * upserts — tolerant of an I on an existing key or a U on an absent
     * one, the Delta/Hudi MERGE convention — and D removes the row);
@@ -80,18 +81,18 @@ object Cdc {
     * give changes a unique sequence per key (ingest offset, commit LSN)
     * if tie semantics matter. */
   def cdcApply(base: DataFrame, changes: DataFrame, keys: Seq[String],
-               seqCol: String, opCol: String = "op"): DataFrame = {
+               seqCol: String): DataFrame = {
     require(keys.nonEmpty, "cdcApply needs at least one key column")
     val cols = base.columns.toSeq
     val payload = cols.filterNot(keys.contains)
-    val missing = (keys :+ seqCol :+ opCol).filterNot(changes.columns.contains)
+    val missing = (keys :+ seqCol :+ "op").filterNot(changes.columns.contains)
     require(missing.isEmpty,
       s"changelog is missing columns: ${missing.mkString(",")}")
     val latest = changes
       .groupBy(keys.map(col): _*)
       .agg(max_by(
-        struct(col(opCol).as("op") +: payload.map(col): _*),
-        struct(col(seqCol) +: col(opCol) +: payload.map(col): _*)).as("__c"))
+        struct(col("op") +: payload.map(col): _*),
+        struct(col(seqCol) +: col("op") +: payload.map(col): _*)).as("__c"))
     val untouched = base.join(latest.select(keys.map(col): _*),
       keys, "left_anti")
     val applied = latest

@@ -46,7 +46,7 @@ object Diagnostics {
     *
     *  - `n_rows`, `n_keys`, `max_count` — volume, cardinality, and the
     *    worst key's weight, all exact;
-    *  - `top_keys` — the Misra–Gries candidate map naming the skewed
+    *  - `top_keys` — the k = 32 Misra–Gries candidate map naming the skewed
     *    keys (every key above n_rows/(k+1) guaranteed present — this is
     *    what [[skewReport]]'s exact top-k gives up at unbounded key
     *    cardinality: MG state is ≤ k counters per task, no key-sorted
@@ -59,8 +59,7 @@ object Diagnostics {
     * A ratio in the thousands says salt the join
     * ([[Relational.saltedJoin]]) or pre-aggregate; the MG map says
     * WHICH keys to split. Cheap enough to leave in every run. */
-  def keySkewReport(df: DataFrame, keyCol: String, mgK: Int = 32,
-                    kllK: Int = 200): DataFrame =
+  def keySkewReport(df: DataFrame, keyCol: String): DataFrame =
     df.where(col(keyCol).isNotNull)
       .groupBy(col(keyCol).cast("string").as("__k"))
       .agg(count(lit(1)).as("__n"))
@@ -68,9 +67,9 @@ object Diagnostics {
         sum(col("__n")).as("n_rows"),
         count(lit(1)).as("n_keys"),
         max(col("__n")).as("max_count"),
-        graft.udafs.FreqItems.mgAgg(col("__k"), col("__n"), mgK)
+        graft.udafs.FreqItems.mgAgg(col("__k"), col("__n"), 32)
           .as("top_keys"),
-        kll_sketch_agg_double(col("__n").cast("double"), lit(kllK))
+        kll_sketch_agg_double(col("__n").cast("double"), lit(200))
           .as("__kll"))
       .select(col("n_rows"), col("n_keys"), col("max_count"),
         col("top_keys"),

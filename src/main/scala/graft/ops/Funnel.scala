@@ -152,13 +152,12 @@ object Funnel {
     * lgK 12 ⇒ ~1.6 % standard error; the exact operator remains the
     * verification path. Returns (bucket, n_active_approx). */
   def rollingActiveApprox(events: DataFrame, keyCol: String, tsCol: String,
-                          bucketNanos: Long, windowBuckets: Int,
-                          lgConfigK: Int = 12): DataFrame = {
+                          bucketNanos: Long, windowBuckets: Int): DataFrame = {
     require(windowBuckets >= 1, "window must span at least one bucket")
     val perBucket = events
       .select(col(keyCol), expr(s"`$tsCol` div ${bucketNanos}L").as("__b"))
       .groupBy(col("__b"))
-      .agg(hll_sketch_agg(col(keyCol), lit(lgConfigK)).as("__sk"))
+      .agg(hll_sketch_agg(col(keyCol), lit(12)).as("__sk"))
     windowFanOut(perBucket, windowBuckets, col("__sk"))
       .groupBy(col("bucket"))
       .agg(hll_sketch_estimate(hll_union_agg(col("__sk"), lit(false)))

@@ -36,6 +36,9 @@ import org.apache.spark.sql.functions._
   * adjacency) sit beside them. */
 object Graphs {
 
+  /** PageRank damping in per mille: every PageRank here uses 0.85. */
+  private val DampMilli = 850L
+
   /** Map STRING node keys (hosts, canonical URLs — the web-corpus graph
     * keys the centrality operators exist for) to stable long ids via a
     * collision-checked xxhash64 dictionary. Returns `(mappedEdges,
@@ -80,7 +83,8 @@ object Graphs {
   }
 
   /** Fixed-point PageRank: `(node, rank_micro)` over the directed edge
-    * list, `iterations` synchronous steps at damping `dampMilli`/1000.
+    * list, `iterations` synchronous steps at damping 0.85 (`damp` =
+    * 850 per mille).
     *
     * Per step, all integer:
     * {{{
@@ -89,8 +93,8 @@ object Graphs {
     * r'(v)   = base + (damp · Σ_{u→v} contrib(u)) div 1000
     * }}} */
   def pageRankFixed(edges: DataFrame, srcCol: String, dstCol: String,
-                    iterations: Int, dampMilli: Long = 850L): DataFrame =
-    pageRankFixedImpl(edges, srcCol, dstCol, None, iterations, dampMilli)
+                    iterations: Int): DataFrame =
+    pageRankFixedImpl(edges, srcCol, dstCol, None, iterations)
 
   /** `try_cast` (not `cast`): under ANSI a garbage id would throw a
     * generic CAST error mid-job; the null it yields here instead is
@@ -175,10 +179,8 @@ object Graphs {
     * 10¹² mass scale). `pageRankFixed` is the all-weights-1 special
     * case of the same iteration. */
   def pageRankWeighted(edges: DataFrame, srcCol: String, dstCol: String,
-                       weightCol: String, iterations: Int,
-                       dampMilli: Long = 850L): DataFrame =
-    pageRankFixedImpl(edges, srcCol, dstCol, Some(weightCol), iterations,
-      dampMilli)
+                       weightCol: String, iterations: Int): DataFrame =
+    pageRankFixedImpl(edges, srcCol, dstCol, Some(weightCol), iterations)
 
   /** PERSONALIZED PageRank: the teleport mass returns only to the SEED
     * set (uniformly), so ranks measure centrality RELATIVE to the seeds
@@ -199,10 +201,8 @@ object Graphs {
     * join on the node table — seed sets are whitelist-sized. */
   def pageRankPersonalized(edges: DataFrame, srcCol: String, dstCol: String,
                            seeds: DataFrame, seedCol: String,
-                           iterations: Int, dampMilli: Long = 850L): DataFrame = {
+                           iterations: Int): DataFrame = {
     require(iterations >= 1, s"iterations must be positive: $iterations")
-    require(dampMilli >= 0L && dampMilli <= 1000L,
-      s"dampMilli must be in [0, 1000]: $dampMilli")
     val (e, _) = edgeIntake(edges, srcCol, dstCol, ("src", "dst"))
     val seedIds = seeds.select(tryLong(seedCol).as("node")).distinct()
     // membership flag rides the node table; seeds outside the graph
@@ -218,7 +218,7 @@ object Graphs {
       "no seed id appears in the edge list's node set — personalized " +
         "rank is undefined without an effective seed")
     val init = 1000000000000L / nSeeds
-    val base = (1000L - dampMilli) * 1000000000000L / 1000L / nSeeds
+    val base = (1000L - DampMilli) * 1000000000000L / 1000L / nSeeds
     var ranks = nodes.select(col("node"), (col("seed") * lit(init)).as("r"))
     for (_ <- 1 to iterations) {
       val contrib = ranks
@@ -231,7 +231,7 @@ object Graphs {
         .join(contrib, nodes("node") === contrib("dst"), "left")
         .select(col("node"),
           (col("seed") * lit(base) +
-            expr(s"($dampMilli * coalesce(s, cast(0 as bigint))) div 1000"))
+            expr(s"($DampMilli * coalesce(s, cast(0 as bigint))) div 1000"))
             .as("r"))
         .localCheckpoint(eager = true)
     }
@@ -962,13 +962,13 @@ object Graphs {
     * `(node, radius, reach_est)` for radius 0..`maxRadius`, estimates
     * as longs. */
   def hyperBall(edges: DataFrame, srcCol: String, dstCol: String,
-                maxRadius: Int, lgK: Int = 12): DataFrame = {
+                maxRadius: Int): DataFrame = {
     require(maxRadius >= 1, s"maxRadius must be positive: $maxRadius")
     val (raw, _) = edgeIntake(edges, srcCol, dstCol, ("src", "dst"))
     val e = raw.where(col("src") =!= col("dst")).distinct()
       .localCheckpoint(eager = true)
     var balls = nodeSet(raw).groupBy(col("node"))
-      .agg(hll_sketch_agg(col("node"), lit(lgK)).as("ball"))
+      .agg(hll_sketch_agg(col("node"), lit(12)).as("ball"))
       .localCheckpoint(eager = true)
     def emit(k: Int) = balls.select(col("node"), lit(k).as("radius"),
       hll_sketch_estimate(col("ball")).cast("long").as("reach_est"))
@@ -1032,10 +1032,8 @@ object Graphs {
 
   private def pageRankFixedImpl(edges: DataFrame, srcCol: String,
                                 dstCol: String, weightCol: Option[String],
-                                iterations: Int, dampMilli: Long): DataFrame = {
+                                iterations: Int): DataFrame = {
     require(iterations >= 1, s"iterations must be positive: $iterations")
-    require(dampMilli >= 0L && dampMilli <= 1000L,
-      s"dampMilli must be in [0, 1000]: $dampMilli")
     val weighted = weightCol.isDefined
     val (eAll, _) = edgeIntake(edges, srcCol, dstCol, ("src", "dst"), // walked every iteration
       Some(weightCol.map(tryLong).getOrElse(lit(1L))))
@@ -1050,7 +1048,7 @@ object Graphs {
       (if (weighted) " (or all weights are non-positive)" else "") +
       " — nothing to rank")
     val init = 1000000000000L / n
-    val base = (1000L - dampMilli) * 1000000000000L / 1000L / n
+    val base = (1000L - DampMilli) * 1000000000000L / 1000L / n
     var ranks = nodes.select(col("node"), lit(init).as("r"))
     for (_ <- 1 to iterations) {
       val contrib = ranks
@@ -1063,7 +1061,7 @@ object Graphs {
         .join(contrib, nodes("node") === contrib("dst"), "left")
         .select(col("node"),
           (lit(base) +
-            expr(s"($dampMilli * coalesce(s, cast(0 as bigint))) div 1000"))
+            expr(s"($DampMilli * coalesce(s, cast(0 as bigint))) div 1000"))
             .as("r"))
         .localCheckpoint(eager = true)
     }

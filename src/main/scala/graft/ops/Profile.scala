@@ -51,19 +51,15 @@ object Profile {
     * yesterday's ingest change shape" as a per-column report: both
     * sides run the one-pass [[profile]], join on column name, and emit
     * null-rate permilles, distinct counts, min/max equality, plus a
-    * `drifted` verdict — null-rate moved more than
-    * `nullDeltaPermille`, distinct count changed by more than
-    * `distinctRatioPermille` (relative, permille), or an extremum
+    * `drifted` verdict — null-rate moved more than 10 permille,
+    * distinct count changed by more than 100 permille (relative), or an
+    * extremum
     * changed. Both profile rows ride along so the report is
     * actionable without re-running anything. Cost: two one-pass
     * profiles + a columns-sized join — the always-on contract check
     * between a petabyte load and its predecessor reads two artifact
     * rows per column. */
-  def drift(a: DataFrame, b: DataFrame, cols: Seq[String],
-            nullDeltaPermille: Long = 10L,
-            distinctRatioPermille: Long = 100L): DataFrame = {
-    require(nullDeltaPermille >= 0L && distinctRatioPermille >= 0L,
-      "drift thresholds must be non-negative")
+  def drift(a: DataFrame, b: DataFrame, cols: Seq[String]): DataFrame = {
     val pa = profile(a, cols).select(col("col_name"),
       col("n").as("n_a"), col("n_null").as("null_a"),
       col("n_distinct").as("dist_a"), col("min_value").as("min_a"),
@@ -78,9 +74,9 @@ object Profile {
       .withColumn("min_changed", !(col("min_a") <=> col("min_b")))
       .withColumn("max_changed", !(col("max_a") <=> col("max_b")))
       .withColumn("drifted",
-        abs(col("null_pm_a") - col("null_pm_b")) > nullDeltaPermille ||
+        abs(col("null_pm_a") - col("null_pm_b")) > 10L ||
           expr("abs(dist_a - dist_b) * 1000") >
-            lit(distinctRatioPermille) * greatest(col("dist_a"), lit(1L)) ||
+            lit(100L) * greatest(col("dist_a"), lit(1L)) ||
           col("min_changed") || col("max_changed"))
       .select(col("col_name"), col("n_a"), col("n_b"),
         col("null_pm_a"), col("null_pm_b"),

@@ -132,12 +132,10 @@ object Relational {
     * when individual fields are null), so the matched row's nulls come
     * through as nulls and fields are never stitched from different right
     * rows. Right-side ties (same key, same timestamp) resolve to the row
-    * last in `tieBreak` order — by default the payload struct itself,
-    * which makes ties deterministic without a caller-supplied column.
-    * When the payload contains a non-orderable type (MapType anywhere in
-    * it), the default would fail analysis — an explicit `tieBreak` is
-    * required instead. The working columns `__ts/__side/__tie/__p` are
-    * reserved: a frame already carrying one is rejected (it would be
+    * last in payload-struct order, which makes ties deterministic without
+    * a caller-supplied column. A payload with a non-orderable type
+    * (MapType anywhere in it) fails loudly. The working columns
+    * `__ts/__side/__tie/__p` are reserved: a frame already carrying one is rejected (it would be
     * silently clobbered otherwise).
     */
   private val asofReserved = Seq("__ts", "__side", "__tie", "__p")
@@ -206,9 +204,9 @@ object Relational {
     * `valid_to` null on each key's current row — the
     * slowly-changing-dimension shape every warehouse needs before a
     * point-in-time ([[asofJoin]]) or range ([[intervalJoin]]) lookup.
-    * With `collapseUnchanged` (default), consecutive rows whose `attrs`
-    * are unchanged (null-safe struct compare) merge into one interval,
-    * so the output is the minimal history.
+    * Consecutive rows whose `attrs` are unchanged (null-safe struct
+    * compare) merge into one interval, so the output is the minimal
+    * history.
     *
     * One exchange: the collapse lag and the validity lead ride the SAME
     * `(keys, ts)` window spec, and the filter between them preserves
@@ -216,7 +214,7 @@ object Relational {
     * `(keys, ts)` rows make interval bounds ambiguous and fail loudly
     * (one cheap aggregate pass — the Graphs guard discipline). */
   def scd2(changes: DataFrame, keys: Seq[String], tsCol: String,
-           attrs: Seq[String], collapseUnchanged: Boolean = true): DataFrame = {
+           attrs: Seq[String]): DataFrame = {
     require(keys.nonEmpty, "scd2 needs at least one key column")
     require(attrs.nonEmpty, "scd2 needs at least one tracked attribute")
     val reserved = Seq("valid_from", "valid_to", "__prev")
@@ -231,21 +229,17 @@ object Relational {
         "ambiguous; dedupe the change log first (e.g. argminPerKey)")
     val w = Window.partitionBy(keys.map(col): _*).orderBy(col(tsCol))
     val aStruct = struct(attrs.map(col): _*)
-    val collapsed =
-      if (!collapseUnchanged) changes
-      else changes
-        .withColumn("__prev", lag(aStruct, 1).over(w))
-        .where(!(aStruct <=> col("__prev")))
-        .drop("__prev")
-    collapsed
+    changes
+      .withColumn("__prev", lag(aStruct, 1).over(w))
+      .where(!(aStruct <=> col("__prev")))
+      .drop("__prev")
       .withColumn("valid_from", col(tsCol))
       .withColumn("valid_to", lead(col(tsCol), 1).over(w))
       .select((keys ++ attrs ++ Seq("valid_from", "valid_to")).map(col): _*)
   }
 
   def asofJoin(left: DataFrame, right: DataFrame, keys: Seq[String],
-               leftTs: String, rightTs: String, payload: Seq[String],
-               tieBreak: Option[String] = None): DataFrame = {
+               leftTs: String, rightTs: String, payload: Seq[String]): DataFrame = {
     val leftCols = left.columns.toSeq
     require(!leftCols.exists(payload.contains),
       s"payload ${payload.mkString(",")} collides with a left column")
@@ -257,17 +251,12 @@ object Relational {
       .withColumn("__ts", col(leftTs))
       .withColumn("__side", lit(1))
     val pStruct = struct(payload.map(col): _*)
-    val tie = tieBreak.map(col).getOrElse {
-      val pType = right.select(pStruct).schema.head.dataType
-      require(orderable(pType),
-        "payload contains a non-orderable type (MapType) — the default " +
-          "tie-break (the payload struct) cannot order it; pass an explicit " +
-          "tieBreak column")
-      pStruct
-    }
+    require(orderable(right.select(pStruct).schema.head.dataType),
+      "payload contains a non-orderable type (MapType) — the tieBreak " +
+        "(the payload struct) cannot order it")
     val r = right.select(
       keys.map(col) :+ col(rightTs).as("__ts") :+ lit(0).as("__side") :+
-        tie.as("__tie") :+ pStruct.as("__p"): _*)
+        pStruct.as("__tie") :+ pStruct.as("__p"): _*)
     // left rows get null __tie/__p via unionByName; __tie only orders
     // right rows among themselves (left rows already sort after via __side)
     val unioned = l.unionByName(r, allowMissingColumns = true)
@@ -281,7 +270,7 @@ object Relational {
 
   /** Exact per-group percentile rank — the quality-calibration layer
     * (CCNet-style per-language thresholds, curriculum difficulty
-    * bands): `outCol = (# group rows with value STRICTLY below)·10⁶
+    * bands): `pct_micro = (# group rows with value STRICTLY below)·10⁶
     * div group_n` — standard `rank() − 1` semantics in truncating
     * micro fixed point, ties share a rank. The 100 TB design point is
     * the window's OPERAND: a window over the raw rows puts each whole
@@ -292,10 +281,9 @@ object Relational {
     * (group, value). Null values pass through with a null rank (they
     * have no order position, and silently ranking them first or last
     * would corrupt a threshold). */
-  def percentileRank(df: DataFrame, keys: Seq[String], valCol: String,
-                     outCol: String = "pct_micro"): DataFrame = {
-    require(!df.columns.contains(outCol),
-      s"output column $outCol already exists — pass a different outCol")
+  def percentileRank(df: DataFrame, keys: Seq[String], valCol: String): DataFrame = {
+    require(!df.columns.contains("pct_micro"),
+      "output column pct_micro already exists — rename it first")
     val k = keys.map(col)
     val hist = df.where(col(valCol).isNotNull)
       .groupBy(k :+ col(valCol): _*)
@@ -307,7 +295,7 @@ object Relational {
       .withColumn("__n", sum(col("__c"))
         .over(Window.partitionBy(k: _*)))
       .select(k :+ col(valCol) :+
-        expr("__below * 1000000 div __n").as(outCol): _*)
+        expr("__below * 1000000 div __n").as("pct_micro"): _*)
     df.join(cum, keys :+ valCol, "left")
   }
 
@@ -333,20 +321,19 @@ object Relational {
     * a double in [0, 1] (the sketch library's native criterion; the
     * exact sibling's strictly-below micro fixed point differs by one
     * value-mass at ties — band-compare against the matching inclusive
-    * exact). Normalized rank error ≤ ~1.65 % at k = 200 (the default),
+    * exact). Normalized rank error ≤ ~1.65 % (KLL k = 200),
     * but the estimate is NOT replayable: KLL compaction is randomized,
     * so gate it with a rank-band verdict (the q156 pattern), never a
     * value hash. Nulls pass through with a null rank, exactly like the
     * exact form. */
   def percentileRankApprox(df: DataFrame, keys: Seq[String], valCol: String,
-                           outCol: String = "pct_est",
-                           k: Int = 200): DataFrame = {
+                           outCol: String = "pct_est"): DataFrame = {
     require(!df.columns.contains(outCol),
       s"output column $outCol already exists — pass a different outCol")
     val v = col(valCol).cast("double")
     val sk = df.where(col(valCol).isNotNull)
       .groupBy(keys.map(col): _*)
-      .agg(kll_sketch_agg_double(v, lit(k)).as("__sk"))
+      .agg(kll_sketch_agg_double(v, lit(200)).as("__sk"))
     val joined =
       if (keys.nonEmpty) df.join(sk, keys, "left")
       else df.crossJoin(broadcast(sk))
@@ -369,14 +356,10 @@ object Relational {
     * handling only rewrites SORT-MERGE joins at stage boundaries; a
     * skewed stream-static join, a bucketed join AQE won't touch, or a
     * hot-key hash join inside a cached plan needs the explicit split.
-    * Inner and left joins (a big row without a match survives exactly
-    * once — its single salt row misses). */
+    * An inner join. */
   def saltedJoin(big: DataFrame, small: DataFrame, keys: Seq[String],
-                 salt: Int, joinType: String = "inner"): DataFrame = {
+                 salt: Int): DataFrame = {
     require(salt >= 1, s"salt must be positive: $salt")
-    require(Seq("inner", "left", "left_outer").contains(joinType),
-      s"saltedJoin supports inner/left joins, got: $joinType " +
-        "(a right/full join's unmatched SMALL rows would appear once per salt)")
     val clash = (big.columns ++ small.columns).filter(_ == "__salt").distinct
     require(clash.isEmpty,
       "column __salt collides with saltedJoin's working column — rename it")
@@ -384,6 +367,6 @@ object Relational {
       floor(rand(0) * salt).cast("int"))
     val sm = small.withColumn("__salt",
       explode(typedLit((0 until salt).toVector)))
-    b.join(sm, keys :+ "__salt", joinType).drop("__salt")
+    b.join(sm, keys :+ "__salt", "inner").drop("__salt")
   }
 }

@@ -112,10 +112,10 @@ object Sampling {
   }
 
   /** Temperature-weighted mixture under a token budget: source i gets a
-    * share of `budgetTokens` proportional to `totalTokens_i ^ alpha` (the
+    * share of `budgetTokens` proportional to `sqrt(totalTokens_i)` (the
     * size^α re-weighting used for multilingual / multi-source pretraining
-    * mixes — α < 1 upweights small sources relative to their raw size;
-    * α = 1 is proportional sampling). Each source is then kept with its
+    * mixes at α = 0.5 — upweighting small sources relative to their raw
+    * size). Each source is then kept with its
     * derived probability `min(1, share·budget / total)` via the
     * deterministic [[hashScore]] threshold, and survivors union with a
     * `source` tag. Shares can only DOWN-sample (p caps at 1); compose with
@@ -123,21 +123,18 @@ object Sampling {
     *
     * Deterministic end to end: totals are exact integer sums, weights are
     * computed driver-side in source-list order, and every keep decision is
-    * an md5 threshold — a re-run emits the identical corpus. α = 0.5 uses
-    * `sqrt` (IEEE-exact, so an external engine replays the thresholds
-    * bit-for-bit); other α use `pow`, whose last-ulp behaviour is libm-
-    * specific — fine for production, not for cross-engine replay.
+    * an md5 threshold — a re-run emits the identical corpus. `sqrt` is
+    * IEEE-exact, so an external engine replays the thresholds
+    * bit-for-bit.
     *
     * Scale shape: ONE aggregate action sizes every source (the tagged
     * union scans each source once, column-pruned to the token count), then
     * each source scans once more through its shuffle-free hash filter. */
   def temperatureMixture(sources: Seq[(String, DataFrame)], idCol: String,
-                         tokenCountCol: String, budgetTokens: Long,
-                         alpha: Double = 0.5): DataFrame = {
+                         tokenCountCol: String, budgetTokens: Long): DataFrame = {
     require(sources.nonEmpty, "temperatureMixture needs at least one source")
     require(sources.map(_._1).distinct.size == sources.size, "duplicate source names")
     require(budgetTokens > 0, s"budget must be positive: $budgetTokens")
-    require(alpha > 0.0 && alpha <= 1.0, s"alpha out of (0, 1]: $alpha")
     val tagged = sources.map { case (name, df) =>
       df.select(lit(name).as("__src"),
         coalesce(col(tokenCountCol).cast("long"), lit(0L)).as("__n"))
@@ -146,11 +143,9 @@ object Sampling {
       .collect()
       .map(r => r.getString(0) -> (if (r.isNullAt(1)) 0L else r.getLong(1)))
       .toMap
-    def weight(x: Double): Double =
-      if (alpha == 0.5) math.sqrt(x) else math.pow(x, alpha)
     // weight sum folds in SOURCE-LIST order (replayable externally)
     val weights = sources.map { case (name, _) =>
-      weight(totals.getOrElse(name, 0L).toDouble)
+      math.sqrt(totals.getOrElse(name, 0L).toDouble)
     }
     val wSum = weights.sum
     sources.zip(weights).map { case ((name, df), w) =>
@@ -324,9 +319,9 @@ object Sampling {
     *    never a single-partition window, so even the fallback path
     *    parallelizes across the cluster.
     *  - A cheap aggregate additionally sizes a hash-prefix pre-filter at
-    *    `safety × budget / total` — because the kept set IS a hash-prefix,
+    *    `2 × budget / total` — because the kept set IS a hash-prefix,
     *    any prefix whose token total reaches the budget contains the
-    *    entire answer, so the exact pass runs over ~`safety × budget`
+    *    entire answer, so the exact pass runs over ~`2 × budget`
     *    tokens of survivors instead of shuffling the whole corpus.
     *    If the pre-filter under-fills (pathological length/hash
     *    correlation), it falls back to the exact pass over everything —
@@ -336,8 +331,7 @@ object Sampling {
     * silently dropping it would lose data); null ids (null hash) sort
     * last — their own bucket above every hex bucket. */
   def tokenBudgetSample(df: DataFrame, idCol: String, tokenCountCol: String,
-                        budget: Long, safety: Double = 2.0): DataFrame = {
-    require(safety >= 1.0, s"safety factor must be >= 1: $safety")
+                        budget: Long): DataFrame = {
     // an unbounded budget keeps everything — return before the sizing
     // aggregate so "no budget" costs zero driver actions
     if (budget == Long.MaxValue) return df
@@ -385,7 +379,7 @@ object Sampling {
     val totals = bucketTotals(df)
     val total = totals.map(_._2).sum
     if (total <= budget) return df // whole corpus fits — no prefix sum needed
-    val p = safety * budget.toDouble / total
+    val p = 2.0 * budget.toDouble / total
     if (p >= 1.0) return exactPass(df, totals)
     val survivors = df.where(hashScore(col(idCol)) < lit(hexThreshold(p)))
     // the budget-crossing doc is inside the prefix iff the prefix's token
@@ -409,21 +403,19 @@ object Sampling {
     *     absorbs hot keys; the join-back is AQE-skew-splittable).
     *  2. Keys with ≤ n rows are kept outright — no window at all. Under
     *     Zipf that is almost every key.
-    *  3. Oversize keys pre-filter to `hashScore < safety·n/count` — the
+    *  3. Oversize keys pre-filter to `hashScore < 4·n/count` — the
     *     kept set is a hash-prefix per key, and any per-key prefix with
     *     ≥ n survivors provably contains that key's exact answer (every
     *     non-survivor hashes above every survivor).
-    *  4. The ranking window runs over ~safety·n rows per key — bounded by
+    *  4. The ranking window runs over ~4·n rows per key — bounded by
     *     the cap, not the key's corpus share. Keys whose prefix
     *     under-filled (hash clustering; P ≈ e^{-Θ(n)} per key) fall back
     *     to their full row set, so the result is identical in every case.
     *
     * Null keys form one group like any SQL PARTITION BY; null ids sort
     * last (never displace a hashable row). */
-  def perKeyCap(df: DataFrame, keyCol: String, idCol: String, n: Int,
-                safety: Double = 4.0): DataFrame = {
+  def perKeyCap(df: DataFrame, keyCol: String, idCol: String, n: Int): DataFrame = {
     require(n > 0, s"cap must be positive: $n")
-    require(safety >= 1.0, s"safety factor must be >= 1: $safety")
     val reserved = Seq("__k", "__cnt", "__ok", "__scnt", "__rn")
     require(!df.columns.exists(reserved.contains),
       s"input reserves column names ${reserved.mkString(", ")}")
@@ -433,9 +425,9 @@ object Sampling {
     val joined = df.join(counts, key <=> col("__k"), "left")
     val small = joined.where(col("__cnt") <= n)
     val big = joined.where(col("__cnt") > n)
-    // per-row threshold: round(min(1, safety*n/cnt) * 2^32) as 8-digit hex
+    // per-row threshold: round(min(1, 4n/cnt) * 2^32) as 8-digit hex
     // (the expression form of hexThreshold — same rounding, same clamp)
-    val p = least(lit(1.0), lit(safety * n) / col("__cnt").cast("double"))
+    val p = least(lit(1.0), lit(4.0 * n) / col("__cnt").cast("double"))
     val thr = lpad(lower(hex(least(round(p * lit(4294967296.0)).cast("long"),
       lit(4294967295L)))), 8, "0")
     val surv = big.where(p >= 1.0 || hashScore(col(idCol)) < thr)
@@ -480,7 +472,7 @@ object Sampling {
     * lands in the SAME split — the eval-hygiene property a per-doc split
     * lacks (a near-duplicate of a training document assigned to the test
     * split leaks exactly the contamination the pipeline's dedup pass
-    * exists to remove). `pairs` is any near-dup pair list the dedup stage
+    * exists to remove). `pairs` is any `(id_a, id_b)` near-dup pair list the dedup stage
     * already produced (MinHash/SimHash/embedding/containment — the
     * operator is agnostic); docs in no pair form singleton clusters keyed
     * by their own id, so with empty `pairs` this degrades to [[hashSplit]]
@@ -494,8 +486,7 @@ object Sampling {
     * growth-stable: adding documents never migrates an existing cluster
     * between splits. */
   def clusterSplit(docs: DataFrame, idCol: String, pairs: DataFrame,
-                   fractions: Seq[(String, Double)],
-                   aCol: String = "id_a", bCol: String = "id_b"): DataFrame = {
+                   fractions: Seq[(String, Double)]): DataFrame = {
     // `cluster` and `split` are the OUTPUT columns; `component` and
     // `keep` are claimed in flight by dedupeByPairs. Fail loudly rather
     // than silently overwrite or emit an ambiguous reference downstream.
@@ -505,7 +496,7 @@ object Sampling {
       s"clusterSplit reserves output/intermediate column names " +
         s"${reserved.mkString(", ")}; input already has ${clashes.mkString(", ")}")
     val labeled = graft.dedup.Dedup
-      .dedupeByPairs(docs, idCol, pairs, aCol, bCol)
+      .dedupeByPairs(docs, idCol, pairs)
       .drop("keep")
       .withColumnRenamed("component", "cluster")
     hashSplit(labeled, "cluster", fractions)

@@ -48,36 +48,29 @@ object Timeseries {
     * `(key, bucket, n, ewma_prev, spike)` where `ewma_prev` is the
     * integer EWMA of STRICTLY EARLIER buckets (null for each key's
     * first bucket — no history, no verdict) and
-    * `spike = n > spikeFactor · ewma_prev`. Judging against the prior
+    * `spike = n > 3 · ewma_prev`. Judging against the prior
     * smoothed level (not one including the current bucket) is what
     * makes a genuine spike flaggable at all — folding the spike into
     * its own baseline would mask it. */
   def ewmaAnomalies(counts: DataFrame, keyCol: String, bucketCol: String,
-                    nCol: String, spikeFactor: Long = 3L): DataFrame = {
-    require(spikeFactor >= 1L, s"spikeFactor must be >= 1: $spikeFactor")
+                    nCol: String): DataFrame =
     ewmaFolded(counts, keyCol, bucketCol, nCol)
       .select(col(keyCol), col("bucket"), col("n"), col("ewma_prev"),
-        (col("n") > lit(spikeFactor) * col("ewma_prev")).as("spike"))
-  }
+        (col("n") > lit(3L) * col("ewma_prev")).as("spike"))
 
   /** [[ewmaAnomalies]] with BOTH verdicts — the monitor shape: `spike =
-    * n > spikeFactor · ewma_prev` and `dip = n < ewma_prev div
-    * dipFactor` (integer floor of the prior level — a traffic COLLAPSE,
+    * n > 3 · ewma_prev` and `dip = n < ewma_prev div 3` (integer floor
+    * of the prior level — a traffic COLLAPSE,
     * the outage signal). A key that vanishes entirely emits nothing at
     * all under observed-only gaps: compose with [[zeroFill]] upstream
     * so silent buckets arrive as `n = 0` and can flag. Both verdicts
     * are null for each key's first bucket (no history). */
   def ewmaAnomaliesSigned(counts: DataFrame, keyCol: String,
-                          bucketCol: String, nCol: String,
-                          spikeFactor: Long = 3L,
-                          dipFactor: Long = 3L): DataFrame = {
-    require(spikeFactor >= 1L, s"spikeFactor must be >= 1: $spikeFactor")
-    require(dipFactor >= 1L, s"dipFactor must be >= 1: $dipFactor")
+                          bucketCol: String, nCol: String): DataFrame =
     ewmaFolded(counts, keyCol, bucketCol, nCol)
       .select(col(keyCol), col("bucket"), col("n"), col("ewma_prev"),
-        (col("n") > lit(spikeFactor) * col("ewma_prev")).as("spike"),
-        (col("n") < expr(s"ewma_prev div ${dipFactor}L")).as("dip"))
-  }
+        (col("n") > lit(3L) * col("ewma_prev")).as("spike"),
+        (col("n") < expr("ewma_prev div 3L")).as("dip"))
 
   /** The shared integer fold: one aggregate per key over its sorted
     * bucket series, emitting each element with the PRIOR smoothed
@@ -123,16 +116,15 @@ object Timeseries {
     * Returns `(key, bucket, n, forecast_prev, anom)`: `forecast_prev`
     * is the forecast made from STRICTLY EARLIER buckets (null for each
     * key's first — no history, no verdict, the [[ewmaAnomalies]]
-    * convention) and `anom = |n − f|·10 > factorDeci · max(|f|, 1)` —
-    * deviation beyond `factorDeci/10` times the forecast magnitude
+    * convention) and `anom = |n − f|·10 > 20 · max(|f|, 1)` —
+    * deviation beyond twice the forecast magnitude
     * (the max(…,1) floor keeps a zero forecast from flagging every
     * nonzero bucket vacuously). Same collect-and-fold shape as the
     * EWMA: one aggregate per key, task state = the key's bucket series
     * (days, not events), no window functions. Compose with [[zeroFill]]
     * for outage semantics, exactly as with [[ewmaAnomaliesSigned]]. */
   def holtAnomalies(counts: DataFrame, keyCol: String, bucketCol: String,
-                    nCol: String, factorDeci: Long = 20L): DataFrame = {
-    require(factorDeci >= 1L, s"factorDeci must be >= 1: $factorDeci")
+                    nCol: String): DataFrame = {
     val series = counts.groupBy(col(keyCol))
       .agg(array_sort(collect_list(struct(
         col(bucketCol).cast("long").as("bucket"),
@@ -158,7 +150,7 @@ object Timeseries {
       .select(col(keyCol), col("__e.bucket").as("bucket"),
         col("__e.n").as("n"), col("__e.f").as("forecast_prev"),
         (abs(col("__e.n") - col("__e.f")) * lit(10L) >
-          lit(factorDeci) * greatest(abs(col("__e.f")), lit(1L))).as("anom"))
+          lit(20L) * greatest(abs(col("__e.f")), lit(1L))).as("anom"))
   }
 
   /** Fill each key's ABSENT buckets with `n = 0` between its first and
@@ -195,13 +187,12 @@ object Timeseries {
     * ([[graft.streaming.StreamingViews.streamingBucketQuantileSketches]])
     * seals the same artifact live. */
   def bucketQuantileSketches(events: DataFrame, valueCol: String,
-                             tsCol: String, bucketNanos: Long,
-                             kllK: Int = 200): DataFrame =
+                             tsCol: String, bucketNanos: Long): DataFrame =
     events
       .select(col(valueCol).cast("double").as("__v"),
         floorDivExpr(tsCol, bucketNanos).as("bucket"))
       .groupBy(col("bucket"))
-      .agg(kll_sketch_agg_double(col("__v"), lit(kllK)).as("sketch"))
+      .agg(kll_sketch_agg_double(col("__v"), lit(200)).as("sketch"))
 
   /** A per-bucket artifact table (`bucketCol`, `sketchCol`) fanned out
     * to its rolling windows as `(__sk, bucket)` — [[Funnel.windowFanOut]]. */
@@ -218,13 +209,13 @@ object Timeseries {
     * every window end up to the newest bucket. */
   def rollingQuantileFromSketches(sketches: DataFrame, bucketCol: String,
                                   sketchCol: String, windowBuckets: Int,
-                                  q: Double, kllK: Int = 200): DataFrame = {
+                                  q: Double): DataFrame = {
     require(windowBuckets >= 1, "window must span at least one bucket")
     require(q > 0.0 && q < 1.0, s"quantile must be in (0, 1): $q")
     sketchWindows(sketches, bucketCol, sketchCol, windowBuckets)
       .groupBy(col("bucket"))
       .agg(kll_sketch_get_quantile_double(
-        kll_merge_agg_double(col("__sk"), lit(kllK)), lit(q))
+        kll_merge_agg_double(col("__sk"), lit(200)), lit(q))
         .as("quantile_est"))
   }
 
@@ -242,11 +233,10 @@ object Timeseries {
     * q142/q63 bounded-anchor pattern), never the raw estimate. */
   def rollingQuantileSketch(events: DataFrame, valueCol: String,
                             tsCol: String, bucketNanos: Long,
-                            windowBuckets: Int, q: Double,
-                            kllK: Int = 200): DataFrame =
+                            windowBuckets: Int, q: Double): DataFrame =
     rollingQuantileFromSketches(
-      bucketQuantileSketches(events, valueCol, tsCol, bucketNanos, kllK),
-      "bucket", "sketch", windowBuckets, q, kllK)
+      bucketQuantileSketches(events, valueCol, tsCol, bucketNanos),
+      "bucket", "sketch", windowBuckets, q)
 
   /** One mergeable count-min sketch per bucket: `(bucket, sketch,
     * n_tokens)` — the persistable FREQUENCY artifact (the

@@ -69,10 +69,10 @@ object Ivf {
     * dataset + seed). k-means++ seeding, Lloyd's to `maxIter`; empty cells
     * keep their previous centroid. */
   def train(embeddings: DataFrame, vecCol: String, idCol: String, nCells: Int,
-            seed: Long = 42L, maxIter: Int = 20, trainSample: Int = 4096): IvfModel = {
+            seed: Long = 42L, maxIter: Int = 20): IvfModel = {
     val pts = embeddings
       .orderBy(xxhash64(col(idCol), lit(seed)), col(idCol))
-      .limit(trainSample)
+      .limit(4096)
       .select(col(vecCol)).collect()
       .map(_.getSeq[Float](0).map(_.toDouble).toArray)
     require(pts.nonEmpty, "cannot train IVF on an empty dataset")
@@ -196,10 +196,9 @@ object Ivf {
   }
 
   /** Train + assign in one call. */
-  def build(embeddings: DataFrame, vecCol: String, idCol: String, nCells: Int,
-            seed: Long = 42L, maxIter: Int = 20,
-            trainSample: Int = 4096): (IvfModel, DataFrame) = {
-    val model = train(embeddings, vecCol, idCol, nCells, seed, maxIter, trainSample)
+  def build(embeddings: DataFrame, vecCol: String, idCol: String,
+            nCells: Int): (IvfModel, DataFrame) = {
+    val model = train(embeddings, vecCol, idCol, nCells)
     (model, assign(embeddings, vecCol, model))
   }
 

@@ -121,34 +121,31 @@ object Pq {
     else centroids
   }
 
-  /** Train per-subspace codebooks on a hash-ordered sample (deterministic
-    * for a given dataset + seed). `dim` must divide by `m`. */
+  /** Train per-subspace codebooks on a 4096-row hash-ordered sample
+    * (seed 42, 20 Lloyd iterations — deterministic for a given dataset).
+    * `dim` must divide by `m`. */
   def train(embeddings: DataFrame, vecCol: String, idCol: String, dim: Int,
-            m: Int = 8, k: Int = 16, seed: Long = 42L, maxIter: Int = 20,
-            trainSample: Int = 4096, normalize: Boolean = true): PqModel = {
+            m: Int = 8, k: Int = 16): PqModel = {
     require(m > 0 && dim % m == 0, s"dim $dim must divide into m=$m subspaces")
     val dsub = dim / m
     val raw = embeddings
-      .orderBy(xxhash64(col(idCol), lit(seed)), col(idCol))
-      .limit(trainSample)
+      .orderBy(xxhash64(col(idCol), lit(42L)), col(idCol))
+      .limit(4096)
       .select(col(vecCol)).collect()
       .map(_.getSeq[Float](0).map(_.toDouble).toArray)
     require(raw.nonEmpty, "cannot train PQ on an empty dataset")
     val pts = raw.map { p0 =>
       val p = if (p0.length >= dim) p0 else p0 ++ new Array[Double](dim - p0.length)
-      if (!normalize) p
-      else {
-        var acc = 0.0; var i = 0
-        while (i < dim) { acc += p(i) * p(i); i += 1 }
-        val inv = if (acc > 0) 1.0 / math.sqrt(acc) else 1.0
-        p.map(_ * inv)
-      }
+      var acc = 0.0; var i = 0
+      while (i < dim) { acc += p(i) * p(i); i += 1 }
+      val inv = if (acc > 0) 1.0 / math.sqrt(acc) else 1.0
+      p.map(_ * inv)
     }
     val books = new Array[Double](m * k * dsub)
     var s = 0
     while (s < m) {
       val sub = pts.map(p => java.util.Arrays.copyOfRange(p, s * dsub, (s + 1) * dsub))
-      val cents = kmeans(sub, k, seed + s, maxIter)
+      val cents = kmeans(sub, k, 42L + s, 20)
       var c = 0
       while (c < k) {
         System.arraycopy(cents(c), 0, books, (s * k + c) * dsub, dsub)
@@ -156,7 +153,7 @@ object Pq {
       }
       s += 1
     }
-    PqModel(dim, m, k, books, normalize)
+    PqModel(dim, m, k, books, normalized = true)
   }
 
   /** PQ code column (`array<int>`, one codegen pass). */
@@ -172,9 +169,8 @@ object Pq {
 
   /** Train + encode in one call. */
   def build(embeddings: DataFrame, vecCol: String, idCol: String, dim: Int,
-            m: Int = 8, k: Int = 16, seed: Long = 42L, maxIter: Int = 20,
-            trainSample: Int = 4096): (PqModel, DataFrame) = {
-    val model = train(embeddings, vecCol, idCol, dim, m, k, seed, maxIter, trainSample)
+            m: Int = 8, k: Int = 16): (PqModel, DataFrame) = {
+    val model = train(embeddings, vecCol, idCol, dim, m, k)
     (model, encode(embeddings, vecCol, model))
   }
 
@@ -217,9 +213,9 @@ object Pq {
     * approximate (quantized corpus side); use [[topKRefined]] when exact
     * ranking matters. */
   def topK(encoded: DataFrame, model: PqModel, idCol: String,
-           query: Seq[Float], k: Int, codesCol: String = "pq_codes"): DataFrame =
+           query: Seq[Float], k: Int): DataFrame =
     encoded
-      .select(col(idCol), adcScore(col(codesCol), query, model).as("adc"))
+      .select(col(idCol), adcScore(col("pq_codes"), query, model).as("adc"))
       .orderBy(col("adc").desc, col(idCol))
       .limit(k)
 
@@ -231,10 +227,9 @@ object Pq {
     * and the result EQUALS exact brute-force top-k — the derived-oracle
     * anchor for the whole encode→ADC→rerank path. */
   def topKRefined(encoded: DataFrame, model: PqModel, vecCol: String,
-                  idCol: String, query: Seq[Float], k: Int, shortlist: Int,
-                  codesCol: String = "pq_codes"): DataFrame =
+                  idCol: String, query: Seq[Float], k: Int, shortlist: Int): DataFrame =
     topKRefinedSplit(encoded, encoded, model, vecCol, idCol, query, k,
-      shortlist, codesCol)
+      shortlist)
 
   /** [[topKRefined]] with the code table and the raw-vector store as
     * SEPARATE frames — the persisted production layout: `codes` is the
@@ -244,10 +239,9 @@ object Pq {
     * touch the 100 TB vectors for ~4·k rows" topology. */
   def topKRefinedSplit(codes: DataFrame, vectors: DataFrame, model: PqModel,
                        vecCol: String, idCol: String, query: Seq[Float],
-                       k: Int, shortlist: Int,
-                       codesCol: String = "pq_codes"): DataFrame = {
+                       k: Int, shortlist: Int): DataFrame = {
     require(shortlist >= k, s"shortlist $shortlist must be >= k=$k")
-    val cand = topK(codes, model, idCol, query, shortlist, codesCol)
+    val cand = topK(codes, model, idCol, query, shortlist)
       .select(col(idCol))
     val q = array(query.map(lit): _*)
     vectors.join(broadcast(cand), idCol)
@@ -263,9 +257,9 @@ object Pq {
     * IndexIVFPQ topology on parquet. */
   def topKCells(assignedEncoded: DataFrame, ivfModel: Ivf.IvfModel,
                 model: PqModel, idCol: String, query: Seq[Float], k: Int,
-                nProbe: Int = 4, codesCol: String = "pq_codes"): DataFrame = {
+                nProbe: Int = 4): DataFrame = {
     val cells = Ivf.probeCells(ivfModel, query, nProbe)
     topK(assignedEncoded.where(col("ivf_cell").isin(cells: _*)),
-      model, idCol, query, k, codesCol)
+      model, idCol, query, k)
   }
 }

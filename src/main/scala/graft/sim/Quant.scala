@@ -32,15 +32,13 @@ import graft.functions.VectorExpressions.{int8Codes, int8Dot, int8QueryDot, int8
   */
 object Quant {
 
-  /** Add `scaleCol` (double) and `codesCol` (array<tinyint>) next to
+  /** Add `q8_scale` (double) and `q8` (array<tinyint>) next to
     * `vecCol`. Null vectors get null scale/codes (null-safe expressions);
     * the all-zero vector gets scale 0 and all-zero codes. */
-  def quantizeInt8(vecs: DataFrame, vecCol: String,
-                   scaleCol: String = "q8_scale",
-                   codesCol: String = "q8"): DataFrame =
+  def quantizeInt8(vecs: DataFrame, vecCol: String): DataFrame =
     vecs
-      .withColumn(scaleCol, int8Scale(col(vecCol)))
-      .withColumn(codesCol, int8Codes(col(vecCol), col(scaleCol)))
+      .withColumn("q8_scale", int8Scale(col(vecCol)))
+      .withColumn("q8", int8Codes(col(vecCol), col("q8_scale")))
 
   /** Driver-side mirror of [[quantizeInt8]]'s arithmetic for a single
     * query vector — same widening, same half-away-from-zero rounding,
@@ -79,7 +77,7 @@ object Quant {
     * are `array<tinyint>` codes, not floats, so the pairwise join moves
     * a quarter of the data for the same candidate set. Same salted
     * shuffle-hash-join shape (left side salted + hinted as the build
-    * map, right side replicated across `saltBuckets`; every (a, b) pair
+    * map, right side replicated across 8 salt values; every (a, b) pair
     * meets exactly once at a's salt); the kernel is the exact integer
     * dot over code norms, so scores replay bit-for-bit in SQL. Zero
     * vectors (scale 0) are excluded — quantized cosine is undefined.
@@ -87,16 +85,15 @@ object Quant {
     * `threshold`. Precision/recall vs the float kernel is bounded by
     * the per-element quantization error (asserted in QuantSpec). */
   def cosinePairsInt8(embeddings: DataFrame, vecCol: String, idCol: String,
-                      blockCol: String, threshold: Double,
-                      saltBuckets: Int = 8): DataFrame = {
+                      blockCol: String, threshold: Double): DataFrame = {
     val q = quantizeInt8(embeddings, vecCol)
       .where(col("q8_scale") > 0)
       .select(col(blockCol).as("blk"), col(idCol), col("q8").as("v"),
         sqrt(int8Dot(col("q8"), col("q8")).cast("double")).as("nrm"))
     val l = q.toDF("blk", "id_a", "v_a", "n_a")
-      .withColumn("salt", pmod(xxhash64(col("id_a")), lit(saltBuckets)))
+      .withColumn("salt", pmod(xxhash64(col("id_a")), lit(8)))
     val r = q.toDF("blk", "id_b", "v_b", "n_b")
-      .withColumn("salt", explode(array((0 until saltBuckets).map(lit): _*)))
+      .withColumn("salt", explode(array((0 until 8).map(lit): _*)))
     l.hint("shuffle_hash").join(r, Seq("blk", "salt"))
       .where(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),

@@ -20,6 +20,10 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
+  /** Salt values of every salted shuffle-hash join here: a hot block or
+    * probe stream splits this many ways. */
+  private val SaltBuckets = 8
+
   /** Sequential dot product of two float arrays (double accumulate) — the
     * native codegen expression; same left-to-right fold as the HOF form
     * (`aggregate(zip_with(...))`), ~100× faster in pair joins. */
@@ -108,13 +112,13 @@ object Similarity {
     * stays one narrow scan pass (`sig IN (...)` on a computed column; with
     * a pre-materialized signature column it becomes a pushed-down IN). */
   def annTopK(embeddings: DataFrame, vecCol: String, idCol: String,
-              query: Seq[Float], k: Int, numPlanes: Int = 8, seed: Long = 42L,
+              query: Seq[Float], k: Int, numPlanes: Int = 8,
               probes: Int = 1): DataFrame = {
     val dim = query.size
-    val sigs = probeSignatures(query, numPlanes, probes, seed)
+    val sigs = probeSignatures(query, numPlanes, probes, 42L)
     val q = array(query.map(lit): _*)
     embeddings
-      .withColumn("sig", hyperplaneSignature(col(vecCol), dim, numPlanes, seed))
+      .withColumn("sig", hyperplaneSignature(col(vecCol), dim, numPlanes, 42L))
       .where(col("sig").isin(sigs: _*))
       .select(col(idCol), cosine(col(vecCol), q).as("cos"))
       .orderBy(col("cos").desc, col(idCol))
@@ -133,20 +137,20 @@ object Similarity {
     * broadcast of the embedding table (which dies at corpus scale). Block
     * cardinality can be far below the cluster's core count (e.g. 10
     * labels), so the left side is salted by `xxhash64(id)` and the right
-    * side replicated across the `saltBuckets` salt values: each (a, b)
-    * pair meets exactly once (at a's salt), parallelism rises `saltBuckets`
+    * side replicated across the 8 salt values: each (a, b)
+    * pair meets exactly once (at a's salt), parallelism rises 8
     * × block-count, and skewed blocks are split the same way AQE's
     * skew-join duplication would split them, but deterministically. */
   def cosinePairs(embeddings: DataFrame, vecCol: String, idCol: String,
-                  blockCol: String, threshold: Double, saltBuckets: Int = 8): DataFrame = {
+                  blockCol: String, threshold: Double): DataFrame = {
     val withNorm = embeddings.select(col(blockCol).as("blk"), col(idCol),
       col(vecCol).as("v"), norm(col(vecCol)).as("nrm"))
     val l = withNorm.toDF("blk", "id_a", "v_a", "n_a")
-      .withColumn("salt", pmod(xxhash64(col("id_a")), lit(saltBuckets)))
+      .withColumn("salt", pmod(xxhash64(col("id_a")), lit(SaltBuckets)))
     val r = withNorm.toDF("blk", "id_b", "v_b", "n_b")
-      .withColumn("salt", explode(array((0 until saltBuckets).map(lit): _*)))
+      .withColumn("salt", explode(array((0 until SaltBuckets).map(lit): _*)))
     // The hint goes on the LEFT (salted) side so IT becomes the hash-BUILD
-    // side: each (blk, salt) task's in-memory map holds only ~1/saltBuckets
+    // side: each (blk, salt) task's in-memory map holds only ~1/8
     // of the block, while the replicated right side streams through as the
     // probe. Hinting the right side would build the map over the FULL block
     // per task — inverting the memory win the salting buys (SHJ build maps
@@ -164,26 +168,25 @@ object Similarity {
     * accumulated corpus without re-pairing the corpus against itself.
     *
     * Orientation is sized for `right` ≫ `left` (history vs batch): the
-    * HUGE right side takes ONE salt per row (`hash(id) % buckets`) and
+    * HUGE right side takes ONE salt per row (`hash(id) % 8`) and
     * STREAMS through the join exactly once — never replicated, never
     * broadcast, never self-joined — while the (small-by-contract) LEFT
     * side replicates across all salt values and, via the shuffle-hash
     * hint, becomes the per-task build map (one block's worth of batch
     * rows — batch-bounded memory, the size contract that licenses SHJ's
     * unspillable build). The salt here splits each block's PROBE stream
-    * `saltBuckets` ways, so a hot cell gets that much task parallelism
+    * 8 ways, so a hot cell gets that much task parallelism
     * instead of one straggler. Norms are computed once per vector before
     * the join; id spaces may overlap (pairs are (left id, right id),
     * both orders meaningful to the caller). */
   def cosineJoin(left: DataFrame, right: DataFrame, vecCol: String,
-                 idCol: String, blockCol: String, threshold: Double,
-                 saltBuckets: Int = 8): DataFrame = {
+                 idCol: String, blockCol: String, threshold: Double): DataFrame = {
     val l = left.select(col(blockCol).as("blk"), col(idCol).as("id_l"),
         col(vecCol).as("v_l"), norm(col(vecCol)).as("n_l"))
-      .withColumn("salt", explode(array((0 until saltBuckets).map(lit): _*)))
+      .withColumn("salt", explode(array((0 until SaltBuckets).map(lit): _*)))
     val r = right.select(col(blockCol).as("blk"), col(idCol).as("id_r"),
         col(vecCol).as("v_r"), norm(col(vecCol)).as("n_r"))
-      .withColumn("salt", pmod(xxhash64(col("id_r")), lit(saltBuckets)))
+      .withColumn("salt", pmod(xxhash64(col("id_r")), lit(SaltBuckets)))
     l.hint("shuffle_hash").join(r, Seq("blk", "salt"))
       .select(col("id_l"), col("id_r"),
         (dot(col("v_l"), col("v_r")) / (col("n_l") * col("n_r"))).as("cos"))
@@ -201,25 +204,23 @@ object Similarity {
     *
     * Exhaustive by design — an audit must not miss a leak to banding
     * recall, and probe sets are benchmark-sized (10³–10⁵), not
-    * corpus-sized. Shape: the probe side fans out over `saltBuckets`,
+    * corpus-sized. Shape: the probe side fans out over 8 salt values,
     * the corpus salts by id hash, and the shuffle-hash equi-join on
     * salt streams every (probe, corpus) cosine straight into a
     * partial-aggregable per-probe max/count — P·N cosines flow through
     * the aggregate but only P rows ever materialize, and the hot probe
-    * rows split across `saltBuckets` tasks (the [[cosineJoin]]
+    * rows split across 8 tasks (the [[cosineJoin]]
     * discipline; never a cartesian operator). For probe sets too big
     * for brute force use [[semanticContaminationLsh]] — the
     * [[cosinePairsLsh]]-shortlist composition of exactly this screen. */
   def semanticContamination(probe: DataFrame, corpus: DataFrame,
-                            vecCol: String, idCol: String, threshold: Double,
-                            saltBuckets: Int = 8): DataFrame = {
-    require(saltBuckets >= 1, s"saltBuckets must be positive: $saltBuckets")
+                            vecCol: String, idCol: String, threshold: Double): DataFrame = {
     val p = probe.select(col(idCol).as("probe_id"), col(vecCol).as("v_p"),
         norm(col(vecCol)).as("n_p"))
-      .withColumn("salt", explode(array((0 until saltBuckets).map(lit): _*)))
+      .withColumn("salt", explode(array((0 until SaltBuckets).map(lit): _*)))
     val c = corpus.select(col(idCol).as("corpus_id"), col(vecCol).as("v_c"),
         norm(col(vecCol)).as("n_c"))
-      .withColumn("salt", pmod(xxhash64(col("corpus_id")), lit(saltBuckets)))
+      .withColumn("salt", pmod(xxhash64(col("corpus_id")), lit(SaltBuckets)))
     p.hint("shuffle_hash").join(c, Seq("salt"))
       .select(col("probe_id"), col("corpus_id"),
         (dot(col("v_p"), col("v_c")) / (col("n_p") * col("n_c"))).as("cos"))
@@ -247,9 +248,9 @@ object Similarity {
     * Semantics vs the exhaustive screen: PRECISION is exact (every
     * flagged pair was verified with exact cosine), `n_over` and the
     * verdict have banding RECALL — a contaminated probe is missed only
-    * if EVERY over-threshold pair of it misses all `bands` bands
-    * (per-pair miss (1−(1−θ/π)^planesPerBand)^bands; raise `bands` to
-    * push it down). `best_id`/`best_cos` are exact for the pairs found.
+    * if EVERY over-threshold pair of it misses all 16 bands of 4 planes
+    * (per-pair miss (1−(1−θ/π)^4)^16).
+    * `best_id`/`best_cos` are exact for the pairs found.
     * Probe and corpus id spaces MAY overlap: the banding runs over
     * their union keyed by a composite (side, id) struct, so a corpus
     * doc sharing an id with a probe is still its own row — never
@@ -261,10 +262,7 @@ object Similarity {
     * stream over P·|shortlist| ≪ P·N. */
   def semanticContaminationLsh(probe: DataFrame, corpus: DataFrame,
                                vecCol: String, idCol: String,
-                               threshold: Double, dim: Int,
-                               bands: Int = 16, planesPerBand: Int = 4,
-                               seed: Long = 42L,
-                               saltBuckets: Int = 8): DataFrame = {
+                               threshold: Double, dim: Int): DataFrame = {
     val p = probe.select(col(idCol), col(vecCol))
     val c = corpus.select(col(idCol), col(vecCol))
     // composite banding key: (side, id) — orderable, and keeps a corpus
@@ -273,7 +271,7 @@ object Similarity {
       struct(lit(side).as("s"), col(idCol).as("i")).as("__sid"),
       col(vecCol))
     val pairs = cosinePairsLsh(sided(p, 0).unionByName(sided(c, 1)),
-      vecCol, "__sid", threshold, dim, bands, planesPerBand, seed)
+      vecCol, "__sid", threshold, dim, bands = 16, planesPerBand = 4)
     // corpus members of probe↔corpus candidate pairs; side 0 (probe)
     // always orders before side 1 (corpus) in the id_a < id_b pair
     val shortlist = pairs
@@ -281,7 +279,7 @@ object Similarity {
       .select(col("id_b.i").as(idCol)).distinct()
     val screened = semanticContamination(p,
       c.join(shortlist, Seq(idCol), "left_semi"),
-      vecCol, idCol, threshold, saltBuckets)
+      vecCol, idCol, threshold)
     p.select(col(idCol).as("probe_id")).distinct()
       .join(screened, Seq("probe_id"), "left")
       .select(col("probe_id"), col("best_id"), col("best_cos"),
@@ -303,10 +301,10 @@ object Similarity {
     * pair set back to the normed vectors by id. */
   def cosinePairsLsh(embeddings: DataFrame, vecCol: String, idCol: String,
                      threshold: Double, dim: Int, bands: Int = 8,
-                     planesPerBand: Int = 8, seed: Long = 42L): DataFrame = {
+                     planesPerBand: Int = 8): DataFrame = {
     // all bands' signatures in ONE expression pass (band b keeps its own
     // seeded family, identical to composing per-band signatures)
-    val allPlanes = (0 until bands).flatMap(b => planeFamily(dim, planesPerBand, seed + b))
+    val allPlanes = (0 until bands).flatMap(b => planeFamily(dim, planesPerBand, 42L + b))
     val sigs = graft.functions.VectorExpressions.hyperplaneSigs(
       col(vecCol), allPlanes, planesPerBand, dim)
     val banded = embeddings.select(col(idCol),
@@ -352,10 +350,9 @@ object Similarity {
     * pairwise work but more boundary misses (near-dups straddling a cell
     * boundary are not compared — the SemDeDup trade). */
   def semanticDedup(embeddings: DataFrame, vecCol: String, idCol: String,
-                    model: Ivf.IvfModel, threshold: Double,
-                    saltBuckets: Int = 8): DataFrame = {
+                    model: Ivf.IvfModel, threshold: Double): DataFrame = {
     val assigned = Ivf.assign(embeddings, vecCol, model)
-    val pairs = cosinePairs(assigned, vecCol, idCol, "ivf_cell", threshold, saltBuckets)
+    val pairs = cosinePairs(assigned, vecCol, idCol, "ivf_cell", threshold)
     graft.dedup.Dedup.dedupeByPairs(assigned, idCol, pairs)
   }
 
@@ -383,11 +380,10 @@ object Similarity {
     * straddling a cell boundary are not compared. */
   def semanticDedupIncremental(batch: DataFrame, history: DataFrame,
                                vecCol: String, idCol: String,
-                               model: Ivf.IvfModel, threshold: Double,
-                               saltBuckets: Int = 8): DataFrame =
+                               model: Ivf.IvfModel, threshold: Double): DataFrame =
     semanticDedupIncrementalAssigned(batch,
       Ivf.assign(history.select(col(idCol), col(vecCol)), vecCol, model),
-      vecCol, idCol, model, threshold, saltBuckets)
+      vecCol, idCol, model, threshold)
 
   /** [[semanticDedupIncremental]] with a PRE-ASSIGNED history — rows of
     * (idCol, vecCol, ivf_cell) as persisted by
@@ -401,19 +397,18 @@ object Similarity {
     * (HistoryStateJob stores one model per state home). */
   def semanticDedupIncrementalAssigned(batch: DataFrame, historyAssigned: DataFrame,
                                        vecCol: String, idCol: String,
-                                       model: Ivf.IvfModel, threshold: Double,
-                                       saltBuckets: Int = 8): DataFrame = {
+                                       model: Ivf.IvfModel, threshold: Double): DataFrame = {
     val bAssigned = Ivf.assign(batch, vecCol, model)
     val hAssigned = historyAssigned.select(col(idCol), col(vecCol), col("ivf_cell"))
     val histDup = cosineJoin(bAssigned, hAssigned, vecCol, idCol, "ivf_cell",
-        threshold, saltBuckets)
+        threshold)
       .select(col("id_l").as(idCol)).distinct()
       .withColumn("__hist_dup", lit(true))
     val withH = bAssigned.join(histDup, Seq(idCol), "left")
       .withColumn("keep_vs_history", col("__hist_dup").isNull)
       .drop("__hist_dup")
     val pairs = cosinePairs(withH.where(col("keep_vs_history")), vecCol, idCol,
-      "ivf_cell", threshold, saltBuckets)
+      "ivf_cell", threshold)
     val cc = graft.dedup.Dedup.connectedComponents(pairs)
     withH.join(cc.withColumnRenamed("id", idCol), Seq(idCol), "left")
       .withColumn("component", coalesce(col("component"), col(idCol)))

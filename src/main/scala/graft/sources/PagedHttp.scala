@@ -56,16 +56,15 @@ object PagedHttp {
   }
 
   /** Driver-side pagination: fetch `firstUri`, then follow the top-level
-    * `nextField` link until it is null/absent (reference's tailrec
+    * `next` link until it is null/absent (reference's tailrec
     * `fetchAMOPage`, AMODatabase.scala:62-83). Returns raw page bodies in
-    * fetch order; `maxPages` guards against a cyclic API. */
-  def fetchPages(fetcher: PageFetcher, firstUri: String,
-                 nextField: String = "next", maxPages: Int = 100000): Seq[String] = {
+    * fetch order; a 100000-page cap guards against a cyclic API. */
+  def fetchPages(fetcher: PageFetcher, firstUri: String): Seq[String] = {
     @tailrec
     def loop(uri: Option[String], acc: Vector[String]): Vector[String] = uri match {
-      case Some(u) if acc.size < maxPages =>
+      case Some(u) if acc.size < 100000 =>
         val body = fetcher.fetch(u)
-        val next = Option(mapper.readTree(body).get(nextField))
+        val next = Option(mapper.readTree(body).get("next"))
           .filterNot(_.isNull).map(_.asText)
         loop(next, acc :+ body)
       case _ => acc

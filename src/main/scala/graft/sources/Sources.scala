@@ -15,15 +15,10 @@ object Sources {
            options: Map[String, String] = Map.empty): DataFrame =
     spark.read.format(format).options(options).load(path)
 
-  /** P2 — fold attribute equalities into one predicate Column, with an
-    * optional per-key value normalizer (the reference normalizes date
-    * formats for one dimension). Reference: utils/DatasetShim.scala:52-57. */
-  def dimensionPredicate(dims: Map[String, String],
-                         normalize: Map[String, Column => Column] = Map.empty): Column =
-    dims.foldLeft(lit(true)) { case (acc, (k, v)) =>
-      val c = normalize.get(k).map(f => f(col(k))).getOrElse(col(k))
-      acc && c === v
-    }
+  /** P2 — fold attribute equalities into one predicate Column.
+    * Reference: utils/DatasetShim.scala:52-57. */
+  def dimensionPredicate(dims: Map[String, String]): Column =
+    dims.foldLeft(lit(true)) { case (acc, (k, v)) => acc && col(k) === v }
 
   /** S1-equivalent scan: partitioned source + dimension predicates; the
     * reference prunes S3 prefixes driver-side, Catalyst prunes partition

@@ -37,6 +37,10 @@ import org.apache.spark.sql.functions._
   */
 object BpeVocab {
 
+  /** Cap on the driver-collected word table of [[trainLocal]] and
+    * [[encode]]. */
+  private val MaxWords = 20000000
+
   final case class Merge(left: String, right: String, count: Long)
 
   /** Distinct words with corpus occurrence counts — one scan, one
@@ -130,9 +134,9 @@ object BpeVocab {
     * production tokenizer, all to pick one row each time. The word table
     * is Zipf-bounded and model-sized (distinct words, not corpus rows —
     * the IVF/PQ training justification), so the single collect is the
-    * ONLY corpus-coupled cost; `maxWords` caps it and fails loudly if a
-    * corpus exceeds the budget (at ~60 B/word, the 20 M default is
-    * ~1-2 GB of driver heap — raise it deliberately, with the heap).
+    * ONLY corpus-coupled cost; `MaxWords` caps it and fails loudly if a
+    * corpus exceeds the budget (at ~60 B/word, the 20 M cap is
+    * ~1-2 GB of driver heap).
     *
     * Merges are IDENTICAL to [[train]] (ScalaTest-pinned): the same
     * per-position overlapping pair counts, the same
@@ -143,15 +147,14 @@ object BpeVocab {
     * The loop maintains pair counts incrementally with an inverted
     * pair→words index and a lazily-invalidated max-heap, so per-merge
     * work is O(words touched by the merge), not O(vocab). */
-  def trainLocal(docs: DataFrame, textCol: String, numMerges: Int,
-                 maxWords: Int = 20000000): Seq[Merge] = {
+  def trainLocal(docs: DataFrame, textCol: String, numMerges: Int): Seq[Merge] = {
     require(numMerges >= 1, s"numMerges must be positive: $numMerges")
     val spark = docs.sparkSession
     import spark.implicits._
     val tbl = wordTable(docs, textCol).as[(String, Long)].collect()
-    require(tbl.length <= maxWords,
-      s"word table has ${tbl.length} distinct words > maxWords=$maxWords; " +
-        "raise maxWords (with driver heap) or use the distributed train()")
+    require(tbl.length <= MaxWords,
+      s"word table has ${tbl.length} distinct words > $MaxWords; " +
+        "use the distributed train()")
     trainOnWordTable(tbl, numMerges)
   }
 
@@ -313,14 +316,13 @@ object BpeVocab {
     * Output feeds `Packing.packSequences` directly (its tokenizer-
     * agnostic (doc, tokens) contract). */
   def encode(docs: DataFrame, textCol: String, idCol: String,
-             merges: Seq[Merge], maxWords: Int = 20000000): DataFrame = {
+             merges: Seq[Merge]): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val words = wordTable(docs, textCol).select(col("word")).as[String].collect()
-    require(words.length <= maxWords,
-      s"word table has ${words.length} distinct words > maxWords=$maxWords; " +
-        "raise maxWords (with driver heap) or segment distributed as in " +
-        "subwordStats")
+    require(words.length <= MaxWords,
+      s"word table has ${words.length} distinct words > $MaxWords; " +
+        "segment distributed as in subwordStats")
     val ranks = mergeRanks(merges)
     val segd = words.map(w => (w, segmentByRank(w, ranks)))
     val vocab = segd.iterator.flatMap(_._2).toSet.toArray

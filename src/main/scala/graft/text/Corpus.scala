@@ -30,14 +30,14 @@ import graft.dedup.Dedup
   */
 object Corpus {
 
-  /** q22's keep rule, factored for reuse. */
-  def qualityKeep(text: Column, stopwords: Seq[String],
-                  minTokens: Int = 10, maxStopwordRatio: Double = 0.5,
-                  minDistinctRatio: Double = 0.3): Column = {
+  /** q22's keep rule, factored for reuse: at least 10 tokens, a
+    * stopword ratio of at most 0.5 and a distinct-token ratio of at
+    * least 0.3. */
+  def qualityKeep(text: Column, stopwords: Seq[String]): Column = {
     val sig = TextOps.qualitySignals(text, stopwords).toMap
-    sig("n_tokens") >= minTokens &&
-      sig("stopword_ratio") <= maxStopwordRatio &&
-      sig("distinct_token_ratio") >= minDistinctRatio
+    sig("n_tokens") >= 10 &&
+      sig("stopword_ratio") <= 0.5 &&
+      sig("distinct_token_ratio") >= 0.3
   }
 
   /** The exact keep_exact flag a quality FAILURE row carries, replayed

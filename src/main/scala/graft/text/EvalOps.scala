@@ -440,23 +440,21 @@ object EvalOps {
     * operations over total reference tokens, `10⁶·Σd div ΣN` (NEVER
     * the mean of per-utterance rates, which over-weights short
     * utterances — a 1-token utterance with one error is a 100% rate
-    * but one operation). Takes a [[wer]] output table (or
-    * [[werMulti]]'s via the column-name parameters) and folds it to
+    * but one operation). Takes a [[wer]] output table (`edit_dist`,
+    * `n_ref_tokens`) and folds it to
     * ONE row `(n_segments, edit_dist, ref_len, wer_micro)`; a corpus
     * with zero reference tokens has an undefined rate → NULL (the
     * totals still report); an EMPTY table fails loudly. One
     * partial-aggregable hash aggregate. */
-  def corpusWer(components: org.apache.spark.sql.DataFrame,
-                distCol: String = "edit_dist",
-                refLenCol: String = "n_ref_tokens")
+  def corpusWer(components: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     def guarded(c: Column): Column =
       when(col("__nseg") === 0L, raise_error(lit(
           "corpusWer: empty components table — no segments to score")))
         .otherwise(c)
     components
-      .agg(count(lit(1)).as("__nseg"), sum(col(distCol)).as("__d"),
-        sum(col(refLenCol)).as("__r"))
+      .agg(count(lit(1)).as("__nseg"), sum(col("edit_dist")).as("__d"),
+        sum(col("n_ref_tokens")).as("__r"))
       .select(guarded(col("__nseg")).as("n_segments"),
         guarded(col("__d")).as("edit_dist"),
         guarded(col("__r")).as("ref_len"),
@@ -475,24 +473,22 @@ object EvalOps {
     * higher-order matches zero out a mean, while the corpus statistic
     * absorbs them.
     *
-    * Takes a [[bleuComponents]] / [[bleuComponentsMulti]] output table
-    * and folds it to ONE row with the SAME column names `(cand_len,
+    * Takes a BLEU-4 [[bleuComponents]] / [[bleuComponentsMulti]] output
+    * table and folds it to ONE row with the SAME column names `(cand_len,
     * ref_len, p{n}_num, p{n}_den, …)` — so [[bleuScore]] applies to the
     * result unchanged for the final (spec-pinned, irrational) combine.
     * One partial-aggregable hash aggregate; an EMPTY components table
     * fails loudly through every output column (a corpus score over
     * nothing is a harness bug). */
-  def corpusBleu(components: org.apache.spark.sql.DataFrame, maxN: Int = 4)
+  def corpusBleu(components: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    require(maxN >= 1 && maxN <= 6, s"maxN out of [1, 6]: $maxN")
     // a components table built with MORE orders than this rollup reads
     // would silently become a different statistic (a BLEU-4 score from
     // BLEU-6 parts) — fail loudly instead
-    require(!components.columns.contains(s"p${maxN + 1}_den"),
-      s"corpusBleu: components carry order-${maxN + 1} columns but " +
-        s"maxN = $maxN would drop them — pass the maxN the table was " +
-        "built with")
-    val orders = 1 to maxN
+    require(!components.columns.contains("p5_den"),
+      "corpusBleu: components carry order-5 columns but the BLEU-4 " +
+        "rollup would drop them")
+    val orders = 1 to 4
     val names = Seq("cand_len", "ref_len") ++
       orders.flatMap(n => Seq(s"p${n}_num", s"p${n}_den"))
     val aggs = names.map(c => sum(col(c)).as(s"__$c")) :+
@@ -512,27 +508,20 @@ object EvalOps {
     * segments and the β=2 F forms on the totals — entirely rational,
     * so unlike corpus-BLEU the final corpus score is itself
     * oracle-gated, in the same exact micro units as the per-segment
-    * form. Takes a [[chrF]] (or, with `wordN`, [[chrFpp]]) output
-    * table and folds it to ONE row `(n_segments, chrf{n}_o/c/r,
-    * chrf{n}_f_micro[, chrfw{n}_*], chrf_micro-or-chrfpp_micro)`; the
+    * form. Takes a [[chrF]] output table of orders 1-6 and folds it to
+    * ONE row `(n_segments, chrf{n}_o/c/r, chrf{n}_f_micro, chrf_micro)`; the
     * combined mean keeps the documented per-order double-floor. One
     * partial-aggregable hash aggregate; empty input fails loudly. */
-  def corpusChrf(components: org.apache.spark.sql.DataFrame, maxN: Int = 6,
-                 wordN: Int = 0): org.apache.spark.sql.DataFrame = {
-    require(maxN >= 1 && maxN <= 8, s"maxN out of [1, 8]: $maxN")
-    require(wordN >= 0 && wordN <= 4, s"wordN out of [0, 4]: $wordN")
+  def corpusChrf(components: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     // dropping component orders present in the input silently changes
     // the statistic (corpus chrF labeled from chrF++ parts) — loud
-    require(!components.columns.contains(s"chrf${maxN + 1}_o"),
-      s"corpusChrf: components carry char order ${maxN + 1} but " +
-        s"maxN = $maxN would drop it — pass the maxN the table was " +
-        "built with")
-    require(!components.columns.contains(s"chrfw${wordN + 1}_o"),
-      s"corpusChrf: components carry word order ${wordN + 1} but " +
-        s"wordN = $wordN would drop it — pass the wordN the table was " +
-        "built with")
-    val keyed = (1 to maxN).map(n => ("chrf", n)) ++
-      (1 to wordN).map(n => ("chrfw", n))
+    require(!components.columns.contains("chrf7_o"),
+      "corpusChrf: components carry char order 7 but the order-6 " +
+        "rollup would drop it")
+    require(!components.columns.contains("chrfw1_o"),
+      "corpusChrf: components carry word order 1 (a chrF++ table) but " +
+        "the chrF rollup would drop it")
+    val keyed = (1 to 6).map(n => ("chrf", n))
     val names = keyed.flatMap { case (p, n) =>
       Seq(s"$p${n}_o", s"$p${n}_c", s"$p${n}_r") }
     val aggs = names.map(c => sum(col(c)).as(s"__$c")) :+
@@ -541,7 +530,6 @@ object EvalOps {
       when(col("__nseg") === 0L, raise_error(lit(
           "corpusChrf: empty components table — no segments to score")))
         .otherwise(c)
-    val meanName = if (wordN > 0) "chrfpp_micro" else "chrf_micro"
     components
       .agg(aggs.head, aggs.tail: _*)
       .select(guarded(col("__nseg")).as("n_segments") +:
@@ -553,7 +541,7 @@ object EvalOps {
       .select(col("n_segments") +: names.map(col) ++:
         keyed.map { case (p, n) => col(s"$p${n}_f_micro") } :+
         idiv(keyed.map { case (p, n) => col(s"$p${n}_f_micro") }
-          .reduce(_ + _), lit((maxN + wordN).toLong)).as(meanName): _*)
+          .reduce(_ + _), lit(6L)).as("chrf_micro"): _*)
   }
 
   /** The BLEU combine over [[bleuComponents]] output columns, as a

@@ -153,11 +153,11 @@ object Fuzzy {
     * [[graft.dedup.Dedup.dedupeByPairs]] for cluster assignment. */
   def multiPassPairs(df: DataFrame, textCol: String, idCol: String,
                      suffixLen: Int, lenTol: Int, maxDist: Int,
-                     window: Int, numPartitions: Int = 32): DataFrame = {
+                     window: Int): DataFrame = {
     val bySuffix = editDistancePairs(df, textCol, idCol,
       suffixLen, lenTol, maxDist)
     val byNeighbor = sortedNeighborPairs(df, textCol, idCol,
-      window, maxDist, numPartitions)
+      window, maxDist, 32)
       .where(col("id_a") =!= col("id_b")) // duplicate ids pair positionally
       .select(least(col("id_a"), col("id_b")).as("id_a"),
         greatest(col("id_a"), col("id_b")).as("id_b"), col("dist"))

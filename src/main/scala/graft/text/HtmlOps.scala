@@ -148,18 +148,15 @@ object HtmlOps {
           anchors.as("n_anchors"))
       })
 
-  /** Extracted content: blocks with ≥ `minWords` words whose anchor
-    * density stays under `maxLinkPerMille` (anchors per 1000 words),
-    * rejoined with newlines. Empty result → empty string (callers gate
-    * on length, as with every other quality signal). */
-  def extractText(html: Column, minWords: Int = 3,
-                  maxLinkPerMille: Int = 500): Column = {
-    require(minWords >= 1, s"minWords must be positive: $minWords")
-    require(maxLinkPerMille >= 0, s"negative link gate: $maxLinkPerMille")
+  /** Extracted content: blocks with ≥ 3 words whose anchor density
+    * stays at most 500 anchors per 1000 words, rejoined with newlines.
+    * Empty result → empty string (callers gate on length, as with every
+    * other quality signal). */
+  def extractText(html: Column): Column = {
     val kept = filter(blockStats(html), c =>
-      c.getField("n_words") >= minWords &&
+      c.getField("n_words") >= 3 &&
         c.getField("n_anchors") * lit(1000) <=
-          lit(maxLinkPerMille) * c.getField("n_words"))
+          lit(500) * c.getField("n_words"))
     array_join(transform(kept, c => c.getField("text")), "\n")
   }
 

@@ -128,10 +128,9 @@ object NgramLm {
     * comparison `score_sum_pico · tauDen ≥ n_scored · tauNum · 10¹²` —
     * no double accumulation anywhere, so any engine agrees. */
   def filterByScore(docs: DataFrame, model: LmModel, textCol: String,
-                    idCol: String, tauNum: Long, tauDen: Long,
-                    alpha: Double = 0.4): DataFrame = {
+                    idCol: String, tauNum: Long, tauDen: Long): DataFrame = {
     require(tauDen > 0, s"tauDen must be positive: $tauDen")
-    scoreTokens(docs, model, textCol, idCol, alpha)
+    scoreTokens(docs, model, textCol, idCol)
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_scored"),
         sum(round(col("score") * lit(1e12)).cast("long")).as("score_sum_pico"))
@@ -224,9 +223,9 @@ object NgramLm {
     * bit-identical across engines). A cut landing on a run of duplicated
     * means picks the duplicated value itself in both engines. */
   def ccnetBuckets(docs: DataFrame, model: LmModel, textCol: String,
-                   idCol: String, alpha: Double = 0.4,
+                   idCol: String,
                    cut: TertileCut = TertileCut.Exact): DataFrame = {
-    val per = scoreTokens(docs, model, textCol, idCol, alpha)
+    val per = scoreTokens(docs, model, textCol, idCol)
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_scored"),
         sum(round(col("score") * lit(1e12)).cast("long")).as("score_sum_pico"))
@@ -264,15 +263,12 @@ object NgramLm {
     * Scale shape: identical to [[ccnetBuckets]] plus one DOC-SIZED join
     * to attach the group label (the corpus text is never rescanned) —
     * thresholds via ONE groupBy aggregate (rows = #groups), labels via a
-    * broadcast join on the group key. The [[TertileCut]] argument carries
-    * over unchanged: `Approx` keeps per-task state at O(accuracy) PER
-    * GROUP, so the 10⁹-doc argument holds group-by-group. Returns
+    * broadcast join on the group key. Tertiles are the exact order
+    * statistics of [[TertileCut.Exact]], per group. Returns
     * `(idCol, groupCol, n_scored, score_sum_pico, bucket)`. */
   def ccnetBucketsGrouped(docs: DataFrame, model: LmModel, textCol: String,
-                          idCol: String, groupCol: String,
-                          alpha: Double = 0.4,
-                          cut: TertileCut = TertileCut.Exact): DataFrame = {
-    val per = scoreTokens(docs, model, textCol, idCol, alpha)
+                          idCol: String, groupCol: String): DataFrame = {
+    val per = scoreTokens(docs, model, textCol, idCol)
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_scored"),
         sum(round(col("score") * lit(1e12)).cast("long")).as("score_sum_pico"))
@@ -280,23 +276,14 @@ object NgramLm {
         col("score_sum_pico").cast("double") / col("n_scored"))
       .join(docs.select(col(idCol), col(groupCol)).dropDuplicates(idCol),
         Seq(idCol))
-    val thr = cut match {
-      case TertileCut.Exact =>
-        per.groupBy(col(groupCol))
-          .agg(sort_array(collect_list(col("mean_score"))).as("ms"),
-            count(lit(1)).as("n"))
-          .select(col(groupCol),
-            element_at(col("ms"), ceil(col("n") / lit(3.0)).cast("int"))
-              .as("__t_lo"),
-            element_at(col("ms"), ceil(col("n") * lit(2) / lit(3.0)).cast("int"))
-              .as("__t_hi"))
-      case TertileCut.Approx(accuracy) =>
-        per.groupBy(col(groupCol))
-          .agg(percentile_approx(col("mean_score"),
-            array(lit(1.0 / 3), lit(2.0 / 3)), lit(accuracy)).as("t"))
-          .select(col(groupCol), col("t")(0).as("__t_lo"),
-            col("t")(1).as("__t_hi"))
-    }
+    val thr = per.groupBy(col(groupCol))
+      .agg(sort_array(collect_list(col("mean_score"))).as("ms"),
+        count(lit(1)).as("n"))
+      .select(col(groupCol),
+        element_at(col("ms"), ceil(col("n") / lit(3.0)).cast("int"))
+          .as("__t_lo"),
+        element_at(col("ms"), ceil(col("n") * lit(2) / lit(3.0)).cast("int"))
+          .as("__t_hi"))
     per.join(broadcast(thr), Seq(groupCol))
       .select(col(idCol), col(groupCol), col("n_scored"), col("score_sum_pico"),
         when(col("mean_score") >= col("__t_hi"), "head")

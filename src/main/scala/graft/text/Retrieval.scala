@@ -46,10 +46,7 @@ import org.apache.spark.sql.functions._
   * The probe side is query-term-sized (AQE broadcasts it into the
   * postings join from runtime sizes — no forced hint, so a
   * corpus-sized query table degrades to a shuffle join instead of an
-  * OOM); candidate volume is Σ_t df(t), bounded by dropping
-  * provably-zero-weight terms (`idf_micro` floors to 0 exactly when
-  * `10⁶·(2N − 2df + 1) < 2df + 1`, i.e. ubiquitous terms in corpora
-  * beyond ~5·10⁵ docs) when `pruneZeroIdf` is on. Scoring is one hash aggregate keyed
+  * OOM); candidate volume is Σ_t df(t). Scoring is one hash aggregate keyed
   * `(query_id, doc_id)`; top-k is a window per query key — bounded by
   * that query's candidate count, never a global window.
   */
@@ -173,32 +170,19 @@ object Retrieval {
     * moment someone feeds a corpus-sized query table. */
   def bm25OddsScoresPrebuilt(qTerms: DataFrame, postings: DataFrame,
                              dfreq: DataFrame, dl: DataFrame,
-                             stats: DataFrame,
-                             pruneZeroIdf: Boolean = false): DataFrame = {
-    // a term's weight is exactly 0 iff its idf_micro floors to 0 — safe
-    // to drop before the postings join (docs matched ONLY by such terms
-    // drop from the candidate list instead of appearing with score 0,
-    // which is why the oracle-gated query keeps pruning OFF)
-    val dfKept =
-      if (pruneZeroIdf) dfreq.crossJoin(broadcast(stats))
-        .where(lit(1000000L) * (lit(2L) * col("n") - lit(2L) * col("df") + 1L) >=
-          lit(2L) * col("df") + 1L)
-        .select(col("token"), col("df"))
-      else dfreq
+                             stats: DataFrame): DataFrame =
     qTerms
-      .join(oddsPostingWeights(postings, dfKept, dl, stats), Seq("token"))
+      .join(oddsPostingWeights(postings, dfreq, dl, stats), Seq("token"))
       .groupBy(col("query_id"), col("doc_id"))
       .agg(sum(col("w_pico")).as("score_pico"))
-  }
 
   /** [[bm25OddsScoresPrebuilt]] with the index built inline — the
     * one-shot form. */
   def bm25OddsScores(queries: DataFrame, corpus: DataFrame,
-                     textCol: String, idCol: String,
-                     pruneZeroIdf: Boolean = false): DataFrame = {
+                     textCol: String, idCol: String): DataFrame = {
     val (postings, dfreq, dl, stats) = bm25Index(corpus, textCol, idCol)
     bm25OddsScoresPrebuilt(queryTerms(queries, textCol, idCol),
-      postings, dfreq, dl, stats, pruneZeroIdf)
+      postings, dfreq, dl, stats)
   }
 
   /** Deterministic top-k per query over any `(query_id, doc_id, score)`
@@ -279,9 +263,9 @@ object Retrieval {
   }
 
   /** Per-term weight upper bound `(token, max_w_pico)` — one more
-    * vocab-sized aggregate over the posting-weight stream. Persist it
-    * with the index: it is what lets [[bm25OddsTopKPruned]] skip the
-    * Zipf head's postings for top-k queries. */
+    * vocab-sized aggregate over the posting-weight stream: it is what
+    * lets [[bm25OddsTopKPruned]] skip the Zipf head's postings for top-k
+    * queries. */
   def bm25MaxWeights(postings: DataFrame, dfreq: DataFrame, dl: DataFrame,
                      stats: DataFrame): DataFrame =
     oddsPostingWeights(postings, dfreq, dl, stats)
@@ -318,10 +302,9 @@ object Retrieval {
     * output, and it is probe-sized. */
   def bm25OddsTopKPruned(qTerms: DataFrame, postings: DataFrame,
                          dfreq: DataFrame, dl: DataFrame, stats: DataFrame,
-                         k: Int, essentialDfFrac: Double = 0.05,
-                         prebuiltMaxW: Option[DataFrame] = None): DataFrame =
+                         k: Int, essentialDfFrac: Double = 0.05): DataFrame =
     bm25OddsTopKPrunedWithVerdict(qTerms, postings, dfreq, dl, stats,
-      k, essentialDfFrac, prebuiltMaxW)._1
+      k, essentialDfFrac)._1
 
   /** [[bm25OddsTopKPruned]] plus the per-query pruning verdict
     * `(query_id, n_top, theta, ub_rest, exact_ok)` — the spec hook that
@@ -331,21 +314,11 @@ object Retrieval {
     * materialized and counted (`limit(1).count`) to decide whether the
     * unpruned fallback is planned at all. A caller that composes the
     * result but never executes it still pays the verdict pipeline, so
-    * plan-only and streaming callers must not assume a lazy build.
-    *
-    * `prebuiltMaxW`: pass the persisted [[bm25MaxWeights]] table for a
-    * recurring query suite so each run skips the vocab-sized rebuild.
-    * NOTE the bounds depend on the WHOLE index's (N, S): recompute the
-    * artifact after index merges, never union per-day maxima (a
-    * stale-but-valid upper bound only costs pruning power if weights
-    * shrank; a merge GROWS N and can grow idf, which would make stale
-    * bounds unsound — hence recompute, spec-pinned identical to the
-    * inline build). */
+    * plan-only and streaming callers must not assume a lazy build. */
   private[graft] def bm25OddsTopKPrunedWithVerdict(
       qTerms: DataFrame, postings: DataFrame, dfreq: DataFrame,
       dl: DataFrame, stats: DataFrame, k: Int,
-      essentialDfFrac: Double,
-      prebuiltMaxW: Option[DataFrame] = None): (DataFrame, DataFrame) = {
+      essentialDfFrac: Double): (DataFrame, DataFrame) = {
     require(k >= 1, s"k must be positive: $k")
     // lazily checkpointed (r17): the weight stream feeds BOTH the
     // candidate rescore and the unpruned fallback, and the three-join
@@ -353,8 +326,7 @@ object Retrieval {
     // multi-consumer localCheckpoint discipline of the shingle indexes)
     val postW = oddsPostingWeights(postings, dfreq, dl, stats)
       .localCheckpoint(eager = false)
-    val maxw = prebuiltMaxW.getOrElse(
-      bm25MaxWeights(postings, dfreq, dl, stats))
+    val maxw = bm25MaxWeights(postings, dfreq, dl, stats)
     // probe-sized decision frame: each query term with its df and bound
     val qt = qTerms
       .join(dfreq, Seq("token"))

@@ -16,7 +16,7 @@ object TextOps {
   /** Fan a SMALL input out to the session's full parallelism before a
     * compute-heavy scan (per-gram hashing costs orders of magnitude more
     * than the bytes feeding it). Guarded by the optimizer's size
-    * estimate, NOT by executing anything: below the threshold the source
+    * estimate, NOT by executing anything: below 1 GiB the source
     * cannot have enough row groups to split (a single-file fixture scans
     * as ONE task, serializing every downstream gram on one core — at
     * local[32] that is a 32× loss), and a one-pass round-robin shuffle of
@@ -31,11 +31,10 @@ object TextOps {
     * paragraph fingerprint groupBy) get their parallelism from that
     * exchange, and an extra round-robin here measured as pure overhead
     * (+0.5-1 s per shingle query, bench r7). */
-  def fanOutSmall(df: org.apache.spark.sql.DataFrame,
-                  thresholdBytes: Long = 1L << 30): org.apache.spark.sql.DataFrame = {
+  def fanOutSmall(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val size = leafScanBytes(df)
     val target = df.sparkSession.sparkContext.defaultParallelism
-    if (size < thresholdBytes) df.repartition(target) else df
+    if (size < (1L << 30)) df.repartition(target) else df
   }
 
   /** Size signal for the spread guards, from the LEAF SCANS of the
@@ -415,10 +414,10 @@ object TextOps {
 
   /** C4-style line-level cleaning (Raffel et al. 2020, §2.2): drop
     * boilerplate LINES rather than whole documents. A trimmed non-empty
-    * line is kept iff it has ≥ `minWords` whitespace words, ends in
-    * terminal punctuation (`. ! ? " '`, when `requireTerminalPunct`), and
-    * contains none of `banned` (case-insensitive substrings — the C4
-    * "lorem ipsum"/"javascript"/curly-brace filters). Returns one row per
+    * line is kept iff it has ≥ 3 whitespace words, ends in terminal
+    * punctuation (`. ! ? " '`), and contains none of the C4 markers
+    * "lorem ipsum", "javascript" and `{` (case-insensitive substrings).
+    * Returns one row per
     * input doc: (idCol, `clean_text` — surviving lines re-joined in
     * original order, empty string when none survive, `n_kept`,
     * `n_dropped` over non-empty lines).
@@ -427,23 +426,16 @@ object TextOps {
     * sorted re-assembly collects each doc's own lines — bounded per-group
     * arrays, never a corpus-wide sort). */
   def cleanLines(docs: org.apache.spark.sql.DataFrame, textCol: String,
-                 idCol: String, minWords: Int = 3,
-                 requireTerminalPunct: Boolean = true,
-                 banned: Seq[String] = Seq("lorem ipsum", "javascript", "{"))
-      : org.apache.spark.sql.DataFrame = {
+                 idCol: String): org.apache.spark.sql.DataFrame = {
     val id = col(idCol)
     val lines = docs
       .select(id, posexplode(split(col(textCol), "\n")).as(Seq("__pos", "__raw")))
       .select(id, col("__pos"), trim(col("__raw")).as("__line"))
       .where(length(col("__line")) > 0)
-    val keepPred = Seq(
-      Some(size(split(col("__line"), "\\s+")) >= minWords),
-      if (requireTerminalPunct) Some(col("__line").rlike(TerminalPunctRe)) else None,
-      // reduceOption: an empty banned list means no marker filter, not a
-      // reduce-on-empty crash
-      banned.map(b => !lower(col("__line")).contains(b.toLowerCase(java.util.Locale.ROOT)))
-        .reduceOption(_ && _)
-    ).flatten.reduce(_ && _)
+    val keepPred = size(split(col("__line"), "\\s+")) >= 3 &&
+      col("__line").rlike(TerminalPunctRe) &&
+      Seq("lorem ipsum", "javascript", "{").map(b => !lower(col("__line")).contains(b))
+        .reduce(_ && _)
     // one collect: dropped lines ride as nulls (concat_ws skips them), so
     // the kept/dropped counts and the re-assembly share a single aggregate
     val packed = graft.udafs.CollectOps.sortedCollect(
@@ -684,13 +676,13 @@ object TextOps {
   /** Gopher-style composite quality verdict (Rae et al. 2021, Appendix A
     * — the published web-corpus filter rules, restricted to the
     * deterministic-arithmetic subset):
-    *   - word count within [minWords, maxWords];
+    *   - word count within [minWords, 100000];
     *   - mean word length within [3, 10] chars;
     *   - symbol-to-word ratio (`#` or `…`/`...`) below 0.1;
     *   - at most 90% of lines starting with a bullet and at most 30%
     *     ending in an ellipsis;
     *   - at least 80% of words containing an alphabetic character;
-    *   - at least `minStopwords` hits from the stopword list.
+    *   - at least 2 hits from the stopword list.
     * Returns one boolean per rule plus the conjunction `keep` — callers
     * log per-rule rejection rates (the published pipelines tune rules
     * individually) and filter on `keep`.
@@ -701,8 +693,7 @@ object TextOps {
     * expressions), then every rule is arithmetic over them. No shuffle,
     * no UDF. */
   def gopherSignals(text: Column, stopwords: Seq[String],
-                    minWords: Int = 50, maxWords: Int = 100000,
-                    minStopwords: Int = 2): Seq[(String, Column)] = {
+                    minWords: Int = 50): Seq[(String, Column)] = {
     val t = tokens(text)
     val nWords = size(t)
     val meanLen = meanTokenLen(text)
@@ -721,13 +712,13 @@ object TextOps {
       .cast("double") / greatest(nWords, lit(1))
     val stopHits = graft.functions.TextExpressions.countInSet(t, stopwords)
     val rules = Seq(
-      "ok_word_count" -> (nWords >= minWords && nWords <= maxWords),
+      "ok_word_count" -> (nWords >= minWords && nWords <= 100000),
       "ok_mean_word_len" -> (meanLen >= 3.0 && meanLen <= 10.0),
       "ok_symbol_ratio" -> (symbolRatio < 0.1),
       "ok_bullet_lines" -> (bulletFrac <= 0.9),
       "ok_ellipsis_lines" -> (ellipsisFrac <= 0.3),
       "ok_alpha_words" -> (alphaFrac >= 0.8),
-      "ok_stopwords" -> (stopHits >= minStopwords))
+      "ok_stopwords" -> (stopHits >= 2))
     rules ++ Seq("keep" -> rules.map(_._2).reduce(_ && _))
   }
 

@@ -1,6 +1,6 @@
 package graft.time
 
-import java.time.{Clock, LocalDate, OffsetDateTime, ZoneOffset}
+import java.time.{Clock, LocalDate}
 import java.time.format.DateTimeFormatter
 
 import org.apache.spark.sql.Column
@@ -8,36 +8,9 @@ import org.apache.spark.sql.functions._
 
 /** Date/timestamp normalization layer (SURVEY.md §2.7 F3-F11).
   *
-  * Column-level functions are built-ins wherever possible (codegen'd);
-  * only the timezone-wrapping ISO normalizer needs JVM logic (a UDF —
-  * the wrap rule has no Catalyst equivalent).
+  * Column-level functions are built-ins (codegen'd).
   */
 object TimeNorm {
-
-  private val isoOut = DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSxxx")
-
-  /** F3 — normalize an ISO-8601 offset timestamp, WRAPPING out-of-range
-    * zone offsets into [-12:00, +14:00] by ±12h steps while preserving the
-    * instant. (Reference: src/main/scala/com/mozilla/telemetry/utils/package.scala:100-120 —
-    * Presto compatibility for offsets beyond the legal range.)
-    */
-  def normalizeISOTimestampJvm(s: String): String = {
-    val odt = OffsetDateTime.parse(s, DateTimeFormatter.ISO_OFFSET_DATE_TIME)
-    var seconds = odt.getOffset.getTotalSeconds
-    while (seconds < -12 * 3600) seconds += 12 * 3600
-    while (seconds > 14 * 3600) seconds -= 12 * 3600
-    odt.withOffsetSameInstant(ZoneOffset.ofTotalSeconds(seconds)).format(isoOut)
-  }
-
-  /** F3 as a Column (UDF — inherently JVM logic). Unparseable input →
-    * null (the file's lenient-coercion discipline — one malformed record
-    * must not abort a 100 TB job after task retries). */
-  val normalizeISOTimestamp: Column => Column = {
-    val f = udf((s: String) =>
-      if (s == null) null
-      else scala.util.Try(normalizeISOTimestampJvm(s)).getOrElse(null))
-    c => f(c)
-  }
 
   /** F7 — epoch millis → `"yyyyMMdd"` day string (UTC). The reference's
     * `yyy` pattern quirk truncates identically for 4-digit years; its own

@@ -21,8 +21,8 @@ import org.apache.spark.sql.functions._
   */
 object Sketches {
   /** Aggregate raw values into a binary HLL sketch. lgK 12 ⇒ ~1.6% stderr. */
-  def hllSketch(c: Column, lgConfigK: Int = 12): Column =
-    hll_sketch_agg(c, lit(lgConfigK))
+  def hllSketch(c: Column): Column =
+    hll_sketch_agg(c, lit(12))
 
   /** Merge a column of serialized sketches into one. */
   def hllMerge(c: Column): Column =

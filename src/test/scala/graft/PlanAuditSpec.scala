@@ -141,7 +141,7 @@ class PlanAuditSpec extends SparkSpec {
         Seq(CdcChangeEvent(1L, 1000L, "u", 1L)).toDF()).as[CdcChangeEvent]
       val history = Seq(Tuple1(1L)).toDF("k")
       val bloom = graft.dedup.Dedup.keyBloom(
-        Seq("x").toDF("fp"), col("fp"), expectedItems = 1, numBits = 1 << 12)
+        Seq("x").toDF("fp"), col("fp"), expectedItems = 1)
       val corpusIdx = graft.dedup.Dedup.shingleRows(
         Seq((10L, "corpus text body here")).toDF("doc_id", "text"),
         "text", "doc_id", Nil, 3)

@@ -29,11 +29,11 @@ class RetrievalIndexJobSpec extends SparkSpec {
     spark.conf.set(overwriteKey, "static")
     try {
       RetrievalIndexJob.runDay(spark, day1.toDF("doc_id", "text"),
-        "20240101", "text", "doc_id", buckets = 4)
+        "20240101", "text", "doc_id")
       assert(spark.conf.get(overwriteKey) === "static",
         "runDay must restore the session overwrite mode")
       RetrievalIndexJob.runDay(spark, day2.toDF("doc_id", "text"),
-        "20240102", "text", "doc_id", buckets = 4)
+        "20240102", "text", "doc_id")
       val key = Seq("query_id", "doc_id", "score_pico").map(col)
       val viaJob = RetrievalIndexJob.score(spark,
         queries.toDF("doc_id", "text"), "text", "doc_id")
@@ -48,7 +48,7 @@ class RetrievalIndexJobSpec extends SparkSpec {
       // partition, not append — scores unchanged (a raw append would
       // double day-2 tf/df/dl and shift every score)
       RetrievalIndexJob.runDay(spark, day2.toDF("doc_id", "text"),
-        "20240102", "text", "doc_id", buckets = 4)
+        "20240102", "text", "doc_id")
       val rerun = RetrievalIndexJob.score(spark,
         queries.toDF("doc_id", "text"), "text", "doc_id")
         .orderBy(key: _*).collect().toSeq
@@ -95,11 +95,11 @@ class RetrievalIndexJobSpec extends SparkSpec {
     cleanup()
     try {
       RetrievalIndexJob.runDay(spark, Seq(0L -> "alpha beta").toDF("doc_id", "text"),
-        "20240101", "text", "doc_id", buckets = 4)
+        "20240101", "text", "doc_id")
       // simulate a crash after the postings/dl writes of day 2: drop the
       // day from the df table only
       RetrievalIndexJob.runDay(spark, Seq(2L -> "beta gamma").toDF("doc_id", "text"),
-        "20240102", "text", "doc_id", buckets = 4)
+        "20240102", "text", "doc_id")
       spark.sql(
         s"ALTER TABLE ${RetrievalIndexJob.DfTable} DROP PARTITION (day='20240102')")
       val e = intercept[IllegalArgumentException] {
@@ -109,7 +109,7 @@ class RetrievalIndexJobSpec extends SparkSpec {
       assert(e.getMessage.contains("disagree"))
       // repair = re-run the day; scoring works again
       RetrievalIndexJob.runDay(spark, Seq(2L -> "beta gamma").toDF("doc_id", "text"),
-        "20240102", "text", "doc_id", buckets = 4)
+        "20240102", "text", "doc_id")
       assert(RetrievalIndexJob.score(spark,
         Seq(1L -> "beta").toDF("doc_id", "text"), "text", "doc_id")
         .count() == 2L)

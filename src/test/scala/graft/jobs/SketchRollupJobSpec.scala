@@ -71,15 +71,13 @@ class SketchRollupJobSpec extends SparkSpec {
   test("heavy keys and join-size planning ride the same daily rows") {
     val base = SparkSpec.tempDir("graft_sketchroll2").toString
     val d1 = day(1, (1L to 40L))
-    val d2 = day(2, (25L to 70L))
-    // mgK 128 ≥ the 70-key union vocabulary: the exact regime — merged
-    // candidates ARE the exact union counts
-    SketchRollupJob.runDay(spark, d1, "20240101", base, "user_id", "value",
-      mgK = 128)
-    SketchRollupJob.runDay(spark, d2, "20240102", base, "user_id", "value",
-      mgK = 128)
+    val d2 = day(2, (25L to 60L))
+    // the 60-key union vocabulary fits the job's 64 Misra–Gries counters:
+    // the exact regime — merged candidates ARE the exact union counts
+    SketchRollupJob.runDay(spark, d1, "20240101", base, "user_id", "value")
+    SketchRollupJob.runDay(spark, d2, "20240102", base, "user_id", "value")
     val got = SketchRollupJob.heavyKeys(spark, base,
-        "20240101", "20240102", mgK = 128)
+        "20240101", "20240102")
       .as[(String, Long)].collect().toMap
     val exact = d1.unionAll(d2).groupBy(col("user_id").cast("string"))
       .count().as[(String, Long)].collect().toMap
@@ -98,10 +96,9 @@ class SketchRollupJobSpec extends SparkSpec {
     assert(err * err * 64 <= 16L * f2a * f2b,
       s"estimate $est vs exact $exactJoin outside the 4-sigma band")
     // idempotent re-run leaves the merged candidates unchanged
-    SketchRollupJob.runDay(spark, d2, "20240102", base, "user_id", "value",
-      mgK = 128)
+    SketchRollupJob.runDay(spark, d2, "20240102", base, "user_id", "value")
     val again = SketchRollupJob.heavyKeys(spark, base,
-        "20240101", "20240102", mgK = 128)
+        "20240101", "20240102")
       .as[(String, Long)].collect().toMap
     assert(again === exact)
   }

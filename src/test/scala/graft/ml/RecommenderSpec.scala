@@ -15,7 +15,7 @@ class RecommenderSpec extends SparkSpec {
     }.toDF("user_id", "item_id")
     val r = Recommender.ratings(interactions, "user_id", "item_id")
     assert(r.columns.toSeq === Seq("user", "item", "rating"))
-    val model = Recommender.train(r, rank = 8, maxIter = 10)
+    val model = Recommender.train(r)
     // an even user's top recommendation should be an even-clique item
     val u2 = Recommender.positiveHash("u2")
     val evenItems = Seq("i100", "i101", "i102").map(Recommender.positiveHash).toSet

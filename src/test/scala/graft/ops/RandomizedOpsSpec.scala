@@ -112,6 +112,11 @@ class RandomizedOpsSpec extends SparkSpec {
     val rnd = new scala.util.Random(71L)
     def score(id: Long): String =
       org.apache.commons.codec.digest.DigestUtils.md5Hex(id.toString).take(8)
+    // a tight key: its 40 ids all hash into the top quarter, so for small
+    // n its 4n/count hash prefix holds no survivor and the under-fill
+    // fallback has to fire
+    val tight = Iterator.from(1000).map(_.toLong).filter(score(_) >= "c0000000")
+      .take(40).map(i => (i, Option("tight"))).toSeq
     for (round <- 1 to 4) {
       // Zipf-ish keys: one hot key holds most rows, plus a null-key group
       val rows = (1L to 120L).map { i =>
@@ -121,17 +126,13 @@ class RandomizedOpsSpec extends SparkSpec {
           case j => Some(s"k$j")
         }
         (i, k)
-      }
+      } ++ tight
       val n = 1 + rnd.nextInt(12)
-      // safety = 1.0 keeps the prefix ≈ n survivors, so the under-fill
-      // fallback actually fires some rounds; 4.0 is the production shape
-      for (safety <- Seq(1.0, 4.0)) {
-        val got = Sampling.perKeyCap(rows.toDF("id", "k"), "k", "id", n, safety)
-          .select("id").as[Long].collect().toSet
-        val expect = rows.groupBy(_._2).values.flatMap(
-          _.map(_._1).sortBy(id => (score(id), id)).take(n)).toSet
-        assert(got === expect, s"round $round n=$n safety=$safety")
-      }
+      val got = Sampling.perKeyCap(rows.toDF("id", "k"), "k", "id", n)
+        .select("id").as[Long].collect().toSet
+      val expect = rows.groupBy(_._2).values.flatMap(
+        _.map(_._1).sortBy(id => (score(id), id)).take(n)).toSet
+      assert(got === expect, s"round $round n=$n")
     }
   }
 
@@ -355,13 +356,5 @@ class RandomizedOpsSpec extends SparkSpec {
         Seq("k"), "ts", Seq("state"))
     }
     assert(e.getMessage.contains("duplicate"))
-    // collapseUnchanged=false keeps every change row as its own interval
-    val raw = Relational.scd2(
-        Seq((1L, 1L, "a"), (1L, 2L, "a"), (1L, 3L, "b"))
-          .toDF("k", "ts", "state"),
-        Seq("k"), "ts", Seq("state"), collapseUnchanged = false)
-      .as[(Long, String, Long, Option[Long])].collect().toSet
-    assert(raw === Set((1L, "a", 1L, Some(2L)), (1L, "a", 2L, Some(3L)),
-      (1L, "b", 3L, None)))
   }
 }

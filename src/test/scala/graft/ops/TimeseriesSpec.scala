@@ -142,12 +142,11 @@ class TimeseriesSpec extends SparkSpec {
     // the late forecasts stay within 40% of the actual (trend absorbed)
     val tail = holt.drop(4).flatMap(r => r._4.map(f => (r._3, f)))
     assert(tail.forall { case (n, f) => (n - f).abs * 10 <= 4 * n })
-    // a hard stop off the learned trend line flags at a dip-sensitive
-    // factor (a collapse to zero is a 1.0× deviation — the default 2.0×
-    // is a spike threshold; deviation thresholds < 1× catch outages)
-    val stop = ramp ++ Seq((1L, 9L, 0L))
+    // a jump off the learned trend line flags: 400 against the forecast
+    // 100 is a 3.0× deviation, past the 2.0× threshold
+    val stop = ramp ++ Seq((1L, 9L, 400L))
     val last = Timeseries.holtAnomalies(
-        stop.toDF("k", "bucket", "n"), "k", "bucket", "n", factorDeci = 5L)
+        stop.toDF("k", "bucket", "n"), "k", "bucket", "n")
       .where(col("bucket") === 9L)
       .as[(Long, Long, Long, Option[Long], Option[Boolean])]
       .collect().head

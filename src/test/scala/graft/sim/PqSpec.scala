@@ -53,8 +53,7 @@ class PqSpec extends SparkSpec {
       val p = patterns(rnd.nextInt(8)) ++ patterns(rnd.nextInt(8))
       (i, p.toSeq)
     }.toDF("vec_id", "embedding")
-    val (model, encoded) = Pq.build(vecs, "embedding", "vec_id", dim = 8, m = 2, k = 8,
-      trainSample = 60)
+    val (model, encoded) = Pq.build(vecs, "embedding", "vec_id", dim = 8, m = 2, k = 8)
     val q = patterns(3) ++ patterns(5)
     // per-id: the ADC score of every row equals its exact cosine (the
     // decoded vector IS the normalized vector) — modulo the last-ulp
@@ -223,8 +222,7 @@ class PqSpec extends SparkSpec {
       (3L, Seq(1f, 0f, 0f, 0f))).toDF("vec_id", "embedding")
     // zero-norm vectors encode without NaNs (inv falls back to 1.0) and
     // k far beyond the distinct-subvector count pads codebooks safely
-    val model = Pq.train(vecs, "embedding", "vec_id", dim = 4, m = 2, k = 16,
-      trainSample = 3)
+    val model = Pq.train(vecs, "embedding", "vec_id", dim = 4, m = 2, k = 16)
     val codes = Pq.encode(vecs, "embedding", model)
       .select("pq_codes").as[Seq[Int]].collect()
     assert(codes.forall(c => c.size == 2 && c.forall(x => x >= 0 && x < 16)))
@@ -237,8 +235,8 @@ class PqSpec extends SparkSpec {
     val sf = "/root/testdata/sf0.001"
     val emb = graft.Tables.embeddings(spark, sf)
     val dim = emb.select("embedding").head().getSeq[Float](0).size
-    val m1 = Pq.train(emb, "embedding", "vec_id", dim, m = 4, k = 8, seed = 99L)
-    val m2 = Pq.train(emb, "embedding", "vec_id", dim, m = 4, k = 8, seed = 99L)
+    val m1 = Pq.train(emb, "embedding", "vec_id", dim, m = 4, k = 8)
+    val m2 = Pq.train(emb, "embedding", "vec_id", dim, m = 4, k = 8)
     assert(m1.books.toSeq === m2.books.toSeq)
     intercept[IllegalArgumentException] {
       Pq.train(emb, "embedding", "vec_id", dim, m = 7) // 64 % 7 != 0
@@ -271,8 +269,7 @@ class PqSpec extends SparkSpec {
 
   test("short rows zero-pad; out-of-range codes score 0") {
     val vecs = Seq((1L, Seq(1f, 0f, 0f, 0f)), (2L, Seq(1f, 0f))).toDF("vec_id", "embedding")
-    val model = Pq.train(vecs, "embedding", "vec_id", dim = 4, m = 2, k = 2,
-      trainSample = 2)
+    val model = Pq.train(vecs, "embedding", "vec_id", dim = 4, m = 2, k = 2)
     // row 2 is row 1 with a zero tail: identical normalized prefix -> the
     // first-subspace code matches, and encoding never reads out of bounds
     val codes = Pq.encode(vecs, "embedding", model)

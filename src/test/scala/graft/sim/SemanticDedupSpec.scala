@@ -287,8 +287,7 @@ class SemanticDedupSpec extends SparkSpec {
       (1L, Seq(0.99f, 0.1f, 0f, 0f)),  // same id as probe 1, cos ~0.995
       (9L, Seq(0f, 1f, 0f, 0f))).toDF("vec_id", "embedding")
     val out = Similarity.semanticContaminationLsh(
-        probes, corpus, "embedding", "vec_id", threshold = 0.9, dim = 4,
-        bands = 32, planesPerBand = 2)
+        probes, corpus, "embedding", "vec_id", threshold = 0.9, dim = 4)
       .select("probe_id", "best_id", "contaminated")
       .as[(Long, Option[Long], Boolean)].collect().sortBy(_._1)
     assert(out.length === 2)

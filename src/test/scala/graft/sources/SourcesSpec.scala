@@ -11,10 +11,11 @@ class SourcesSpec extends SparkSpec {
   test("dimensionPredicate composes equalities with normalizers") {
     val df = Seq(("sync", "20180607", 1), ("main", "20180607", 2), ("sync", "20180608", 3))
       .toDF("docType", "submissionDate", "v")
+      // the caller normalizes the column the predicate compares
+      .withColumn("submissionDate",
+        regexp_replace(col("submissionDate"), "(\\d{4})(\\d{2})(\\d{2})", "$1-$2-$3"))
     val out = df.where(Sources.dimensionPredicate(
-      Map("docType" -> "sync", "submissionDate" -> "2018-06-07"),
-      normalize = Map("submissionDate" ->
-        (c => regexp_replace(c, "(\\d{4})(\\d{2})(\\d{2})", "$1-$2-$3")))))
+      Map("docType" -> "sync", "submissionDate" -> "2018-06-07")))
       .select("v").as[Int].collect().toSeq
     assert(out === Seq(1))
   }

@@ -180,11 +180,11 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
     ).toDF("ts", "key", "payload")
     data.write.parquet(s"$dir/in")
     // the filter is built ONCE from history and shipped as bytes — the
-    // stream never scans history (numBits oversized so the deterministic
-    // test keys cannot false-positive)
+    // stream never scans history (expectedItems oversized, so ~2¹⁶ bits,
+    // and the deterministic test keys cannot false-positive)
     val bloom = graft.dedup.Dedup.keyBloom(
       Seq("k1", "k9").toDF("key"), org.apache.spark.sql.functions.struct($"key"),
-      expectedItems = 2, numBits = 1 << 16)
+      expectedItems = 1L << 12)
     val stream = fileStream(s"$dir/in", data.schema)
     val out = StreamingViews.streamingDedupeBloom(stream, bloom, "ts", Seq("key"))
     val q = out.writeStream.outputMode("append")
@@ -517,8 +517,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
       val batch = graft.ops.Funnel.rollingActiveApprox(
           (b1 ++ b2 :+ ActivityEvent(99L, 100000000L))
             .map(e => (e.userId, e.tsMillis)).toDF("user_id", "tn"),
-          "user_id", "tn", bucketNanos = 100L, windowBuckets = 3,
-          lgConfigK = 12)
+          "user_id", "tn", bucketNanos = 100L, windowBuckets = 3)
         .where(col("bucket") < 1000)
         .as[(Long, Long)].collect().sortBy(_._1).toSeq
       assert(got === batch)

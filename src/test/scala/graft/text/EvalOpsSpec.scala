@@ -503,7 +503,7 @@ class EvalOpsSpec extends SparkSpec {
     // a silently different statistic
     val e2 = intercept[IllegalArgumentException] {
       EvalOps.corpusBleu(
-        EvalOps.bleuComponents(rows, "cand", "ref", maxN = 6), maxN = 4)
+        EvalOps.bleuComponents(rows, "cand", "ref", maxN = 6))
     }
     assert(e2.getMessage.contains("order-5"))
   }
@@ -514,8 +514,8 @@ class EvalOpsSpec extends SparkSpec {
       (1L, "abcd", "abcd"),   // perfect, 4 chars
       (2L, "xy", "zw"))       // disjoint, 2 chars
       .toDF("id", "cand", "ref")
-    val seg = EvalOps.chrF(rows, "cand", "ref", maxN = 2)
-    val corpus = EvalOps.corpusChrf(seg, maxN = 2)
+    val seg = EvalOps.chrF(rows, "cand", "ref")
+    val corpus = EvalOps.corpusChrf(seg)
     val (nseg, o1, c1, r1, f1) = corpus
       .select("n_segments", "chrf1_o", "chrf1_c", "chrf1_r", "chrf1_f_micro")
       .as[(Long, Long, Long, Long, Long)].head()
@@ -531,16 +531,13 @@ class EvalOpsSpec extends SparkSpec {
         .select("chrf_micro").collect()
     })
     assert(e.getMessage.contains("empty components table"))
-    // a chrF++ table rolled up with the default wordN = 0 would drop
-    // the word-order components silently — loud instead; the matched
-    // wordN composes and emits the chrfpp-named mean
+    // a chrF++ table rolled up as chrF would drop the word-order
+    // components silently — loud instead
     val ppSeg = EvalOps.chrFpp(rows, "cand", "ref", maxN = 2, wordN = 2)
     val e2 = intercept[IllegalArgumentException] {
-      EvalOps.corpusChrf(ppSeg, maxN = 2)
+      EvalOps.corpusChrf(ppSeg)
     }
     assert(e2.getMessage.contains("word order 1"))
-    assert(EvalOps.corpusChrf(ppSeg, maxN = 2, wordN = 2)
-      .columns.contains("chrfpp_micro"))
   }
 
   test("corpusWer: total operations over total reference tokens — short " +
@@ -556,11 +553,13 @@ class EvalOpsSpec extends SparkSpec {
       .as[(Long, Long, Long, Option[Long])].head()
     assert(n === 2L && d === 2L && r === 11L)
     assert(w === Some(181818L))
-    // composes with werMulti output via the column-name parameters
+    // composes with werMulti output, its columns renamed to wer's
     val multi = EvalOps.werMulti(
         Seq((1L, "a b", Seq("a b c"))).toDF("id", "cand", "refs"),
         "cand", "refs")
-    val wm = EvalOps.corpusWer(multi, "edit_dist_best", "ref_len_best")
+      .withColumnRenamed("edit_dist_best", "edit_dist")
+      .withColumnRenamed("ref_len_best", "n_ref_tokens")
+    val wm = EvalOps.corpusWer(multi)
       .select("wer_micro").as[Option[Long]].head()
     assert(wm === Some(333333L))
     val e = quietTaskFailures(intercept[Exception] {

@@ -95,8 +95,7 @@ class FuzzySpec extends SparkSpec {
     def word() = Seq.fill(5 + rnd.nextInt(2))(alpha(rnd.nextInt(3))).mkString
     val rows = (0L until 70L).map(i => i -> word())
     val got = Fuzzy.multiPassPairs(rows.toDF("id", "s"), "s", "id",
-        suffixLen = 2, lenTol = 1, maxDist = 2, window = 3,
-        numPartitions = 5)
+        suffixLen = 2, lenTol = 1, maxDist = 2, window = 3)
       .as[(Long, Long, Int)].collect().toSet
     val p1 = (for {
       (ia, sa) <- rows; (ib, sb) <- rows

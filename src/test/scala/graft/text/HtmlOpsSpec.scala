@@ -6,10 +6,9 @@ import org.apache.spark.sql.functions._
 class HtmlOpsSpec extends SparkSpec {
   import spark.implicits._
 
-  private def extract(html: String, minWords: Int = 3,
-                      perMille: Int = 500): String =
+  private def extract(html: String): String =
     Seq(html).toDF("h")
-      .select(HtmlOps.extractText(col("h"), minWords, perMille).as("t"))
+      .select(HtmlOps.extractText(col("h")).as("t"))
       .as[String].head()
 
   test("extractText: keeps content, drops nav/link-soup and short blocks") {
@@ -107,10 +106,10 @@ class HtmlOpsSpec extends SparkSpec {
     val pages = (1L to 120L).map(i =>
       (i, (0 to rnd.nextInt(7)).map(_ => randBlock()).mkString(" ")))
     val got = pages.toDF("id", "h")
-      .select(col("id"), HtmlOps.extractText(col("h"), 2, 600).as("t"))
+      .select(col("id"), HtmlOps.extractText(col("h")).as("t"))
       .as[(Long, String)].collect().toMap
     pages.foreach { case (id, html) =>
-      assert(got(id) === model(html, 2, 600), s"page $id: $html")
+      assert(got(id) === model(html, 3, 500), s"page $id: $html")
     }
   }
 

@@ -65,13 +65,6 @@ class RepetitionSpec extends SparkSpec {
     assert(out(3L) === (("", 0L, 1L)))
   }
 
-  test("cleanLines: empty banned list means no marker filter, not a crash") {
-    val docs = Seq((1L, "Check javascript is fine here.")).toDF("doc_id", "text")
-    val out = TextOps.cleanLines(docs, "text", "doc_id", banned = Nil)
-      .as[(Long, String, Long, Long)].collect().head
-    assert(out === ((1L, "Check javascript is fine here.", 1L, 0L)))
-  }
-
   test("cleanLines randomized model check vs a direct Scala reference") {
     val rnd = new scala.util.Random(813L)
     val words = Vector("alpha", "beta", "Lorem", "ipsum", "javascript", "x")

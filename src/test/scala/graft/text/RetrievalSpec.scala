@@ -70,20 +70,6 @@ class RetrievalSpec extends SparkSpec {
       pre.orderBy(key: _*).collect().toSeq)
   }
 
-  test("pruneZeroIdf drops only terms whose integer weight is exactly zero") {
-    // small corpus: no term's idf_micro can floor to 0 (needs N > ~5e5),
-    // so pruning must be a no-op here
-    val corpus = Seq(0L -> "a b c", 2L -> "a b", 4L -> "a")
-    val queries = Seq(1L -> "a c")
-    val on = Retrieval.bm25OddsScores(
-      corpusDf(queries), corpusDf(corpus), "text", "doc_id", pruneZeroIdf = true)
-    val off = Retrieval.bm25OddsScores(
-      corpusDf(queries), corpusDf(corpus), "text", "doc_id")
-    val key = Seq("query_id", "doc_id").map(col)
-    assert(on.orderBy(key: _*).collect().toSeq ==
-      off.orderBy(key: _*).collect().toSeq)
-  }
-
   test("production and exact scorers agree on an unambiguous ranking") {
     // rare term beats common term; higher tf beats lower tf — rankings
     // any BM25 variant must produce
@@ -316,27 +302,6 @@ class RetrievalSpec extends SparkSpec {
         "score_pico", 3)
       .orderBy(key: _*).collect().toSeq
     assert(result.orderBy(key: _*).collect().toSeq === unpruned)
-  }
-
-  test("pruned top-k with a prebuilt maxw table equals the inline build") {
-    val corpus = (0L until 30L).map(i => i -> s"the the term$i term${i % 5}")
-    val queries = Seq(100L -> "the term3", 101L -> "term7 term4")
-    val (post, dfreq, dl, stats) =
-      Retrieval.bm25Index(corpusDf(corpus), "text", "doc_id")
-    val qt = Retrieval.queryTerms(corpusDf(queries), "text", "doc_id")
-    // the recurring-suite path: persist maxw once, reuse per run
-    val maxw = Retrieval.bm25MaxWeights(post, dfreq, dl, stats)
-      .localCheckpoint(eager = true)
-    val key = Seq("query_id", "doc_id", "score_pico").map(col)
-    val viaPrebuilt = Retrieval.bm25OddsTopKPruned(
-        qt, post, dfreq, dl, stats, k = 3, essentialDfFrac = 0.5,
-        prebuiltMaxW = Some(maxw))
-      .orderBy(key: _*).collect().toSeq
-    val inline = Retrieval.bm25OddsTopKPruned(
-        qt, post, dfreq, dl, stats, k = 3, essentialDfFrac = 0.5)
-      .orderBy(key: _*).collect().toSeq
-    assert(viaPrebuilt === inline)
-    assert(viaPrebuilt.nonEmpty)
   }
 
   test("scorers place no forced broadcast hint on the query side") {

@@ -551,20 +551,6 @@ class TextDedupSimSpec extends SparkSpec {
     assert(out === Set((1L, true, true, true, true)))
   }
 
-  test("connectedComponents reliable=true checkpoints durably and converges") {
-    val dir = SparkSpec.tempDir("graft_ckpt").toString
-    spark.sparkContext.setCheckpointDir(dir)
-    // a 40-node path has diameter 40 → needs several large/small-star
-    // rounds, so multiple reliable checkpoints hit the durable dir
-    val pairs = ((0L until 40L).map(i => (i, i + 1)) :+ (100L, 101L))
-      .toDF("id_a", "id_b")
-    val out = Dedup.connectedComponents(pairs, reliable = true)
-      .as[(Long, Long)].collect().toSet
-    assert(out === ((0L to 40L).map(_ -> 0L) ++ Seq(100L -> 100L, 101L -> 100L)).toSet)
-    // reliable mode actually wrote checkpoint data to the durable dir
-    assert(new java.io.File(dir).listFiles.nonEmpty)
-  }
-
   test("Corpus.clean failure bypass: failures never enter the fp join; " +
       "flags keep the old three-valued semantics") {
     // quality failures take a scan-side bypass (filter + union) instead
